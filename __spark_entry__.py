@@ -1807,18 +1807,25 @@ def q_sessions(spark, sf_dir):
     ``lag(ts)`` twice inside ``when`` made Catalyst extract TWO window
     expressions (_we0/_we1 in the r11 plan) — staging the lag once in
     its own select leaves ONE lag in the Window op and measured
-    0.308 → 0.282 s (bit-identical results)."""
+    0.308 → 0.282 s (bit-identical results).
+
+    The gap is compared in microseconds: whole-second ``unix_timestamp``
+    values put two events 1800.5 s apart in one session, while the
+    oracle's fractional ``epoch()`` difference splits them."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     staged = ev.select(
         "user_id",
-        F.unix_timestamp("ts").alias("_t"),
-        F.lag(F.unix_timestamp("ts")).over(w).alias("_prev"),
+        us.alias("_t"),
+        F.lag(us).over(w).alias("_prev"),
     )
     marked = staged.select(
         "user_id",
         F.when(
-            F.col("_prev").isNull() | (F.col("_t") - F.col("_prev") > 1800), 1
+            F.col("_prev").isNull()
+            | (F.col("_t") - F.col("_prev") > 1_800_000_000),
+            1,
         )
         .otherwise(0)
         .alias("is_new"),

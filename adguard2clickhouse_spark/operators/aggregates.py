@@ -16,10 +16,16 @@ table scan (exact re-aggregation read, §2.8 C2).
 
 from __future__ import annotations
 
+import functools
+from dataclasses import dataclass
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adguard2clickhouse_spark.functions import is_ipv4_string, is_ipv6_string, tld
+from adguard2clickhouse_spark.sinks.summing import BUCKET_COL, bucket_id
 
 
 def blocked_domains(log2: DataFrame) -> DataFrame:
@@ -184,30 +190,95 @@ AGGREGATE_KEYS = {
 
 
 # Grouping-set layout for the fused delta plan: every grouping column,
-# in a fixed order (grouping_id bit positions), and the per-aggregate
-# grouping. _tld / _bkt are pre-projected derived keys (tld_stats'
-# real-domain filter becomes "derived key is NULL ⇒ row leaves no
-# group", stats2's window start is computed once per row).
+# in a fixed order (grouping_id bit positions). _tld / _bkt are
+# pre-projected derived keys (tld_stats' real-domain filter becomes
+# "derived key is NULL ⇒ row leaves no group", stats2's window start is
+# computed once per row).
 _FUSED_COLS = ["QH", "IP", "QT", "rcode", "_bkt", "_tld", "Upstream"]
-_FUSED_SETS = {
-    "blocked_domains": ["QH"],
-    "visited_domains": ["QH"],
-    "clients_stats": ["IP"],
-    "qt_stats": ["QT"],
-    "rcode_stats": ["rcode"],
-    "stats2": ["IP", "_bkt"],
-    "tld_stats": ["_tld"],
-    "upstream_stats": ["Upstream"],
+
+
+@dataclass(frozen=True)
+class _FusedSpec:
+    """How one aggregate's delta is read out of the fused frame: the
+    grouping it aggregated on, the condition a group must meet to be
+    emitted (``(column, "positive" | "not_null")``), and the
+    ``(fused column, output column)`` projection, keys first in
+    ``AGGREGATE_KEYS`` order. Drives both the Spark extractors and the
+    driver-side Arrow split."""
+
+    grouping: tuple[str, ...]
+    keep: tuple[str, str] | None
+    columns: tuple[tuple[str, str], ...]
+
+    @property
+    def gid(self) -> int:
+        """Spark's GROUPING_ID for this grouping: one bit per grouping
+        column in _FUSED_COLS order, MSB first, 1 = column NOT grouped."""
+        gid = 0
+        for c in _FUSED_COLS:
+            gid = (gid << 1) | (0 if c in self.grouping else 1)
+        return gid
+
+    @property
+    def key_sources(self) -> list[str]:
+        return [src for src, _ in self.columns if src in self.grouping]
+
+
+_FUSED_SPECS = {
+    "blocked_domains": _FusedSpec(
+        ("QH",), ("_blocked", "positive"), (("QH", "QH"), ("_blocked", "count"))
+    ),
+    "visited_domains": _FusedSpec(
+        ("QH",), ("_visited", "positive"), (("QH", "QH"), ("_visited", "count"))
+    ),
+    "clients_stats": _FusedSpec(
+        ("IP",), None,
+        (("IP", "IP"), ("_visited", "visited"), ("_blocked", "blocked")),
+    ),
+    "qt_stats": _FusedSpec(("QT",), None, (("QT", "QT"), ("_cnt", "count"))),
+    "rcode_stats": _FusedSpec(
+        ("rcode",), None, (("rcode", "rcode"), ("_cnt", "count"))
+    ),
+    "stats2": _FusedSpec(
+        ("IP", "_bkt"), None,
+        (("IP", "IP"), ("_bkt", "date_time"),
+         ("_blocked", "blocked"), ("_visited", "visited")),
+    ),
+    "tld_stats": _FusedSpec(
+        ("_tld",), ("_tld", "not_null"), (("_tld", "tld"), ("_cnt", "count"))
+    ),
+    "upstream_stats": _FusedSpec(
+        ("Upstream",), None, (("Upstream", "Upstream"), ("_cnt", "count"))
+    ),
+}
+
+# A spec's keep-condition as a Spark Column and as a pyarrow expression.
+_KEEP = {
+    "positive": (lambda c: F.col(c) > 0, lambda c: pc.field(c) > 0),
+    "not_null": (lambda c: F.col(c).isNotNull(), lambda c: pc.field(c).is_valid()),
 }
 
 
-def _grouping_id_of(cols: list[str]) -> int:
-    """Spark's GROUPING_ID for a grouping: one bit per grouping column
-    in _FUSED_COLS order, MSB first, 1 = column NOT in this grouping."""
-    gid = 0
-    for c in _FUSED_COLS:
-        gid = (gid << 1) | (0 if c in cols else 1)
-    return gid
+def _extract(fused: DataFrame, spec: _FusedSpec) -> DataFrame:
+    cond = F.col("_gid") == spec.gid
+    if spec.keep:
+        col, kind = spec.keep
+        cond = cond & _KEEP[kind][0](col)
+    return fused.filter(cond).select(
+        *[F.col(src).alias(out) for src, out in spec.columns]
+    )
+
+
+def _extract_arrow(table: pa.Table, spec: _FusedSpec) -> pa.Table:
+    cond = pc.field("_gid") == spec.gid
+    if spec.keep:
+        col, kind = spec.keep
+        cond = cond & _KEEP[kind][1](col)
+    rows = table.filter(cond)
+    return pa.Table.from_arrays(
+        [rows[src] for src, _ in spec.columns] + [rows[BUCKET_COL]],
+        names=[out for _, out in spec.columns] + [BUCKET_COL],
+    )
 
 
 def fused_aggregate_deltas(
@@ -255,10 +326,7 @@ def fused_aggregate_deltas(
     # PER LISTED SET, so listing the shared QH grouping twice (blocked
     # + visited both key on QH) would duplicate every QH row. The QH
     # grouping appears once and serves both extractors.
-    unique_sets = []
-    for cols in _FUSED_SETS.values():
-        if cols not in unique_sets:
-            unique_sets.append(cols)
+    unique_sets = list(dict.fromkeys(s.grouping for s in _FUSED_SPECS.values()))
     fused = (
         proj.groupingSets(
             [[F.col(c) for c in cols] for cols in unique_sets],
@@ -271,42 +339,33 @@ def fused_aggregate_deltas(
             F.grouping_id().alias("_gid"),
         )
     )
-
-    def _g(name):
-        return F.col("_gid") == _grouping_id_of(_FUSED_SETS[name])
-
     extractors = {
-        "blocked_domains": lambda f: f.filter(
-            _g("blocked_domains") & (F.col("_blocked") > 0)
-        ).select("QH", F.col("_blocked").alias("count")),
-        "visited_domains": lambda f: f.filter(
-            _g("visited_domains") & (F.col("_visited") > 0)
-        ).select("QH", F.col("_visited").alias("count")),
-        "clients_stats": lambda f: f.filter(_g("clients_stats")).select(
-            "IP",
-            F.col("_visited").alias("visited"),
-            F.col("_blocked").alias("blocked"),
-        ),
-        "qt_stats": lambda f: f.filter(_g("qt_stats")).select(
-            "QT", F.col("_cnt").alias("count")
-        ),
-        "rcode_stats": lambda f: f.filter(_g("rcode_stats")).select(
-            "rcode", F.col("_cnt").alias("count")
-        ),
-        "stats2": lambda f: f.filter(_g("stats2")).select(
-            "IP",
-            F.col("_bkt").alias("date_time"),
-            F.col("_blocked").alias("blocked"),
-            F.col("_visited").alias("visited"),
-        ),
-        "tld_stats": lambda f: f.filter(
-            _g("tld_stats") & F.col("_tld").isNotNull()
-        ).select(F.col("_tld").alias("tld"), F.col("_cnt").alias("count")),
-        "upstream_stats": lambda f: f.filter(_g("upstream_stats")).select(
-            "Upstream", F.col("_cnt").alias("count")
-        ),
+        name: functools.partial(_extract, spec=spec)
+        for name, spec in _FUSED_SPECS.items()
     }
     return fused, extractors
+
+
+def fused_arrow_deltas(
+    log2: DataFrame, n_buckets: int, bucket: str = "10 minutes"
+) -> dict[str, pa.Table]:
+    """The eight deltas of ``fused_aggregate_deltas``, collected to the
+    driver with ONE ``toArrow()`` and split there, each row already
+    tagged with its summing-sink bucket (``BUCKET_COL``): the same
+    projection that reads the fused frame computes ``bucket_id`` over
+    the row's own grouping keys, so the driver never re-implements
+    Spark's hash. Every sink fed from this must have ``n_buckets``
+    buckets. For small epochs this replaces the Spark fold fan (~5
+    jobs per sink) with driver-side pyarrow folds
+    (``SummingParquetSink.apply_delta``)."""
+    fused, _ = fused_aggregate_deltas(log2, bucket)
+    tag = None
+    for spec in {s.gid: s for s in _FUSED_SPECS.values()}.values():
+        cond = F.col("_gid") == spec.gid
+        bkt = bucket_id([F.col(c) for c in spec.key_sources], n_buckets)
+        tag = F.when(cond, bkt) if tag is None else tag.when(cond, bkt)
+    table = fused.withColumn(BUCKET_COL, tag).toArrow()
+    return {name: _extract_arrow(table, spec) for name, spec in _FUSED_SPECS.items()}
 
 
 def domain_label_entropy(log2: DataFrame) -> DataFrame:

@@ -34,6 +34,18 @@ epoch after a failure, never reorders), so idempotency survives
 arbitrarily long streams. Visibility is all-or-nothing: merged bucket
 versions become live only at the single pointer swap.
 
+**Driver-side folds.** ``apply_delta`` also accepts a pyarrow Table
+whose rows already carry their bucket id (the pipeline's small-epoch
+path collects all eight deltas, bucket-tagged, in one Spark job; see
+``operators.aggregates.fused_arrow_deltas``). Such a delta folds on
+the driver: per touched bucket, read the current files with pyarrow,
+concatenate the delta, ``group_by(keys).aggregate(...)`` and stage one
+file — no Spark job at all. Staging, the pointer swap and the
+exactly-once ledger are the same code as the Spark fold. A fold whose
+touched buckets hold more than ``_DRIVER_FOLD_MAX_BYTES`` on disk (or
+a sink with a non-sum fold) hands the delta to Spark instead,
+so driver memory stays bounded while state grows.
+
 At 100 TB the same interface backs Delta MERGE or a real ClickHouse
 SummingMergeTree where the fold is native (sinks/clickhouse.py).
 """
@@ -45,12 +57,19 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _POINTER = "CURRENT.json"
 _MAX_EPOCHS_TRACKED = 1000
-_BUCKET = "_sps_bucket"
+BUCKET_COL = "_sps_bucket"
+# On-disk bytes of the touched buckets above which an Arrow delta folds
+# in Spark rather than on the driver: the scan layer's file-size target
+# (spark.sql.files.maxPartitionBytes, the pipeline's compact_small_bytes).
+_DRIVER_FOLD_MAX_BYTES = 128 << 20
 
 
 # Per-measure fold functions. "sum" is SummingMergeTree; the rest make
@@ -66,6 +85,14 @@ _FOLDS = {
     "min": F.min,
     "hll_union": lambda c: F.hll_union_agg(c, F.lit(False)),
 }
+
+
+def bucket_id(cols: list[Column], n_buckets: int) -> Column:
+    """A key's bucket: ``pmod(xxhash64(keys), n)``. xxhash64 treats NULL
+    keys deterministically; pmod keeps the id in [0, n). Every path that
+    tags rows (this sink's Spark folds and the fused driver-side deltas)
+    uses this one expression, so a key always lands in the same bucket."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets))
 
 
 class SummingParquetSink:
@@ -89,13 +116,15 @@ class SummingParquetSink:
         for m, f in self.folds.items():
             if f not in _FOLDS:
                 raise ValueError(f"unknown fold {f!r} for measure {m!r}")
-        # Observation from the most recent SPARSE fold's touched-bucket
-        # discovery: did that delta touch every bucket? None until a
-        # sparse fold has run. The pipeline's dense_folds="auto" gate
-        # reads this (ADVICE r7: gating on raw epoch rows alone lets a
-        # 100k-row single-hot-key epoch pick dense and rewrite every
-        # bucket — bucket coverage depends on the delta's DISTINCT-KEY
-        # count, which only the discovery job actually measures).
+        # Did the most recent fold's delta touch every bucket? None
+        # until a fold that knows its touched set has run (a sparse
+        # Spark fold's discovery job, or any driver-side fold, whose
+        # bucket ids arrive with the delta). The pipeline's
+        # dense_folds="auto" gate reads this (ADVICE r7: gating on raw
+        # epoch rows alone lets a 100k-row single-hot-key epoch pick
+        # dense and rewrite every bucket — bucket coverage depends on
+        # the delta's DISTINCT-KEY count, which only the touched set
+        # actually measures).
         self.last_fold_touched_all: bool | None = None
         os.makedirs(path, exist_ok=True)
 
@@ -131,16 +160,25 @@ class SummingParquetSink:
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(self.path, _POINTER))  # atomic
 
+    @staticmethod
+    def _ledger(meta: dict, epoch_id: int | None, token: str | None) -> dict:
+        """``meta``'s epoch and token ledgers with this fold recorded."""
+        epochs, hwm = meta["epochs"], meta["epoch_hwm"]
+        if epoch_id is not None:
+            epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
+            hwm = epoch_id if hwm is None else max(hwm, epoch_id)
+        tokens = meta["replay_tokens"]
+        if token is not None:
+            tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
+        return {"epochs": epochs, "epoch_hwm": hwm, "replay_tokens": tokens}
+
     def _bucket_dir(self, bucket: int, version: int) -> str:
         return os.path.join(self.path, f"b{bucket:04d}", f"v{version:08d}")
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
-        # xxhash64 treats NULL keys deterministically; pmod keeps the
-        # id in [0, n). Same expression on every path, so a key always
-        # lands in the same bucket.
         return df.withColumn(
-            _BUCKET,
-            F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets)),
+            BUCKET_COL,
+            bucket_id([F.col(k) for k in self.keys], self.n_buckets),
         )
 
     # -- public API ----------------------------------------------------------
@@ -180,6 +218,11 @@ class SummingParquetSink:
         """
         return token in self._pointer()["replay_tokens"]
 
+    def _stage_dir(self, meta: dict) -> str:
+        return os.path.join(
+            self.path, f".stage.v{meta['version'] + 1:08d}.{uuid.uuid4().hex}"
+        )
+
     def _install(
         self,
         frame: DataFrame,
@@ -190,18 +233,30 @@ class SummingParquetSink:
     ) -> None:
         """Write ``frame`` (already bucket-tagged, already folded) as the
         next version of the ``touched`` buckets and swap the pointer."""
-        new_version = meta["version"] + 1
-        stage = os.path.join(self.path, f".stage.v{new_version:08d}.{uuid.uuid4().hex}")
+        stage = self._stage_dir(meta)
         # One Spark job for all touched buckets: partitionBy splits the
         # staged write into _sps_bucket=K directories (the column itself
-        # is not stored in the files), then each directory is renamed
-        # into its bucket's version slot — a local fs move, no second job.
-        frame.write.mode("overwrite").partitionBy(_BUCKET).parquet(stage)
+        # is not stored in the files), then _publish renames each into
+        # its bucket's version slot — a local fs move, no second job.
+        frame.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
+        self._publish(stage, touched, meta, epoch_id, token)
 
+    def _publish(
+        self,
+        stage: str,
+        touched: list[int],
+        meta: dict,
+        epoch_id: int | None,
+        token: str | None,
+    ) -> None:
+        """Move each staged ``_sps_bucket=K`` directory into bucket K's
+        next version slot, then make them live with ONE atomic pointer
+        swap (shared by the Spark and the driver-side folds)."""
+        new_version = meta["version"] + 1
         buckets = dict(meta["buckets"])
         old_dirs = []
         for b in touched:
-            src = os.path.join(stage, f"{_BUCKET}={b}")
+            src = os.path.join(stage, f"{BUCKET_COL}={b}")
             dst = self._bucket_dir(b, new_version)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             if not os.path.exists(src):
@@ -210,27 +265,21 @@ class SummingParquetSink:
                 if str(b) in buckets:
                     old_dirs.append(self._bucket_dir(b, buckets.pop(str(b))))
                 continue
+            # A slot above the pointer's version was left by a fold that
+            # crashed before its swap: no reader can see it, and rename
+            # cannot replace a non-empty directory.
+            shutil.rmtree(dst, ignore_errors=True)
             os.replace(src, dst)
             prev = buckets.get(str(b))
             if prev is not None:
                 old_dirs.append(self._bucket_dir(b, prev))
             buckets[str(b)] = new_version
 
-        epochs = meta["epochs"]
-        hwm = meta["epoch_hwm"]
-        if epoch_id is not None:
-            epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
-            hwm = epoch_id if hwm is None else max(hwm, epoch_id)
-        tokens = meta["replay_tokens"]
-        if token is not None:
-            tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
         self._write_pointer(
             {
                 "version": new_version,
                 "buckets": buckets,
-                "epochs": epochs,
-                "epoch_hwm": hwm,
-                "replay_tokens": tokens,
+                **self._ledger(meta, epoch_id, token),
             }
         )
         # post-swap cleanup: superseded bucket versions + stage leftovers
@@ -249,16 +298,23 @@ class SummingParquetSink:
 
     def apply_delta(
         self,
-        delta: DataFrame,
+        delta: DataFrame | pa.Table,
         epoch_id: int | None = None,
         token: str | None = None,
         dense: bool = False,
     ) -> None:
-        """Fold a delta frame into the table (idempotent per epoch_id
-        for stream epochs, per ``token`` for out-of-band folds like
+        """Fold a delta into the table (idempotent per epoch_id for
+        stream epochs, per ``token`` for out-of-band folds like
         dead-letter replay — see ``applied_token`` for why those two
         must be separate ledgers), rewriting only the hash buckets the
         delta touches.
+
+        ``delta`` is a Spark DataFrame, or a pyarrow Table whose rows
+        carry their ``BUCKET_COL`` id (computed in Spark with
+        ``bucket_id`` over this sink's keys and ``n_buckets``). A Table
+        folds on the driver (see the module docstring); its touched set
+        comes with the delta, so it needs no discovery job and ``dense``
+        does not apply.
 
         ``dense=True`` skips the touched-bucket discovery job and folds
         the delta into EVERY bucket in one Spark job. Measured r6 on
@@ -276,60 +332,121 @@ class SummingParquetSink:
         if token is not None and token in meta["replay_tokens"]:
             return  # retry of an applied out-of-band fold — no-op
 
-        spark = delta.sparkSession
-        if dense:
-            tagged = self._with_bucket(delta)
-            current_paths = [
-                self._bucket_dir(int(b), v) for b, v in meta["buckets"].items()
-            ]
-            if current_paths:
-                current = self._with_bucket(spark.read.parquet(*current_paths))
-                unioned = current.unionByName(tagged)
-            else:
-                unioned = tagged
-            merged = unioned.groupBy(_BUCKET, *self.keys).agg(*self._fold_exprs())
-            # every bucket may change; _install no-ops buckets with no
+        if isinstance(delta, pa.Table):
+            self._fold_arrow(delta, meta, epoch_id, token)
+        elif dense:
+            # every bucket may change; _publish no-ops buckets with no
             # staged output (and additive folds cannot empty a bucket)
-            self._install(
-                merged, list(range(self.n_buckets)), meta, epoch_id, token=token
+            self._fold_spark(
+                self._with_bucket(delta), list(range(self.n_buckets)),
+                meta, epoch_id, token,
             )
-            return
-        tagged = self._with_bucket(delta).persist()
-        try:
-            # Touched-bucket discovery: a ≤ n_buckets-row collect (n is
-            # a table constant, not data-sized) — this is exactly what
-            # makes the other buckets' files never open.
-            touched = sorted(
-                r[0] for r in tagged.select(_BUCKET).distinct().collect()
-            )
-            self.last_fold_touched_all = len(touched) == self.n_buckets
-            if not touched:
-                # empty delta: still record the epoch/token for idempotency
-                if epoch_id is not None or token is not None:
-                    epochs, hwm = meta["epochs"], meta["epoch_hwm"]
-                    if epoch_id is not None:
-                        epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
-                        hwm = epoch_id if hwm is None else max(hwm, epoch_id)
-                    tokens = meta["replay_tokens"]
-                    if token is not None:
-                        tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
-                    self._write_pointer(
-                        {**meta, "epochs": epochs, "epoch_hwm": hwm,
-                         "replay_tokens": tokens}
-                    )
-                return
+        else:
+            tagged = self._with_bucket(delta).persist()
+            try:
+                # Touched-bucket discovery: a ≤ n_buckets-row collect (n
+                # is a table constant, not data-sized) — this is exactly
+                # what makes the other buckets' files never open.
+                touched = sorted(
+                    r[0] for r in tagged.select(BUCKET_COL).distinct().collect()
+                )
+                self.last_fold_touched_all = len(touched) == self.n_buckets
+                self._fold_spark(tagged, touched, meta, epoch_id, token)
+            finally:
+                tagged.unpersist()
 
-            current_paths = [
-                self._bucket_dir(int(b), meta["buckets"][str(b)])
-                for b in touched
-                if str(b) in meta["buckets"]
+    def _record_empty(
+        self, meta: dict, epoch_id: int | None, token: str | None
+    ) -> None:
+        """An empty delta still records its epoch/token for idempotency."""
+        if epoch_id is not None or token is not None:
+            self._write_pointer({**meta, **self._ledger(meta, epoch_id, token)})
+
+    def _fold_spark(
+        self,
+        tagged: DataFrame,
+        touched: list[int],
+        meta: dict,
+        epoch_id: int | None,
+        token: str | None,
+    ) -> None:
+        """(state of the touched buckets ∪ bucket-tagged delta) ⊕ keys,
+        in one Spark job, installed as the touched buckets' next
+        version."""
+        if not touched:
+            self._record_empty(meta, epoch_id, token)
+            return
+        current_paths = [
+            self._bucket_dir(b, meta["buckets"][str(b)])
+            for b in touched
+            if str(b) in meta["buckets"]
+        ]
+        if current_paths:
+            spark = tagged.sparkSession
+            current = self._with_bucket(spark.read.parquet(*current_paths))
+            tagged = current.unionByName(tagged)
+        merged = tagged.groupBy(BUCKET_COL, *self.keys).agg(*self._fold_exprs())
+        self._install(merged, touched, meta, epoch_id, token=token)
+
+    def _fold_arrow(
+        self,
+        delta: pa.Table,
+        meta: dict,
+        epoch_id: int | None,
+        token: str | None,
+    ) -> None:
+        """The driver-side fold of a bucket-tagged Arrow delta: per
+        touched bucket, (current files ∪ delta rows) ⊕ keys with pyarrow,
+        staged as one file per bucket, then the shared ``_publish``."""
+        ids = delta[BUCKET_COL]
+        touched = sorted(pc.unique(ids).to_pylist())
+        self.last_fold_touched_all = len(touched) == self.n_buckets
+        if not touched:
+            self._record_empty(meta, epoch_id, token)
+            return
+        files = {
+            b: self._parquet_files(self._bucket_dir(b, meta["buckets"][str(b)]))
+            for b in touched
+            if str(b) in meta["buckets"]
+        }
+        state_bytes = sum(os.path.getsize(f) for fs in files.values() for f in fs)
+        sums_only = all(f == "sum" for f in self.folds.values())
+        if state_bytes > _DRIVER_FOLD_MAX_BYTES or not sums_only:
+            tagged = SparkSession.active().createDataFrame(delta)
+            self._fold_spark(tagged, touched, meta, epoch_id, token)
+            return
+
+        # Files are written keys-then-measures, the Spark fold's layout.
+        schema = pa.schema([delta.schema.field(c) for c in self.keys + self.measures])
+        stage = self._stage_dir(meta)
+        for b in touched:
+            parts = [
+                # Spark writes timestamps as INT96; read them as
+                # microseconds, the unit Spark collects to Arrow with.
+                pq.read_table(f, coerce_int96_timestamp_unit="us")
+                .select(schema.names)
+                .cast(schema)
+                for f in files.get(b, [])
             ]
-            if current_paths:
-                current = self._with_bucket(spark.read.parquet(*current_paths))
-                unioned = current.unionByName(tagged)
-            else:
-                unioned = tagged
-            merged = unioned.groupBy(_BUCKET, *self.keys).agg(*self._fold_exprs())
-            self._install(merged, touched, meta, epoch_id, token=token)
-        finally:
-            tagged.unpersist()
+            parts.append(delta.filter(pc.equal(ids, b)).select(schema.names))
+            folded = pa.concat_tables(parts).group_by(self.keys).aggregate(
+                [(m, "sum") for m in self.measures]
+            )
+            out = pa.Table.from_arrays(
+                [folded[k] for k in self.keys]
+                + [folded[f"{m}_sum"] for m in self.measures],
+                names=schema.names,
+            ).cast(schema)
+            bucket_dir = os.path.join(stage, f"{BUCKET_COL}={b}")
+            os.makedirs(bucket_dir)
+            pq.write_table(out, os.path.join(bucket_dir, "part-00000.parquet"))
+        self._publish(stage, touched, meta, epoch_id, token)
+
+    @staticmethod
+    def _parquet_files(d: str) -> list[str]:
+        # Spark's _SUCCESS marker and .crc sidecars are not data files.
+        return [
+            os.path.join(d, n)
+            for n in sorted(os.listdir(d))
+            if not n.startswith(("_", ".")) and n.endswith(".parquet")
+        ]

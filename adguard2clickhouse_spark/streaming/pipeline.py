@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import os
 import time as _time
+from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +45,7 @@ from adguard2clickhouse_spark.operators.aggregates import (
     AGGREGATE_KEYS,
     ALL_AGGREGATES,
     fused_aggregate_deltas,
+    fused_arrow_deltas,
 )
 from adguard2clickhouse_spark.operators.parse import (
     parse_querylog_lines,
@@ -52,6 +54,10 @@ from adguard2clickhouse_spark.operators.parse import (
 from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink
 from adguard2clickhouse_spark.sinks.summing import SummingParquetSink
 from adguard2clickhouse_spark.sources.querylog import read_querylog_stream
+
+# Per-epoch stage walls kept in ``QuerylogPipeline.batch_timings``: an
+# always-on daemon on a 1 s trigger runs ~86k epochs a day.
+_TIMINGS_KEPT = 1024
 
 
 def aggregate_sinks(out_dir: str) -> dict[str, SummingParquetSink]:
@@ -166,16 +172,20 @@ class QuerylogPipeline:
         # path that leaves untouched buckets byte-identical. True/False
         # pin the strategy for every sink.
         self.dense_folds = dense_folds
-        # Fused grouping-sets delta computation (see process_batch).
-        # "auto" (default) decides PER EPOCH from the batch row count:
-        # same-day A/B pairs at 1M rows (r9) put the crossover between
-        # 100k and 250k rows/epoch — per-sink wins at 100k (57.8s vs
-        # fused 67.7s: the fan is merge+write-bound and the fused job
-        # adds a serial stage), fused wins at 250k (41.8s vs 58.3s)
-        # and 500k (median 24.1s vs 26.9s: eight full-input groupBys
-        # get scan/delta-compute-bound before one grouping-sets pass
-        # does). True/False pin the strategy; the fused plan itself is
-        # driver-gated via a16_fused_mv_union.
+        # Delta computation and fold (see process_batch). "auto"
+        # (default) decides PER EPOCH from the batch row count. Below
+        # fused_min_rows the eight deltas come from one grouping-sets
+        # pass collected to the driver as one Arrow table, and each
+        # sink folds its share with pyarrow (no Spark job per sink);
+        # at or above it the deltas stay in Spark (the same grouping-
+        # sets pass, measured r9 ahead of eight per-sink groupBys at
+        # 250k rows/epoch, 41.8s vs 58.3s, and 500k, 24.1s vs 26.9s)
+        # and each sink runs its Spark fold. The driver path beat the
+        # Spark fold fan at 50k and 100k rows/epoch too (same-host
+        # A/B: 7.4-7.9k -> 11.2-12.7k and 11.9-13.8k -> 15.0-17.4k
+        # rows/s), so the r9 crossover stands. True pins the fused
+        # Spark path, False the per-sink Spark path; the fused plan
+        # itself is driver-gated via a16_fused_mv_union.
         # Strategy knobs accept bool | "auto" ONLY. Any other string
         # ("false", "off", a typo like "Auto") must be an error, not a
         # silent bool(str)=True behavior change (ADVICE r9).
@@ -251,20 +261,9 @@ class QuerylogPipeline:
         # high-water mark instead of silently dropping every new epoch.
         self._stream_identity: str | None = None
         self._query: StreamingQuery | None = None
-        # per-epoch stage walls appended by process_batch (see there)
-        self.batch_timings: list[dict] = []
-        # Operator sizing hint (r13, VERDICT r12 #5): the per-epoch
-        # fixed cost (~2.3 s — parse materialization + the 8-sink fold
-        # fan's job floor, BENCH_small_epoch_r13.json) makes small
-        # epochs overhead-bound: measured 21.5k rows/s normalized at
-        # 50k rows/epoch vs 98.2k at 500k. When a RUNNING stream has
-        # processed `sizing_hint_epochs` epochs whose median rows sit
-        # under `sizing_hint_rows`, emit ONE warning with the measured
-        # rule — the README table for users who never read it. 0/None
-        # disables.
-        self.sizing_hint_rows = 100_000
-        self.sizing_hint_epochs = 10
-        self.sizing_hint: str | None = None
+        # per-epoch stage walls appended by process_batch (see there),
+        # the most recent _TIMINGS_KEPT epochs
+        self.batch_timings: deque[dict] = deque(maxlen=_TIMINGS_KEPT)
 
     def _resolve_stream_identity(self) -> str | None:
         if self._stream_identity is None:
@@ -454,50 +453,67 @@ class QuerylogPipeline:
             # failure of ANY of them fails the batch before the offset
             # commit, exactly as sequential failure between stages did.
 
-            # Delta computation: per-sink groupBys vs ONE fused
+            # Delta computation, decided per epoch (see fused_deltas in
+            # __init__). A small epoch's cost was the Spark fold fan's
+            # job floor (~5 jobs per sink, 44 of ~50 jobs per epoch),
+            # not its rows: it now runs ONE Spark job, the grouping-
+            # sets pass collected to the driver with every row's
+            # bucket id, and the sinks fold the Arrow deltas with
+            # pyarrow. A large epoch keeps its deltas in Spark: the
             # grouping-sets pass (fused_aggregate_deltas, VERDICT r6
-            # #4), decided per epoch under "auto" (see __init__ for
-            # the measured crossover). Small epochs are fan
-            # merge+write-bound — the fused job only adds a serial
-            # stage; large epochs are delta-compute-bound — eight full
-            # re-scans of the cached batch cost more than one
-            # grouping-sets pass. The fused plan applies only to the
-            # stock aggregate set (custom MVs have no extractor).
+            # #4) when fused, else eight per-sink groupBys. The fused
+            # plans apply only to the stock aggregate set (custom MVs
+            # have no extractor) and the driver fold to sinks sharing
+            # one bucket count (one bucket column serves them all).
+            stock = all(
+                ALL_AGGREGATES.get(name) is fn
+                for name, fn in self.aggregates.items()
+            )
+            n_buckets = {s.n_buckets for s in self.sinks.values()}
             if self.fused_deltas == "auto":
                 use_fused = n_good >= self.fused_min_rows
+                on_driver = not use_fused and stock and len(n_buckets) == 1
             else:
                 # truthy pins fuse (bool(1) counted before the auto
                 # mode existed and must keep counting)
                 use_fused = bool(self.fused_deltas)
+                on_driver = False
             fused = None
-            if use_fused and all(
-                ALL_AGGREGATES.get(name) is fn
-                for name, fn in self.aggregates.items()
-            ):
+            if on_driver:
+                deltas = fused_arrow_deltas(good, n_buckets.pop())
+                t = _mark("fused_delta_s", t)
+                timings["delta_path"] = "driver"
+            elif use_fused and stock:
                 fused, extract = fused_aggregate_deltas(good)
                 fused.persist().count()
                 t = _mark("fused_delta_s", t)
                 deltas = {
                     name: extract[name](fused) for name in self.aggregates
                 }
+                timings["delta_path"] = "fused"
             else:
                 deltas = {
                     name: fn(good) for name, fn in self.aggregates.items()
                 }
+                timings["delta_path"] = "per_sink"
 
             # ONE overlapped section: fact append, dead-letter append,
             # ClickHouse POSTs and the 8 additive sink folds are
-            # independent consumers of the materialized caches, so they
-            # run as concurrent Spark jobs (r7, VERDICT r6 #4): the
-            # epoch wall becomes parse + max(consumer) instead of
-            # parse + Σ(consumers). Each consumer is still timed
-            # individually; `overlap_section_s` records the section's
-            # real elapsed wall (the critical path, normally the fan).
+            # independent consumers of the materialized caches (or, on
+            # the driver path, of the collected deltas), so they run
+            # concurrently (r7, VERDICT r6 #4): the epoch wall becomes
+            # parse + max(consumer) instead of parse + Σ(consumers).
+            # Each consumer is still timed individually;
+            # `overlap_section_s` records the section's real elapsed
+            # wall (the critical path).
             def _fold(name):
-                return lambda: self.sinks[name].apply_delta(
+                sink = self.sinks[name]
+                if on_driver:  # touched buckets arrive with the delta
+                    return lambda: sink.apply_delta(deltas[name], epoch_id)
+                return lambda: sink.apply_delta(
                     deltas[name],
                     epoch_id,
-                    dense=self._dense_fold(self.sinks[name], n_good),
+                    dense=self._dense_fold(sink, n_good),
                 )
 
             consumers = [
@@ -563,51 +579,12 @@ class QuerylogPipeline:
             # Per-epoch stage wall attribution (driver-side). The
             # consumer stages OVERLAP: their individual walls sum to
             # more than the section wall; `overlap_section_s` is the
-            # real elapsed time of the fan-out. Bounded: epochs are few
-            # per process and each dict is ~8 floats — bench harnesses
-            # read and reset it.
+            # real elapsed time of the fan-out. Bounded to the last
+            # _TIMINGS_KEPT epochs; bench harnesses read and reset it.
             timings["n_rows"] = n_good
             self.batch_timings.append(timings)
-            self._maybe_sizing_hint()
         finally:
             batch_df.unpersist()
-
-    def _maybe_sizing_hint(self) -> None:
-        """Emit the measured micro-batch sizing rule ONCE when the
-        stream is persistently running overhead-bound small epochs."""
-        # 0/None on EITHER knob disables: epochs=None would raise
-        # TypeError at rows[-None:] inside the foreachBatch callback
-        # (killing the stream), epochs=0 would median ALL epochs
-        # (ADVICE r13).
-        if (
-            self.sizing_hint is not None
-            or not self.sizing_hint_rows
-            or not self.sizing_hint_epochs
-        ):
-            return
-        rows = [
-            bt["n_rows"] for bt in self.batch_timings if "n_rows" in bt
-        ]
-        if len(rows) < self.sizing_hint_epochs:
-            return
-        import statistics
-
-        med = statistics.median(rows[-self.sizing_hint_epochs:])
-        if med >= self.sizing_hint_rows:
-            return
-        self.sizing_hint = (
-            f"SMALL-EPOCH REGIME: the last {self.sizing_hint_epochs} "
-            f"micro-batches carried a median of {int(med):,} rows. The "
-            "per-epoch fixed cost (~2.3 s: parse materialization + the "
-            "8-sink fold fan's job floor) makes this overhead-bound - "
-            "measured 21.5k rows/s at 50k rows/epoch vs 98.2k at 500k "
-            "(BENCH_small_epoch_r13.json). Raise maxFilesPerTrigger / "
-            "file sizes so epochs carry >=250k rows (target ~500k); "
-            "small epochs buy latency, not throughput."
-        )
-        import sys as _sys
-
-        print(self.sizing_hint, file=_sys.stderr)
 
     # -- run -----------------------------------------------------------------
     def start(
@@ -627,12 +604,13 @@ class QuerylogPipeline:
         ``max_files_per_trigger`` is the lever when the spooler writes
         fixed-size files (pick ceil(500k / rows-per-file)); leave it
         None (all available files per trigger) for catch-up/backfill,
-        which naturally forms large epochs. Small epochs are fan
-        merge+write-bound, so a LATENCY target instead wants a short
-        ``processing_time`` and accepts the per-epoch overhead —
-        the default 5 s trigger is the latency-leaning compromise,
-        matching the reference's async-insert buffering horizon
-        (collector.py:52)."""
+        which naturally forms large epochs. Below the crossover the
+        eight sinks fold on the driver from one collected Arrow delta,
+        so a small epoch runs a handful of Spark jobs rather than one
+        fold fan per sink: a LATENCY target wants a short
+        ``processing_time`` — the default 5 s trigger is the
+        latency-leaning compromise, matching the reference's
+        async-insert buffering horizon (collector.py:52)."""
         # Re-resolve the query identity for THIS start: a restart over a
         # deleted/recreated checkpoint mints a new query id, and serving
         # the cached one would re-create the exact silent-drop the

@@ -110,10 +110,11 @@ def main() -> None:
     # 4th arg: parse_parallelism ("auto", an int, or 0 to disable)
     pp_arg = sys.argv[4] if len(sys.argv) > 4 else "auto"
     parse_parallelism = pp_arg if pp_arg == "auto" else int(pp_arg)
-    # 5th arg: fused grouping-sets deltas (1/0 pins; default "auto",
-    # the pipeline's per-epoch row-count gate) — the A/B knob for the
+    # 5th arg: fused grouping-sets deltas (1/0 pins; "auto" or omitted
+    # is the pipeline's per-epoch row-count gate) — the A/B knob for the
     # fan-fusion measurements
-    fused = bool(int(sys.argv[5])) if len(sys.argv) > 5 else "auto"
+    fused = sys.argv[5] if len(sys.argv) > 5 else "auto"
+    fused = fused if fused == "auto" else bool(int(fused))
     # 6th arg: output artifact path (default keeps the r7 filename)
     out_json = Path(sys.argv[6]) if len(sys.argv) > 6 else (
         Path(__file__).resolve().parent.parent / "BENCH_streaming_r7.json"
@@ -222,7 +223,7 @@ def main() -> None:
         "micro_batches": len(epochs),
         "epochs": epochs,
         "stage_breakdown": stage_totals,
-        "per_epoch_stages": pipe.batch_timings,
+        "per_epoch_stages": list(pipe.batch_timings),
         "aggregates_maintained": len(pipe.sinks),
         "sinks": sinks,
         "clickhouse_loopback": {

@@ -1171,3 +1171,33 @@ def test_jaccard_strategy_auto_picks_by_posting_mass(spark):
     # auto with a df cap stays on the (cap-supporting) index plan
     capped = dd.ngram_jaccard_pairs(small, strategy="auto", max_df_ratio=0.01)
     assert {"doc_a", "doc_b", "common"} <= set(capped.columns)
+
+
+def test_sessions_gap_is_compared_in_microseconds(spark, tmp_path):
+    """e_sessions splits a session at a gap of more than 1800 s, compared
+    exactly: events 1800.5 s apart open a new session (whole-second
+    unix_timestamp values read that gap as 1800 and merged them, unlike
+    the DuckDB oracle), 1800 s and 1799.5 s gaps do not."""
+    import datetime as dt
+
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    s = dt.timedelta(seconds=1)
+    rows = [
+        (1, t0, 1), (2, t0 + 1800.5 * s, 1), (3, t0 + 3600.5 * s, 1),
+        (4, t0, 2), (5, t0 + 1799.5 * s, 2),
+    ]
+    spark.createDataFrame(
+        [(e, ts, u, "view", 1.0, "{}") for e, ts, u in rows],
+        "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, "
+        "value DOUBLE, props STRING",
+    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+
+    got = dict(entrymod.queries()["e_sessions"](spark, str(tmp_path)).collect())
+    assert got == {1: 2, 2: 1}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet/*.parquet'")
+    assert dict(con.sql(entrymod.oracle_sql()["e_sessions"]).fetchall()) == got

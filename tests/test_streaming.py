@@ -794,13 +794,14 @@ def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
 
 
 def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
-    """fused_deltas="auto" (the default) picks the delta strategy per
-    epoch from the batch row count: tiny epochs keep the per-sink
-    groupBys (the fused job's extra serial stage measured 17% slower
-    at 100k rows/epoch), epochs at/above fused_min_rows take the one
-    grouping-sets pass (measured 10-28% faster at 250k-500k). Both
-    paths must produce identical sink state — the fused plan is an
-    exact twin, separately driver-gated via a16_fused_mv_union."""
+    """fused_deltas="auto" (the default) picks the delta path per epoch
+    from the batch row count: epochs below fused_min_rows collect the
+    grouping-sets deltas to the driver once and fold them there with
+    pyarrow ("driver"); epochs at/above it keep the deltas in Spark
+    and fold with Spark ("fused", measured 10-28% faster than per-sink
+    groupBys at 250k-500k); pinned False keeps the per-sink groupBys.
+    All three paths must produce identical sink state — the fused plan
+    is an exact twin, separately driver-gated via a16_fused_mv_union."""
     lines = [
         _line(i, minute=i % 50, filtered=i % 3 == 0,
               qh=f"d{i % 9}.example.com", ip=f"10.0.0.{i % 5}")
@@ -815,20 +816,27 @@ def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
         pipe.run_available()
         return pipe
 
-    # default auto + default threshold: 60-row epoch stays per-sink
-    small = run("auto_small")
-    assert all("fused_delta_s" not in bt for bt in small.batch_timings)
+    def paths(pipe):
+        return {bt.get("delta_path") for bt in pipe.batch_timings} - {None}
 
-    # auto with the threshold lowered to the fixture size: fuses
+    # default auto + default threshold: the 60-row epoch folds on the
+    # driver, after one timed grouping-sets collect
+    small = run("auto_small")
+    assert paths(small) == {"driver"}
+    assert all("fused_delta_s" in bt for bt in small.batch_timings
+               if "delta_path" in bt)
+
+    # auto with the threshold lowered to the fixture size: Spark folds
     fused = QuerylogPipeline(spark, str(tmp_path / "auto_small_src"),
                              str(tmp_path / "auto_fused"))
     fused.fused_min_rows = 1
     fused.run_available()
+    assert paths(fused) == {"fused"}
     assert any("fused_delta_s" in bt for bt in fused.batch_timings)
 
-    # pinned False never fuses even above threshold
+    # pinned False never fuses, whatever the epoch size
     pinned = run("pinned_off", fused_deltas=False)
-    pinned.fused_min_rows = 1
+    assert paths(pinned) == {"per_sink"}
     assert all("fused_delta_s" not in bt for bt in pinned.batch_timings)
 
     # identical state on every sink across the strategies
@@ -1172,72 +1180,3 @@ def test_crashed_replay_retry_noops_after_dead_compaction(tmp_path, spark):
     for name in agg.ALL_AGGREGATES:
         got = {tuple(r) for r in pipe.read_aggregate(name).collect()}
         assert got == expected[name], f"{name} diverged after retry"
-
-
-def test_small_epoch_sizing_hint_fires_once(tmp_path, spark):
-    """Operational sizing rule (VERDICT r12 #5): a stream persistently
-    running tiny micro-batches gets ONE warning carrying the measured
-    numbers; a stream with fewer epochs than the window stays silent."""
-    src = tmp_path / "hint_src"
-    src.mkdir()
-    for i in range(12):
-        (src / f"querylog-{i:04d}.jsonl").write_text(
-            "\n".join(
-                _line(j + i * 10, minute=i % 50, filtered=j % 2 == 0,
-                      qh=f"d{j}.example.com", ip=f"10.0.0.{j}")
-                for j in range(5)
-            ) + "\n"
-        )
-    pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "hint_out"))
-    q = pipe.start(available_now=True, max_files_per_trigger=1)
-    q.awaitTermination()
-    assert pipe.sizing_hint is not None
-    assert "SMALL-EPOCH REGIME" in pipe.sizing_hint
-    assert ">=250k rows" in pipe.sizing_hint
-    # fires once: the attribute latches, later epochs don't re-emit
-    first = pipe.sizing_hint
-    pipe._maybe_sizing_hint()
-    assert pipe.sizing_hint is first
-
-    # below the epoch window: silent (unit-scale streams are all tiny;
-    # the hint must not fire on short runs)
-    src2 = tmp_path / "hint_src2"
-    src2.mkdir()
-    for i in range(3):
-        (src2 / f"querylog-{i:04d}.jsonl").write_text(
-            "\n".join(
-                _line(j + i * 10, minute=i % 50, filtered=j % 2 == 0,
-                      qh=f"d{j}.example.com", ip=f"10.0.0.{j}")
-                for j in range(5)
-            ) + "\n"
-        )
-    pipe2 = QuerylogPipeline(spark, str(src2), str(tmp_path / "hint_out2"))
-    q2 = pipe2.start(available_now=True, max_files_per_trigger=1)
-    q2.awaitTermination()
-    assert pipe2.sizing_hint is None
-
-
-def test_small_epoch_sizing_hint_knobs_disable(tmp_path, spark):
-    """ADVICE r13: EITHER knob set to 0/None disables the hint cleanly.
-    Before the guard, sizing_hint_epochs=None raised TypeError at
-    rows[-None:] INSIDE the foreachBatch callback (killing the
-    streaming query) and epochs=0 medianed ALL epochs instead of
-    disabling."""
-    pipe = QuerylogPipeline.__new__(QuerylogPipeline)
-    pipe.sizing_hint = None
-    pipe.sizing_hint_rows = 100_000
-    pipe.batch_timings = [{"n_rows": 5} for _ in range(12)]
-    for epochs in (None, 0):
-        pipe.sizing_hint_epochs = epochs
-        pipe._maybe_sizing_hint()  # must not raise, must not fire
-        assert pipe.sizing_hint is None
-    # rows knob disables too, independent of epochs
-    pipe.sizing_hint_epochs = 10
-    for rows_knob in (None, 0):
-        pipe.sizing_hint_rows = rows_knob
-        pipe._maybe_sizing_hint()
-        assert pipe.sizing_hint is None
-    # sanity: with both knobs live the same state fires
-    pipe.sizing_hint_rows = 100_000
-    pipe._maybe_sizing_hint()
-    assert pipe.sizing_hint is not None

@@ -395,3 +395,157 @@ def test_hot_key_epoch_leaves_untouched_buckets_byte_identical(tmp_path, spark):
         str(Path(p).parent) for p in set(after) - set(before)
     }
     assert len(changed_dirs) == 1, changed_dirs
+
+
+# ---------------------------------------------------------------------------
+# Driver-side (Arrow) folds
+# ---------------------------------------------------------------------------
+
+def _log2_rows(start: int, n: int) -> list[tuple]:
+    """log2 rows spanning several 10-minute buckets, with NULL QH,
+    Upstream and rcode keys and tld-excluded hosts mixed in."""
+    import datetime as dt
+
+    hosts = ["ads.example.com", "good.example.org", "localhost", "1.2.3.4", None]
+    ups = ["8.8.8.8:53", "1.1.1.1:53", "", None]
+    base = dt.datetime(2024, 1, 1)
+    return [
+        (base + dt.timedelta(seconds=97 * i), hosts[i % 5], ("A", "AAAA")[i % 2],
+         "IN", "", ups[i % 4], f"10.0.0.{i % 6}", i % 3 == 0, 100 + i, False,
+         (0, 3, None)[i % 3], [], [], [])
+        for i in range(start, start + n)
+    ]
+
+
+def _sink_state(sink, spark, cols):
+    return sorted(
+        (tuple(r) for r in sink.read(spark).select(*cols).collect()), key=repr
+    )
+
+
+def test_driver_and_spark_folds_alternate_on_one_sink(tmp_path, spark):
+    """Driver-side (pyarrow) and Spark folds alternate on the same eight
+    sinks: each fold reads bucket files the other path wrote, and the
+    state always equals the aggregate over every row so far, with the
+    same Spark types (stats2.date_time a UTC timestamp, measures
+    bigint). NULL keys land in one bucket on both paths."""
+    from adguard2clickhouse_spark.operators.aggregates import (
+        ALL_AGGREGATES,
+        fused_arrow_deltas,
+    )
+    from adguard2clickhouse_spark.schemas import LOG2_SCHEMA
+    from adguard2clickhouse_spark.streaming.pipeline import aggregate_sinks
+
+    sinks = aggregate_sinks(str(tmp_path / "out"))
+    # arrow, sparse Spark, arrow, dense Spark, then a 1-row arrow fold
+    # that rewrites one bucket and leaves Spark-written ones beside it
+    epochs = [("arrow", 0, 40), ("spark", 40, 30), ("arrow", 70, 25),
+              ("dense", 95, 35), ("arrow", 131, 1)]
+    seen = []
+    for epoch_id, (how, start, n) in enumerate(epochs):
+        rows = _log2_rows(start, n)
+        seen += rows
+        log2 = spark.createDataFrame(rows, LOG2_SCHEMA)
+        arrow = fused_arrow_deltas(log2, 8) if how == "arrow" else None
+        for name, sink in sinks.items():
+            if arrow is not None:
+                sink.apply_delta(arrow[name], epoch_id)
+            else:
+                sink.apply_delta(ALL_AGGREGATES[name](log2), epoch_id,
+                                 dense=how == "dense")
+        everything = spark.createDataFrame(seen, LOG2_SCHEMA)
+        for name, sink in sinks.items():
+            want = ALL_AGGREGATES[name](everything)
+            got = sink.read(spark).select(*want.columns)
+            assert [f.dataType for f in got.schema] == [
+                f.dataType for f in want.schema
+            ], name
+            assert _sink_state(sink, spark, want.columns) == sorted(
+                (tuple(r) for r in want.collect()), key=repr
+            ), f"{name} diverged after {how} epoch {epoch_id}"
+
+    writers = {
+        "driver" if p.name == "part-00000.parquet" else "spark"
+        for p in Path(sinks["stats2"].path).rglob("*.parquet")
+    }
+    assert writers == {"driver", "spark"}, writers
+    assert sinks["stats2"].last_fold_touched_all is False  # 1-row fold
+
+
+def _arrow_delta(spark, sink, rows):
+    """A bucket-tagged Arrow delta for a (k, cnt) sink, tagged in Spark."""
+    from adguard2clickhouse_spark.sinks.summing import BUCKET_COL, bucket_id
+
+    df = spark.createDataFrame(rows, "k string, cnt bigint")
+    return df.withColumn(
+        BUCKET_COL, bucket_id([F.col("k")], sink.n_buckets)
+    ).toArrow()
+
+
+def test_driver_fold_retry_is_noop(tmp_path, spark):
+    sink = SummingParquetSink(str(tmp_path / "t"), keys=["k"], measures=["cnt"])
+    sink.apply_delta(_arrow_delta(spark, sink, [(f"k{i}", 1) for i in range(40)]), 0)
+    delta = _arrow_delta(spark, sink, [("k1", 5), ("new", 2)])
+    sink.apply_delta(delta, 1)
+    before = _data_file_digests(sink.path)
+    pointer = sink._pointer()
+    sink.apply_delta(delta, 1)  # retry of the applied epoch
+    assert _data_file_digests(sink.path) == before
+    assert sink._pointer() == pointer
+    got = dict(sink.read(spark).collect())
+    assert got["k1"] == 6 and got["new"] == 2 and got["k2"] == 1
+
+
+def test_driver_fold_crash_before_swap_keeps_previous_version(
+    tmp_path, spark, monkeypatch
+):
+    """A driver-side fold that dies after staging and moving its bucket
+    versions but before the pointer swap leaves the previous version
+    readable; the retried epoch then folds exactly once."""
+    sink = SummingParquetSink(str(tmp_path / "t"), keys=["k"], measures=["cnt"])
+    sink.apply_delta(_arrow_delta(spark, sink, [(f"k{i}", 1) for i in range(40)]), 0)
+    before = sorted(sink.read(spark).collect())
+    delta = _arrow_delta(spark, sink, [(f"k{i}", 10) for i in range(0, 40, 3)])
+
+    def crash(meta):
+        raise RuntimeError("injected crash before the pointer swap")
+
+    monkeypatch.setattr(sink, "_write_pointer", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink.apply_delta(delta, 1)
+    monkeypatch.undo()
+    assert sorted(sink.read(spark).collect()) == before
+    assert not sink.applied(1)
+
+    sink.apply_delta(delta, 1)  # the retry
+    got = dict(sink.read(spark).collect())
+    assert got == {f"k{i}": 11 if i % 3 == 0 else 1 for i in range(40)}
+
+
+def test_driver_fold_above_byte_bound_folds_in_spark(tmp_path, spark, monkeypatch):
+    """Touched state above _DRIVER_FOLD_MAX_BYTES is not read onto the
+    driver: the Arrow delta becomes a DataFrame and takes the Spark
+    fold, still only over the buckets the delta touches."""
+    from adguard2clickhouse_spark.sinks import summing
+
+    sink = SummingParquetSink(str(tmp_path / "t"), keys=["k"], measures=["cnt"])
+    sink.apply_delta(_arrow_delta(spark, sink, [(f"k{i}", 1) for i in range(40)]), 0)
+    monkeypatch.setattr(summing, "_DRIVER_FOLD_MAX_BYTES", 1)
+    spark_folds = []
+    real = sink._fold_spark
+    monkeypatch.setattr(
+        sink, "_fold_spark", lambda *a: spark_folds.append(a[1]) or real(*a)
+    )
+    before = _data_file_digests(sink.path)
+    delta = _arrow_delta(spark, sink, [("k1", 5)])
+    sink.apply_delta(delta, 1)
+    touched = sorted(set(delta[summing.BUCKET_COL].to_pylist()))
+    assert spark_folds == [touched]
+    after = _data_file_digests(sink.path)
+    untouched = {
+        rel: h for rel, h in before.items()
+        if not rel.startswith(f"b{touched[0]:04d}")
+    }
+    assert all(after.get(rel) == h for rel, h in untouched.items())
+    got = dict(sink.read(spark).collect())
+    assert got == {f"k{i}": 6 if i == 1 else 1 for i in range(40)}
