@@ -454,11 +454,11 @@ class QuerylogPipeline:
             # commit, exactly as sequential failure between stages did.
 
             # Delta computation, decided per epoch (see fused_deltas in
-            # __init__). A small epoch's cost was the Spark fold fan's
-            # job floor (~5 jobs per sink, 44 of ~50 jobs per epoch),
-            # not its rows: it now runs ONE Spark job, the grouping-
-            # sets pass collected to the driver with every row's
-            # bucket id, and the sinks fold the Arrow deltas with
+            # __init__). A small epoch costs jobs, not rows: the Spark
+            # fold fan runs ~5 jobs per sink (44 of ~50 jobs per
+            # 2k-row epoch), so a small epoch runs ONE Spark job, the
+            # grouping-sets pass collected to the driver with every
+            # row's bucket id, and the sinks fold the Arrow deltas with
             # pyarrow. A large epoch keeps its deltas in Spark: the
             # grouping-sets pass (fused_aggregate_deltas, VERDICT r6
             # #4) when fused, else eight per-sink groupBys. The fused
