@@ -123,11 +123,11 @@ def run(argv: list[str] | None = None) -> None:
             import time
 
             deadline = time.time() + 10  # progress events arrive async
-            while not recorder.records and time.time() < deadline:
+            while not recorder.n_batches and time.time() < deadline:
                 time.sleep(0.2)
             print(
-                f"progress: {recorder.total_input_rows()} rows in "
-                f"{len(recorder.records)} micro-batches",
+                f"progress: {recorder.n_input_rows} rows in "
+                f"{recorder.n_batches} micro-batches",
                 file=sys.stderr,
             )
             spark.streams.removeListener(recorder)

@@ -348,16 +348,18 @@ def fused_aggregate_deltas(
 
 def fused_arrow_deltas(
     log2: DataFrame, n_buckets: int, bucket: str = "10 minutes"
-) -> dict[str, pa.Table]:
+) -> tuple[pa.Table, dict[str, pa.Table]]:
     """The eight deltas of ``fused_aggregate_deltas``, collected to the
     driver with ONE ``toArrow()`` and split there, each row already
     tagged with its summing-sink bucket (``BUCKET_COL``): the same
     projection that reads the fused frame computes ``bucket_id`` over
     the row's own grouping keys, so the driver never re-implements
     Spark's hash. Every sink fed from this must have ``n_buckets``
-    buckets. For small epochs this replaces the Spark fold fan (~5
-    jobs per sink) with driver-side pyarrow folds
-    (``SummingParquetSink.apply_delta``)."""
+    buckets. This replaces the Spark fold fan (~5 jobs per sink) with
+    driver-side pyarrow folds (``SummingParquetSink.apply_delta``).
+
+    Returns ``(collected, deltas)``: the collected table (its size is
+    the driver memory the path costs) and the per-aggregate splits."""
     fused, _ = fused_aggregate_deltas(log2, bucket)
     tag = None
     for spec in {s.gid: s for s in _FUSED_SPECS.values()}.values():
@@ -365,7 +367,9 @@ def fused_arrow_deltas(
         bkt = bucket_id([F.col(c) for c in spec.key_sources], n_buckets)
         tag = F.when(cond, bkt) if tag is None else tag.when(cond, bkt)
     table = fused.withColumn(BUCKET_COL, tag).toArrow()
-    return {name: _extract_arrow(table, spec) for name, spec in _FUSED_SPECS.items()}
+    return table, {
+        name: _extract_arrow(table, spec) for name, spec in _FUSED_SPECS.items()
+    }
 
 
 def domain_label_entropy(log2: DataFrame) -> DataFrame:

@@ -12,9 +12,14 @@ override `publish` instead of buffering.
 
 from __future__ import annotations
 
+from collections import deque
 from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+# Progress records kept in ``ProgressRecorder.records``: a collector on
+# a 1 s trigger publishes ~86k a day.
+_RECORDS_KEPT = 1024
 
 
 @dataclass
@@ -29,14 +34,19 @@ class BatchProgress:
 
 @dataclass
 class ProgressRecorder(StreamingQueryListener):
-    """Buffers one `BatchProgress` per micro-batch. Attach with
-    ``spark.streams.addListener(rec)``; detach with
-    ``spark.streams.removeListener(rec)`` (always detach — listeners
-    outlive queries). Callbacks arrive asynchronously on a JVM thread:
-    after ``awaitTermination`` poll `records` briefly rather than
-    asserting immediately."""
+    """Buffers the last ``_RECORDS_KEPT`` `BatchProgress` records and
+    keeps running totals over every micro-batch (``n_batches``,
+    ``n_input_rows``). Attach with ``spark.streams.addListener(rec)``;
+    detach with ``spark.streams.removeListener(rec)`` (always detach —
+    listeners outlive queries). Callbacks arrive asynchronously on a
+    JVM thread: after ``awaitTermination`` poll the totals briefly
+    rather than asserting immediately."""
 
-    records: list[BatchProgress] = field(default_factory=list)
+    records: deque[BatchProgress] = field(
+        default_factory=lambda: deque(maxlen=_RECORDS_KEPT)
+    )
+    n_batches: int = 0
+    n_input_rows: int = 0
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
         pass
@@ -61,11 +71,14 @@ class ProgressRecorder(StreamingQueryListener):
         pass
 
     def publish(self, progress: BatchProgress) -> None:
-        """Buffer by default; override to ship to a metrics backend."""
+        """Count and buffer by default; override to ship to a metrics
+        backend."""
+        self.n_batches += 1
+        self.n_input_rows += progress.num_input_rows
         self.records.append(progress)
 
     def total_input_rows(self) -> int:
-        return sum(r.num_input_rows for r in self.records)
+        return self.n_input_rows
 
 
 def audit_observation(df, cols: list[str]):

@@ -52,12 +52,20 @@ from adguard2clickhouse_spark.operators.parse import (
     split_dead_letter,
 )
 from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink
-from adguard2clickhouse_spark.sinks.summing import SummingParquetSink
+from adguard2clickhouse_spark.sinks.summing import (
+    _DRIVER_FOLD_MAX_BYTES,
+    SummingParquetSink,
+)
 from adguard2clickhouse_spark.sources.querylog import read_querylog_stream
 
 # Per-epoch stage walls kept in ``QuerylogPipeline.batch_timings``: an
 # always-on daemon on a 1 s trigger runs ~86k epochs a day.
 _TIMINGS_KEPT = 1024
+# Arrow bytes per good row of the collected grouping-sets delta on the
+# high-cardinality backfill mix (5000 clients, 300k domains): 24.6 MB
+# for 203,968 rows. Low-cardinality traffic collapses to far fewer
+# delta rows per input row, so this is the wide case.
+_DELTA_BYTES_PER_ROW = 121
 
 
 def aggregate_sinks(out_dir: str) -> dict[str, SummingParquetSink]:
@@ -173,19 +181,21 @@ class QuerylogPipeline:
         # pin the strategy for every sink.
         self.dense_folds = dense_folds
         # Delta computation and fold (see process_batch). "auto"
-        # (default) decides PER EPOCH from the batch row count. Below
-        # fused_min_rows the eight deltas come from one grouping-sets
-        # pass collected to the driver as one Arrow table, and each
-        # sink folds its share with pyarrow (no Spark job per sink);
-        # at or above it the deltas stay in Spark (the same grouping-
-        # sets pass, measured r9 ahead of eight per-sink groupBys at
-        # 250k rows/epoch, 41.8s vs 58.3s, and 500k, 24.1s vs 26.9s)
-        # and each sink runs its Spark fold. The driver path beat the
-        # Spark fold fan at 50k and 100k rows/epoch too (same-host
-        # A/B: 7.4-7.9k -> 11.2-12.7k and 11.9-13.8k -> 15.0-17.4k
-        # rows/s), so the r9 crossover stands. True pins the fused
-        # Spark path, False the per-sink Spark path; the fused plan
-        # itself is driver-gated via a16_fused_mv_union.
+        # (default) decides PER EPOCH from the batch row count. Up to
+        # driver_fold_max_rows good rows the eight deltas come from one
+        # grouping-sets pass collected to the driver as one Arrow
+        # table, and each sink folds its share with pyarrow (no Spark
+        # job per sink); above it the deltas stay in Spark (the same
+        # grouping-sets pass, measured r9 ahead of eight per-sink
+        # groupBys at 250k and 500k rows/epoch) and each sink runs its
+        # Spark fold. The ceiling is a driver-memory bound, not a
+        # speed crossover: the collected delta must stay within the
+        # sinks' own driver budget (_DRIVER_FOLD_MAX_BYTES) at the
+        # widest measured delta (_DELTA_BYTES_PER_ROW), and the driver
+        # path was measured ahead of the Spark fold fan at every size
+        # up to it (50k-1M rows/epoch). True pins the fused Spark
+        # path, False the per-sink Spark path; the fused plan itself is
+        # driver-gated via a16_fused_mv_union.
         # Strategy knobs accept bool | "auto" ONLY. Any other string
         # ("false", "off", a typo like "Auto") must be an error, not a
         # silent bool(str)=True behavior change (ADVICE r9).
@@ -196,7 +206,7 @@ class QuerylogPipeline:
                     f"{knob} must be True, False or 'auto'; got {val!r}"
                 )
         self.fused_deltas = fused_deltas
-        self.fused_min_rows = 200_000
+        self.driver_fold_max_rows = _DRIVER_FOLD_MAX_BYTES // _DELTA_BYTES_PER_ROW
         # Dense-regime re-probe cadence (r10, closing the documented
         # dense-state blindness): a sink that flipped dense never
         # measures bucket coverage again, so a traffic shift to
@@ -453,60 +463,40 @@ class QuerylogPipeline:
             # failure of ANY of them fails the batch before the offset
             # commit, exactly as sequential failure between stages did.
 
-            # Delta computation, decided per epoch (see fused_deltas in
-            # __init__). A small epoch costs jobs, not rows: the Spark
-            # fold fan runs ~5 jobs per sink (44 of ~50 jobs per
-            # 2k-row epoch), so a small epoch runs ONE Spark job, the
-            # grouping-sets pass collected to the driver with every
-            # row's bucket id, and the sinks fold the Arrow deltas with
-            # pyarrow. A large epoch keeps its deltas in Spark: the
-            # grouping-sets pass (fused_aggregate_deltas, VERDICT r6
-            # #4) when fused, else eight per-sink groupBys. The fused
-            # plans apply only to the stock aggregate set (custom MVs
-            # have no extractor) and the driver fold to sinks sharing
-            # one bucket count (one bucket column serves them all).
+            # Delta path, decided per epoch (see fused_deltas in
+            # __init__). The Spark fold fan costs jobs, not rows (~5
+            # jobs per sink, 44 of ~50 jobs per epoch), so an epoch
+            # whose collected delta fits the driver budget runs ONE
+            # Spark job, the grouping-sets pass collected to the driver
+            # with every row's bucket id, and the sinks fold the Arrow
+            # deltas with pyarrow. A larger epoch keeps its deltas in
+            # Spark: the grouping-sets pass (fused_aggregate_deltas,
+            # VERDICT r6 #4) when fused, else eight per-sink groupBys.
+            # The fused plans apply only to the stock aggregate set
+            # (custom MVs have no extractor) and the driver fold to
+            # sinks sharing one bucket count (one bucket column serves
+            # them all).
             stock = all(
                 ALL_AGGREGATES.get(name) is fn
                 for name, fn in self.aggregates.items()
             )
             n_buckets = {s.n_buckets for s in self.sinks.values()}
             if self.fused_deltas == "auto":
-                use_fused = n_good >= self.fused_min_rows
+                use_fused = n_good > self.driver_fold_max_rows
                 on_driver = not use_fused and stock and len(n_buckets) == 1
             else:
                 # truthy pins fuse (bool(1) counted before the auto
                 # mode existed and must keep counting)
                 use_fused = bool(self.fused_deltas)
                 on_driver = False
-            fused = None
             if on_driver:
-                deltas = fused_arrow_deltas(good, n_buckets.pop())
-                t = _mark("fused_delta_s", t)
                 timings["delta_path"] = "driver"
             elif use_fused and stock:
-                fused, extract = fused_aggregate_deltas(good)
-                fused.persist().count()
-                t = _mark("fused_delta_s", t)
-                deltas = {
-                    name: extract[name](fused) for name in self.aggregates
-                }
                 timings["delta_path"] = "fused"
             else:
-                deltas = {
-                    name: fn(good) for name, fn in self.aggregates.items()
-                }
                 timings["delta_path"] = "per_sink"
 
-            # ONE overlapped section: fact append, dead-letter append,
-            # ClickHouse POSTs and the 8 additive sink folds are
-            # independent consumers of the materialized caches (or, on
-            # the driver path, of the collected deltas), so they run
-            # concurrently (r7, VERDICT r6 #4): the epoch wall becomes
-            # parse + max(consumer) instead of parse + Σ(consumers).
-            # Each consumer is still timed individually;
-            # `overlap_section_s` records the section's real elapsed
-            # wall (the critical path).
-            def _fold(name):
+            def _fold(deltas, name):
                 sink = self.sinks[name]
                 if on_driver:  # touched buckets arrive with the delta
                     return lambda: sink.apply_delta(deltas[name], epoch_id)
@@ -516,29 +506,63 @@ class QuerylogPipeline:
                     dense=self._dense_fold(sink, n_good),
                 )
 
+            def _fan():
+                # The delta step is part of this consumer: it reads only
+                # the materialized `good` cache, so it runs alongside
+                # the fact, dead-letter and ClickHouse writes instead of
+                # ahead of them.
+                t0 = _time.time()
+                fused = None
+                if on_driver:
+                    table, deltas = fused_arrow_deltas(good, next(iter(n_buckets)))
+                    timings["delta_rows"] = table.num_rows
+                    timings["delta_bytes"] = table.nbytes
+                    del table  # the per-sink splits are copies
+                    timings["fused_delta_s"] = round(_time.time() - t0, 3)
+                elif use_fused and stock:
+                    fused, extract = fused_aggregate_deltas(good)
+                    fused.persist().count()
+                    timings["fused_delta_s"] = round(_time.time() - t0, 3)
+                    deltas = {
+                        name: extract[name](fused) for name in self.aggregates
+                    }
+                else:
+                    deltas = {
+                        name: fn(good) for name, fn in self.aggregates.items()
+                    }
+                try:
+                    with ThreadPoolExecutor(
+                        max_workers=len(self.aggregates)
+                    ) as pool:
+                        fs = [
+                            pool.submit(_fold(deltas, n)) for n in self.aggregates
+                        ]
+                        for f in fs:
+                            f.result()
+                finally:
+                    if fused is not None:
+                        fused.unpersist()
+
+            # ONE overlapped section: fact append, dead-letter append,
+            # ClickHouse POSTs and the aggregate fan (delta step plus
+            # the 8 additive sink folds) are independent consumers of
+            # the materialized caches, so they run concurrently (r7,
+            # VERDICT r6 #4): the epoch wall becomes parse +
+            # max(consumer) instead of parse + Σ(consumers). Each
+            # consumer is still timed individually;
+            # `overlap_section_s` records the section's real elapsed
+            # wall (the critical path).
             consumers = [
                 _timed("fact_append_s", _fact_append),
                 _timed("dead_letter_s", _dead_letter),
             ]
             if self.clickhouse is not None:
                 consumers.append(_timed("clickhouse_insert_s", _clickhouse))
-            def _fan():
-                with ThreadPoolExecutor(
-                    max_workers=len(self.aggregates)
-                ) as pool:
-                    fs = [pool.submit(_fold(n)) for n in self.aggregates]
-                    for f in fs:
-                        f.result()
-
             consumers.append(_timed("aggregate_fan_s", _fan))
-            try:
-                with ThreadPoolExecutor(max_workers=len(consumers)) as pool:
-                    futures = [pool.submit(c) for c in consumers]
-                    for f in futures:
-                        f.result()  # propagate first failure, fail the batch
-            finally:
-                if fused is not None:
-                    fused.unpersist()
+            with ThreadPoolExecutor(max_workers=len(consumers)) as pool:
+                futures = [pool.submit(c) for c in consumers]
+                for f in futures:
+                    f.result()  # propagate first failure, fail the batch
             timings["overlap_section_s"] = round(_time.time() - t, 3)
             good.unpersist()
             # Automatic fact-ledger maintenance (see __init__): one
@@ -579,8 +603,13 @@ class QuerylogPipeline:
             # Per-epoch stage wall attribution (driver-side). The
             # consumer stages OVERLAP: their individual walls sum to
             # more than the section wall; `overlap_section_s` is the
-            # real elapsed time of the fan-out. Bounded to the last
-            # _TIMINGS_KEPT epochs; bench harnesses read and reset it.
+            # real elapsed time of the fan-out. `fused_delta_s` (the
+            # delta step) runs inside `aggregate_fan_s`, hence inside
+            # `overlap_section_s`; driver epochs also record the
+            # collected delta's `delta_rows` and `delta_bytes`, to read
+            # against the driver_fold_max_rows ceiling. Bounded to the
+            # last _TIMINGS_KEPT epochs; bench harnesses read and reset
+            # it.
             timings["n_rows"] = n_good
             self.batch_timings.append(timings)
         finally:
@@ -598,16 +627,17 @@ class QuerylogPipeline:
 
         **Sizing the epoch (measured r9 operating point,
         BENCH_streaming_r9.json):** throughput rises with epoch size —
-        25k rows/s at 100k rows/epoch, 42k at 250k, 63k at 500k — and
-        the fused-delta auto engages at the measured ≥200k crossover,
-        so target ≥500k rows per micro-batch for bulk throughput.
+        25k rows/s at 100k rows/epoch, 42k at 250k, 63k at 500k — so
+        target ≥500k rows per micro-batch for bulk throughput.
         ``max_files_per_trigger`` is the lever when the spooler writes
         fixed-size files (pick ceil(500k / rows-per-file)); leave it
         None (all available files per trigger) for catch-up/backfill,
-        which naturally forms large epochs. Below the crossover the
-        eight sinks fold on the driver from one collected Arrow delta,
-        so a small epoch runs a handful of Spark jobs rather than one
-        fold fan per sink: a LATENCY target wants a short
+        which naturally forms large epochs. Up to
+        ``driver_fold_max_rows`` good rows (~1.1M, the driver-memory
+        ceiling) the eight sinks fold on the driver from one collected
+        Arrow delta, so an epoch runs a handful of Spark jobs rather
+        than one fold fan per sink whatever its size; only larger
+        epochs pay the Spark fan. A LATENCY target wants a short
         ``processing_time`` — the default 5 s trigger is the
         latency-leaning compromise, matching the reference's
         async-insert buffering horizon (collector.py:52)."""

@@ -28,6 +28,7 @@ recorded number, not a guess.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -103,6 +104,26 @@ def start_loopback_clickhouse():
     return srv, stats
 
 
+def _rss_mb(pid: int) -> float:
+    with open(f"/proc/{pid}/status") as f:
+        for line in f:
+            if line.startswith("VmRSS:"):
+                return int(line.split()[1]) / 1024
+    return 0.0
+
+
+def sample_driver_rss(jvm_pid: int, stop: threading.Event, out: dict) -> None:
+    """Peak resident memory of the driver (this Python process plus the
+    driver JVM), sampled every 50 ms until ``stop`` is set."""
+    pids = {"python": os.getpid(), "jvm": jvm_pid}
+    while not stop.is_set():
+        now = {k: _rss_mb(p) for k, p in pids.items()}
+        now["total"] = now["python"] + now["jvm"]
+        for k, v in now.items():
+            out[k] = max(out.get(k, 0.0), v)
+        stop.wait(0.05)
+
+
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 20
@@ -152,10 +173,27 @@ def main() -> None:
                             parse_parallelism=parse_parallelism,
                             fused_deltas=fused)
     pipe.batch_timings.clear()
+    rss_mb = {
+        "before_python": round(_rss_mb(os.getpid())),
+        "before_jvm": round(
+            _rss_mb(spark._jvm.java.lang.ProcessHandle.current().pid())
+        ),
+    }
+    peak: dict = {}
+    stop = threading.Event()
+    sampler = threading.Thread(
+        target=sample_driver_rss,
+        args=(spark._jvm.java.lang.ProcessHandle.current().pid(), stop, peak),
+        daemon=True,
+    )
+    sampler.start()
     t0 = time.time()
     q = pipe.start(available_now=True, max_files_per_trigger=files_per_trigger)
     q.awaitTermination()
     wall = time.time() - t0
+    stop.set()
+    sampler.join()
+    rss_mb.update({f"peak_{k}": round(v) for k, v in peak.items()})
 
     # Per-stage attribution across every epoch (driver-side walls from
     # process_batch itself — the stages run sequentially except the
@@ -165,11 +203,12 @@ def main() -> None:
     # walls legitimately sum past the epoch wall; the section's elapsed
     # time is overlap_section_s. Shares are reported against the wall
     # for the serial stages and the section, with the per-consumer walls
-    # kept as within-section attribution.
-    serial_keys = ["parse_materialize_s", "fused_delta_s", "overlap_section_s"]
+    # kept as within-section attribution. The delta step
+    # (fused_delta_s) runs inside the aggregate fan.
+    serial_keys = ["parse_materialize_s", "overlap_section_s"]
     consumer_keys = [
         "fact_append_s", "dead_letter_s", "clickhouse_insert_s",
-        "aggregate_fan_s",
+        "aggregate_fan_s", "fused_delta_s",
     ]
     stage_totals = {
         k: round(sum(bt.get(k, 0.0) for bt in pipe.batch_timings), 2)
@@ -224,6 +263,10 @@ def main() -> None:
         "epochs": epochs,
         "stage_breakdown": stage_totals,
         "per_epoch_stages": list(pipe.batch_timings),
+        "driver_rss_mb": rss_mb,
+        "delta_bytes_max": max(
+            (bt.get("delta_bytes", 0) for bt in pipe.batch_timings), default=0
+        ),
         "aggregates_maintained": len(pipe.sinks),
         "sinks": sinks,
         "clickhouse_loopback": {

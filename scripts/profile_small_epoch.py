@@ -6,13 +6,15 @@ from 100k to 500k rows/epoch — small epochs are overhead-bound, with
 the aggregate fan holding ~74% of the wall at 100k. Two candidate
 levers, both MEASURED here rather than reasoned about:
 
-1. The fused grouping-sets delta pass (``fused_deltas``). Its
-   crossover (fused_min_rows=200_000) was frozen from r9 A/B pairs
-   measured BEFORE the codegen class-cache fix — and the fix moved
-   streaming throughput +22-53%, so the per-sink-vs-fused trade may
-   have shifted: the fused plan compiles ONE grouping-sets job where
-   the per-sink path compiles eight groupBys, exactly the kind of
-   plan-count difference the recompile tax used to hide.
+1. The fused grouping-sets delta pass (``fused_deltas``), pinned
+   True against pinned False: the fused plan compiles ONE
+   grouping-sets job where the per-sink path compiles eight groupBys,
+   exactly the kind of plan-count difference the recompile tax used
+   to hide. Both variants are pinned Spark folds. The default "auto"
+   no longer switches between them at a row-count crossover: it folds
+   on the driver up to the driver-memory ceiling
+   (``QuerylogPipeline.driver_fold_max_rows``, ~1.1M rows), so this
+   A/B covers only pinned strategies and epochs above that ceiling.
 2. Epoch sizing itself: the sweep's fixed-cost floor per epoch, read
    from the 50k/100k/250k ladder, becomes the operator sizing rule.
 

@@ -384,6 +384,27 @@ def test_progress_recorder_captures_batch_rates(tmp_path, spark):
     assert all(r.duration_ms >= 0 for r in rec.records)
 
 
+def test_progress_recorder_is_bounded_and_keeps_totals():
+    """An always-on collector publishes one record per epoch for weeks:
+    the buffer keeps only the newest records, while the batch and row
+    totals still count every one."""
+    from adguard2clickhouse_spark.streaming.monitor import (
+        _RECORDS_KEPT,
+        BatchProgress,
+        ProgressRecorder,
+    )
+
+    rec = ProgressRecorder()
+    n = _RECORDS_KEPT + 500
+    for i in range(n):
+        rec.publish(BatchProgress("q", i, 3, 0.0, 0.0, 1))
+    assert len(rec.records) == _RECORDS_KEPT
+    assert rec.records[0].batch_id == n - _RECORDS_KEPT
+    assert rec.records[-1].batch_id == n - 1
+    assert rec.n_batches == n
+    assert rec.n_input_rows == rec.total_input_rows() == 3 * n
+
+
 def test_read_log2_merges_evolved_schema(tmp_path, spark):
     """A column added mid-stream must reconcile across old and new
     fact epochs under merge_schema (older rows null-filled). Epochs
@@ -795,56 +816,123 @@ def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
 
 def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
     """fused_deltas="auto" (the default) picks the delta path per epoch
-    from the batch row count: epochs below fused_min_rows collect the
-    grouping-sets deltas to the driver once and fold them there with
-    pyarrow ("driver"); epochs at/above it keep the deltas in Spark
-    and fold with Spark ("fused", measured 10-28% faster than per-sink
-    groupBys at 250k-500k); pinned False keeps the per-sink groupBys.
-    All three paths must produce identical sink state — the fused plan
-    is an exact twin, separately driver-gated via a16_fused_mv_union."""
+    from the batch row count: epochs up to driver_fold_max_rows (the
+    driver-memory ceiling) collect the grouping-sets deltas to the
+    driver once and fold them there with pyarrow ("driver"); larger
+    epochs keep the deltas in Spark and fold with Spark ("fused",
+    measured 10-28% faster than per-sink groupBys at 250k-500k); pinned
+    False keeps the per-sink groupBys. All three paths must produce
+    identical sink state — the fused plan is an exact twin, separately
+    driver-gated via a16_fused_mv_union."""
     lines = [
         _line(i, minute=i % 50, filtered=i % 3 == 0,
               qh=f"d{i % 9}.example.com", ip=f"10.0.0.{i % 5}")
         for i in range(60)
     ]
 
-    def run(dirname, **kw):
+    def run(dirname, ceiling=None, **kw):
         src = tmp_path / f"{dirname}_src"
         src.mkdir()
         (src / "a.jsonl").write_text("\n".join(lines) + "\n")
         pipe = QuerylogPipeline(spark, str(src), str(tmp_path / dirname), **kw)
+        if ceiling is not None:
+            pipe.driver_fold_max_rows = ceiling
         pipe.run_available()
         return pipe
 
-    def paths(pipe):
-        return {bt.get("delta_path") for bt in pipe.batch_timings} - {None}
+    def epochs(pipe):
+        return [bt for bt in pipe.batch_timings if "delta_path" in bt]
 
-    # default auto + default threshold: the 60-row epoch folds on the
-    # driver, after one timed grouping-sets collect
-    small = run("auto_small")
-    assert paths(small) == {"driver"}
-    assert all("fused_delta_s" in bt for bt in small.batch_timings
-               if "delta_path" in bt)
+    # default ceiling: the epoch folds on the driver, after one timed
+    # grouping-sets collect whose size is recorded
+    driver = run("auto_driver")
+    assert driver.driver_fold_max_rows >= 1_000_000
+    assert {bt["delta_path"] for bt in epochs(driver)} == {"driver"}
+    for bt in epochs(driver):
+        assert "fused_delta_s" in bt
+        assert 0 < bt["delta_rows"] <= bt["n_rows"] * 7  # 7 grouping sets
+        assert bt["delta_bytes"] > 0
 
-    # auto with the threshold lowered to the fixture size: Spark folds
-    fused = QuerylogPipeline(spark, str(tmp_path / "auto_small_src"),
-                             str(tmp_path / "auto_fused"))
-    fused.fused_min_rows = 1
-    fused.run_available()
-    assert paths(fused) == {"fused"}
-    assert any("fused_delta_s" in bt for bt in fused.batch_timings)
+    # the ceiling lowered below the epoch: the deltas stay in Spark
+    fused = run("auto_fused", ceiling=len(lines) // 2)
+    assert {bt["delta_path"] for bt in epochs(fused)} == {"fused"}
+    assert all("fused_delta_s" in bt and "delta_rows" not in bt
+               for bt in epochs(fused))
 
     # pinned False never fuses, whatever the epoch size
     pinned = run("pinned_off", fused_deltas=False)
-    assert paths(pinned) == {"per_sink"}
-    assert all("fused_delta_s" not in bt for bt in pinned.batch_timings)
+    assert {bt["delta_path"] for bt in epochs(pinned)} == {"per_sink"}
+    assert all("fused_delta_s" not in bt for bt in epochs(pinned))
 
     # identical state on every sink across the strategies
-    for name in small.sinks:
-        a = {tuple(r) for r in small.read_aggregate(name).collect()}
+    for name in driver.sinks:
+        a = {tuple(r) for r in driver.read_aggregate(name).collect()}
         b = {tuple(r) for r in fused.read_aggregate(name).collect()}
         c = {tuple(r) for r in pinned.read_aggregate(name).collect()}
         assert a == b == c, f"{name}: delta strategies disagree"
+
+
+def test_delta_step_overlaps_the_fact_append(tmp_path, spark, monkeypatch):
+    """The delta step runs inside the aggregate fan, concurrently with
+    the fact append, not ahead of every consumer. The log2 append
+    waits for a summing sink's apply_delta and the delta step waits for
+    the log2 append to begin: both waits succeed only when the two
+    overlap."""
+    import threading
+
+    from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink
+    from adguard2clickhouse_spark.sinks.summing import SummingParquetSink
+    from adguard2clickhouse_spark.streaming import pipeline as pl
+
+    appending, folding = threading.Event(), threading.Event()
+    seen = {}
+
+    class WaitingLog2Sink(LedgeredFactSink):
+        def append(self, df, epoch_id=None, token=None):
+            appending.set()
+            seen["fold_during_append"] = folding.wait(timeout=30)
+            return super().append(df, epoch_id=epoch_id, token=token)
+
+    def factory(path, **kw):
+        if os.path.basename(path) == "log2":
+            return WaitingLog2Sink(path, **kw)
+        return LedgeredFactSink(path, **kw)
+
+    real_deltas = pl.fused_arrow_deltas
+
+    def deltas_after_append_began(*a, **kw):
+        seen["append_during_delta"] = appending.wait(timeout=30)
+        return real_deltas(*a, **kw)
+
+    real_apply = SummingParquetSink.apply_delta
+
+    def apply_delta(self, *a, **kw):
+        folding.set()
+        return real_apply(self, *a, **kw)
+
+    monkeypatch.setattr(pl, "fused_arrow_deltas", deltas_after_append_began)
+    monkeypatch.setattr(SummingParquetSink, "apply_delta", apply_delta)
+
+    batches = _corpus()
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.jsonl").write_text("\n".join(batches[0]) + "\n")
+    pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"),
+                            fact_sink_factory=factory)
+    pipe.run_available()
+
+    assert seen == {"append_during_delta": True, "fold_during_append": True}
+    assert [bt["delta_path"] for bt in pipe.batch_timings
+            if "delta_path" in bt] == ["driver"]
+    good, _ = parse_querylog(
+        spark.createDataFrame([(l,) for l in batches[0]], ["value"])
+    )
+    for name, fn in agg.ALL_AGGREGATES.items():
+        want = fn(good)
+        got = pipe.read_aggregate(name).select(*want.columns)
+        assert {tuple(r) for r in got.collect()} == {
+            tuple(r) for r in want.collect()
+        }, name
 
 
 def test_strategy_knobs_reject_unknown_strings(spark, tmp_path):

@@ -446,7 +446,7 @@ def test_driver_and_spark_folds_alternate_on_one_sink(tmp_path, spark):
         rows = _log2_rows(start, n)
         seen += rows
         log2 = spark.createDataFrame(rows, LOG2_SCHEMA)
-        arrow = fused_arrow_deltas(log2, 8) if how == "arrow" else None
+        arrow = fused_arrow_deltas(log2, 8)[1] if how == "arrow" else None
         for name, sink in sinks.items():
             if arrow is not None:
                 sink.apply_delta(arrow[name], epoch_id)
