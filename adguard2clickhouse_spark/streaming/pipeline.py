@@ -490,15 +490,14 @@ class QuerylogPipeline:
                 use_fused = bool(self.fused_deltas)
                 on_driver = False
             if on_driver:
-                timings["delta_path"] = "driver"
-            elif use_fused and stock:
-                timings["delta_path"] = "fused"
+                path = "driver"
             else:
-                timings["delta_path"] = "per_sink"
+                path = "fused" if use_fused and stock else "per_sink"
+            timings["delta_path"] = path
 
             def _fold(deltas, name):
                 sink = self.sinks[name]
-                if on_driver:  # touched buckets arrive with the delta
+                if path == "driver":  # touched buckets arrive with the delta
                     return lambda: sink.apply_delta(deltas[name], epoch_id)
                 return lambda: sink.apply_delta(
                     deltas[name],
@@ -513,13 +512,15 @@ class QuerylogPipeline:
                 # ahead of them.
                 t0 = _time.time()
                 fused = None
-                if on_driver:
-                    table, deltas = fused_arrow_deltas(good, next(iter(n_buckets)))
+                if path == "driver":
+                    table, deltas = fused_arrow_deltas(
+                        good, next(iter(n_buckets))
+                    )
                     timings["delta_rows"] = table.num_rows
                     timings["delta_bytes"] = table.nbytes
                     del table  # the per-sink splits are copies
                     timings["fused_delta_s"] = round(_time.time() - t0, 3)
-                elif use_fused and stock:
+                elif path == "fused":
                     fused, extract = fused_aggregate_deltas(good)
                     fused.persist().count()
                     timings["fused_delta_s"] = round(_time.time() - t0, 3)
