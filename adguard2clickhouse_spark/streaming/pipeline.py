@@ -443,9 +443,12 @@ class QuerylogPipeline:
                 # the reference's per-block insert, batched: one POST of
                 # RowBinary per executor partition instead of one HTTP
                 # round-trip per row (collector.py:73-75)
-                self.clickhouse.insert_batch(
+                sent = self.clickhouse.insert_batch(
                     good, "log2", dedup_token=f"log2_epoch_{epoch_id}"
                 )
+                if sent is not None:  # ClickHouseWriter reports nothing
+                    timings["clickhouse_posts"] = sent["posts"]
+                    timings["clickhouse_bytes"] = sent["bytes"]
 
             # Delivery contract (r10, closing VERDICT r9 ask #1): every
             # consumer of this epoch is now idempotent — the summing

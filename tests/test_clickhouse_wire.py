@@ -12,17 +12,24 @@ real INSERT; otherwise that half is skipped and the byte check stands.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import struct
 
+import pyarrow as pa
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from adguard2clickhouse_spark.schemas import LOG2_SCHEMA
 from adguard2clickhouse_spark.sinks.clickhouse import (
     ClickHouseHTTPWriter,
     _leb128,
+    decode_rowbinary,
+    encode_record_batches,
     encode_rowbinary,
     log2_ddl,
 )
@@ -520,3 +527,194 @@ def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark)
         assert bd == exp_bd
     finally:
         srv.shutdown()
+
+
+# -- the column-at-a-time Arrow encoder --------------------------------------
+
+def _padded(text: str, n_bytes: int) -> str:
+    """``text`` padded with ASCII to at least ``n_bytes`` UTF-8 bytes."""
+    return text + "a" * max(0, n_bytes - len(text.encode("utf-8")))
+
+
+# 127/128 and 16383/16384 bytes are the 1→2 and 2→3 byte LEB128 edges
+_strings = st.one_of(
+    st.text(max_size=12),
+    st.builds(_padded, st.text(max_size=4), st.sampled_from([0, 127, 128, 16383, 16384])),
+)
+_arrays = st.one_of(
+    st.lists(st.text(max_size=6), max_size=3),
+    st.lists(st.text(max_size=2), min_size=128, max_size=130),
+)
+_log2_rows = st.tuples(
+    st.datetimes(dt.datetime(1970, 1, 1), dt.datetime(2106, 2, 7)).map(
+        lambda d: d.replace(microsecond=0)
+    ),
+    *[_strings] * 6,
+    st.booleans(),
+    st.integers(0, 2**63 - 1),
+    st.booleans(),
+    st.integers(0, 255),
+    _arrays,
+    _arrays,
+    _arrays,
+)
+_EDGE_ROW = (
+    dt.datetime(2106, 2, 7, 6, 28, 15),  # UInt32 max
+    "",
+    "é" * 63 + "a",  # 127 bytes
+    "é" * 64,  # 128 bytes
+    "日" * 5462,  # 16386 bytes
+    "ß😀",
+    "\x00",
+    True,
+    2**63 - 1,
+    False,
+    255,
+    [],
+    ["x" * 128] * 128,
+    ["ü" * 70, ""],
+)
+
+
+@settings(max_examples=40, deadline=None)
+@given(rows=st.lists(_log2_rows, max_size=6), cuts=st.lists(st.integers(0, 6), max_size=3))
+@example(rows=[_EDGE_ROW, _EDGE_ROW], cuts=[1])
+def test_arrow_encoder_roundtrips_and_ignores_batch_boundaries(rows, cuts):
+    payload = encode_rowbinary(rows, LOG2_SCHEMA)
+    assert decode_rowbinary(payload, LOG2_SCHEMA) == rows
+    arrow_schema = to_arrow_schema(LOG2_SCHEMA)
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    bounds = sorted({0, len(rows), *(min(c, len(rows)) for c in cuts)})
+    parts = [batch.slice(a, b - a) for a, b in zip(bounds, bounds[1:])]
+    assert encode_record_batches(parts, LOG2_SCHEMA) == payload
+
+
+def test_value_that_does_not_fit_its_arrow_type_raises_valueerror():
+    for dtype, value in [(T.LongType(), 2**64), (T.LongType(), 2**63), (T.IntegerType(), 2**40)]:
+        schema = T.StructType([T.StructField("v", dtype)])
+        with pytest.raises(ValueError):
+            encode_rowbinary([(value,)], schema)
+    with pytest.raises(ValueError, match="UInt64 out of range"):
+        encode_rowbinary([(-1,)], T.StructType([T.StructField("v", T.LongType())]))
+    with pytest.raises(ValueError, match="DateTime out of UInt32 range"):
+        encode_rowbinary(
+            [(dt.datetime(1969, 12, 31, 23, 59, 59),)],
+            T.StructType([T.StructField("t", T.TimestampType())]),
+        )
+    with pytest.raises(ValueError, match="no RowBinary encoding"):
+        encode_rowbinary([(dt.date(2024, 1, 1),)], T.StructType([T.StructField("d", T.DateType())]))
+
+
+def test_aware_datetime_encodes_as_utc():
+    schema = T.StructType([T.StructField("t", T.TimestampType())])
+    plus1 = dt.timezone(dt.timedelta(hours=1))
+    aware = dt.datetime(1970, 1, 1, 1, 1, 40, tzinfo=plus1)  # 00:01:40 UTC
+    assert encode_rowbinary([(aware,)], schema) == struct.pack("<I", 100)
+
+
+@contextlib.contextmanager
+def _recording_clickhouse():
+    """A ClickHouseHTTPWriter pointed at a loopback server that records
+    each POST as (insert_deduplication_token, body)."""
+    import threading
+    import urllib.parse
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    received: list[tuple[str | None, bytes]] = []
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):
+            body = self.rfile.read(int(self.headers["Content-Length"]))
+            q = urllib.parse.parse_qs(urllib.parse.urlparse(self.path).query)
+            received.append((q.get("insert_deduplication_token", [None])[0], body))
+            self.send_response(200)
+            self.end_headers()
+
+        def log_message(self, *args):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        yield ClickHouseHTTPWriter(
+            host="127.0.0.1", port=srv.server_address[1],
+            database="dns", username="agh", password="",
+        ), received
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def _log2_row(i: int, j: int, **override) -> tuple:
+    row = dict(
+        date_time=dt.datetime(2024, 1, 1, 0, i, j), QH=f"p{i}-{j}.example.com",
+        QT="A", QC="IN", CP="", Upstream="8.8.8.8:53", IP=f"10.0.0.{j}",
+        IsFiltered=j % 2 == 0, Elapsed=100 + j, Cached=False, rcode=j % 4,
+        rdatas=["1.2.3.4"] * (j % 3), rdatas6=[], cnames=["c.example.net"] * (j % 2),
+    )
+    row.update(override)
+    return tuple(row[f.name] for f in LOG2_SCHEMA.fields)
+
+
+def test_insert_batch_posts_each_nonempty_partition_under_its_token(spark):
+    from pyspark.sql import functions as F
+
+    parts = {i: [_log2_row(i, j) for j in range(5 + i)] for i in (0, 2)}
+    # one source element per partition; partition 1 stays empty
+    rdd = spark.sparkContext.parallelize(range(3), 3).flatMap(lambda i: parts.get(i, []))
+    df = spark.createDataFrame(rdd, LOG2_SCHEMA)
+    by_pid: dict[int, list[tuple]] = {}
+    for r in df.withColumn("pid", F.spark_partition_id()).collect():
+        by_pid.setdefault(r.pid, []).append(tuple(r)[:-1])
+    assert sorted(by_pid) == [0, 2]
+
+    with _recording_clickhouse() as (writer, received):
+        sent = writer.insert_batch(df, "log2", dedup_token="log2_epoch_3")
+
+    assert sorted(t for t, _ in received) == ["log2_epoch_3_p0", "log2_epoch_3_p2"]
+    for token, body in received:
+        pid = int(token.rsplit("_p", 1)[1])
+        assert decode_rowbinary(body, LOG2_SCHEMA) == by_pid[pid]
+    assert sent == {"posts": 2, "bytes": sum(len(b) for _, b in received)}
+
+
+@pytest.mark.parametrize(
+    "override, message",
+    [({"QH": None}, "NULL value for non-Nullable"), ({"rcode": 300}, "UInt8 out of range: 300")],
+)
+def test_insert_batch_refuses_unencodable_rows(spark, override, message):
+    df = spark.createDataFrame([_log2_row(0, 1, **override)], LOG2_SCHEMA)
+    with _recording_clickhouse() as (writer, received):
+        with pytest.raises(Exception, match=message):
+            writer.insert_batch(df, "log2", dedup_token="t")
+    assert received == []
+
+
+def test_process_batch_records_clickhouse_posts_and_bytes(tmp_path, spark):
+    import json
+
+    from adguard2clickhouse_spark.operators.dnswire import build_answer_b64
+    from adguard2clickhouse_spark.operators.parse import parse_querylog_lines
+    from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
+
+    src = tmp_path / "src"
+    src.mkdir()
+    lines = [
+        json.dumps({
+            "T": f"2024-01-01T00:00:{i:02d}+00:00", "QH": f"d{i}.example.com",
+            "QT": "A", "QC": "IN", "CP": "", "Upstream": "8.8.8.8:53",
+            "IP": "10.0.0.1", "Result": {"IsFiltered": False}, "Elapsed": i,
+            "Cached": False, "Answer": build_answer_b64(a=["1.2.3.4"]),
+        })
+        for i in range(20)
+    ]
+    (src / "querylog.jsonl").write_text("\n".join(lines) + "\n")
+    with _recording_clickhouse() as (writer, received):
+        pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"), clickhouse=writer)
+        pipe.process_batch(parse_querylog_lines(spark.read.text(str(src))), epoch_id=0)
+    timings = pipe.batch_timings[-1]
+    assert received
+    assert timings["clickhouse_posts"] == len(received)
+    assert timings["clickhouse_bytes"] == sum(len(b) for _, b in received)
