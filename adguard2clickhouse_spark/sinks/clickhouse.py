@@ -34,7 +34,6 @@ from typing import Iterable
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -133,8 +132,8 @@ def _binary(offsets: np.ndarray, data) -> pa.Array:
 
 
 def _value_ends(arr: pa.Array) -> np.ndarray:
-    """The value offsets of an unsliced large_binary array."""
-    return np.frombuffer(arr.buffers()[1], np.int64, len(arr) + 1)
+    """The value offsets of a large_binary array."""
+    return np.frombuffer(arr.buffers()[1], np.int64, len(arr) + 1, 8 * arr.offset)
 
 
 def _leb128_array(n: np.ndarray) -> pa.Array:
@@ -142,8 +141,8 @@ def _leb128_array(n: np.ndarray) -> pa.Array:
     length/count prefix — one binary value per input value."""
     n = n.astype(np.uint64)
     width = np.ones(len(n), np.int64)
-    for k in range(1, 10):
-        more = n >= np.uint64(1 << (7 * k))
+    for byte in range(1, 10):  # 7 bits per byte, at most 10 bytes
+        more = n >= np.uint64(1 << (7 * byte))
         if not more.any():
             break
         width += more
@@ -212,8 +211,8 @@ def _pieces(arr: pa.Array, dt: T.DataType) -> list[pa.Array]:
         body = _binary(ends, encoded.buffers()[2])
         return [_leb128_array(np.diff(offsets)), body]
     if isinstance(dt, T.StringType):
-        lengths = pc.binary_length(arr).to_numpy(zero_copy_only=False)
-        return [_leb128_array(lengths), arr.cast(pa.large_binary())]
+        body = arr.cast(pa.large_binary())
+        return [_leb128_array(np.diff(_value_ends(body))), body]
     if type(dt) not in _FIXED_DTYPE:
         raise ValueError(f"no RowBinary encoding for {dt}")
     values = _fixed_values(arr, dt)
