@@ -259,13 +259,18 @@ _KEEP = {
 }
 
 
-def _extract(fused: DataFrame, spec: _FusedSpec) -> DataFrame:
+def _kept(spec: _FusedSpec) -> F.Column:
+    """The fused rows that make up ``spec``'s delta."""
     cond = F.col("_gid") == spec.gid
     if spec.keep:
         col, kind = spec.keep
         cond = cond & _KEEP[kind][0](col)
-    return fused.filter(cond).select(
-        *[F.col(src).alias(out) for src, out in spec.columns]
+    return cond
+
+
+def _extract(fused: DataFrame, spec: _FusedSpec, extra=()) -> DataFrame:
+    return fused.filter(_kept(spec)).select(
+        *[F.col(src).alias(out) for src, out in spec.columns], *extra
     )
 
 
@@ -281,8 +286,20 @@ def _extract_arrow(table: pa.Table, spec: _FusedSpec) -> pa.Table:
     )
 
 
+def _bucket_tag(n_buckets: int) -> F.Column:
+    """Each fused row's summing-sink bucket: ``bucket_id`` over the
+    row's own grouping keys, so the driver never re-implements Spark's
+    hash."""
+    tag = None
+    for spec in {s.gid: s for s in _FUSED_SPECS.values()}.values():
+        cond = F.col("_gid") == spec.gid
+        bkt = bucket_id([F.col(c) for c in spec.key_sources], n_buckets)
+        tag = F.when(cond, bkt) if tag is None else tag.when(cond, bkt)
+    return tag
+
+
 def fused_aggregate_deltas(
-    log2: DataFrame, bucket: str = "10 minutes"
+    log2: DataFrame, bucket: str = "10 minutes", n_buckets: int | None = None
 ) -> tuple[DataFrame, dict[str, "callable"]]:
     """All eight reference-MV deltas in ONE shuffle (VERDICT r6 #4).
 
@@ -311,6 +328,11 @@ def fused_aggregate_deltas(
     once, then each ``extractors[name](fused)`` is a filter+projection
     (a cache read, no shuffle) that is row- and type-identical to
     ``ALL_AGGREGATES[name](log2)``. Equality is pytest-gated per sink.
+
+    With ``n_buckets``, every fused row also carries its summing-sink
+    bucket (``BUCKET_COL``) and the extractors keep it, so each delta
+    folds into a sink of that many buckets without re-hashing; see
+    ``touched_buckets`` for the buckets each delta touches.
     """
     proj = log2.select(
         "QH",
@@ -339,11 +361,31 @@ def fused_aggregate_deltas(
             F.grouping_id().alias("_gid"),
         )
     )
+    extra = ()
+    if n_buckets is not None:
+        fused = fused.withColumn(BUCKET_COL, _bucket_tag(n_buckets))
+        extra = (BUCKET_COL,)
     extractors = {
-        name: functools.partial(_extract, spec=spec)
+        name: functools.partial(_extract, spec=spec, extra=extra)
         for name, spec in _FUSED_SPECS.items()
     }
     return fused, extractors
+
+
+def touched_buckets(fused: DataFrame) -> dict[str, list[int]]:
+    """Each aggregate's exact touched buckets in a bucket-tagged fused
+    frame (``fused_aggregate_deltas(..., n_buckets=...)``): the buckets
+    of the rows its extractor keeps. blocked/visited_domains share the
+    QH grouping but keep different rows, and tld_stats drops its NULL
+    key, so the sets are taken per aggregate. One Spark job; on a
+    persisted frame it is also the job that materializes the cache."""
+    row = fused.agg(
+        *[
+            F.collect_set(F.when(_kept(spec), F.col(BUCKET_COL))).alias(name)
+            for name, spec in _FUSED_SPECS.items()
+        ]
+    ).collect()[0]
+    return {name: sorted(row[name]) for name in _FUSED_SPECS}
 
 
 def fused_arrow_deltas(
@@ -351,22 +393,15 @@ def fused_arrow_deltas(
 ) -> tuple[pa.Table, dict[str, pa.Table]]:
     """The eight deltas of ``fused_aggregate_deltas``, collected to the
     driver with ONE ``toArrow()`` and split there, each row already
-    tagged with its summing-sink bucket (``BUCKET_COL``): the same
-    projection that reads the fused frame computes ``bucket_id`` over
-    the row's own grouping keys, so the driver never re-implements
-    Spark's hash. Every sink fed from this must have ``n_buckets``
-    buckets. This replaces the Spark fold fan (~5 jobs per sink) with
-    driver-side pyarrow folds (``SummingParquetSink.apply_delta``).
+    tagged with its summing-sink bucket (``BUCKET_COL``). Every sink
+    fed from this must have ``n_buckets`` buckets. This replaces the
+    Spark fold fan (~5 jobs per sink) with driver-side pyarrow folds
+    (``SummingParquetSink.apply_delta``).
 
     Returns ``(collected, deltas)``: the collected table (its size is
     the driver memory the path costs) and the per-aggregate splits."""
-    fused, _ = fused_aggregate_deltas(log2, bucket)
-    tag = None
-    for spec in {s.gid: s for s in _FUSED_SPECS.values()}.values():
-        cond = F.col("_gid") == spec.gid
-        bkt = bucket_id([F.col(c) for c in spec.key_sources], n_buckets)
-        tag = F.when(cond, bkt) if tag is None else tag.when(cond, bkt)
-    table = fused.withColumn(BUCKET_COL, tag).toArrow()
+    fused, _ = fused_aggregate_deltas(log2, bucket, n_buckets)
+    table = fused.toArrow()
     return table, {
         name: _extract_arrow(table, spec) for name, spec in _FUSED_SPECS.items()
     }

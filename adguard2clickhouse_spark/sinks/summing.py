@@ -34,9 +34,15 @@ epoch after a failure, never reorders), so idempotency survives
 arbitrarily long streams. Visibility is all-or-nothing: merged bucket
 versions become live only at the single pointer swap.
 
+**Touched buckets.** A fold learns its touched buckets in one of three
+ways: a pyarrow Table delta carries its bucket ids; a producer that
+tagged a DataFrame delta in Spark passes its exact bucket set
+(``touched=``, the pipeline's fused path above the driver ceiling);
+any other DataFrame delta pays one discovery job.
+
 **Driver-side folds.** ``apply_delta`` also accepts a pyarrow Table
-whose rows already carry their bucket id (the pipeline's small-epoch
-path collects all eight deltas, bucket-tagged, in one Spark job; see
+whose rows already carry their bucket id (the pipeline's driver path
+collects all eight deltas, bucket-tagged, in one Spark job; see
 ``operators.aggregates.fused_arrow_deltas``). Such a delta folds on
 the driver: per touched bucket, read the current files with pyarrow,
 concatenate the delta, ``group_by(keys).aggregate(...)`` and stage one
@@ -116,16 +122,6 @@ class SummingParquetSink:
         for m, f in self.folds.items():
             if f not in _FOLDS:
                 raise ValueError(f"unknown fold {f!r} for measure {m!r}")
-        # Did the most recent fold's delta touch every bucket? None
-        # until a fold that knows its touched set has run (a sparse
-        # Spark fold's discovery job, or any driver-side fold, whose
-        # bucket ids arrive with the delta). The pipeline's
-        # dense_folds="auto" gate reads this (ADVICE r7: gating on raw
-        # epoch rows alone lets a 100k-row single-hot-key epoch pick
-        # dense and rewrite every bucket — bucket coverage depends on
-        # the delta's DISTINCT-KEY count, which only the touched set
-        # actually measures).
-        self.last_fold_touched_all: bool | None = None
         os.makedirs(path, exist_ok=True)
 
     def _fold_exprs(self):
@@ -301,7 +297,7 @@ class SummingParquetSink:
         delta: DataFrame | pa.Table,
         epoch_id: int | None = None,
         token: str | None = None,
-        dense: bool = False,
+        touched: list[int] | None = None,
     ) -> None:
         """Fold a delta into the table (idempotent per epoch_id for
         stream epochs, per ``token`` for out-of-band folds like
@@ -313,19 +309,14 @@ class SummingParquetSink:
         carry their ``BUCKET_COL`` id (computed in Spark with
         ``bucket_id`` over this sink's keys and ``n_buckets``). A Table
         folds on the driver (see the module docstring); its touched set
-        comes with the delta, so it needs no discovery job and ``dense``
-        does not apply.
+        comes with the delta.
 
-        ``dense=True`` skips the touched-bucket discovery job and folds
-        the delta into EVERY bucket in one Spark job. Measured r6 on
-        the streaming fan: a micro-batch's keyed delta (thousands of
-        keys into 8 buckets) touches all buckets essentially every
-        epoch, so the discovery job (delta aggregation + distinct +
-        driver collect, per sink per epoch) only ever discovered "all
-        of them" — pure overhead on the hot path. The sparse path
-        remains the default for out-of-band folds (dead-letter replay:
-        a 100-line delta touches few buckets of a huge table, and the
-        discovery job is what keeps untouched buckets byte-identical)."""
+        ``touched`` is given by a producer that already knows the exact
+        buckets of a DataFrame delta whose rows carry ``BUCKET_COL``
+        (the pipeline's fused path collects them in the job that
+        materializes its deltas); the fold then skips the discovery
+        job. Without it, one discovery job (a ≤ n_buckets-row collect)
+        finds the touched buckets before the fold."""
         meta = self._pointer()
         if epoch_id is not None and self.applied(epoch_id):
             return  # retry of an applied epoch — exactly-once no-op
@@ -334,23 +325,14 @@ class SummingParquetSink:
 
         if isinstance(delta, pa.Table):
             self._fold_arrow(delta, meta, epoch_id, token)
-        elif dense:
-            # every bucket may change; _publish no-ops buckets with no
-            # staged output (and additive folds cannot empty a bucket)
-            self._fold_spark(
-                self._with_bucket(delta), list(range(self.n_buckets)),
-                meta, epoch_id, token,
-            )
+        elif touched is not None:
+            self._fold_spark(delta, sorted(touched), meta, epoch_id, token)
         else:
             tagged = self._with_bucket(delta).persist()
             try:
-                # Touched-bucket discovery: a ≤ n_buckets-row collect (n
-                # is a table constant, not data-sized) — this is exactly
-                # what makes the other buckets' files never open.
                 touched = sorted(
                     r[0] for r in tagged.select(BUCKET_COL).distinct().collect()
                 )
-                self.last_fold_touched_all = len(touched) == self.n_buckets
                 self._fold_spark(tagged, touched, meta, epoch_id, token)
             finally:
                 tagged.unpersist()
@@ -400,7 +382,6 @@ class SummingParquetSink:
         staged as one file per bucket, then the shared ``_publish``."""
         ids = delta[BUCKET_COL]
         touched = sorted(pc.unique(ids).to_pylist())
-        self.last_fold_touched_all = len(touched) == self.n_buckets
         if not touched:
             self._record_empty(meta, epoch_id, token)
             return

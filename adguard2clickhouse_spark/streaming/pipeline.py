@@ -46,6 +46,7 @@ from adguard2clickhouse_spark.operators.aggregates import (
     ALL_AGGREGATES,
     fused_aggregate_deltas,
     fused_arrow_deltas,
+    touched_buckets,
 )
 from adguard2clickhouse_spark.operators.parse import (
     parse_querylog_lines,
@@ -86,11 +87,7 @@ class QuerylogPipeline:
 
     def __init__(self, spark: SparkSession, source_dir: str, out_dir: str,
                  checkpoint_dir: str | None = None, clickhouse=None,
-                 custom_aggregates=None,
-                 parse_parallelism: int | str | None = None,
-                 dense_folds: bool | str = "auto",
-                 fused_deltas: bool | str = "auto",
-                 fact_sink_factory=None):
+                 custom_aggregates=None, fact_sink_factory=None):
         self.spark = spark
         # Micro-batches are small relative to the static shuffle-partition
         # count; AQE coalescing (on by default since Spark 3.2, explicit
@@ -148,77 +145,17 @@ class QuerylogPipeline:
         # summing sinks — against a real ClickHouse the server-side MVs
         # fold them from this very insert, exactly like the reference.
         self.clickhouse = clickhouse
-        # Optional round-robin repartition of the RAW LINES below the
-        # parse. Hypothesis (r6): micro-batch partitioning follows the
-        # file count per trigger (2 files = 2 partitions), starving the
-        # UDF/encode/write stages of cores. MEASURED at 1M rows / 10
-        # epochs on a quiet host: OFF 25.4-27.9k rows/s; 32 -> 20.9k;
-        # 8 -> 22.4k — the added per-epoch exchange plus 8 sinks x more
-        # shuffle-map tasks cost MORE than the parallelism buys, and
-        # per-stage attribution shows parse_materialize barely moves
-        # (the leg is dominated by scan + persist + job overhead, not
-        # by per-row CPU). Same lesson as the r5 batch finding: don't
-        # repartition your way out of a cost that isn't per-row CPU.
-        # The knob stays for genuinely CPU-dense parses (real DNS blobs
-        # rather than 5 memoized variants); round-robin repartition is
-        # deterministic across epoch retries (sorts before exchanging),
-        # so ClickHouse dedup tokens stay stable. "auto" =
-        # defaultParallelism; int pins; None/0 (default) disables.
-        if parse_parallelism == "auto":
-            parse_parallelism = spark.sparkContext.defaultParallelism
-        self.parse_parallelism = parse_parallelism or None
-        # Per-sink fold strategy (ADVICE r6: r6 hardwired dense=True,
-        # trading away the sink's documented O(touched-state) property
-        # for every future caller). "auto" (default) decides PER EPOCH
-        # PER SINK from data already on hand — the batch row count the
-        # cache materialization produces anyway: a delta with
-        # rows ≥ 4·n_buckets touches every bucket with near certainty
-        # under the xxhash64 bucketing (P[missed bucket] ≤
-        # n·e^(−rows/n) < 2% at 4×), so the discovery job can only
-        # rediscover "all of them" — skip it. Below that, low-traffic
-        # epochs and high-n_buckets sinks keep the sparse bucket-pruned
-        # path that leaves untouched buckets byte-identical. True/False
-        # pin the strategy for every sink.
-        self.dense_folds = dense_folds
-        # Delta computation and fold (see process_batch). "auto"
-        # (default) decides PER EPOCH from the batch row count. Up to
-        # driver_fold_max_rows good rows the eight deltas come from one
-        # grouping-sets pass collected to the driver as one Arrow
-        # table, and each sink folds its share with pyarrow (no Spark
-        # job per sink); above it the deltas stay in Spark (the same
-        # grouping-sets pass, measured r9 ahead of eight per-sink
-        # groupBys at 250k and 500k rows/epoch) and each sink runs its
-        # Spark fold. The ceiling is a driver-memory bound, not a
-        # speed crossover: the collected delta must stay within the
-        # sinks' own driver budget (_DRIVER_FOLD_MAX_BYTES) at the
-        # widest measured delta (_DELTA_BYTES_PER_ROW), and the driver
-        # path was measured ahead of the Spark fold fan at every size
-        # up to it (50k-1M rows/epoch). True pins the fused Spark
-        # path, False the per-sink Spark path; the fused plan itself is
-        # driver-gated via a16_fused_mv_union.
-        # Strategy knobs accept bool | "auto" ONLY. Any other string
-        # ("false", "off", a typo like "Auto") must be an error, not a
-        # silent bool(str)=True behavior change (ADVICE r9).
-        for knob, val in (("dense_folds", dense_folds),
-                          ("fused_deltas", fused_deltas)):
-            if isinstance(val, str) and val != "auto":
-                raise ValueError(
-                    f"{knob} must be True, False or 'auto'; got {val!r}"
-                )
-        self.fused_deltas = fused_deltas
+        # Delta path (see _fold_aggregates): up to driver_fold_max_rows
+        # good rows the stock deltas come from one grouping-sets pass
+        # collected to the driver as one Arrow table, and each sink
+        # folds its share with pyarrow (no Spark job per sink); above it
+        # the same pass stays in Spark. The ceiling is a driver-memory
+        # bound, not a speed crossover: the collected delta must stay
+        # within the sinks' own driver budget (_DRIVER_FOLD_MAX_BYTES)
+        # at the widest measured delta (_DELTA_BYTES_PER_ROW), and the
+        # driver path was measured ahead of the Spark fold fan at every
+        # size up to it (50k-1M rows/epoch).
         self.driver_fold_max_rows = _DRIVER_FOLD_MAX_BYTES // _DELTA_BYTES_PER_ROW
-        # Dense-regime re-probe cadence (r10, closing the documented
-        # dense-state blindness): a sink that flipped dense never
-        # measures bucket coverage again, so a traffic shift to
-        # hot-key deltas went unobserved — costing rewritten-but-
-        # identical buckets every epoch until restart. Every Nth
-        # consecutive dense fold per sink now runs ONE sparse fold
-        # whose discovery job re-measures coverage for free: steady
-        # keyed traffic pays one discovery per N epochs (~6% at the
-        # default), a shifted sink flips back to sparse within N
-        # epochs and stays there. 0/None disables the re-probe.
-        self.sparse_reprobe_every = 16
-        self._dense_streaks: dict[int, int] = {}
         # Automatic fact-ledger maintenance (VERDICT r10 #1): reads
         # degrade with committed-slot count (BENCH_factledger_r10.json:
         # 17 s at 200 tiny slots vs 6.6 s after one compaction), and a
@@ -342,46 +279,83 @@ class QuerylogPipeline:
             )
         self.join_maintenance()
 
-    def _dense_fold(self, sink: SummingParquetSink, n_rows: int) -> bool:
-        """Per-epoch per-sink fold strategy (see ``dense_folds`` in
-        ``__init__``): dense when the strategy is pinned True, sparse
-        when pinned False. "auto" needs TWO signals (ADVICE r7: the
-        raw row count alone is the wrong quantity — bucket coverage
-        depends on the delta's distinct-KEY count, so a 100k-row epoch
-        on one hot key would pick dense and rewrite every bucket,
-        defeating the O(touched-state) property): (1) rows ≥
-        4·n_buckets makes full coverage plausible, and (2) the sink's
-        LAST sparse discovery actually observed a delta touching every
-        bucket (``last_fold_touched_all``, measured for free by the
-        discovery job). The first epoch therefore always runs sparse —
-        one discovery job at startup buys the measurement; steady-state
-        keyed traffic flips to dense on epoch 2, while hot-key traffic
-        stays sparse for good. A traffic shift while dense would go
-        unobserved (dense never measures), so every
-        ``sparse_reprobe_every``-th consecutive dense fold runs sparse
-        to re-measure coverage (r10) — a shifted sink returns to the
-        O(touched-state) path within one cadence instead of never."""
-        if self.dense_folds == "auto":
-            dense = (
-                n_rows >= 4 * sink.n_buckets
-                and sink.last_fold_touched_all is True
-            )
-            key = id(sink)
-            if not dense:
-                self._dense_streaks[key] = 0
-                return False
-            streak = self._dense_streaks.get(key, 0) + 1
-            if (
-                self.sparse_reprobe_every
-                and streak >= self.sparse_reprobe_every
-            ):
-                # periodic re-probe: one sparse fold re-measures
-                # last_fold_touched_all via its discovery job
-                self._dense_streaks[key] = 0
-                return False
-            self._dense_streaks[key] = streak
-            return True
-        return bool(self.dense_folds)
+    def _fold_aggregates(
+        self,
+        good: DataFrame,
+        n_good: int,
+        epoch_id: int | None = None,
+        token: str | None = None,
+    ) -> dict:
+        """Compute every aggregate's delta over ``good`` (persisted,
+        ``n_good`` rows) and fold it into its sink under ``epoch_id``
+        (a stream epoch) or ``token`` (an out-of-band fold such as
+        dead-letter replay). The one delta-and-fold path of both.
+
+        A sink's route follows from its inputs alone:
+
+        - a stock aggregate takes the grouping-sets delta
+          (``fused_aggregate_deltas``), one pass for all of them. Up to
+          ``driver_fold_max_rows`` good rows the pass is collected to
+          the driver with each row's bucket id and every sink folds its
+          share with pyarrow (``delta_path`` "driver"). Above it the
+          bucket-tagged pass is persisted, and the job that
+          materializes it also collects each sink's exact touched
+          buckets, so every Spark fold rewrites only those buckets with
+          no discovery job ("fused");
+        - a custom aggregate computes ``fn(good)`` and takes the
+          sink's Spark fold, whose discovery job finds its buckets.
+
+        The grouping-sets pass serves sinks sharing one bucket count
+        (one bucket column serves them all). Returns the step's
+        timings: ``delta_path``, ``fused_delta_s`` and, on the driver
+        path, the collected delta's ``delta_rows``/``delta_bytes``."""
+        timings: dict = {}
+        stock = [
+            name for name, fn in self.aggregates.items()
+            if ALL_AGGREGATES.get(name) is fn
+        ]
+        n_buckets = {self.sinks[name].n_buckets for name in stock}
+        if len(n_buckets) != 1:
+            stock = []
+        deltas: dict = {}
+        touched: dict = {}
+        fused = None
+        try:
+            if stock:
+                (n,) = n_buckets
+                t0 = _time.time()
+                if n_good <= self.driver_fold_max_rows:
+                    timings["delta_path"] = "driver"
+                    table, arrow = fused_arrow_deltas(good, n)
+                    timings["delta_rows"] = table.num_rows
+                    timings["delta_bytes"] = table.nbytes
+                    del table  # the per-sink splits are copies
+                    deltas = {name: arrow[name] for name in stock}
+                else:
+                    timings["delta_path"] = "fused"
+                    fused, extract = fused_aggregate_deltas(good, n_buckets=n)
+                    fused.persist()
+                    buckets = touched_buckets(fused)
+                    touched = {name: buckets[name] for name in stock}
+                    deltas = {name: extract[name](fused) for name in stock}
+                timings["fused_delta_s"] = round(_time.time() - t0, 3)
+            for name, fn in self.aggregates.items():
+                if name not in deltas:
+                    deltas[name] = fn(good)
+            with ThreadPoolExecutor(max_workers=len(self.aggregates)) as pool:
+                fs = [
+                    pool.submit(
+                        self.sinks[name].apply_delta, deltas[name], epoch_id,
+                        token=token, touched=touched.get(name),
+                    )
+                    for name in self.aggregates
+                ]
+                for f in fs:
+                    f.result()
+        finally:
+            if fused is not None:
+                fused.unpersist()
+        return timings
 
     # -- the per-micro-batch body (the reference's "insert block") ----------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -466,86 +440,12 @@ class QuerylogPipeline:
             # failure of ANY of them fails the batch before the offset
             # commit, exactly as sequential failure between stages did.
 
-            # Delta path, decided per epoch (see fused_deltas in
-            # __init__). The Spark fold fan costs jobs, not rows (~5
-            # jobs per sink, 44 of ~50 jobs per epoch), so an epoch
-            # whose collected delta fits the driver budget runs ONE
-            # Spark job, the grouping-sets pass collected to the driver
-            # with every row's bucket id, and the sinks fold the Arrow
-            # deltas with pyarrow. A larger epoch keeps its deltas in
-            # Spark: the grouping-sets pass (fused_aggregate_deltas,
-            # VERDICT r6 #4) when fused, else eight per-sink groupBys.
-            # The fused plans apply only to the stock aggregate set
-            # (custom MVs have no extractor) and the driver fold to
-            # sinks sharing one bucket count (one bucket column serves
-            # them all).
-            stock = all(
-                ALL_AGGREGATES.get(name) is fn
-                for name, fn in self.aggregates.items()
-            )
-            n_buckets = {s.n_buckets for s in self.sinks.values()}
-            if self.fused_deltas == "auto":
-                use_fused = n_good > self.driver_fold_max_rows
-                on_driver = not use_fused and stock and len(n_buckets) == 1
-            else:
-                # truthy pins fuse (bool(1) counted before the auto
-                # mode existed and must keep counting)
-                use_fused = bool(self.fused_deltas)
-                on_driver = False
-            if on_driver:
-                path = "driver"
-            else:
-                path = "fused" if use_fused and stock else "per_sink"
-            timings["delta_path"] = path
-
-            def _fold(deltas, name):
-                sink = self.sinks[name]
-                if path == "driver":  # touched buckets arrive with the delta
-                    return lambda: sink.apply_delta(deltas[name], epoch_id)
-                return lambda: sink.apply_delta(
-                    deltas[name],
-                    epoch_id,
-                    dense=self._dense_fold(sink, n_good),
-                )
-
             def _fan():
                 # The delta step is part of this consumer: it reads only
                 # the materialized `good` cache, so it runs alongside
                 # the fact, dead-letter and ClickHouse writes instead of
                 # ahead of them.
-                t0 = _time.time()
-                fused = None
-                if path == "driver":
-                    table, deltas = fused_arrow_deltas(
-                        good, next(iter(n_buckets))
-                    )
-                    timings["delta_rows"] = table.num_rows
-                    timings["delta_bytes"] = table.nbytes
-                    del table  # the per-sink splits are copies
-                    timings["fused_delta_s"] = round(_time.time() - t0, 3)
-                elif path == "fused":
-                    fused, extract = fused_aggregate_deltas(good)
-                    fused.persist().count()
-                    timings["fused_delta_s"] = round(_time.time() - t0, 3)
-                    deltas = {
-                        name: extract[name](fused) for name in self.aggregates
-                    }
-                else:
-                    deltas = {
-                        name: fn(good) for name, fn in self.aggregates.items()
-                    }
-                try:
-                    with ThreadPoolExecutor(
-                        max_workers=len(self.aggregates)
-                    ) as pool:
-                        fs = [
-                            pool.submit(_fold(deltas, n)) for n in self.aggregates
-                        ]
-                        for f in fs:
-                            f.result()
-                finally:
-                    if fused is not None:
-                        fused.unpersist()
+                timings.update(self._fold_aggregates(good, n_good, epoch_id))
 
             # ONE overlapped section: fact append, dead-letter append,
             # ClickHouse POSTs and the aggregate fan (delta step plus
@@ -666,8 +566,6 @@ class QuerylogPipeline:
                 .dropDuplicatesWithinWatermark(["value"])
                 .drop("_ingest_ts")
             )
-        if self.parse_parallelism:
-            raw = raw.repartition(self.parse_parallelism)
         parsed = parse_querylog_lines(raw)
         writer = (
             parsed.writeStream.foreachBatch(self.process_batch)
@@ -873,17 +771,7 @@ class QuerylogPipeline:
                 if self.clickhouse is not None:
                     self.clickhouse.insert_batch(good, "log2", dedup_token=token)
                 if mode == "delta":
-                    with ThreadPoolExecutor(
-                        max_workers=len(self.aggregates)
-                    ) as pool:
-                        futures = [
-                            pool.submit(
-                                self.sinks[name].apply_delta, fn(good), None, token
-                            )
-                            for name, fn in self.aggregates.items()
-                        ]
-                        for f in futures:
-                            f.result()
+                    self._fold_aggregates(good, n_good, token=token)
             if n_good and mode == "rebuild":
                 # Rebuild BEFORE the dead-channel swap: log2 already
                 # holds the recovered rows, and a crash after the swap

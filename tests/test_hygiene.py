@@ -145,6 +145,16 @@ def _source_commits_after(repo: Path, stamp_head: str) -> list[str]:
     return [line for line in out.stdout.splitlines() if line.strip()]
 
 
+def _latest_selfcheck_stamps(repo: Path) -> list[Path]:
+    """Every SELFCHECK stamp of the newest round: ``SELFCHECK_rN.json``
+    (sf0.01) and its ``SELFCHECK_rN_sf0001.json`` twin (sf0.001)."""
+    by_round: dict[int, list[Path]] = {}
+    for p in repo.glob("SELFCHECK_r*.json"):
+        by_round.setdefault(int(re.search(r"r(\d+)", p.stem).group(1)), []).append(p)
+    assert by_round, "no SELFCHECK artifact committed"
+    return sorted(by_round[max(by_round)])
+
+
 def test_latest_selfcheck_artifact_is_not_stale():
     """VERDICT r7 ask #1 (recurred twice): the newest SELFCHECK must
     carry the git HEAD it ran against, and no later commit may touch a
@@ -153,34 +163,28 @@ def test_latest_selfcheck_artifact_is_not_stale():
     Artifacts from rounds before the stamp existed are skipped (they
     cannot be verified, which is the very hole this closes)."""
     import json
-    import re
 
     import pytest
 
     repo = Path(__file__).resolve().parent.parent
-    files = sorted(
-        repo.glob("SELFCHECK_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.stem).group(1)),
-    )
-    assert files, "no SELFCHECK artifact committed"
-    latest = files[-1]
-    meta = json.loads(latest.read_text()).get("_meta")
-    if meta is None:
-        pytest.skip(f"{latest.name} predates the git-HEAD stamp")
-    head = meta["git_head"]
-    assert not head.startswith("unavailable"), (
-        f"{latest.name} was produced outside a git checkout: {head}"
-    )
-    assert meta.get("source_dirty_at_run") == [], (
-        f"{latest.name} ran against uncommitted source edits: "
-        f"{meta['source_dirty_at_run']} — commit first, then re-run"
-    )
-    later = _source_commits_after(repo, head)
-    assert not later, (
-        f"{latest.name} is STALE: semantic source commits after its "
-        f"stamp {head[:12]}: {later} — re-run scripts/selfcheck.py "
-        "--json SELFCHECK_r<N>.json as the last code-touching act"
-    )
+    for latest in _latest_selfcheck_stamps(repo):
+        meta = json.loads(latest.read_text()).get("_meta")
+        if meta is None:
+            pytest.skip(f"{latest.name} predates the git-HEAD stamp")
+        head = meta["git_head"]
+        assert not head.startswith("unavailable"), (
+            f"{latest.name} was produced outside a git checkout: {head}"
+        )
+        assert meta.get("source_dirty_at_run") == [], (
+            f"{latest.name} ran against uncommitted source edits: "
+            f"{meta['source_dirty_at_run']} — commit first, then re-run"
+        )
+        later = _source_commits_after(repo, head)
+        assert not later, (
+            f"{latest.name} is STALE: semantic source commits after its "
+            f"stamp {head[:12]}: {later} — re-run scripts/selfcheck.py "
+            "--json SELFCHECK_r<N>.json as the last code-touching act"
+        )
 
 
 def test_staleness_check_detects_post_stamp_edits():
@@ -212,24 +216,17 @@ def test_latest_selfcheck_artifact_covers_every_registered_query():
     newest SELFCHECK_r*.json must have a row for every queries() entry
     — registering a query obligates re-running scripts/selfcheck.py."""
     import json
-    import re
 
     repo = Path(__file__).resolve().parent.parent
-    files = sorted(
-        repo.glob("SELFCHECK_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.stem).group(1)),
-    )
-    assert files, "no SELFCHECK artifact committed"
-    latest = files[-1]
-    rows = json.loads(latest.read_text())
-
     import __spark_entry__ as entrymod
 
-    missing = sorted(set(entrymod.queries()) - set(rows))
-    assert not missing, (
-        f"{latest.name} has no row for {missing}; "
-        "re-run scripts/selfcheck.py --json SELFCHECK_r<N>.json"
-    )
+    for latest in _latest_selfcheck_stamps(repo):
+        rows = json.loads(latest.read_text())
+        missing = sorted(set(entrymod.queries()) - set(rows))
+        assert not missing, (
+            f"{latest.name} has no row for {missing}; "
+            "re-run scripts/selfcheck.py --json SELFCHECK_r<N>.json"
+        )
 
 
 def test_latest_selfcheck_queries_stay_cold_fast():
@@ -240,21 +237,44 @@ def test_latest_selfcheck_queries_stay_cold_fast():
     every one under 8 s so operator growth can't silently push the
     tail past the driver's patience. (r9 slowest: 4.85 s.)"""
     import json
-    import re
 
     repo = Path(__file__).resolve().parent.parent
-    files = sorted(
-        repo.glob("SELFCHECK_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.stem).group(1)),
-    )
-    assert files, "no SELFCHECK artifact committed"
-    rows = json.loads(files[-1].read_text())
-    slow = {
-        k: v["secs"]
-        for k, v in rows.items()
-        if not k.startswith("_") and v.get("secs", 0) >= 8
-    }
-    assert not slow, f"registered queries no longer cold-fast: {slow}"
+    for latest in _latest_selfcheck_stamps(repo):
+        rows = json.loads(latest.read_text())
+        slow = {
+            k: v["secs"]
+            for k, v in rows.items()
+            if not k.startswith("_") and v.get("secs", 0) >= 8
+        }
+        assert not slow, (
+            f"{latest.name}: registered queries no longer cold-fast: {slow}"
+        )
+
+
+def test_latest_selfcheck_stamps_have_no_failed_rows():
+    """scripts/selfcheck.py writes its stamp even when queries fail. A
+    row fails when it is not rows-only and any of its row, schema or
+    hash comparisons is false, or when it carries an error — the rule
+    the script counts."""
+    import json
+
+    repo = Path(__file__).resolve().parent.parent
+    for latest in _latest_selfcheck_stamps(repo):
+        rows = json.loads(latest.read_text())
+        failed = sorted(
+            k for k, v in rows.items()
+            if not k.startswith("_")
+            and (
+                v.get("err")
+                or (
+                    not v.get("rows_only")
+                    and not all(
+                        v.get(c) for c in ("rows_match", "schema_match", "hash_match")
+                    )
+                )
+            )
+        )
+        assert not failed, f"{latest.name} has failed rows: {failed}"
 
 
 def test_bench_regression_flag_trips_on_genuine_2x():

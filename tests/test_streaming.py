@@ -582,7 +582,7 @@ def test_mid_epoch_failure_replay_no_double_count(tmp_path, spark):
     assert pipe2.dead_sink.read(spark) is None
 
 
-def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark):
+def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark, monkeypatch):
     """Operational recovery the reference lacks: lines that failed an
     older parser but pass the current one move from the dead-letter
     channel into log2 + rebuilt aggregates; genuinely bad lines stay
@@ -627,8 +627,20 @@ def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark):
     vd_dir = str(out / "visited_domains")
     before = _files(vd_dir)
 
+    # the replay computes every stock delta in one grouping-sets pass,
+    # the same fan as a stream epoch
+    from adguard2clickhouse_spark.streaming import pipeline as pl
+
+    delta_passes = []
+    real_deltas = pl.fused_arrow_deltas
+    monkeypatch.setattr(
+        pl, "fused_arrow_deltas",
+        lambda *a, **kw: delta_passes.append(1) or real_deltas(*a, **kw),
+    )
     stats = pipe.replay_dead_letters()
+    monkeypatch.undo()
     assert stats == {"replayed": 5, "still_dead": 2}
+    assert len(delta_passes) == 1
     assert pipe.read_log2().count() == 15
     dead_after = spark.read.parquet(str(out / "dead_letter"))
     assert dead_after.count() == 2
@@ -670,101 +682,17 @@ def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark):
     assert got == expected["visited_domains"], "token retry double-counted"
 
 
-def test_dense_fold_strategy_auto_and_pinned(spark, tmp_path):
-    """ADVICE r6: r6 hardwired dense=True into every epoch, silently
-    trading away the sink's O(touched-state) contract. ADVICE r7
-    tightened auto again: the row count alone is the wrong quantity
-    (a 100k-row hot-key epoch touches ONE bucket), so auto now also
-    requires the sink's last sparse discovery to have OBSERVED a
-    delta touching every bucket. Pinned True/False override both
-    ways."""
-    pipe = QuerylogPipeline(spark, str(tmp_path / "s"), str(tmp_path / "o"))
-
-    class _Sink:  # only n_buckets + the observation are consulted
-        n_buckets = 8
-        last_fold_touched_all = None
-
-    s = _Sink()
-    assert pipe.dense_folds == "auto"
-    # no observation yet: sparse regardless of rows (first epoch measures)
-    assert pipe._dense_fold(s, 0) is False
-    assert pipe._dense_fold(s, 10_000) is False
-    s.last_fold_touched_all = True
-    assert pipe._dense_fold(s, 31) is False      # low-traffic epoch: sparse
-    assert pipe._dense_fold(s, 32) is True       # 4*n_buckets boundary
-    assert pipe._dense_fold(s, 10_000) is True
-    s.last_fold_touched_all = False              # hot-key history: sparse
-    assert pipe._dense_fold(s, 10_000) is False
-    wide = _Sink()
-    wide.n_buckets = 4096                        # future high-n_buckets sink
-    wide.last_fold_touched_all = True
-    assert pipe._dense_fold(wide, 10_000) is False
-
-    pinned_on = QuerylogPipeline(
-        spark, str(tmp_path / "s2"), str(tmp_path / "o2"), dense_folds=True)
-    assert pinned_on._dense_fold(s, 1) is True
-    pinned_off = QuerylogPipeline(
-        spark, str(tmp_path / "s3"), str(tmp_path / "o3"), dense_folds=False)
-    assert pinned_off._dense_fold(s, 10_000) is False
-
-
-def test_dense_regime_reprobes_and_recovers_from_traffic_shift(
-    spark, tmp_path
-):
-    """r10, closing the documented dense-state blindness: once a sink
-    flipped dense it never re-measured bucket coverage, so a traffic
-    shift to hot-key deltas kept rewriting every bucket forever. Every
-    Nth consecutive dense fold now runs sparse; its discovery job
-    re-observes coverage, and a shifted stream returns to the sparse
-    O(touched-state) path within N epochs and stays there."""
-    pipe = QuerylogPipeline(spark, str(tmp_path / "s"), str(tmp_path / "o"))
-    pipe.sparse_reprobe_every = 4
-
-    class _Sink:
-        n_buckets = 8
-        last_fold_touched_all = None
-
-    s = _Sink()
-    shifted = {"hot": False}
-
-    def epoch(n_rows):
-        """One epoch's strategy decision + the measurement a SPARSE
-        fold's discovery job performs (dense folds never measure)."""
-        dense = pipe._dense_fold(s, n_rows)
-        if not dense:
-            s.last_fold_touched_all = not shifted["hot"]
-        return dense
-
-    # keyed traffic: first epoch sparse (measures), then dense
-    assert epoch(10_000) is False
-    assert [epoch(10_000) for _ in range(3)] == [True, True, True]
-    # 4th consecutive dense candidate is the re-probe: runs sparse
-    assert epoch(10_000) is False
-    # traffic unchanged -> re-probe observed full coverage -> dense again
-    assert epoch(10_000) is True
-    # traffic SHIFTS to one hot key while the sink is dense
-    shifted["hot"] = True
-    decisions = [epoch(10_000) for _ in range(pipe.sparse_reprobe_every)]
-    assert False in decisions, "re-probe never fired within the cadence"
-    # ...and after the re-probe observed the shift, sparse sticks
-    assert [epoch(10_000) for _ in range(3)] == [False, False, False]
-    # disabling the cadence restores the r9 behavior (never re-probe)
-    pipe2 = QuerylogPipeline(spark, str(tmp_path / "s2"), str(tmp_path / "o2"))
-    pipe2.sparse_reprobe_every = 0
-    s2 = _Sink()
-    s2.last_fold_touched_all = True
-    assert all(pipe2._dense_fold(s2, 10_000) for _ in range(40))
-
-
+@pytest.mark.parametrize("ceiling", [None, 0], ids=["driver", "fused"])
 def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
-    spark, tmp_path
+    spark, tmp_path, ceiling
 ):
-    """The property the auto strategy exists to preserve: after a big
-    (dense) epoch, a tiny follow-up epoch whose keys land in few
-    buckets must rewrite ONLY those buckets — every other bucket file
-    of every sink stays byte-identical."""
+    """After a big epoch that touches every bucket, a tiny follow-up
+    epoch whose keys land in few buckets must rewrite ONLY those
+    buckets — every other bucket file of every sink stays
+    byte-identical — on the driver path and on the Spark path
+    (``driver_fold_max_rows = 0``). A sink the tiny epoch does not feed
+    gets no new file at all, which a superset touched set would break."""
     import hashlib
-    import shutil
 
     src, out = tmp_path / "src", tmp_path / "out"
     src.mkdir()
@@ -773,6 +701,8 @@ def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
            for i in range(200)]
     (src / "a.jsonl").write_text("\n".join(big) + "\n")
     pipe = QuerylogPipeline(spark, str(src), str(out))
+    if ceiling is not None:
+        pipe.driver_fold_max_rows = ceiling
     pipe.run_available()
 
     def _bucket_files(root):
@@ -807,34 +737,38 @@ def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
         for p, digest in before[name].items():
             if p.split(os.sep)[0] in touched_dirs:
                 continue
-            assert after.get(p) == digest, f"{name}:{p} rewritten by sparse fold"
+            assert after.get(p) == digest, f"{name}:{p} rewritten by the fold"
         # 3 rows, 1 key -> at most a couple of buckets per sink
         assert len(touched_dirs) <= 2, (name, touched_dirs)
         changed_only_touched += 1
     assert changed_only_touched == len(pipe.sinks)
+    # no tiny line is filtered: blocked_domains' delta is empty
+    assert _bucket_files(str(out / "blocked_domains")) == before["blocked_domains"]
+    want = "driver" if ceiling is None else "fused"
+    assert {bt["delta_path"] for bt in pipe.batch_timings
+            if "delta_path" in bt} == {want}
 
 
 def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
-    """fused_deltas="auto" (the default) picks the delta path per epoch
-    from the batch row count: epochs up to driver_fold_max_rows (the
-    driver-memory ceiling) collect the grouping-sets deltas to the
-    driver once and fold them there with pyarrow ("driver"); larger
-    epochs keep the deltas in Spark and fold with Spark ("fused",
-    measured 10-28% faster than per-sink groupBys at 250k-500k); pinned
-    False keeps the per-sink groupBys. All three paths must produce
-    identical sink state — the fused plan is an exact twin, separately
-    driver-gated via a16_fused_mv_union."""
+    """The delta path is picked per epoch from the batch row count:
+    epochs up to driver_fold_max_rows (the driver-memory ceiling)
+    collect the grouping-sets deltas to the driver once and fold them
+    there with pyarrow ("driver"); larger epochs keep the bucket-tagged
+    deltas in Spark and fold each sink over its collected touched
+    buckets ("fused"). Both paths must produce identical sink state —
+    the fused plan is an exact twin, separately driver-gated via
+    a16_fused_mv_union."""
     lines = [
         _line(i, minute=i % 50, filtered=i % 3 == 0,
               qh=f"d{i % 9}.example.com", ip=f"10.0.0.{i % 5}")
         for i in range(60)
     ]
 
-    def run(dirname, ceiling=None, **kw):
+    def run(dirname, ceiling=None):
         src = tmp_path / f"{dirname}_src"
         src.mkdir()
         (src / "a.jsonl").write_text("\n".join(lines) + "\n")
-        pipe = QuerylogPipeline(spark, str(src), str(tmp_path / dirname), **kw)
+        pipe = QuerylogPipeline(spark, str(src), str(tmp_path / dirname))
         if ceiling is not None:
             pipe.driver_fold_max_rows = ceiling
         pipe.run_available()
@@ -859,17 +793,11 @@ def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
     assert all("fused_delta_s" in bt and "delta_rows" not in bt
                for bt in epochs(fused))
 
-    # pinned False never fuses, whatever the epoch size
-    pinned = run("pinned_off", fused_deltas=False)
-    assert {bt["delta_path"] for bt in epochs(pinned)} == {"per_sink"}
-    assert all("fused_delta_s" not in bt for bt in epochs(pinned))
-
-    # identical state on every sink across the strategies
+    # identical state on every sink across the paths
     for name in driver.sinks:
         a = {tuple(r) for r in driver.read_aggregate(name).collect()}
         b = {tuple(r) for r in fused.read_aggregate(name).collect()}
-        c = {tuple(r) for r in pinned.read_aggregate(name).collect()}
-        assert a == b == c, f"{name}: delta strategies disagree"
+        assert a == b, f"{name}: delta paths disagree"
 
 
 def test_delta_step_overlaps_the_fact_append(tmp_path, spark, monkeypatch):
@@ -933,84 +861,6 @@ def test_delta_step_overlaps_the_fact_append(tmp_path, spark, monkeypatch):
         assert {tuple(r) for r in got.collect()} == {
             tuple(r) for r in want.collect()
         }, name
-
-
-def test_strategy_knobs_reject_unknown_strings(spark, tmp_path):
-    """ADVICE r9: any string other than 'auto' ('false', 'off', a typo
-    like 'Auto') used to silently pin the strategy ON via bool(str);
-    it must be a construction-time error."""
-    import pytest
-
-    for knob in ("dense_folds", "fused_deltas"):
-        with pytest.raises(ValueError, match=knob):
-            QuerylogPipeline(
-                spark, str(tmp_path / "s"), str(tmp_path / "o"),
-                **{knob: "off"},
-            )
-    # bool and "auto" stay accepted
-    QuerylogPipeline(
-        spark, str(tmp_path / "s2"), str(tmp_path / "o2"),
-        dense_folds=True, fused_deltas="auto",
-    )
-
-
-def test_reprobe_restores_sparse_folds_end_to_end(spark, tmp_path):
-    """VERDICT r9 ask #3's Done-criterion at the integration level: a
-    stream whose keyed traffic flipped a sink dense, then shifts to one
-    hot key, must return to the sparse O(touched-state) path within
-    sparse_reprobe_every epochs — observable as untouched bucket files
-    staying byte-identical across a later hot-key epoch."""
-    import hashlib
-
-    src, out = tmp_path / "src", tmp_path / "out"
-    src.mkdir()
-    pipe = QuerylogPipeline(spark, str(src), str(out))
-    pipe.sparse_reprobe_every = 2
-
-    def feed(epoch, hot):
-        lines = [
-            _line(
-                epoch * 100 + i,
-                minute=i % 9,
-                filtered=False,
-                qh="hot.example.com" if hot
-                else f"k{epoch * 100 + i}.example.com",
-                ip="10.9.0.1",
-            )
-            for i in range(40)  # >= 4 * n_buckets: dense-eligible
-        ]
-        (src / f"f{epoch:03d}.jsonl").write_text("\n".join(lines) + "\n")
-        pipe.run_available()
-
-    def vd_files():
-        d = str(out / "visited_domains")
-        return {
-            os.path.relpath(os.path.join(r, f), d): hashlib.md5(
-                open(os.path.join(r, f), "rb").read()
-            ).hexdigest()
-            for r, _, fs in os.walk(d)
-            for f in fs
-            if os.path.relpath(r, d).startswith("b")
-        }
-
-    for e in range(3):
-        feed(e, hot=False)   # keyed traffic: sink flips dense
-    for e in range(3, 3 + pipe.sparse_reprobe_every + 1):
-        feed(e, hot=True)    # shift: within the cadence a re-probe
-                             # observes single-bucket coverage
-    before = vd_files()
-    feed(99, hot=True)       # by now folds must be sparse again
-    after = vd_files()
-    survivors = set(before) & set(after)
-    assert survivors, "sparse never returned: every bucket file rewritten"
-    changed = {
-        p.split("/")[0]
-        for p in (set(before) ^ set(after) |
-                  {p for p in survivors if before[p] != after[p]})
-    }
-    assert len(changed) == 1, (
-        f"hot-key epoch should rewrite exactly the hot bucket, got {changed}"
-    )
 
 
 def test_replay_works_on_adopted_legacy_dead_letters(tmp_path, spark):

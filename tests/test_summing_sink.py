@@ -264,6 +264,10 @@ def test_streaming_pipeline_with_hll_sink(tmp_path, spark):
     for i, lines in enumerate(batches):
         (src / f"log-{i}.jsonl").write_text("\n".join(lines) + "\n")
         pipe.run_available()
+    # the custom sink takes its own Spark fold; the stock eight stay on
+    # the driver path
+    assert [bt["delta_path"] for bt in pipe.batch_timings
+            if "delta_path" in bt] == ["driver", "driver"]
 
     got = {
         r.QH: r.uniq
@@ -280,89 +284,6 @@ def test_streaming_pipeline_with_hll_sink(tmp_path, spark):
         .collect()
     }
     assert got == want
-
-
-def test_dense_fold_equals_sparse_and_stays_idempotent(tmp_path, spark):
-    """dense=True (the streaming hot path, r6) must produce the SAME
-    table state as the sparse bucket-pruned fold — same rows, same
-    epoch ledger semantics — it only skips the touched-bucket
-    discovery job. Also: a dense retry of an applied epoch no-ops, and
-    a dense fold composes with a later sparse fold."""
-    rows = [(f"key{i}", i) for i in range(64)]
-    d1 = [(f"key{i}", 10) for i in range(0, 64, 3)]
-    d2 = [("key1", 7), ("newkey", 2)]
-
-    sparse = SummingParquetSink(
-        str(tmp_path / "sparse"), keys=["k"], measures=["cnt"]
-    )
-    dense = SummingParquetSink(
-        str(tmp_path / "dense"), keys=["k"], measures=["cnt"]
-    )
-    frames = [
-        spark.createDataFrame(r, ["k", "cnt"]) for r in (rows, d1, d2)
-    ]
-    for e, f in enumerate(frames):
-        sparse.apply_delta(f, epoch_id=e)
-        dense.apply_delta(f, epoch_id=e, dense=True)
-
-    def state(sink):
-        return sorted(
-            (r.k, r.cnt) for r in sink.read(spark).collect()
-        )
-
-    assert state(dense) == state(sparse)
-
-    # dense retry of an applied epoch: no-op (state unchanged)
-    dense.apply_delta(frames[2], epoch_id=2, dense=True)
-    assert state(dense) == state(sparse)
-
-    # dense then sparse compose: one more delta via the pruned path
-    d3 = spark.createDataFrame([("key1", 100)], ["k", "cnt"])
-    sparse.apply_delta(d3, epoch_id=3)
-    dense.apply_delta(d3, epoch_id=3, dense=True)
-    assert state(dense) == state(sparse)
-
-
-def test_auto_dense_gate_tracks_delta_keys_not_epoch_rows(tmp_path, spark):
-    """ADVICE r7: dense_folds="auto" gated on the RAW epoch row count,
-    so a 100k-row epoch on one hot key picked dense and rewrote every
-    bucket. The gate must reflect the delta's distinct-key coverage:
-    the sink records whether the last sparse discovery touched all
-    buckets, and auto goes dense only after observing full coverage."""
-    from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
-
-    sink = SummingParquetSink(
-        str(tmp_path / "s"), keys=["k"], measures=["cnt"], n_buckets=8
-    )
-    pipe = object.__new__(QuerylogPipeline)  # only the fold knobs are read
-    pipe.dense_folds = "auto"
-    pipe.sparse_reprobe_every = 16
-    pipe._dense_streaks = {}
-
-    # no observation yet: even a huge epoch must start sparse
-    assert pipe._dense_fold(sink, n_rows=100_000) is False
-
-    # hot-key delta (1 distinct key): sparse fold observes 1/8 buckets
-    hot = spark.createDataFrame([("hotkey", 100_000)], ["k", "cnt"])
-    sink.apply_delta(hot, epoch_id=0)
-    assert sink.last_fold_touched_all is False
-    assert pipe._dense_fold(sink, n_rows=100_000) is False
-
-    # spread delta touching all 8 buckets: observation flips, and auto
-    # goes dense only when rows also clear the 4x-buckets floor
-    spread = spark.createDataFrame(
-        [(f"key{i}", 1) for i in range(256)], ["k", "cnt"]
-    )
-    sink.apply_delta(spread, epoch_id=1)
-    assert sink.last_fold_touched_all is True
-    assert pipe._dense_fold(sink, n_rows=256) is True
-    assert pipe._dense_fold(sink, n_rows=8) is False
-
-    # pinned strategies ignore the observation
-    pipe.dense_folds = True
-    assert pipe._dense_fold(sink, n_rows=1) is True
-    pipe.dense_folds = False
-    assert pipe._dense_fold(sink, n_rows=10**6) is False
 
 
 def test_hot_key_epoch_leaves_untouched_buckets_byte_identical(tmp_path, spark):
@@ -431,28 +352,36 @@ def test_driver_and_spark_folds_alternate_on_one_sink(tmp_path, spark):
     bigint). NULL keys land in one bucket on both paths."""
     from adguard2clickhouse_spark.operators.aggregates import (
         ALL_AGGREGATES,
+        fused_aggregate_deltas,
         fused_arrow_deltas,
+        touched_buckets,
     )
     from adguard2clickhouse_spark.schemas import LOG2_SCHEMA
     from adguard2clickhouse_spark.streaming.pipeline import aggregate_sinks
 
     sinks = aggregate_sinks(str(tmp_path / "out"))
-    # arrow, sparse Spark, arrow, dense Spark, then a 1-row arrow fold
-    # that rewrites one bucket and leaves Spark-written ones beside it
+    # arrow, Spark with discovery, arrow, Spark over the bucket-tagged
+    # fused deltas and their collected touched sets, then a 1-row arrow
+    # fold that rewrites one bucket and leaves Spark-written ones
+    # beside it
     epochs = [("arrow", 0, 40), ("spark", 40, 30), ("arrow", 70, 25),
-              ("dense", 95, 35), ("arrow", 131, 1)]
+              ("fused", 95, 35), ("arrow", 131, 1)]
     seen = []
     for epoch_id, (how, start, n) in enumerate(epochs):
         rows = _log2_rows(start, n)
         seen += rows
         log2 = spark.createDataFrame(rows, LOG2_SCHEMA)
         arrow = fused_arrow_deltas(log2, 8)[1] if how == "arrow" else None
+        fused, extract = fused_aggregate_deltas(log2, n_buckets=8)
+        touched = touched_buckets(fused) if how == "fused" else {}
         for name, sink in sinks.items():
             if arrow is not None:
                 sink.apply_delta(arrow[name], epoch_id)
+            elif how == "fused":
+                sink.apply_delta(extract[name](fused), epoch_id,
+                                 touched=touched[name])
             else:
-                sink.apply_delta(ALL_AGGREGATES[name](log2), epoch_id,
-                                 dense=how == "dense")
+                sink.apply_delta(ALL_AGGREGATES[name](log2), epoch_id)
         everything = spark.createDataFrame(seen, LOG2_SCHEMA)
         for name, sink in sinks.items():
             want = ALL_AGGREGATES[name](everything)
@@ -469,7 +398,6 @@ def test_driver_and_spark_folds_alternate_on_one_sink(tmp_path, spark):
         for p in Path(sinks["stats2"].path).rglob("*.parquet")
     }
     assert writers == {"driver", "spark"}, writers
-    assert sinks["stats2"].last_fold_touched_all is False  # 1-row fold
 
 
 def _arrow_delta(spark, sink, rows):
