@@ -74,7 +74,7 @@ _MAX_EPOCHS_TRACKED = 1000
 BUCKET_COL = "_sps_bucket"
 # On-disk bytes of the touched buckets above which an Arrow delta folds
 # in Spark rather than on the driver: the scan layer's file-size target
-# (spark.sql.files.maxPartitionBytes, the pipeline's compact_small_bytes).
+# (spark.sql.files.maxPartitionBytes, the pipeline's _COMPACT_SMALL_BYTES).
 _DRIVER_FOLD_MAX_BYTES = 128 << 20
 
 

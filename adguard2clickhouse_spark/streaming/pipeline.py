@@ -62,6 +62,11 @@ from adguard2clickhouse_spark.sources.querylog import read_querylog_stream
 # Per-epoch stage walls kept in ``QuerylogPipeline.batch_timings``: an
 # always-on daemon on a 1 s trigger runs ~86k epochs a day.
 _TIMINGS_KEPT = 1024
+# Background fact-ledger maintenance (see ``_maintenance_step``): each
+# step folds the oldest _COMPACT_FANOUT similar-sized committed slots
+# below _COMPACT_SMALL_BYTES, the scan layer's maxPartitionBytes.
+_COMPACT_FANOUT = 8
+_COMPACT_SMALL_BYTES = 128 << 20
 # Arrow bytes per good row of the collected grouping-sets delta on the
 # high-cardinality backfill mix (5000 clients, 300k domains): 24.6 MB
 # for 203,968 rows. Low-cardinality traffic collapses to far fewer
@@ -156,46 +161,22 @@ class QuerylogPipeline:
         # driver path was measured ahead of the Spark fold fan at every
         # size up to it (50k-1M rows/epoch).
         self.driver_fold_max_rows = _DRIVER_FOLD_MAX_BYTES // _DELTA_BYTES_PER_ROW
-        # Automatic fact-ledger maintenance (VERDICT r10 #1): reads
-        # degrade with committed-slot count (BENCH_factledger_r10.json:
-        # 17 s at 200 tiny slots vs 6.6 s after one compaction), and a
-        # manual compact_facts() nothing schedules is maintenance that
-        # never happens. When the committed-slot count reaches this
-        # threshold, process_batch runs one bounded compaction BETWEEN
-        # epochs — same thread as the appends (foreachBatch serializes
-        # epochs), so it IS the single writer and needs no stream-stop.
-        # Each run folds only slots under compact_small_bytes (the scan
-        # layer's maxPartitionBytes), i.e. the trickle of recent
-        # micro-batch epochs — O(recent epochs), never O(table); slots
-        # that grew past the threshold are never rewritten again, which
-        # bounds write amplification the way tiered compaction does.
-        # 0/None disables. The slot-count check per epoch is one small
-        # JSON read.
-        #
-        # r12 (VERDICT r11 #2): the maintenance is now INCREMENTAL —
-        # each epoch runs at most ONE size-tiered fold of
-        # auto_compact_fanout similar-sized slots (LSM tiering; see
-        # LedgeredFactSink.compact(max_fold_slots=...)), so the
-        # writer-thread pause per epoch is one k-slot rewrite instead
-        # of the r11 all-smalls fold that stalled ingest 15–25 s
-        # against a 0.76 s p50 append (BENCH_factledger_r11.json).
-        # auto_compact_min_slots stays as the BACKSTOP: if the slot
-        # count ever reaches it despite tiering (pathological size
-        # distributions, fanout disabled), the full small fold runs as
-        # before.
-        self.auto_compact_min_slots: int | None = 48
-        self.auto_compact_fanout: int | None = 8
-        self.compact_small_bytes = 128 << 20
-        # The incremental folds run on THIS single-thread pool,
-        # overlapped with subsequent epochs (VERDICT r11 #2: the fold
-        # must not sit on the ingest critical path). Safe because the
-        # sink stages the merged output outside the pointer lock and
-        # publishes under it in milliseconds (see LedgeredFactSink.
-        # compact); a fold failure surfaces at the NEXT epoch via
-        # future.result() — that batch fails, Spark retries it, the
-        # appends no-op (epoch ledger) and the fold re-runs: still
-        # exactly-once, one epoch later than the r11 synchronous
-        # surface point.
+        # Automatic fact-ledger maintenance: reads degrade with the
+        # committed-slot count (BENCH_factledger_r10.json: 17 s at 200
+        # tiny slots vs 6.6 s after one compaction), and a manual
+        # compact_facts() that nothing schedules never happens. After
+        # each epoch, process_batch submits ONE size-tiered fold step
+        # (LedgeredFactSink.compact(max_fold_slots=_COMPACT_FANOUT),
+        # LSM tiering: each byte is rewritten O(log n) times, and slots
+        # at or above _COMPACT_SMALL_BYTES are never rewritten again) to
+        # this single-thread pool, overlapped with later epochs — the
+        # r11 synchronous all-smalls fold stalled ingest 15-25 s against
+        # a 0.76 s p50 append (BENCH_factledger_r11.json). Safe because
+        # the sink stages the merged output outside the pointer lock and
+        # publishes under it in milliseconds; a fold failure surfaces at
+        # the NEXT epoch via future.result() — that batch fails, Spark
+        # retries it, the appends no-op (epoch ledger) and the fold
+        # re-runs: still exactly-once.
         self._maint_pool = ThreadPoolExecutor(
             max_workers=1, thread_name_prefix="ledger-maint"
         )
@@ -225,7 +206,7 @@ class QuerylogPipeline:
 
     def _maintenance_step(self) -> dict:
         """One incremental size-tiered fold step per ledgered channel
-        (see ``auto_compact_fanout`` in ``__init__``). Runs on the
+        (see ``__init__``). Runs on the
         maintenance thread; returns the walls to merge into the
         collecting batch's timings. The dead-letter channel joins the
         maintenance (VERDICT r11 #3): safe now that the replay token
@@ -243,8 +224,8 @@ class QuerylogPipeline:
             t0 = _time.time()
             folded = sink.compact(
                 self.spark,
-                small_bytes=self.compact_small_bytes,
-                max_fold_slots=self.auto_compact_fanout,
+                small_bytes=_COMPACT_SMALL_BYTES,
+                max_fold_slots=_COMPACT_FANOUT,
             )
             if folded:
                 out[f"{key}_s"] = round(_time.time() - t0, 3)
@@ -254,7 +235,7 @@ class QuerylogPipeline:
     def join_maintenance(self) -> dict:
         """Wait for any in-flight background fold and return its
         timings (re-raising its failure). Maintenance entry points
-        (replay, manual compaction, the backstop) call this so ledger
+        (replay, manual compaction) call this so ledger
         surgery never overlaps an in-flight fold; harnesses call it
         after ``awaitTermination`` so slot counts are post-maintenance."""
         f, self._maint_future = self._maint_future, None
@@ -469,41 +450,23 @@ class QuerylogPipeline:
                     f.result()  # propagate first failure, fail the batch
             timings["overlap_section_s"] = round(_time.time() - t, 3)
             good.unpersist()
-            # Automatic fact-ledger maintenance (see __init__): one
-            # incremental fold step at a time, OFF the writer thread
-            # (r12 — the r11 synchronous fold stalled ingest 15-25 s).
-            # The fold stages outside the pointer lock and publishes
-            # in milliseconds under it, so the next epoch's appends
-            # overlap the fold's Spark work and block only on the
-            # brief pointer swap. Calls the sink directly rather than
-            # the stream-stop-guarded public compact_facts() — the
-            # pipeline owns both the stream and the maintenance, so
-            # this is the single writing PROCESS by construction.
-            if self.auto_compact_fanout:
-                # collect a finished background fold first: its walls
-                # land in THIS batch's timings, and a failed fold
-                # re-raises here — failing this batch, whose retry
-                # no-ops the appends and re-submits the fold.
-                if self._maint_future is not None and self._maint_future.done():
-                    f, self._maint_future = self._maint_future, None
-                    timings.update(f.result())
-                if self._maint_future is None:
-                    self._maint_future = self._maint_pool.submit(
-                        self._maintenance_step
-                    )
-            if self.auto_compact_min_slots:
-                n_slots = len(self.log2_sink._pointer()["dirs"])
-                if n_slots >= self.auto_compact_min_slots:
-                    # backstop (expected never to fire while the
-                    # incremental folds keep up): synchronous all-smalls
-                    # fold, joining any in-flight step first
-                    timings.update(self.join_maintenance())
-                    t0 = _time.time()
-                    folded = self.log2_sink.compact(
-                        self.spark, small_bytes=self.compact_small_bytes
-                    )
-                    timings["auto_compact_s"] = round(_time.time() - t0, 3)
-                    timings["auto_compact_folded"] = folded
+            # Automatic fact-ledger maintenance (see __init__), OFF the
+            # writer thread: the next epoch's appends overlap the fold's
+            # Spark work and block only on its brief pointer swap. Calls
+            # the sink directly rather than the stream-stop-guarded
+            # public compact_facts() — the pipeline owns both the stream
+            # and the maintenance, so this is the single writing PROCESS
+            # by construction. A finished fold is collected first: its
+            # walls land in THIS batch's timings, and a failed fold
+            # re-raises here — failing this batch, whose retry no-ops the
+            # appends and re-submits the fold.
+            if self._maint_future is not None and self._maint_future.done():
+                f, self._maint_future = self._maint_future, None
+                timings.update(f.result())
+            if self._maint_future is None:
+                self._maint_future = self._maint_pool.submit(
+                    self._maintenance_step
+                )
             # Per-epoch stage wall attribution (driver-side). The
             # consumer stages OVERLAP: their individual walls sum to
             # more than the section wall; `overlap_section_s` is the
@@ -633,7 +596,9 @@ class QuerylogPipeline:
         return df
 
     # -- maintenance ---------------------------------------------------------
-    def compact_facts(self, small_bytes: int | None = 128 << 20) -> int:
+    def compact_facts(
+        self, small_bytes: int | None = _COMPACT_SMALL_BYTES
+    ) -> int:
         """Fold small committed fact epochs together. The default
         threshold matches ``spark.sql.files.maxPartitionBytes``
         (128 MB) — the file size the scan layer wants anyway — so each
@@ -645,8 +610,9 @@ class QuerylogPipeline:
 
         RAISES while this pipeline's stream is active (r11 — the
         "run while stopped" discipline is enforced, not a docstring);
-        routine maintenance needs no manual call at all, the pipeline
-        auto-compacts between epochs (``auto_compact_min_slots``)."""
+        routine maintenance needs no manual call at all: the pipeline
+        runs one background tiered fold step per epoch (see
+        ``__init__``)."""
         self._require_stream_stopped("compact_facts")
         return self.log2_sink.compact(self.spark, small_bytes=small_bytes)
 

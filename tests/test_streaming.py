@@ -900,12 +900,14 @@ def test_replay_works_on_adopted_legacy_dead_letters(tmp_path, spark):
 # ---------------------------------------------------------------------------
 
 
-def test_auto_compaction_bounds_committed_slots(tmp_path, spark):
+def test_auto_compaction_bounds_committed_slots(tmp_path, spark, monkeypatch):
     """VERDICT r10 #1: a long-running stream used to grow one committed
-    slot per epoch until an operator remembered compact_facts(). The
-    pipeline now folds small slots between epochs once the slot count
-    reaches auto_compact_min_slots, so the count stays bounded and the
-    table content is untouched."""
+    slot per epoch until an operator remembered compact_facts(). Each
+    epoch now submits one background size-tiered fold step, so the
+    count stays bounded and the table content is untouched."""
+    from adguard2clickhouse_spark.streaming import pipeline as pl
+
+    monkeypatch.setattr(pl, "_COMPACT_FANOUT", 2)  # force folds in a short run
     src = tmp_path / "src"
     src.mkdir()
     n_files, per_file = 12, 4
@@ -918,21 +920,86 @@ def test_auto_compaction_bounds_committed_slots(tmp_path, spark):
             ) + "\n"
         )
     pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"))
-    pipe.auto_compact_min_slots = 4  # force maintenance in a short run
     q = pipe.start(available_now=True, max_files_per_trigger=1)
     q.awaitTermination()
     final = pipe.join_maintenance()  # drain the in-flight background fold
     if final:
         pipe.batch_timings.append(final)
     dirs = pipe.log2_sink._pointer()["dirs"]
-    # without maintenance this is n_files slots; with it, bounded by
-    # the threshold (one fold leaves 1 merged slot, then regrowth)
-    assert len(dirs) < pipe.auto_compact_min_slots + 1
+    # unbounded = one slot per epoch (12); tiered maintenance keeps it
+    # logarithmic (fanout 2 over 12 epochs: a handful)
+    assert len(dirs) <= 5, dirs
     assert any("auto_compact_folded" in t for t in pipe.batch_timings)
     # the table itself is unchanged by maintenance
     assert pipe.read_log2().count() == n_files * per_file
     # epoch idempotency survived the folds
     assert pipe.log2_sink.applied(n_files - 1)
+
+
+def test_large_slots_never_fold_on_the_batch_thread(tmp_path, spark, monkeypatch):
+    """Committed slots at or above the small-file threshold (tier-k
+    fold outputs, backfills) are never shrunk by a fold, so counting
+    them toward a synchronous fold trigger made every later epoch run
+    compact() on the stream's batch thread once enough had piled up.
+    Every fold must come from the background maintenance thread,
+    however many large slots the ledger holds."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from adguard2clickhouse_spark.sources.querylog import read_querylog_batch
+    from adguard2clickhouse_spark.streaming import pipeline as pl
+
+    seed_dir = tmp_path / "seed"
+    seed_dir.mkdir()
+    n_seed = 200
+    (seed_dir / "seed.jsonl").write_text(
+        "\n".join(
+            _line(j, minute=j % 50, filtered=j % 3 == 0,
+                  qh=f"s{j % 11}.example.com", ip=f"10.1.0.{j % 4}")
+            for j in range(n_seed)
+        ) + "\n"
+    )
+    good, _ = parse_querylog(read_querylog_batch(spark, str(seed_dir)))
+    seed = good.withColumn("date", F.to_date("date_time")).coalesce(1).persist()
+
+    src = tmp_path / "src"
+    src.mkdir()
+    pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"))
+    n_large = 48
+    for _ in range(n_large):
+        pipe.log2_sink.append(seed)
+    seed.unpersist()
+    meta = pipe.log2_sink._pointer()
+    assert len(meta["dirs"]) == n_large
+    # every seeded slot sits at or above the threshold: no fold shrinks it
+    threshold = min(meta["dir_bytes"].values())
+    monkeypatch.setattr(pl, "_COMPACT_SMALL_BYTES", threshold)
+
+    calls = []
+    real_compact = pipe.log2_sink.compact
+
+    def recording_compact(*a, **kw):
+        calls.append(threading.current_thread().name)
+        return real_compact(*a, **kw)
+
+    pipe.log2_sink.compact = recording_compact
+    n_epochs = 6
+    for i in range(n_epochs):
+        (src / f"f{i}.jsonl").write_text(
+            _line(i, minute=i, filtered=False, qh=f"e{i}.example.com",
+                  ip="10.0.0.1") + "\n"
+        )
+    q = pipe.start(available_now=True, max_files_per_trigger=1)
+    q.awaitTermination()
+    pipe.join_maintenance()
+
+    assert calls, "the background step must have run"
+    assert all(name.startswith("ledger-maint") for name in calls), calls
+    meta = pipe.log2_sink._pointer()
+    epoch_slots = [d for d in meta["dirs"] if meta["dir_bytes"][d] < threshold]
+    assert epoch_slots, "the one-line epochs must leave small slots"
+    assert pipe.read_log2().count() == n_large * n_seed + n_epochs
 
 
 def test_maintenance_raises_while_stream_active(tmp_path, spark):
@@ -999,13 +1066,16 @@ def test_checkpoint_recreation_does_not_drop_epochs(tmp_path, spark):
     assert {"a3.example.com", "a4.example.com"} <= qhs
 
 
-def test_noisy_source_dead_channel_stays_bounded(tmp_path, spark):
+def test_noisy_source_dead_channel_stays_bounded(tmp_path, spark, monkeypatch):
     """r12 (VERDICT r11 #3): a persistently-noisy source used to
     fragment the dead-letter channel without bound between replays
     (the channel was exempt from maintenance because its replay token
     hashed FILES). With the content-multiset token the channel joins
     the per-epoch incremental compaction: slot count stays bounded
     while every dead line is preserved."""
+    from adguard2clickhouse_spark.streaming import pipeline as pl
+
+    monkeypatch.setattr(pl, "_COMPACT_FANOUT", 2)  # force folds in a short run
     src = tmp_path / "src"
     src.mkdir()
     n_files = 12
@@ -1016,7 +1086,6 @@ def test_noisy_source_dead_channel_stays_bounded(tmp_path, spark):
             + "\n" + f"{{ broken line {i}\n"
         )
     pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"))
-    pipe.auto_compact_fanout = 2  # force folds inside a short run
     q = pipe.start(available_now=True, max_files_per_trigger=1)
     q.awaitTermination()
     final = pipe.join_maintenance()  # drain the in-flight background fold
