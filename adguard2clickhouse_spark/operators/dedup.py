@@ -1274,7 +1274,7 @@ def winnow_fingerprints(
     0.78 s, bit-identical output — BENCH_winnow_r14.json) and holds at
     the sf100 decade. The window formulation itself never mattered:
     slice+array_min, w-ary least and log-doubling sparse table all
-    measure within ±10% interpreted (scripts/profile_winnow.py).
+    measure within ±10% interpreted (BENCH_winnow_r14.json, step 1).
     """
     toks = F.col("_toks")
     hash_at = _kgram_md5_at if portable else _kgram_hash_at

@@ -165,7 +165,7 @@ def get_spark(
         # x2_ngram_jaccard (2.1 s in full sessions vs 1.18 dedicated —
         # with the cache sized right it runs 1.16 s inside the full
         # sweep). The GC-debt hypothesis was tested and refuted first
-        # (scripts/profile_session_state.py). At cluster scale the
+        # (BENCH_codegen_cache_r12.json). At cluster scale the
         # same static cache lives in every executor JVM, where a
         # long-lived session serving a wide query catalog cycles
         # >100 classes just as this one does; 2000 entries of

@@ -18,18 +18,22 @@ History of this protocol:
   (compaction compacts FILES, not just ledger entries — the r11 fold
   inherited one file per write-task×partition, 1300+ files per merged
   slot, which is why its higher-tier rewrites took 15-25 s). The
-  48-slot all-smalls fold stays as a synchronous backstop. The
   done-criterion from VERDICT r11: same 200-epoch worst-case
   protocol, max EPOCH wall (the ingest-visible latency) <= ~3x the
   p50 epoch wall, slots still bounded, reads still flat.
+  BENCH_factledger_r12.json and _r12_5krows.json were measured with
+  an extra synchronous all-smalls fold at 48 slots, which fired 0
+  times; the pipeline has since dropped it.
 
-The loop below is QuerylogPipeline.process_batch's r12 decision
-verbatim (collect-finished-fold, submit-if-idle, synchronous
-backstop), driven through the sink directly so the measurement
-isolates ledger maintenance from parse/UDF cost exactly like the r10
-and r11 baselines did. The end-to-end pipeline trigger is pytest-gated
+The loop below is QuerylogPipeline.process_batch's maintenance
+decision verbatim (collect-finished-fold, submit-if-idle), with the
+pipeline's own fanout and small-slot constants, driven through the
+sink directly so the measurement isolates ledger maintenance from
+parse/UDF cost exactly like the r10 and r11 baselines did. The
+end-to-end pipeline trigger is pytest-gated
 (tests/test_streaming.py::test_auto_compaction_bounds_committed_slots,
-test_noisy_source_dead_channel_stays_bounded).
+test_noisy_source_dead_channel_stays_bounded,
+test_large_slots_never_fold_on_the_batch_thread).
 
 Usage: python scripts/bench_factledger.py [epochs] [rows_per_epoch]
 Writes BENCH_factledger_r12.json at the repo root.
@@ -37,6 +41,7 @@ Writes BENCH_factledger_r12.json at the repo root.
 
 from __future__ import annotations
 
+import argparse
 import json
 import statistics
 import sys
@@ -51,15 +56,21 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from adguard2clickhouse_spark.session import get_spark  # noqa: E402
 from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink  # noqa: E402
-
-AUTO_COMPACT_MIN_SLOTS = 48  # QuerylogPipeline.__init__ backstop
-AUTO_COMPACT_FANOUT = 8  # QuerylogPipeline.__init__ default
-COMPACT_SMALL_BYTES = 128 << 20
+from adguard2clickhouse_spark.streaming.pipeline import (  # noqa: E402
+    _COMPACT_FANOUT,
+    _COMPACT_SMALL_BYTES,
+)
 
 
 def main() -> None:
-    epochs = int(sys.argv[1]) if len(sys.argv) > 1 else 200
-    rows_per_epoch = int(sys.argv[2]) if len(sys.argv) > 2 else 500
+    ap = argparse.ArgumentParser(
+        description="Replay worst-case-fragmented fact-ledger epochs under "
+        "the pipeline's background tiered maintenance."
+    )
+    ap.add_argument("epochs", type=int, nargs="?", default=200)
+    ap.add_argument("rows_per_epoch", type=int, nargs="?", default=500)
+    args = ap.parse_args()
+    epochs, rows_per_epoch = args.epochs, args.rows_per_epoch
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     tmp = tempfile.mkdtemp(prefix="factledger_r12_")
@@ -95,8 +106,8 @@ def main() -> None:
         t0 = time.time()
         folded = sink.compact(
             spark,
-            small_bytes=COMPACT_SMALL_BYTES,
-            max_fold_slots=AUTO_COMPACT_FANOUT,
+            small_bytes=_COMPACT_SMALL_BYTES,
+            max_fold_slots=_COMPACT_FANOUT,
         )
         if not folded:
             return None
@@ -113,20 +124,18 @@ def main() -> None:
     )
     scratch.append(epoch_df(0), epoch_id=0)
     scratch.append(epoch_df(1), epoch_id=1)
-    scratch.compact(spark, small_bytes=COMPACT_SMALL_BYTES, max_fold_slots=2)
+    scratch.compact(spark, small_bytes=_COMPACT_SMALL_BYTES, max_fold_slots=2)
     scratch.read(spark).selectExpr("count(*) c", "max(date_time) m").collect()
 
     pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="maint")
     future = None
     epoch_walls, appends, reads, compacts, slot_counts = [], [], [], [], []
-    backstop_fired = 0
     for e in range(epochs):
         t_epoch = time.time()
         sink.append(epoch_df(e), epoch_id=e)
         appends.append(time.time() - t_epoch)
-        # the pipeline's r12 between-epoch maintenance decision,
-        # verbatim: collect a finished background fold, submit the
-        # next step if idle, synchronous backstop at the threshold
+        # the pipeline's between-epoch maintenance decision, verbatim:
+        # collect a finished background fold, submit the next step if idle
         if future is not None and future.done():
             res, future = future.result(), None
             if res:
@@ -134,14 +143,6 @@ def main() -> None:
         if future is None:
             future = pool.submit(fold_step, e)
         n_slots = len(sink._pointer()["dirs"])
-        if n_slots >= AUTO_COMPACT_MIN_SLOTS:  # backstop (expect: never)
-            backstop_fired += 1
-            res = future.result()
-            future = None
-            if res:
-                compacts.append(res)
-            sink.compact(spark, small_bytes=COMPACT_SMALL_BYTES)
-            n_slots = len(sink._pointer()["dirs"])
         epoch_walls.append(time.time() - t_epoch)
         slot_counts.append(n_slots)
         if (e + 1) % 25 == 0:
@@ -162,9 +163,7 @@ def main() -> None:
         "epochs": epochs,
         "rows_per_epoch": rows_per_epoch,
         "rows_total": total_rows,
-        "auto_compact_fanout": AUTO_COMPACT_FANOUT,
-        "auto_compact_min_slots_backstop": AUTO_COMPACT_MIN_SLOTS,
-        "backstop_fired": backstop_fired,
+        "compact_fanout": _COMPACT_FANOUT,
         "epoch_wall_s_p50": round(p50_epoch, 3),
         "epoch_wall_s_p99": round(
             sorted(epoch_walls)[int(0.99 * (len(epoch_walls) - 1))], 3
@@ -196,7 +195,7 @@ def main() -> None:
             "max_committed_slots": 47,
             "note": "BENCH_factledger_r11.json, same protocol, all-smalls fold at 48 slots",
         },
-        "note": "local[8]; worst-case slot fragmentation; policy = QuerylogPipeline r12 defaults (incremental tiered fold per epoch + 48-slot backstop)",
+        "note": "local[8]; worst-case slot fragmentation; policy = QuerylogPipeline background tiered fold step per epoch",
     }
     (REPO / "BENCH_factledger_r12.json").write_text(
         json.dumps(result, indent=1) + "\n"

@@ -14,6 +14,7 @@ Writes BENCH_ppjoin_r6.json.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -28,6 +29,7 @@ REPS = 3
 
 
 def main() -> None:
+    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args()
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
     from adguard2clickhouse_spark.operators.dedup import (

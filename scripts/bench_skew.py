@@ -17,12 +17,13 @@ the reduce side receives n_partitions rows for the hot key, not 95%
 of the corpus. That is the design; this artifact is the measurement.
 
 Usage: python scripts/bench_skew.py [n_rows] [hot_permille]
-Defaults: 1_000_000 rows, 950 (95% on one key).
+Defaults: 4_000_000 rows, 950 (95% on one key).
 Writes BENCH_skew_r6.json at the repo root.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import shutil
 import sys
@@ -88,8 +89,12 @@ def main() -> None:
     # task and every shuffle coalesced to 1 reduce task, so no stage
     # ever had the >=8 tasks the straggler rule needs (see the session
     # conf note below).
-    n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
-    hot_permille = int(sys.argv[2]) if len(sys.argv) > 2 else 950
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n_rows", type=int, nargs="?", default=4_000_000)
+    ap.add_argument("hot_permille", type=int, nargs="?", default=950,
+                    help="share of rows on the hot key, in permille")
+    args = ap.parse_args()
+    n_rows, hot_permille = args.n_rows, args.hot_permille
 
     import duckdb
 

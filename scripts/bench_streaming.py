@@ -27,6 +27,7 @@ recorded number, not a guess.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -125,12 +126,17 @@ def sample_driver_rss(jvm_pid: int, stop: threading.Event, out: dict) -> None:
 
 
 def main() -> None:
-    n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 20
-    files_per_trigger = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    out_json = Path(sys.argv[4]) if len(sys.argv) > 4 else (
-        Path(__file__).resolve().parent.parent / "BENCH_streaming_r7.json"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n_rows", type=int, nargs="?", default=1_000_000)
+    ap.add_argument("n_files", type=int, nargs="?", default=20)
+    ap.add_argument("files_per_trigger", type=int, nargs="?", default=2)
+    ap.add_argument(
+        "out_json", type=Path, nargs="?",
+        default=Path(__file__).resolve().parent.parent / "BENCH_streaming_r7.json",
     )
+    args = ap.parse_args()
+    n_rows, n_files = args.n_rows, args.n_files
+    files_per_trigger, out_json = args.files_per_trigger, args.out_json
 
     work = Path(tempfile.mkdtemp(prefix="stream_bench_"))
     src, out = work / "src", work / "out"

@@ -12,6 +12,7 @@ Usage: python scripts/gen_stream_budgets.py [sf_dir]
 
 from __future__ import annotations
 
+import argparse
 import json
 import sys
 from pathlib import Path
@@ -36,7 +37,12 @@ STREAMING_QUERIES = [
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    ap = argparse.ArgumentParser(
+        description="Merge the streaming gate queries' per-epoch plan "
+        "budgets into tests/plan_budgets.json."
+    )
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    sf_dir = ap.parse_args().sf_dir
     spark = get_spark()
     qs = entrymod.queries()
     audits: dict[str, dict] = {}

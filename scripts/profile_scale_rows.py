@@ -16,6 +16,7 @@ Writes BENCH_profile_r6.json; the numbers then annotate BENCH_sf10.json.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -86,6 +87,7 @@ def max_stage_id(sc) -> int:
 
 
 def main() -> None:
+    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args()
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
     from benchlib import force_count  # noqa: E402

@@ -16,6 +16,7 @@ for every registered query even when the driver samples a subset.
 
 from __future__ import annotations
 
+import argparse
 import json
 import sys
 import time
@@ -93,14 +94,16 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> dict:
 
 
 def main() -> int:
-    argv = list(sys.argv[1:])
-    json_out = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        del argv[i : i + 2]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+    ap = argparse.ArgumentParser(
+        description="Run every registered query on Spark and its DuckDB "
+        "oracle at one SF and compare rows, schema and value hash."
+    )
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("query", nargs="*", help="check only these queries")
+    ap.add_argument("--json", metavar="OUT",
+                    help="also write per-query results to OUT")
+    args = ap.parse_intermixed_args()
+    json_out, sf_dir, only = args.json, args.sf_dir, set(args.query)
 
     spark = vanilla_spark()
     con = duckdb.connect()

@@ -20,9 +20,14 @@ unsets) the caller's previous values on exit.
 from __future__ import annotations
 
 import re
+import subprocess
+import sys
 from pathlib import Path
 
+import pytest
+
 PKG = Path(__file__).resolve().parent.parent / "adguard2clickhouse_spark"
+SCRIPTS = PKG.parent / "scripts"
 
 ALLOWED = {"session.py", "tables.py"}
 
@@ -275,6 +280,25 @@ def test_latest_selfcheck_stamps_have_no_failed_rows():
             )
         )
         assert not failed, f"{latest.name} has failed rows: {failed}"
+
+
+@pytest.mark.parametrize(
+    "script",
+    sorted(
+        p.name for p in SCRIPTS.glob("*.py")
+        if 'if __name__ == "__main__":' in p.read_text()
+    ),
+)
+def test_script_answers_help(script):
+    """Every runnable script parses its arguments before it starts any
+    work, so ``--help`` prints usage and exits 0 instead of running a
+    bench or crashing on a flag it reads as a positional."""
+    out = subprocess.run(
+        [sys.executable, str(SCRIPTS / script), "--help"],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "usage:" in out.stdout
 
 
 def test_bench_regression_flag_trips_on_genuine_2x():
