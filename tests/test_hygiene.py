@@ -140,8 +140,6 @@ _SEMANTIC_SOURCES = [
 def _source_commits_after(repo: Path, stamp_head: str) -> list[str]:
     """Commits in stamp_head..HEAD touching any semantic source path
     (empty list = the artifact still describes the shipped code)."""
-    import subprocess
-
     out = subprocess.run(
         ["git", "rev-list", "--oneline", f"{stamp_head}..HEAD", "--",
          *_SEMANTIC_SOURCES],
@@ -196,8 +194,6 @@ def test_staleness_check_detects_post_stamp_edits():
     """Red-team of the gate mechanism itself: a stamp taken one
     source-touching commit ago MUST report that commit, and a stamp at
     HEAD must report nothing."""
-    import subprocess
-
     repo = Path(__file__).resolve().parent.parent
     head = subprocess.run(
         ["git", "rev-parse", "HEAD"], cwd=repo,
