@@ -8,13 +8,15 @@ Reference architecture being re-expressed:
                                             ├─► MV → clients_stats     (README.md:52-62)
                                             └─► ... (7 MVs total)
 
-Spark-first shape: ONE streaming query. Each micro-batch is the
-"insert block"; inside foreachBatch the batch is persisted once and
-fanned out to the fact append plus the eight aggregate deltas, each
-additively folded into its summing sink — exactly the MV + Summing-
-MergeTree contract, with no unbounded executor state (no state store),
-which is what survives 100 TB: aggregation state lives in the sink,
-keyed and compact, while Spark only ever holds one micro-batch.
+Spark-first shape: ONE streaming query over the raw lines. Each
+micro-batch is the "insert block"; inside foreachBatch its lines are
+persisted and counted, coalesced to one task per ``_LINES_PER_TASK``
+lines, parsed into a persisted frame once, and fanned out to the fact
+append plus the eight aggregate deltas, each additively folded into its
+summing sink — exactly the MV + SummingMergeTree contract, with no
+unbounded executor state (no state store), which is what survives
+100 TB: aggregation state lives in the sink, keyed and compact, while
+Spark only ever holds one micro-batch.
 
 Delivery: checkpointed source offsets + epoch-id-idempotent aggregate
 upserts = exactly-once for aggregates, and (r10) exactly-once for the
@@ -62,6 +64,11 @@ from adguard2clickhouse_spark.sources.querylog import read_querylog_stream
 # Per-epoch stage walls kept in ``QuerylogPipeline.batch_timings``: an
 # always-on daemon on a 1 s trigger runs ~86k epochs a day.
 _TIMINGS_KEPT = 1024
+# Raw lines per parse task (see ``process_batch``): a Python task's fixed
+# ~0.24 CPU-s equals ~6k lines of parse at ~39 us/line (single core, the
+# memo-miss-heavy backfill mix), so 50k lines keep that fixed cost near
+# 10% of a full task.
+_LINES_PER_TASK = 50_000
 # Background fact-ledger maintenance (see ``_maintenance_step``): each
 # step folds the oldest _COMPACT_FANOUT similar-sized committed slots
 # below _COMPACT_SMALL_BYTES, the scan layer's maxPartitionBytes.
@@ -365,14 +372,37 @@ class QuerylogPipeline:
             self.log2_sink.stream_id = sid
             self.dead_sink.stream_id = sid
 
+        # Right-size the epoch before the parse. Every Python task pays a
+        # fixed ~0.24 CPU-s before it reads a row (most of it in
+        # importlib.invalidate_caches(), pyspark/worker_util.py:144,
+        # re-reading pyspark.zip's directory), while the file source
+        # splits even a 2k-line epoch across every core. So the raw
+        # lines are persisted and counted (one JVM-only job, and the
+        # parse then reads the cache, never the files or a stateful
+        # dedup twice), and coalesced to one partition per
+        # _LINES_PER_TASK lines. The coalesce sits below the UDF: above
+        # it, each parent partition still starts its own Python runner.
+        # Coalesce only, never repartition: an epoch of at least
+        # _LINES_PER_TASK lines per source partition keeps its
+        # partitions. `parts` depends only on the epoch's checkpointed
+        # input, so a replayed epoch re-sends the same ClickHouse
+        # (token, body) pairs; every consumer below inherits it.
         batch_df.persist()
+        parsed = None
         try:
             t = _time.time()
-            good, dead = split_dead_letter(batch_df)
-            # Materialize the cache eagerly: the fan-out below submits
+            n_lines = batch_df.count()
+            n_source = batch_df.rdd.getNumPartitions()
+            parts = min(n_source, max(1, -(-n_lines // _LINES_PER_TASK)))
+            lines = batch_df.coalesce(parts) if parts < n_source else batch_df
+            t = _mark("line_count_s", t)
+            parsed = parse_querylog_lines(lines).persist()
+            good, dead = split_dead_letter(parsed)
+            # Materialize the caches eagerly: the fan-out below submits
             # jobs from several threads at once, and each would
             # otherwise race to compute the (UDF-bearing) parse lineage.
             n_good = good.persist().count()
+            batch_df.unpersist()  # the parsed cache now backs both splits
             t = _mark("parse_materialize_s", t)
 
             def _fact_append():
@@ -476,10 +506,16 @@ class QuerylogPipeline:
             # collected delta's `delta_rows` and `delta_bytes`, to read
             # against the driver_fold_max_rows ceiling. Bounded to the
             # last _TIMINGS_KEPT epochs; bench harnesses read and reset
-            # it.
+            # it. `n_lines` = `n_rows` (good) + `n_dead`; `parts` is the
+            # task count of the parse and of every consumer.
+            timings["n_lines"] = n_lines
             timings["n_rows"] = n_good
+            timings["n_dead"] = n_lines - n_good
+            timings["parts"] = parts
             self.batch_timings.append(timings)
         finally:
+            if parsed is not None:
+                parsed.unpersist()
             batch_df.unpersist()
 
     # -- run -----------------------------------------------------------------
@@ -492,10 +528,20 @@ class QuerylogPipeline:
     ) -> StreamingQuery:
         """Start the streaming query.
 
-        **Sizing the epoch (measured r9 operating point,
-        BENCH_streaming_r9.json):** throughput rises with epoch size —
-        25k rows/s at 100k rows/epoch, 42k at 250k, 63k at 500k — so
-        target ≥500k rows per micro-batch for bulk throughput.
+        **Sizing the epoch.** The stream hands ``process_batch`` the
+        raw lines; it counts them and runs
+        ``min(source partitions, ceil(lines / _LINES_PER_TASK))``
+        tasks, so a small epoch parses, appends, dead-letters and POSTs
+        in one task whatever number of files it spans. Every Python task
+        pays ~0.24 CPU-s before it reads a row
+        (``importlib.invalidate_caches()``, pyspark/worker_util.py:144),
+        which a ~2k-line epoch used to pay 8-9 times. Per-epoch costs
+        remain (the line count, parse materialization, the ledgered fact
+        append, the ClickHouse POST round), so throughput still rises
+        with epoch size (measured r9 operating point,
+        BENCH_streaming_r9.json: 25k rows/s at 100k rows/epoch, 42k at
+        250k, 63k at 500k) — target ≥500k rows per micro-batch for bulk
+        throughput.
         ``max_files_per_trigger`` is the lever when the spooler writes
         fixed-size files (pick ceil(500k / rows-per-file)); leave it
         None (all available files per trigger) for catch-up/backfill,
@@ -529,9 +575,10 @@ class QuerylogPipeline:
                 .dropDuplicatesWithinWatermark(["value"])
                 .drop("_ingest_ts")
             )
-        parsed = parse_querylog_lines(raw)
+        # The stream carries raw lines only: process_batch sizes each
+        # epoch by its line count before it parses.
         writer = (
-            parsed.writeStream.foreachBatch(self.process_batch)
+            raw.writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", self.checkpoint_dir)
         )
         if available_now:

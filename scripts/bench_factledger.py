@@ -35,8 +35,9 @@ end-to-end pipeline trigger is pytest-gated
 test_noisy_source_dead_channel_stays_bounded,
 test_large_slots_never_fold_on_the_batch_thread).
 
-Usage: python scripts/bench_factledger.py [epochs] [rows_per_epoch]
-Writes BENCH_factledger_r12.json at the repo root.
+Usage: python scripts/bench_factledger.py [epochs] [rows_per_epoch] [--out PATH]
+Prints the JSON record; ``--out`` also writes it (the committed record
+of this protocol is BENCH_factledger_r12.json).
 """
 
 from __future__ import annotations
@@ -69,6 +70,7 @@ def main() -> None:
     )
     ap.add_argument("epochs", type=int, nargs="?", default=200)
     ap.add_argument("rows_per_epoch", type=int, nargs="?", default=500)
+    ap.add_argument("--out", type=Path, help="write the JSON record here too (default: print only)")
     args = ap.parse_args()
     epochs, rows_per_epoch = args.epochs, args.rows_per_epoch
 
@@ -197,9 +199,8 @@ def main() -> None:
         },
         "note": "local[8]; worst-case slot fragmentation; policy = QuerylogPipeline background tiered fold step per epoch",
     }
-    (REPO / "BENCH_factledger_r12.json").write_text(
-        json.dumps(result, indent=1) + "\n"
-    )
+    if args.out:
+        args.out.write_text(json.dumps(result, indent=1) + "\n")
     print(json.dumps(result))
 
 

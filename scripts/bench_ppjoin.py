@@ -8,8 +8,9 @@ regime prefix filtering targets. This measures both EXACT algorithms
 (bit-identical answers, asserted) at sf0.1 and sf1 in one 48g session,
 median-of-3 interleaved, and records who wins where.
 
-Usage: python scripts/bench_ppjoin.py
-Writes BENCH_ppjoin_r6.json.
+Usage: python scripts/bench_ppjoin.py [--out PATH]
+Prints the JSON record; ``--out`` also writes it (the committed record
+is BENCH_ppjoin_r6.json).
 """
 
 from __future__ import annotations
@@ -29,7 +30,9 @@ REPS = 3
 
 
 def main() -> None:
-    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--out", type=Path, help="write the JSON record here too (default: print only)")
+    args = ap.parse_args()
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
     from adguard2clickhouse_spark.operators.dedup import (
@@ -94,7 +97,8 @@ def main() -> None:
         "n": 3,
         "results": results,
     }
-    (REPO / "BENCH_ppjoin_r6.json").write_text(json.dumps(out, indent=1) + "\n")
+    if args.out:
+        args.out.write_text(json.dumps(out, indent=1) + "\n")
     print(json.dumps(out))
     spark.stop()
 

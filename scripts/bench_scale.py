@@ -9,7 +9,7 @@ explicit written explanation of its super-linear term in the output
 JSON. Rows are recorded: a fast empty result must never read as a
 linear plan, so zero rows voids the query's entry.
 
-Decades (``--sf`` names the big side):
+Decades (``--sf`` names the big side; the committed records are):
   1    sf0.1 -> sf1,   BENCH_sf1.json   (bench headliners + dedup/ANN)
   10   sf1   -> sf10,  BENCH_sf10.json  (linear-plan families, 48g)
   100  sf10  -> sf100, BENCH_sf100.json (linear-plan families, 48g,
@@ -18,11 +18,13 @@ Decades (``--sf`` names the big side):
 
 Usage:
     python scripts/gen_scale.py --mult 10 --out .localdata/sf1
-    python scripts/bench_scale.py --sf 1
+    python scripts/bench_scale.py --sf 1 --out BENCH_sf1.json
     python scripts/gen_scale.py --mult 100 --out .localdata/sf10
-    python scripts/bench_scale.py --sf 10
+    python scripts/bench_scale.py --sf 10 --out BENCH_sf10.json
     python scripts/gen_scale.py --mult 1000 --out .localdata/sf100
-    python scripts/bench_scale.py --sf 100
+    python scripts/bench_scale.py --sf 100 --out BENCH_sf100.json
+
+Without ``--out`` the JSON record is printed and nothing is written.
 """
 
 from __future__ import annotations
@@ -176,6 +178,7 @@ def main() -> None:
                     help="flag ratio (default: per decade)")
     ap.add_argument("--reps", type=int,
                     help="runs per query and SF (default: per decade)")
+    ap.add_argument("--out", type=Path, help="write the JSON record here too (default: print only)")
     args = ap.parse_args()
     dec = DECADES[args.sf]
     base_dir = args.base or dec["base"]
@@ -256,8 +259,8 @@ def main() -> None:
         "queries": queries,
         "flagged": flagged,
     }
-    out = REPO / f"BENCH_sf{args.sf}.json"
-    out.write_text(json.dumps(result, indent=1) + "\n")
+    if args.out:
+        args.out.write_text(json.dumps(result, indent=1) + "\n")
     print(json.dumps(result))
     spark.stop()
 

@@ -18,7 +18,8 @@ of the corpus. That is the design; this artifact is the measurement.
 
 Usage: python scripts/bench_skew.py [n_rows] [hot_permille]
 Defaults: 4_000_000 rows, 950 (95% on one key).
-Writes BENCH_skew_r6.json at the repo root.
+Prints the JSON record; ``--out PATH`` also writes it (the committed
+record is BENCH_skew_r6.json).
 """
 
 from __future__ import annotations
@@ -93,6 +94,7 @@ def main() -> None:
     ap.add_argument("n_rows", type=int, nargs="?", default=4_000_000)
     ap.add_argument("hot_permille", type=int, nargs="?", default=950,
                     help="share of rows on the hot key, in permille")
+    ap.add_argument("--out", type=Path, help="write the JSON record here too (default: print only)")
     args = ap.parse_args()
     n_rows, hot_permille = args.n_rows, args.hot_permille
 
@@ -311,7 +313,8 @@ def main() -> None:
             "tasks — the filter dropped everything, so 'zero violations' "
             "would measure nothing"
         )
-    (REPO / "BENCH_skew_r6.json").write_text(json.dumps(result, indent=1) + "\n")
+    if args.out:
+        args.out.write_text(json.dumps(result, indent=1) + "\n")
     print(json.dumps(result))
     spark.stop()
     shutil.rmtree(work, ignore_errors=True)

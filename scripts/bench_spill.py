@@ -13,7 +13,8 @@ spill under pressure instead of OOMing — the property that lets the
 same plans run when the data no longer fits.
 
 Usage: python scripts/bench_spill.py [sf_dir]
-Default sf_dir: .localdata/sf10. Writes BENCH_spill_r6.json.
+Default sf_dir: .localdata/sf10. Prints the JSON record; ``--out PATH``
+also writes it (the committed record is BENCH_spill_r6.json).
 
 r6 (VERDICT r5 #1): every query MUST return rows — the r5 artifact
 committed a 0-row x2_ngram_jaccard_capped measurement (the pre-fix
@@ -81,7 +82,7 @@ def main() -> None:
     # longer need to spill at all.
     ap.add_argument("--fraction", default="0.15")
     ap.add_argument("--queries", default=",".join(QUERIES))
-    ap.add_argument("--out", default="BENCH_spill_r6.json")
+    ap.add_argument("--out", type=Path, help="write the JSON record here too (default: print only)")
     args = ap.parse_args()
     sf_dir = args.sf_dir
     queries = [q for q in args.queries.split(",") if q]
@@ -173,7 +174,8 @@ def main() -> None:
         "all_completed": all(r.get("completed") for r in results.values()),
         "total_disk_spilled_mb": round(total_disk, 1),
     }
-    (REPO / args.out).write_text(json.dumps(out, indent=1) + "\n")
+    if args.out:
+        args.out.write_text(json.dumps(out, indent=1) + "\n")
     print(json.dumps(out))
     spark.stop()
     if not out["all_completed"]:

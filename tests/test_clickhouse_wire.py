@@ -408,30 +408,23 @@ def test_decode_rowbinary_truncation_always_valueerror(spark):
         decode_rowbinary(b"\xff" * 12, schema)
 
 
-def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark):
-    """K1 effectively-once, e2e (VERDICT r5 #5): a RETRIED streaming
-    epoch must (a) re-send byte-identical RowBinary blocks whose
-    insert_deduplication_token per partition EQUALS the first
-    attempt's, and (b) against a token-aware server emulating
-    ClickHouse's dedup window, install each block exactly once. The
-    token plumbing exists at sinks/clickhouse.py (insert_batch); this
-    drives it through the real per-micro-batch body
-    (QuerylogPipeline.process_batch) invoked twice with the SAME
-    epoch_id — exactly what Structured Streaming does when a sink
-    failure fails the first attempt after the POSTs went out.
-    The additive parquet sinks must also no-op on the retry
-    (epoch-ledger idempotency, asserted on blocked_domains)."""
+def _retry_one_epoch(tmp_path, spark):
+    """Run ONE streaming epoch through the real per-micro-batch body
+    (QuerylogPipeline.process_batch) twice with the SAME epoch_id, as
+    Structured Streaming does when a sink failure fails the first
+    attempt after the POSTs went out, against a token-aware server
+    emulating ClickHouse's dedup window. The epoch's 40 lines sit in 4
+    files, so the raw batch has several source partitions.
+
+    Returns (first, second, installed, batch_df, pipe): the sorted
+    (token, body) POSTs of each attempt, the bodies the server
+    installed, the raw batch and the pipeline."""
     import json
     import threading
     import urllib.parse
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     from adguard2clickhouse_spark.operators.dnswire import build_answer_b64
-    from adguard2clickhouse_spark.operators.parse import (
-        parse_querylog_lines,
-        split_dead_letter,
-    )
-    from adguard2clickhouse_spark.sinks.clickhouse import decode_rowbinary
     from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
 
     lock = threading.Lock()
@@ -480,14 +473,17 @@ def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark)
             })
             for i in range(40)
         ]
-        (src / "querylog.jsonl").write_text("\n".join(lines) + "\n")
+        for f in range(4):
+            (src / f"querylog-{f}.jsonl").write_text(
+                "\n".join(lines[f * 10:(f + 1) * 10]) + "\n"
+            )
 
         pipe = QuerylogPipeline(
             spark, str(src), str(tmp_path / "out"), clickhouse=writer
         )
-        # the exact frame foreachBatch hands process_batch: the parsed
-        # lines of this batch (deterministic lineage from the file)
-        batch_df = parse_querylog_lines(spark.read.text(str(src)))
+        # the exact frame foreachBatch hands process_batch: the raw
+        # lines of this batch (deterministic lineage from the files)
+        batch_df = spark.read.text(str(src))
 
         pipe.process_batch(batch_df, epoch_id=7)
         with lock:
@@ -496,37 +492,75 @@ def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark)
         pipe.process_batch(batch_df, epoch_id=7)  # simulated epoch retry
         with lock:
             second = sorted(posts)
-
-        assert first, "first attempt produced no POSTs"
-        # (a) identical (token, payload) multiset across the retry —
-        # same partitions, same bytes, same per-partition tokens
-        assert second == first
-        tokens = {t for t, _ in first}
-        assert all(t is not None and t.startswith("log2_epoch_7_p") for t in tokens)
-
-        # (b) the token-aware server installed each block exactly once
-        good = split_dead_letter(batch_df)[0]
-        expected = sorted(tuple(r) for r in good.collect())
-        schema = good.schema
-        decoded = sorted(
-            tuple(r) for body in installed for r in decode_rowbinary(body, schema)
-        )
-        assert decoded == expected
-        assert len(installed) == len(first)  # one install per unique token
-
-        # (c) additive sinks folded the epoch once: counts not doubled
-        bd = {
-            (r.QH, r["count"])
-            for r in pipe.read_aggregate("blocked_domains").collect()
-        }
-        exp_bd = {
-            (r.QH, r.n)
-            for r in good.filter("IsFiltered").groupBy("QH").count()
-            .withColumnRenamed("count", "n").collect()
-        }
-        assert bd == exp_bd
+            return first, second, list(installed), batch_df, pipe
     finally:
         srv.shutdown()
+        srv.server_close()
+
+
+def _assert_installed_once(first, second, installed, batch_df, pipe):
+    from adguard2clickhouse_spark.operators.parse import parse_querylog
+    from adguard2clickhouse_spark.sinks.clickhouse import decode_rowbinary
+
+    assert first, "first attempt produced no POSTs"
+    # identical (token, payload) multiset across the retry — same
+    # partitions, same bytes, same per-partition tokens
+    assert second == first
+
+    # the token-aware server installed each block exactly once
+    good = parse_querylog(batch_df)[0]
+    expected = sorted(tuple(r) for r in good.collect())
+    decoded = sorted(
+        tuple(r) for body in installed for r in decode_rowbinary(body, good.schema)
+    )
+    assert decoded == expected
+    assert len(installed) == len(first)  # one install per unique token
+
+    # additive sinks folded the epoch once: counts not doubled
+    # (epoch-ledger idempotency, asserted on blocked_domains)
+    bd = {
+        (r.QH, r["count"])
+        for r in pipe.read_aggregate("blocked_domains").collect()
+    }
+    exp_bd = {
+        (r.QH, r.n)
+        for r in good.filter("IsFiltered").groupBy("QH").count()
+        .withColumnRenamed("count", "n").collect()
+    }
+    assert bd == exp_bd
+
+
+def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark):
+    """K1 effectively-once, e2e (VERDICT r5 #5): a RETRIED streaming
+    epoch must (a) re-send byte-identical RowBinary blocks whose
+    insert_deduplication_token per partition EQUALS the first
+    attempt's, and (b) install each block exactly once. A 40-line
+    epoch is far below _LINES_PER_TASK, so process_batch coalesces its
+    source partitions into one task: one POST, token ``_p0``, on both
+    attempts."""
+    first, second, installed, batch_df, pipe = _retry_one_epoch(tmp_path, spark)
+    assert batch_df.rdd.getNumPartitions() >= 2
+    assert [t for t, _ in first] == ["log2_epoch_7_p0"]
+    assert pipe.batch_timings[-1]["parts"] == 1
+    _assert_installed_once(first, second, installed, batch_df, pipe)
+
+
+def test_epoch_retry_tokens_when_every_source_partition_is_a_task(
+    tmp_path, spark, monkeypatch
+):
+    """With _LINES_PER_TASK at 1 the partition count is the source's
+    (coalesce only, never repartition): each source partition POSTs
+    once under its own ``_p{i}`` token, and the retry re-sends the
+    same (token, body) pairs."""
+    from adguard2clickhouse_spark.streaming import pipeline as pl
+
+    monkeypatch.setattr(pl, "_LINES_PER_TASK", 1)
+    first, second, installed, batch_df, pipe = _retry_one_epoch(tmp_path, spark)
+    n = batch_df.rdd.getNumPartitions()
+    assert n >= 2
+    assert [t for t, _ in first] == [f"log2_epoch_7_p{i}" for i in range(n)]
+    assert pipe.batch_timings[-1]["parts"] == n
+    _assert_installed_once(first, second, installed, batch_df, pipe)
 
 
 # -- the column-at-a-time Arrow encoder --------------------------------------
@@ -696,7 +730,6 @@ def test_process_batch_records_clickhouse_posts_and_bytes(tmp_path, spark):
     import json
 
     from adguard2clickhouse_spark.operators.dnswire import build_answer_b64
-    from adguard2clickhouse_spark.operators.parse import parse_querylog_lines
     from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
 
     src = tmp_path / "src"
@@ -713,8 +746,50 @@ def test_process_batch_records_clickhouse_posts_and_bytes(tmp_path, spark):
     (src / "querylog.jsonl").write_text("\n".join(lines) + "\n")
     with _recording_clickhouse() as (writer, received):
         pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"), clickhouse=writer)
-        pipe.process_batch(parse_querylog_lines(spark.read.text(str(src))), epoch_id=0)
+        pipe.process_batch(spark.read.text(str(src)), epoch_id=0)
     timings = pipe.batch_timings[-1]
     assert received
     assert timings["clickhouse_posts"] == len(received)
     assert timings["clickhouse_bytes"] == sum(len(b) for _, b in received)
+
+
+def test_small_epoch_runs_as_one_task(tmp_path, spark):
+    """An epoch far below _LINES_PER_TASK lines is coalesced to one
+    partition before the parse, so every consumer runs one task: one
+    ClickHouse POST (token ``_p0``) and one parquet file per ``date=``
+    directory of the epoch's log2 slot, though each epoch's three files
+    arrive as three source partitions."""
+    import glob
+    import json
+
+    from adguard2clickhouse_spark.operators.dnswire import build_answer_b64
+    from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
+
+    src = tmp_path / "src"
+    src.mkdir()
+    out = tmp_path / "out"
+    with _recording_clickhouse() as (writer, received):
+        pipe = QuerylogPipeline(spark, str(src), str(out), clickhouse=writer)
+        for epoch in range(2):
+            for f in range(3):
+                (src / f"querylog-{epoch}-{f}.jsonl").write_text("".join(
+                    json.dumps({
+                        "T": f"2024-01-0{1 + i % 2}T00:00:{i:02d}+00:00",
+                        "QH": f"d{i}.example.com", "QT": "A", "QC": "IN",
+                        "CP": "", "Upstream": "8.8.8.8:53", "IP": "10.0.0.1",
+                        "Result": {"IsFiltered": False}, "Elapsed": i,
+                        "Cached": False, "Answer": build_answer_b64(a=["1.2.3.4"]),
+                    }) + "\n"
+                    for i in range(10)
+                ))
+            pipe.run_available()
+    assert sorted(t for t, _ in received) == ["log2_epoch_0_p0", "log2_epoch_1_p0"]
+    epochs = [t for t in pipe.batch_timings if "parts" in t]
+    assert [(t["parts"], t["n_lines"]) for t in epochs] == [(1, 30), (1, 30)]
+    slots = pipe.log2_sink._pointer()["dirs"]
+    assert len(slots) == 2
+    for slot in slots:
+        dates = sorted(glob.glob(str(out / "log2" / slot / "date=*")))
+        assert [os.path.basename(d) for d in dates] == ["date=2024-01-01", "date=2024-01-02"]
+        for d in dates:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d

@@ -1099,6 +1099,12 @@ def test_noisy_source_dead_channel_stays_bounded(tmp_path, spark, monkeypatch):
     dead = pipe.dead_sink.read(spark)
     assert dead.count() == n_files  # every bad line preserved
     assert pipe.read_log2().count() == n_files
+    # the epoch records account for every line: n_dead (n_lines minus
+    # the good count, no extra job) sums to the dead channel's rows
+    epochs = [t for t in pipe.batch_timings if "n_dead" in t]
+    assert len(epochs) == n_files
+    assert all(t["n_lines"] == t["n_rows"] + t["n_dead"] for t in epochs)
+    assert sum(t["n_dead"] for t in epochs) == dead.count()
 
 
 def test_dead_letter_digest_survives_compaction(tmp_path, spark):
