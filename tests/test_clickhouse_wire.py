@@ -416,15 +416,19 @@ def _retry_one_epoch(tmp_path, spark):
     emulating ClickHouse's dedup window. The epoch's 40 lines sit in 4
     files, so the raw batch has several source partitions.
 
-    Returns (first, second, installed, batch_df, pipe): the sorted
-    (token, body) POSTs of each attempt, the bodies the server
-    installed, the raw batch and the pipeline."""
+    Asserts that the retry re-sends the identical (token, body)
+    multiset, that the server installs each block exactly once and
+    that the additive sinks fold the epoch once. Returns the tokens of
+    the first attempt (sorted), the source partition count and the
+    pipeline."""
     import json
     import threading
     import urllib.parse
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     from adguard2clickhouse_spark.operators.dnswire import build_answer_b64
+    from adguard2clickhouse_spark.operators.parse import parse_querylog
+    from adguard2clickhouse_spark.sinks.clickhouse import decode_rowbinary
     from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
 
     lock = threading.Lock()
@@ -492,15 +496,9 @@ def _retry_one_epoch(tmp_path, spark):
         pipe.process_batch(batch_df, epoch_id=7)  # simulated epoch retry
         with lock:
             second = sorted(posts)
-            return first, second, list(installed), batch_df, pipe
     finally:
         srv.shutdown()
         srv.server_close()
-
-
-def _assert_installed_once(first, second, installed, batch_df, pipe):
-    from adguard2clickhouse_spark.operators.parse import parse_querylog
-    from adguard2clickhouse_spark.sinks.clickhouse import decode_rowbinary
 
     assert first, "first attempt produced no POSTs"
     # identical (token, payload) multiset across the retry — same
@@ -528,6 +526,7 @@ def _assert_installed_once(first, second, installed, batch_df, pipe):
         .withColumnRenamed("count", "n").collect()
     }
     assert bd == exp_bd
+    return [t for t, _ in first], batch_df.rdd.getNumPartitions(), pipe
 
 
 def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark):
@@ -538,11 +537,10 @@ def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark)
     epoch is far below _LINES_PER_TASK, so process_batch coalesces its
     source partitions into one task: one POST, token ``_p0``, on both
     attempts."""
-    first, second, installed, batch_df, pipe = _retry_one_epoch(tmp_path, spark)
-    assert batch_df.rdd.getNumPartitions() >= 2
-    assert [t for t, _ in first] == ["log2_epoch_7_p0"]
+    tokens, n_source, pipe = _retry_one_epoch(tmp_path, spark)
+    assert n_source >= 2
+    assert tokens == ["log2_epoch_7_p0"]
     assert pipe.batch_timings[-1]["parts"] == 1
-    _assert_installed_once(first, second, installed, batch_df, pipe)
 
 
 def test_epoch_retry_tokens_when_every_source_partition_is_a_task(
@@ -555,12 +553,10 @@ def test_epoch_retry_tokens_when_every_source_partition_is_a_task(
     from adguard2clickhouse_spark.streaming import pipeline as pl
 
     monkeypatch.setattr(pl, "_LINES_PER_TASK", 1)
-    first, second, installed, batch_df, pipe = _retry_one_epoch(tmp_path, spark)
-    n = batch_df.rdd.getNumPartitions()
-    assert n >= 2
-    assert [t for t, _ in first] == [f"log2_epoch_7_p{i}" for i in range(n)]
-    assert pipe.batch_timings[-1]["parts"] == n
-    _assert_installed_once(first, second, installed, batch_df, pipe)
+    tokens, n_source, pipe = _retry_one_epoch(tmp_path, spark)
+    assert n_source >= 2
+    assert tokens == [f"log2_epoch_7_p{i}" for i in range(n_source)]
+    assert pipe.batch_timings[-1]["parts"] == n_source
 
 
 # -- the column-at-a-time Arrow encoder --------------------------------------
