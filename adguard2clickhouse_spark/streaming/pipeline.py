@@ -377,8 +377,8 @@ class QuerylogPipeline:
         # importlib.invalidate_caches(), pyspark/worker_util.py:144,
         # re-reading pyspark.zip's directory), while the file source
         # splits even a 2k-line epoch across every core. So the raw
-        # lines are persisted and counted (one JVM-only job, and the
-        # parse then reads the cache, never the files or a stateful
+        # lines are persisted and counted (JVM-only, no Python task;
+        # the parse then reads the cache, never the files or a stateful
         # dedup twice), and coalesced to one partition per
         # _LINES_PER_TASK lines. The coalesce sits below the UDF: above
         # it, each parent partition still starts its own Python runner.
