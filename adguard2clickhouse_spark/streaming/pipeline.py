@@ -10,10 +10,10 @@ Reference architecture being re-expressed:
 
 Spark-first shape: ONE streaming query over the raw lines. Each
 micro-batch is the "insert block"; inside foreachBatch its lines are
-persisted and counted, coalesced to one task per ``_LINES_PER_TASK``
-lines, parsed into a persisted frame once, and fanned out to the fact
-append plus the eight aggregate deltas, each additively folded into its
-summing sink — exactly the MV + SummingMergeTree contract, with no
+persisted and counted, coalesced to one task when there are at most
+``_LINES_PER_TASK`` of them, parsed into a persisted frame once, and
+fanned out to the fact append plus the eight aggregate deltas, each
+additively folded into its summing sink — exactly the MV + SummingMergeTree contract, with no
 unbounded executor state (no state store), which is what survives
 100 TB: aggregation state lives in the sink, keyed and compact, while
 Spark only ever holds one micro-batch.
@@ -64,10 +64,10 @@ from adguard2clickhouse_spark.sources.querylog import read_querylog_stream
 # Per-epoch stage walls kept in ``QuerylogPipeline.batch_timings``: an
 # always-on daemon on a 1 s trigger runs ~86k epochs a day.
 _TIMINGS_KEPT = 1024
-# Raw lines per parse task (see ``process_batch``): a Python task's fixed
-# ~0.24 CPU-s equals ~6k lines of parse at ~39 us/line (single core, the
-# memo-miss-heavy backfill mix), so 50k lines keep that fixed cost near
-# 10% of a full task.
+# Largest epoch, in raw lines, parsed as ONE task (see ``process_batch``):
+# a Python task's fixed ~0.24 CPU-s equals ~6k lines of parse at ~39
+# us/line (single core, the memo-miss-heavy backfill mix), so 50k lines
+# keep that fixed cost near 10% of a full task.
 _LINES_PER_TASK = 50_000
 # Background fact-ledger maintenance (see ``_maintenance_step``): each
 # step folds the oldest _COMPACT_FANOUT similar-sized committed slots
@@ -377,24 +377,26 @@ class QuerylogPipeline:
         # importlib.invalidate_caches(), pyspark/worker_util.py:144,
         # re-reading pyspark.zip's directory), while the file source
         # splits even a 2k-line epoch across every core. So the raw
-        # lines are persisted and counted (JVM-only, no Python task;
-        # the parse then reads the cache, never the files or a stateful
-        # dedup twice), and coalesced to one partition per
-        # _LINES_PER_TASK lines. The coalesce sits below the UDF: above
-        # it, each parent partition still starts its own Python runner.
-        # Coalesce only, never repartition: an epoch of at least
-        # _LINES_PER_TASK lines per source partition keeps its
-        # partitions. `parts` depends only on the epoch's checkpointed
-        # input, so a replayed epoch re-sends the same ClickHouse
-        # (token, body) pairs; every consumer below inherits it.
+        # lines are persisted and counted (one JVM job over the cached
+        # plan, no Python task; the parse then reads the cache, never
+        # the files or a stateful dedup twice). An epoch of at most
+        # _LINES_PER_TASK lines is coalesced to ONE partition; a larger
+        # one keeps its source partitions (never a partial coalesce or
+        # a repartition). The coalesce sits below the UDF: above it,
+        # each parent partition still starts its own Python runner.
+        # `parts` depends only on the epoch's checkpointed input, and a
+        # one-group coalesce puts every line under token `_p0`, so a
+        # replayed epoch re-sends the same ClickHouse (token, rows)
+        # pairs; every consumer below inherits `parts`.
         batch_df.persist()
         parsed = None
         try:
             t = _time.time()
-            n_lines = batch_df.count()
-            n_source = batch_df.rdd.getNumPartitions()
-            parts = min(n_source, max(1, -(-n_lines // _LINES_PER_TASK)))
-            lines = batch_df.coalesce(parts) if parts < n_source else batch_df
+            n_lines = batch_df._jdf.queryExecution().toRdd().count()
+            if n_lines <= _LINES_PER_TASK:
+                lines, parts = batch_df.coalesce(1), 1
+            else:
+                lines, parts = batch_df, batch_df.rdd.getNumPartitions()
             t = _mark("line_count_s", t)
             parsed = parse_querylog_lines(lines).persist()
             good, dead = split_dead_letter(parsed)
@@ -529,11 +531,11 @@ class QuerylogPipeline:
         """Start the streaming query.
 
         **Sizing the epoch.** The stream hands ``process_batch`` the
-        raw lines; it counts them and runs
-        ``min(source partitions, ceil(lines / _LINES_PER_TASK))``
-        tasks, so a small epoch parses, appends, dead-letters and POSTs
-        in one task whatever number of files it spans. Every Python task
-        pays ~0.24 CPU-s before it reads a row
+        raw lines; it counts them and runs an epoch of at most
+        ``_LINES_PER_TASK`` lines as one task (a larger one keeps its
+        source partitions), so a small epoch parses, appends,
+        dead-letters and POSTs in one task whatever number of files it
+        spans. Every Python task pays ~0.24 CPU-s before it reads a row
         (``importlib.invalidate_caches()``, pyspark/worker_util.py:144),
         which a ~2k-line epoch used to pay 8-9 times. Per-epoch costs
         remain (the line count, parse materialization, the ledgered fact

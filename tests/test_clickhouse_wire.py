@@ -546,8 +546,9 @@ def test_epoch_retry_carries_identical_tokens_and_installs_once(tmp_path, spark)
 def test_epoch_retry_tokens_when_every_source_partition_is_a_task(
     tmp_path, spark, monkeypatch
 ):
-    """With _LINES_PER_TASK at 1 the partition count is the source's
-    (coalesce only, never repartition): each source partition POSTs
+    """With _LINES_PER_TASK at 1 the epoch is above the limit and keeps
+    its source partitions (no partial coalesce, no repartition): each
+    source partition POSTs
     once under its own ``_p{i}`` token, and the retry re-sends the
     same (token, body) pairs."""
     from adguard2clickhouse_spark.streaming import pipeline as pl
