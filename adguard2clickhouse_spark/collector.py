@@ -16,9 +16,9 @@ deployable surface for the Spark engine:
   operation; default is the always-on micro-batch daemon.
 
 Config mirrors the reference's env-var surface (collector.py:81-87):
-``DB_HOST/DB_USER/DB_PASSWORD/DB_DATABASE`` switch the aggregate sink
-to ClickHouse when ``clickhouse_connect`` is available; otherwise the
-parquet summing sink serves the identical read API.
+``DB_HOST/DB_USER/DB_PASSWORD/DB_DATABASE`` add a ClickHouse insert of
+every fact block over HTTP RowBinary (``writer_from_env``); the parquet
+summing sinks serve the read API either way.
 """
 
 from __future__ import annotations

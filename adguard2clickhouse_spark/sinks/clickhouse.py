@@ -6,20 +6,15 @@ async-insert buffering (/root/reference/src/collector.py:50-52,73-75).
 Here each micro-batch becomes one insert per partition — batching is
 explicit and client-side; ``async_insert`` is unnecessary.
 
-Two writer paths:
-
-- :class:`ClickHouseHTTPWriter` — no client library: encodes each
-  executor partition's Arrow batches to ClickHouse's public RowBinary
-  wire format column at a time with pyarrow and numpy
-  (``encode_record_batches`` below, per the documented format: LEB128
-  varint-prefixed strings, little-endian fixed-width numerics,
-  varint-count-prefixed arrays) and POSTs it to the HTTP interface
-  with urllib (``INSERT ... FORMAT RowBinary``). The serialization
-  layer runs in CI against golden byte fixtures
-  (tests/test_clickhouse_wire.py); only the final socket write needs a
-  live server (env-gated test).
-- :class:`ClickHouseWriter` — thin wrapper over ``clickhouse_connect``
-  when it's installed; import-gated otherwise.
+:class:`ClickHouseHTTPWriter` needs no client library: it encodes
+each executor partition's Arrow batches to ClickHouse's public
+RowBinary wire format column at a time with pyarrow and numpy
+(``encode_record_batches`` below, per the documented format: LEB128
+varint-prefixed strings, little-endian fixed-width numerics,
+varint-count-prefixed arrays) and POSTs it to the HTTP interface with
+urllib (``INSERT ... FORMAT RowBinary``). The serialization layer runs
+in CI against golden byte fixtures (tests/test_clickhouse_wire.py);
+only the final socket write needs a live server (env-gated test).
 
 The summing sink (sinks/summing.py) implements the same fold contract
 for graders without a ClickHouse server.
@@ -37,14 +32,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-
-try:  # pragma: no cover - not installed in this container
-    import clickhouse_connect  # type: ignore
-
-    HAVE_CLICKHOUSE = True
-except ImportError:
-    clickhouse_connect = None
-    HAVE_CLICKHOUSE = False
 
 _TYPE_MAP = {
     T.TimestampType(): "DateTime",
@@ -447,44 +434,3 @@ class ClickHouseHTTPWriter:
             "bytes": sum(r.bytes for r in sent),
         }
 
-
-class ClickHouseWriter:
-    """foreachBatch-compatible writer: one Arrow insert per executor
-    partition (connections made executor-side, never serialized)."""
-
-    def __init__(self, host: str, database: str, username: str, password: str, port: int = 8123):
-        if not HAVE_CLICKHOUSE:
-            raise ImportError(
-                "clickhouse_connect not available; use SummingParquetSink instead"
-            )
-        self.conn_kwargs = dict(
-            host=host, database=database, username=username, password=password, port=port
-        )
-
-    @classmethod
-    def from_env(cls) -> "ClickHouseWriter":
-        """Env parity (reference src/collector.py:81-87): the same
-        DB_USER / DB_PASSWORD / DB_HOST / DB_DATABASE variables, with
-        getenv-style tolerance for absent vars (reference behavior)."""
-        host = os.environ.get("DB_HOST")
-        if not host:
-            raise ValueError("ClickHouseWriter.from_env requires DB_HOST to be set")
-        return cls(
-            host=host,
-            database=os.environ.get("DB_DATABASE") or "default",
-            username=os.environ.get("DB_USER") or "default",
-            password=os.environ.get("DB_PASSWORD") or "",
-        )
-
-    def insert_batch(self, df: DataFrame, table: str) -> None:
-        conn_kwargs = self.conn_kwargs
-        cols = df.columns
-
-        def write_partition(rows):
-            client = clickhouse_connect.get_client(**conn_kwargs)
-            buf = [list(r) for r in rows]
-            if buf:
-                client.insert(table, buf, column_names=cols)
-            client.close()
-
-        df.foreachPartition(write_partition)

@@ -36,26 +36,42 @@ torn epoch. Each committed directory carries the stream's
 exactly as it did on the flat layout — Spark discovers the partition
 column per root when handed the list of committed roots.
 
-Scale shape (100 TB): this is a minimal transaction log — the same
-contract Delta Lake / Iceberg provide natively, which is what backs
-this interface on a real cluster (the design doc's named fix; cite:
-the reference has no fact-retry story at all, its insert is
-fire-and-forget — /root/reference/src/collector.py:73-75). Cost per
-epoch is one rename plus one small JSON write; the ledger grows one
-entry per epoch and ``compact()`` folds old epochs into one directory
-when the listing (or small-file count) becomes the bottleneck —
-bounded maintenance, not a per-read cost (the pipeline now schedules
-that automatically between epochs — ``QuerylogPipeline.process_batch``).
+Ledger semantics (each is load-bearing for exactly-once delivery):
+
+- **Epochs and tokens.** ``append`` records its epoch id or token in
+  the SAME pointer write that makes its rows visible, and returns
+  False (a no-op) for one already recorded. Epoch ids are monotonic
+  per stream identity: the ledger keeps a high-water mark plus the
+  last ``_MAX_EPOCHS_TRACKED`` ids, and anything at or below the mark
+  counts as applied. Tokens are opaque out-of-band keys (dead-letter
+  replay) with no order, so only the last ``_MAX_EPOCHS_TRACKED`` are
+  remembered. An empty frame still records its epoch id.
+- **replace** swaps the whole content atomically while both ledgers
+  SURVIVE, so a retried epoch is still recognized after a rewrite.
+- **generation** changes only with ``replace(bump_generation=True)``,
+  never with an append or a compaction; the dead-letter replay salts
+  its token with it.
+- **compact** changes layout only: never content, ledgers or
+  generation.
+- **Stream identity** (``stream_id``, assignable) scopes the epoch
+  ledger: a CHANGED identity voids it (a recreated checkpoint restarts
+  epoch ids at 0, and matching them against the old high-water mark
+  would silently drop every new epoch); ``None`` leaves it unscoped;
+  an unrecorded→recorded transition keeps the existing epochs.
+
+Cost per epoch is one rename plus one small JSON write (the reference
+has no fact-retry story at all, its insert is fire-and-forget — its
+src/collector.py:73-75). The ledger grows one entry per epoch and
+``compact()`` folds old epochs together when the listing (or
+small-file count) becomes the bottleneck — bounded maintenance, not a
+per-read cost (the pipeline schedules it between epochs —
+``QuerylogPipeline.process_batch``).
 
 Writer discipline (r11): single-writer is ENFORCED, not documented —
 every pointer read-modify-write runs under an advisory ``flock`` on
-``_FACTS.lock``, construction rejects non-local URIs outright (the
-rename/flock substrate does not exist on object stores; Delta/Iceberg
-are the cluster backends), legacy-layout adoption is crash-resumable
-behind an fsynced ``_ADOPTING`` marker, and the epoch ledger is scoped
-to the streaming-query identity so a recreated checkpoint (epoch ids
-restarting at 0) voids the stale high-water mark instead of silently
-dropping every new epoch.
+``_FACTS.lock``, and construction rejects non-local URIs outright (the
+rename/flock substrate does not exist on object stores) and refuses a
+directory holding data but no ledger, which it could only hide.
 """
 
 from __future__ import annotations
@@ -71,12 +87,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from adguard2clickhouse_spark.sinks.contract import FactSink
-
 _POINTER = "_FACTS.json"
 _LOCKFILE = "_FACTS.lock"
-_ADOPT_MARKER = "_ADOPTING"
-_ADOPT_STAGE = ".adopting"
 _MAX_EPOCHS_TRACKED = 1000
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
@@ -101,7 +113,7 @@ def _staged_stats(stage: str) -> tuple[int, int]:
     return rows, nbytes
 
 
-class LedgeredFactSink(FactSink):
+class LedgeredFactSink:
     def __init__(
         self,
         path: str,
@@ -112,18 +124,16 @@ class LedgeredFactSink(FactSink):
         # Fail loudly off local filesystems (VERDICT r10 #3): the
         # ledger's atomicity is os.replace + flock, which only hold on
         # a POSIX filesystem — handed an object-store URI it would fail
-        # obscurely (or worse, "work" without atomicity). On a cluster
-        # this interface maps to a real table format whose transaction
-        # log provides the same staged-commit contract natively.
+        # obscurely (or worse, "work" without atomicity).
         if _URI_SCHEME.match(path):
             raise ValueError(
                 f"LedgeredFactSink needs a plain local-filesystem path, "
                 f"got {path!r}. Its staged-commit ledger is built on "
-                "POSIX rename/flock semantics; for s3://, hdfs:// or "
-                "abfss:// back the fact table with Delta Lake or "
-                "Apache Iceberg instead — their transaction logs give "
-                "the identical exactly-once append contract at cluster "
-                "scale (see the module docstring)."
+                "POSIX rename/flock semantics, which s3://, hdfs:// and "
+                "abfss:// do not provide, and this package ships no "
+                "object-store fact sink: there, exactly-once appends "
+                "need a table format with a transaction log (Delta "
+                "Lake, Apache Iceberg)."
             )
         self.path = path
         self.partition_by = list(partition_by or [])
@@ -158,14 +168,28 @@ class LedgeredFactSink(FactSink):
         # above the longest reader job, like a VACUUM retention.
         self.trash_retention_s: float = 60.0
         os.makedirs(path, exist_ok=True)
-        with self._locked():
-            self._adopt_legacy()
+        if not os.path.exists(os.path.join(path, _POINTER)):
+            # Without a ledger, cseq=/stage entries are leftovers of a
+            # first epoch that never committed (Spark replays it, the
+            # next append garbage-collects them). Any other visible
+            # entry is data no ledger records: read() would hide it.
+            unledgered = sorted(
+                n for n in os.listdir(path)
+                if not n.startswith((".", "_", "cseq="))
+            )
+            if unledgered:
+                raise ValueError(
+                    f"{path} holds data but no {_POINTER} ledger "
+                    f"({', '.join(unledgered[:3])}); LedgeredFactSink "
+                    "would not read it. Move it out of the directory "
+                    "first."
+                )
 
     @contextlib.contextmanager
     def _locked(self):
         """Advisory exclusive lock enforcing the single-writer
         discipline (VERDICT r10 #2): every pointer read-modify-write
-        (append / replace / compact / adoption) runs under it, so a
+        (append / replace / compact) runs under it, so a
         maintenance compaction racing a live stream — or a second
         process on the same out_dir — serializes instead of silently
         dropping committed dirs from the ledger (a lost update here
@@ -184,87 +208,6 @@ class LedgeredFactSink(FactSink):
         finally:
             fcntl.flock(fd, fcntl.LOCK_UN)
             os.close(fd)
-
-    def _adopt_legacy(self) -> None:
-        """One-time migration of a pre-ledger flat layout: a directory
-        with data but no pointer (written by the plain ``mode("append")``
-        era) would otherwise be silently invisible — ``has_data()``
-        False, gigabytes orphaned. Move every visible entry (``date=``
-        partition dirs, loose part files) into the first committed slot
-        and commit a pointer over it: pure renames, no data rewrite,
-        and the epoch/token ledgers start empty exactly as the old
-        layout's delivery contract (at-least-once, no retry tracking)
-        warrants. Hidden entries (``_SUCCESS``, ``.crc``) stay behind —
-        Spark ignores them either way.
-
-        Crash-safe and resumable (ADVICE r10, the medium): adoption
-        writes an fsynced ``_ADOPTING`` marker FIRST, moves entries into
-        a ``.adopting`` stage (never GC'd — orphan GC only matches
-        ``.stage.*``/uncommitted ``cseq=``), renames the stage into the
-        slot, commits the pointer, then removes the marker. A crash in
-        ANY window resumes from the marker on the next open instead of
-        the pre-r11 failure modes (slot-without-pointer GC'd by the
-        next append = silent total loss; mid-move resume =
-        FileExistsError). Runs under the writer lock."""
-        marker = os.path.join(self.path, _ADOPT_MARKER)
-        if os.path.exists(os.path.join(self.path, _POINTER)):
-            if os.path.exists(marker):
-                os.remove(marker)  # crash after pointer, before cleanup
-            return
-        stage = os.path.join(self.path, _ADOPT_STAGE)
-        slot = os.path.join(self.path, "cseq=00000001")
-        # cseq=/stage entries without a pointer are NOT legacy data:
-        # they are leftovers of a crash before the very first commit
-        # (the epoch was never committed, Spark will replay it) — the
-        # next append garbage-collects them; adopting them would
-        # duplicate the replayed epoch.
-        legacy = [
-            n for n in os.listdir(self.path)
-            if not n.startswith((".", "_", "cseq="))
-        ]
-        resuming = os.path.exists(marker)
-        if not legacy and not resuming:
-            return
-        if not resuming:
-            # A pre-existing cseq=00000001 without pointer or marker is
-            # a never-committed crash orphan (see above) — clear it now
-            # so the adoption slot rename cannot collide with it. With
-            # the marker present the slot is ADOPTED data (crash after
-            # the rename) and must be kept.
-            if os.path.exists(slot):
-                shutil.rmtree(slot)
-            with open(marker, "w") as f:
-                f.write("adopting legacy flat layout; see _adopt_legacy")
-                f.flush()
-                os.fsync(f.fileno())
-            self._fsync_dir()
-        # Move any remaining legacy entries into the stage, then swing
-        # the stage into the slot — every step idempotent, so a resume
-        # lands here and completes whatever the crash left undone.
-        if legacy or os.path.exists(stage):
-            os.makedirs(stage, exist_ok=True)
-            for n in legacy:
-                os.replace(os.path.join(self.path, n), os.path.join(stage, n))
-            if os.path.exists(slot):
-                # unreachable from this flow (the rename is atomic and
-                # the stage only exists pre-rename) — merge defensively
-                # rather than fail a manual repair.
-                for n in os.listdir(stage):
-                    os.replace(os.path.join(stage, n), os.path.join(slot, n))
-                os.rmdir(stage)
-            else:
-                os.replace(stage, slot)
-        if os.path.isdir(slot):
-            self._write_pointer(
-                {
-                    "seq": 1,
-                    "dirs": ["cseq=00000001"],
-                    "epochs": [],
-                    "epoch_hwm": None,
-                    "tokens": [],
-                }
-            )
-        os.remove(marker)
 
     # -- pointer management (same shape as SummingParquetSink) --------------
     def _pointer(self) -> dict:
@@ -357,11 +300,6 @@ class LedgeredFactSink(FactSink):
         ``_write_pointer`` (recording the bytes in ``dir_bytes`` so
         compaction tiering never re-stats committed slots). Callers
         hold the writer lock."""
-        if "cseq" in df.columns:
-            raise ValueError(
-                "LedgeredFactSink reserves the column name 'cseq' for "
-                "its commit-slot partition directories"
-            )
         stage, nbytes = self._stage(df)
         if stage is None:
             return None, 0
@@ -415,9 +353,10 @@ class LedgeredFactSink(FactSink):
 
     def _slot_bytes(self, meta: dict, name: str) -> int:
         """Size of a committed slot: the pointer's publish-time record,
-        falling back to one walk for slots that predate the cache
-        (legacy pointers, adopted layouts). Committed slots are
-        immutable, so the cached value never goes stale."""
+        falling back to one walk for slots committed by writers that
+        predate the cache (r10 and r11 pointers have no ``dir_bytes``).
+        Committed slots are immutable, so the cached value never goes
+        stale."""
         b = meta["dir_bytes"].get(name)
         if b is not None:
             return b

@@ -48,9 +48,9 @@ the driver: per touched bucket, read the current files with pyarrow,
 concatenate the delta, ``group_by(keys).aggregate(...)`` and stage one
 file — no Spark job at all. Staging, the pointer swap and the
 exactly-once ledger are the same code as the Spark fold. A fold whose
-touched buckets hold more than ``_DRIVER_FOLD_MAX_BYTES`` on disk (or
-a sink with a non-sum fold) hands the delta to Spark instead,
-so driver memory stays bounded while state grows.
+touched buckets hold more than ``_DRIVER_FOLD_MAX_BYTES`` on disk hands
+the delta to Spark instead, so driver memory stays bounded while state
+grows.
 
 At 100 TB the same interface backs Delta MERGE or a real ClickHouse
 SummingMergeTree where the fold is native (sinks/clickhouse.py).
@@ -78,21 +78,6 @@ BUCKET_COL = "_sps_bucket"
 _DRIVER_FOLD_MAX_BYTES = 128 << 20
 
 
-# Per-measure fold functions. "sum" is SummingMergeTree; the rest make
-# this sink the AggregatingMergeTree analog: any fold that is
-# commutative, associative, and idempotent-mergeable keeps the
-# (state ∪ delta) ⊕ keys contract exact. "hll_union" folds Spark's
-# native DataSketches HLL binary sketches — registers are identical
-# whether built whole or merged from partials, so streaming
-# count-distinct state stays exactly consistent with a batch sketch.
-_FOLDS = {
-    "sum": F.sum,
-    "max": F.max,
-    "min": F.min,
-    "hll_union": lambda c: F.hll_union_agg(c, F.lit(False)),
-}
-
-
 def bucket_id(cols: list[Column], n_buckets: int) -> Column:
     """A key's bucket: ``pmod(xxhash64(keys), n)``. xxhash64 treats NULL
     keys deterministically; pmod keeps the id in [0, n). Every path that
@@ -108,26 +93,12 @@ class SummingParquetSink:
         keys: list[str],
         measures: list[str],
         n_buckets: int = 8,
-        folds: dict[str, str] | None = None,
     ):
-        """``folds``: optional measure→fold-name map ({"sum", "max",
-        "min", "hll_union"}); unlisted measures fold with "sum" — the
-        default SummingMergeTree behavior, so existing sinks are
-        unchanged."""
         self.path = path
         self.keys = keys
         self.measures = measures
         self.n_buckets = n_buckets
-        self.folds = dict(folds or {})
-        for m, f in self.folds.items():
-            if f not in _FOLDS:
-                raise ValueError(f"unknown fold {f!r} for measure {m!r}")
         os.makedirs(path, exist_ok=True)
-
-    def _fold_exprs(self):
-        return [
-            _FOLDS[self.folds.get(m, "sum")](m).alias(m) for m in self.measures
-        ]
 
     # -- pointer management -------------------------------------------------
     def _pointer(self) -> dict:
@@ -367,7 +338,9 @@ class SummingParquetSink:
             spark = tagged.sparkSession
             current = self._with_bucket(spark.read.parquet(*current_paths))
             tagged = current.unionByName(tagged)
-        merged = tagged.groupBy(BUCKET_COL, *self.keys).agg(*self._fold_exprs())
+        merged = tagged.groupBy(BUCKET_COL, *self.keys).agg(
+            *(F.sum(m).alias(m) for m in self.measures)
+        )
         self._install(merged, touched, meta, epoch_id, token=token)
 
     def _fold_arrow(
@@ -391,8 +364,7 @@ class SummingParquetSink:
             if str(b) in meta["buckets"]
         }
         state_bytes = sum(os.path.getsize(f) for fs in files.values() for f in fs)
-        sums_only = all(f == "sum" for f in self.folds.values())
-        if state_bytes > _DRIVER_FOLD_MAX_BYTES or not sums_only:
+        if state_bytes > _DRIVER_FOLD_MAX_BYTES:
             tagged = SparkSession.active().createDataFrame(delta)
             self._fold_spark(tagged, touched, meta, epoch_id, token)
             return

@@ -99,7 +99,7 @@ class QuerylogPipeline:
 
     def __init__(self, spark: SparkSession, source_dir: str, out_dir: str,
                  checkpoint_dir: str | None = None, clickhouse=None,
-                 custom_aggregates=None, fact_sink_factory=None):
+                 custom_aggregates=None):
         self.spark = spark
         # Micro-batches are small relative to the static shuffle-partition
         # count; AQE coalescing (on by default since Spark 3.2, explicit
@@ -119,25 +119,13 @@ class QuerylogPipeline:
         # a ledger — the MergeTree ORDER BY analog lives in the sink's
         # layout (date partitions prune time-range scans, in-file
         # date_time ordering gives parquet min/max row-group skipping,
-        # README.md:21).
-        #
-        # fact_sink_factory (r12, VERDICT r11 #5 — the cluster-storage
-        # seam): ``factory(path, partition_by=[...], sort_within=[...])
-        # -> FactSink``. The default is the local ledgered sink; on a
-        # cluster pass a factory building a Delta/Iceberg-backed sink
-        # honoring the same contract (sinks/contract.py documents the
-        # semantics and the Delta mapping; tests/test_fact_sink_contract
-        # is the suite any backend must pass). Both the fact table and
-        # the dead-letter channel come from the same factory — the
-        # exactly-once machinery makes no distinction.
-        factory = fact_sink_factory or (
-            lambda path, **kw: LedgeredFactSink(path, **kw)
-        )
-        self.log2_sink = factory(
+        # README.md:21). The dead-letter channel is ledgered the same
+        # way.
+        self.log2_sink = LedgeredFactSink(
             self.log2_path, partition_by=["date"], sort_within=["date_time"]
         )
         self.dead_letter_path = os.path.join(out_dir, "dead_letter")
-        self.dead_sink = factory(self.dead_letter_path)
+        self.dead_sink = LedgeredFactSink(self.dead_letter_path)
         # Aggregate spec: the reference-parity eight by default, plus
         # any bring-your-own MVs — ``custom_aggregates`` is
         # {name: (fn, keys, measures)}, exactly what
@@ -433,9 +421,8 @@ class QuerylogPipeline:
                 sent = self.clickhouse.insert_batch(
                     good, "log2", dedup_token=f"log2_epoch_{epoch_id}"
                 )
-                if sent is not None:  # ClickHouseWriter reports nothing
-                    timings["clickhouse_posts"] = sent["posts"]
-                    timings["clickhouse_bytes"] = sent["bytes"]
+                timings["clickhouse_posts"] = sent["posts"]
+                timings["clickhouse_bytes"] = sent["bytes"]
 
             # Delivery contract (r10, closing VERDICT r9 ask #1): every
             # consumer of this epoch is now idempotent — the summing

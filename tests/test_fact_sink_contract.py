@@ -1,18 +1,8 @@
-"""The executable fact-sink contract (VERDICT r11 #5).
+"""The executable contract of ``LedgeredFactSink``, the fact and
+dead-letter sink behind ``QuerylogPipeline``.
 
-Every backend behind ``QuerylogPipeline``'s ``fact_sink_factory`` must
-pass this suite. It runs against:
-
-- ``LedgeredFactSink`` — the local staged-commit implementation the
-  pipeline defaults to;
-- ``InMemoryFactSink`` (below) — an independent minimal
-  implementation sharing NO code with the ledgered one, proving the
-  contract is implementation-independent (the "mock-backed" leg);
-- ``DeltaFactSink`` — only when ``delta-spark`` is importable (not in
-  this sandbox); the gated live leg for the cluster backend.
-
-The assertions ARE the semantics documented in
-``adguard2clickhouse_spark/sinks/contract.py``: exactly-once epoch
+The assertions ARE the ledger semantics documented in
+``adguard2clickhouse_spark/sinks/facts.py``: exactly-once epoch
 retries, bounded token idempotency, ledger-surviving replace, swap-
 only generation bumps, content-preserving compaction, and the stream-
 identity scoping rules.
@@ -20,231 +10,19 @@ identity scoping rules.
 
 from __future__ import annotations
 
-import importlib.util
-
 import pytest
-from pyspark.sql import functions as F
 
-from adguard2clickhouse_spark.sinks.contract import FactSink
 from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink
 
 
-class InMemoryFactSink(FactSink):
-    """Minimal conforming implementation: rows + ledgers in driver
-    memory, visibility by list mutation. Shares no machinery with
-    LedgeredFactSink on purpose — if both pass the suite, the contract
-    (not an implementation detail) is what the pipeline relies on."""
-
-    _MAX_TRACKED = 1000
-
-    def __init__(self, path=None, partition_by=None, sort_within=None,
-                 stream_id=None):
-        self.stream_id = stream_id
-        self._recorded_stream = None
-        self._slots: list[list] = []  # each slot: list of Rows
-        self._schemas: list = []  # schema per slot (evolution)
-        self._epochs: list[int] = []
-        self._hwm: int | None = None
-        self._tokens: list[str] = []
-        self._generation = 0
-
-    # -- identity scoping (same rules as the ledgered sink) ---------------
-    def _scope(self) -> None:
-        if self.stream_id is None:
-            return
-        if self._recorded_stream is None:
-            self._recorded_stream = self.stream_id  # grandfather
-        elif self._recorded_stream != self.stream_id:
-            self._recorded_stream = self.stream_id
-            self._epochs, self._hwm = [], None  # void: ids restarted
-
-    def append(self, df, epoch_id=None, token=None) -> bool:
-        self._scope()
-        if epoch_id is not None and (
-            epoch_id in self._epochs
-            or (self._hwm is not None and epoch_id <= self._hwm)
-        ):
-            return False
-        if token is not None and token in self._tokens:
-            return False
-        rows = df.collect()
-        if rows:
-            self._slots.append(rows)
-            self._schemas.append(df.schema)
-        if epoch_id is not None:
-            self._epochs = (self._epochs + [epoch_id])[-self._MAX_TRACKED:]
-            self._hwm = epoch_id if self._hwm is None else max(self._hwm, epoch_id)
-        if token is not None:
-            self._tokens = (self._tokens + [token])[-self._MAX_TRACKED:]
-        return True
-
-    def applied(self, epoch_id) -> bool:
-        self._scope()
-        return epoch_id in self._epochs or (
-            self._hwm is not None and epoch_id <= self._hwm
-        )
-
-    def applied_token(self, token) -> bool:
-        return token in self._tokens
-
-    def read(self, spark, merge_schema: bool = False):
-        if not self._slots:
-            return None
-        dfs = [
-            spark.createDataFrame(rows, schema)
-            for rows, schema in zip(self._slots, self._schemas)
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=merge_schema)
-        return out
-
-    def has_data(self) -> bool:
-        return bool(self._slots)
-
-    def replace(self, df, bump_generation: bool = False) -> None:
-        rows = df.collect()
-        self._slots = [rows] if rows else []
-        self._schemas = [df.schema] if rows else []
-        if bump_generation:
-            self._generation += 1
-
-    def generation(self) -> int:
-        return self._generation
-
-    def compact(self, spark, small_bytes=None, max_fold_slots=None) -> int:
-        if max_fold_slots is not None and max_fold_slots < 2:
-            raise ValueError("max_fold_slots must be >= 2")
-        n = len(self._slots)
-        k = n if max_fold_slots is None else min(max_fold_slots, n)
-        if k <= 1 or n <= 1:
-            return 0
-        merged = [r for rows in self._slots[:k] for r in rows]
-        self._slots = [merged] + self._slots[k:]
-        self._schemas = [self._schemas[0]] + self._schemas[k:]
-        return k
-
-
-class FakeDeltaCommitLayer:
-    """Faithful in-memory emulation of ``DeltaCommitLayer``'s five-call
-    surface, honoring the semantics its docstring documents (they are
-    Delta's own):
-
-    - atomic versioned commits (either the commit record AND the data
-      change land, or neither — the crash hook raises after the data
-      "files" are produced but before the commit is recorded, which a
-      reader must never observe);
-    - ``txnAppId``/``txnVersion`` idempotent-writes guard: a version
-      ≤ the highest recorded for that app id no-ops the ENTIRE commit
-      (userMetadata included);
-    - history newest-first with ``None`` for commits carrying no
-      userMetadata (foreign writers, OPTIMIZE);
-    - ``optimize_compact`` merges file groups without changing content
-      and records a userMetadata-less (foreign-looking) commit.
-
-    This is what lets DeltaFactSink's ledger scoping, txn idempotence
-    and generation-bump logic EXECUTE in a sandbox without delta-spark
-    (VERDICT r12 #2); the real layer stays delta-spark verbatim.
-    """
-
-    def __init__(self):
-        self.tables: dict = {}
-        self.crash_next_commit = False
-
-    def _t(self, path):
-        return self.tables.setdefault(
-            path, {"commits": [], "data": [], "txn": {}}
-        )
-
-    def is_table(self, spark, path) -> bool:
-        return path in self.tables
-
-    def history_user_metadata(self, spark, path) -> list:
-        return [
-            c["userMetadata"] for c in reversed(self.tables[path]["commits"])
-        ]
-
-    def write(self, df, path, *, mode, user_metadata, partition_by,
-              sort_within, txn_app_id=None, txn_version=None,
-              overwrite_schema=False):
-        t = self._t(path)
-        # Ordering mirrors real Delta (ADVICE r13): data files are
-        # written FIRST, the txn idempotency guard no-ops at COMMIT
-        # time — and the crash hook fires between them, so a crash
-        # injected on what turns out to be an idempotent no-op write
-        # still consumes the hook (it no longer stays armed for the
-        # wrong later call), keeping crash-injection tests composable
-        # with idempotent retries.
-        rows = df.collect()  # "data files written to storage"
-        if self.crash_next_commit:
-            self.crash_next_commit = False
-            raise RuntimeError(
-                "injected crash: data staged, commit never recorded"
-            )
-        if txn_app_id is not None:
-            last = t["txn"].get(txn_app_id)
-            if last is not None and txn_version <= last:
-                return  # Delta idempotent writes: whole commit no-ops
-        # -- the atomic commit: all bookkeeping lands together --------
-        if mode == "overwrite":
-            t["data"] = [(rows, df.schema)] if rows else []
-        elif rows:
-            t["data"].append((rows, df.schema))
-        t["commits"].append({"userMetadata": user_metadata, "mode": mode})
-        if txn_app_id is not None:
-            t["txn"][txn_app_id] = max(
-                txn_version, t["txn"].get(txn_app_id, txn_version)
-            )
-
-    def read(self, spark, path):
-        t = self.tables[path]
-        if not t["data"]:
-            return spark.createDataFrame([], "___empty STRING")
-        dfs = [
-            spark.createDataFrame(rows, schema) for rows, schema in t["data"]
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
-
-    def optimize_compact(self, spark, path) -> int:
-        t = self.tables[path]
-        n = len(t["data"])
-        if n <= 1:
-            return 0
-        merged = [r for rows, _ in t["data"] for r in rows]
-        t["data"] = [(merged, t["data"][0][1])]
-        # OPTIMIZE commits carry no userMetadata (a foreign-looking
-        # commit the ledger reader must skip over)
-        t["commits"].append({"userMetadata": None, "mode": "optimize"})
-        return n
-
-
-_PARAMS = ["ledgered", "memory", "delta_mock"]
-if importlib.util.find_spec("delta"):  # gated live leg (not in sandbox)
-    _PARAMS.append("delta")
-
-
-@pytest.fixture(params=_PARAMS)
-def make_sink(request, tmp_path):
+# One param, so every test keeps its ``[ledgered]`` id.
+@pytest.fixture(params=["ledgered"])
+def make_sink(tmp_path):
     counter = {"n": 0}
-    fake_layer = FakeDeltaCommitLayer()  # shared: one "storage" per test
 
     def _make(**kw):
         counter["n"] += 1
-        path = str(tmp_path / f"t{counter['n']}")
-        if request.param == "ledgered":
-            return LedgeredFactSink(path, **kw)
-        if request.param == "delta":
-            from adguard2clickhouse_spark.sinks.delta import DeltaFactSink
-
-            return DeltaFactSink(path, **kw)
-        if request.param == "delta_mock":
-            from adguard2clickhouse_spark.sinks.delta import DeltaFactSink
-
-            return DeltaFactSink(path, commit_layer=fake_layer, **kw)
-        return InMemoryFactSink(path, **kw)
+        return LedgeredFactSink(str(tmp_path / f"t{counter['n']}"), **kw)
 
     return _make
 
@@ -355,135 +133,6 @@ def test_contract_stream_identity_scoping(make_sink, spark):
     sink2.stream_id = "q-one"
     assert sink2.applied(5)
     assert sink2.append(_df(spark, [1]), epoch_id=5) is False
-
-
-def test_pipeline_accepts_sink_factory(tmp_path, spark):
-    """The seam itself: QuerylogPipeline builds BOTH ledgered channels
-    through the injected factory."""
-    from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
-
-    built = []
-
-    def factory(path, **kw):
-        s = InMemoryFactSink(path, **kw)
-        built.append(path)
-        return s
-
-    src = tmp_path / "src"
-    src.mkdir()
-    pipe = QuerylogPipeline(
-        spark, str(src), str(tmp_path / "out"), fact_sink_factory=factory
-    )
-    assert isinstance(pipe.log2_sink, InMemoryFactSink)
-    assert isinstance(pipe.dead_sink, InMemoryFactSink)
-    assert len(built) == 2 and built[0].endswith("log2")
-    # the default stays the ledgered local sink
-    pipe2 = QuerylogPipeline(spark, str(src), str(tmp_path / "out2"))
-    assert isinstance(pipe2.log2_sink, LedgeredFactSink)
-
-
-def _mock_delta_sink(tmp_path, **kw):
-    from adguard2clickhouse_spark.sinks.delta import DeltaFactSink
-
-    layer = kw.pop("layer", None) or FakeDeltaCommitLayer()
-    return DeltaFactSink(str(tmp_path / "t"), commit_layer=layer, **kw), layer
-
-
-def test_delta_crash_between_data_and_commit_is_exactly_once(tmp_path, spark):
-    """Crash injection on the Delta leg: the commit layer dies AFTER
-    the data files are staged but BEFORE the commit record lands.
-    Delta's atomicity means a reader never sees the orphan files and
-    the ledger (it rides the commit) never records the epoch — so the
-    retry must both succeed and produce the rows exactly once."""
-    sink, layer = _mock_delta_sink(tmp_path)
-    assert sink.append(_df(spark, [1]), epoch_id=0) is True
-    layer.crash_next_commit = True
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sink.append(_df(spark, [2]), epoch_id=1)
-    assert not sink.applied(1)  # the epoch was never recorded
-    assert _ids(sink.read(spark)) == [1]  # orphan data invisible
-    assert sink.append(_df(spark, [2]), epoch_id=1) is True  # retry
-    assert _ids(sink.read(spark)) == [1, 2]
-    assert sink.applied(1)
-
-
-def test_delta_txn_guard_covers_concurrent_writer(tmp_path, spark):
-    """Two writers with the same stream identity race the same epoch:
-    writer B commits epoch 1 after writer A read its (now stale)
-    ledger. A's driver-side read-modify-write cannot see B's commit —
-    exactly the hole Delta's txnAppId/txnVersion idempotent-writes
-    guard exists for: A's entire commit must no-op, leaving the rows
-    exactly once."""
-    layer = FakeDeltaCommitLayer()
-    a, _ = _mock_delta_sink(tmp_path, stream_id="q-one", layer=layer)
-    b, _ = _mock_delta_sink(tmp_path, stream_id="q-one", layer=layer)
-    assert a.append(_df(spark, [1]), epoch_id=0) is True
-    # B wins the race for epoch 1 (A has already read hwm=0)
-    assert b.append(_df(spark, [2]), epoch_id=1) is True
-    # Simulate A's stale attempt by bypassing its fresh ledger read:
-    # call the layer exactly as A's append would have after its stale
-    # read (epochs=[0,1], data row 2 again, txnVersion=1).
-    import json as _json
-
-    stale_ledger = {
-        "adguard2clickhouse_spark_ledger_v1": {
-            "epochs": [0, 1], "epoch_hwm": 1, "tokens": [],
-            "generation": 0, "stream_id": "q-one",
-        }
-    }
-    layer.write(
-        _df(spark, [2]), a.path, mode="append",
-        user_metadata=_json.dumps(stale_ledger), partition_by=[],
-        sort_within=[], txn_app_id="q-one", txn_version=1,
-    )
-    assert _ids(a.read(spark)) == [1, 2]  # NOT [1, 2, 2]
-    assert a.applied(1)
-    # and the sink-level retry path agrees (fresh ledger read)
-    assert a.append(_df(spark, [2]), epoch_id=1) is False
-
-
-def test_delta_foreign_commits_do_not_disturb_ledger(tmp_path, spark):
-    """OPTIMIZE (or any foreign tool) interleaves commits that carry
-    no userMetadata; the ledger reader must skip them and keep the
-    most recent commit that carries one."""
-    sink, layer = _mock_delta_sink(tmp_path)
-    sink.append(_df(spark, [1]), epoch_id=0, token="t0")
-    sink.append(_df(spark, [2]), epoch_id=1)
-    assert layer.optimize_compact(spark, sink.path) == 2  # foreign commit
-    assert sink.applied(0) and sink.applied(1)
-    assert sink.applied_token("t0")
-    assert sink.append(_df(spark, [9]), epoch_id=1) is False
-    assert _ids(sink.read(spark)) == [1, 2]
-    # ledger-carrying commits resume cleanly after the foreign one
-    assert sink.append(_df(spark, [3]), epoch_id=2) is True
-    assert sink.applied(2)
-
-
-def test_delta_generation_survives_foreign_and_crash(tmp_path, spark):
-    """Generation bumps ride the overwrite commit atomically: a crash
-    during the swap leaves BOTH the old content and the old generation
-    (never a half-applied bump)."""
-    sink, layer = _mock_delta_sink(tmp_path)
-    sink.append(_df(spark, [1, 2]), epoch_id=0)
-    layer.crash_next_commit = True
-    with pytest.raises(RuntimeError):
-        sink.replace(_df(spark, [5]), bump_generation=True)
-    assert sink.generation() == 0
-    assert _ids(sink.read(spark)) == [1, 2]
-    sink.replace(_df(spark, [5]), bump_generation=True)
-    assert sink.generation() == 1
-    assert _ids(sink.read(spark)) == [5]
-
-
-def test_delta_default_layer_hard_errors_without_package(tmp_path):
-    """Without an injected layer the sink must refuse to construct in
-    this sandbox (delta-spark absent) — never fake the real backend."""
-    if importlib.util.find_spec("delta"):
-        pytest.skip("delta-spark present: the live leg runs instead")
-    from adguard2clickhouse_spark.sinks.delta import DeltaFactSink
-
-    with pytest.raises(ImportError, match="delta-spark"):
-        DeltaFactSink(str(tmp_path / "t"))
 
 
 def test_contract_merge_schema_read_spans_evolution(make_sink, spark):

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import re
 import shutil
 
 import pytest
@@ -233,25 +234,18 @@ def test_pipeline_compact_facts_keeps_reads_identical(spark, tmp_path):
     assert sorted(map(repr, pipe.read_log2().collect())) == before
 
 
-def test_legacy_flat_layout_is_adopted_once(spark, tmp_path):
-    """Pre-r10 data (flat date= layout, no ledger) must become visible
-    through the sink — moved into the first committed slot by pure
-    renames, not silently orphaned."""
+def test_legacy_flat_layout_is_refused(spark, tmp_path):
+    """Data without a ledger (the pre-r10 flat date= layout) would be
+    invisible through the sink: opening it must fail, naming the path,
+    and leave the data where it was."""
     legacy = str(tmp_path / "log2")
     df = _df(spark, [("2024-01-01", 1, "a.com"), ("2024-01-02", 2, "b.com")])
     df.write.partitionBy("date").parquet(legacy)  # the old writer's layout
-    sink = LedgeredFactSink(legacy, partition_by=["date"],
-                            sort_within=["date_time"])
-    assert sink.has_data()
-    assert sink._pointer()["dirs"] == ["cseq=00000001"]
-    out = sink.read(spark)
-    assert out.count() == 2 and set(out.columns) == {"date", "date_time", "QH"}
-    # appends continue on top of the adopted slot
-    sink.append(_df(spark, [("2024-01-03", 3, "c.com")]), epoch_id=0)
-    assert sink.read(spark).count() == 3
-    # re-opening does NOT re-adopt (pointer exists)
-    again = LedgeredFactSink(legacy, partition_by=["date"])
-    assert len(again._pointer()["dirs"]) == 2
+    before = sorted(os.listdir(legacy))
+    with pytest.raises(ValueError, match=re.escape(legacy)):
+        LedgeredFactSink(legacy, partition_by=["date"])
+    assert sorted(os.listdir(legacy)) == before
+    assert spark.read.parquet(legacy).count() == 2
 
 
 def test_crashed_first_epoch_slot_is_not_adopted(spark, tmp_path):
@@ -395,7 +389,7 @@ def test_model_based_random_ops_agree_with_reference(sink, spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r11 hardening: crash-safe adoption, enforced single-writer, remote-path
+# r11 hardening: enforced single-writer, remote-path
 # rejection, stream-identity-scoped epoch ledger
 # ---------------------------------------------------------------------------
 
@@ -405,62 +399,12 @@ def test_model_based_random_ops_agree_with_reference(sink, spark, tmp_path):
                                  "file:///tmp/facts"])
 def test_remote_paths_rejected_loudly(uri):
     """The ledger is POSIX rename/flock-bound; an object-store URI must
-    fail at construction naming the cluster backends this interface
-    maps to, not obscurely at the first os.replace."""
+    fail at construction naming the table formats that give the same
+    contract there, not obscurely at the first os.replace."""
     with pytest.raises(ValueError) as e:
         LedgeredFactSink(uri)
     msg = str(e.value)
     assert "Delta Lake" in msg and "Iceberg" in msg
-
-
-def test_adoption_crash_after_slot_rename_resumes(spark, tmp_path):
-    """The ADVICE r10 medium: a crash after the legacy entries reached
-    cseq=00000001 but before the pointer write used to leave a
-    slot-without-pointer that the next append GC'd — silent total loss
-    of the pre-ledger table. The marker makes the window resumable."""
-    path = str(tmp_path / "log2")
-    df = _df(spark, [("2024-01-01", 1, "a.com"), ("2024-01-02", 2, "b.com")])
-    df.write.partitionBy("date").parquet(path)  # legacy flat layout
-    # simulate the crash window: marker written, entries moved, slot
-    # renamed, pointer NOT yet written
-    slot = os.path.join(path, "cseq=00000001")
-    os.makedirs(slot)
-    for n in os.listdir(path):
-        if not n.startswith((".", "_", "cseq=")):
-            os.replace(os.path.join(path, n), os.path.join(slot, n))
-    with open(os.path.join(path, "_ADOPTING"), "w") as f:
-        f.write("crash window")
-    sink = LedgeredFactSink(path, partition_by=["date"])
-    assert sink.has_data()
-    assert sink._pointer()["dirs"] == ["cseq=00000001"]
-    assert not os.path.exists(os.path.join(path, "_ADOPTING"))
-    assert sink.read(spark).count() == 2
-    # the next append keeps the adopted slot (this is the exact loss
-    # scenario: _gc_orphans must see it as committed)
-    sink.append(_df(spark, [("2024-01-03", 3, "c.com")]), epoch_id=0)
-    assert sink.read(spark).count() == 3
-
-
-def test_adoption_crash_mid_move_resumes(spark, tmp_path):
-    """Crash while moving legacy entries into the stage: part of the
-    data sits in .adopting, the rest still at top level. Resume must
-    complete the move (pre-r11 this raised FileExistsError) and adopt
-    EVERYTHING exactly once."""
-    path = str(tmp_path / "log2")
-    df = _df(spark, [("2024-01-01", 1, "a.com"), ("2024-01-02", 2, "b.com")])
-    df.write.partitionBy("date").parquet(path)
-    stage = os.path.join(path, ".adopting")
-    os.makedirs(stage)
-    moved = [n for n in os.listdir(path)
-             if not n.startswith((".", "_", "cseq="))][0]
-    os.replace(os.path.join(path, moved), os.path.join(stage, moved))
-    with open(os.path.join(path, "_ADOPTING"), "w") as f:
-        f.write("crash window")
-    sink = LedgeredFactSink(path, partition_by=["date"])
-    assert sink._pointer()["dirs"] == ["cseq=00000001"]
-    assert sink.read(spark).count() == 2  # both halves adopted, no dupes
-    assert not os.path.exists(stage)
-    assert not os.path.exists(os.path.join(path, "_ADOPTING"))
 
 
 def test_concurrent_append_and_compact_lose_nothing(sink, spark):

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from adguard2clickhouse_spark.operators import multimodal
 from adguard2clickhouse_spark.sinks.clickhouse import (
-    HAVE_CLICKHOUSE,
     log2_ddl,
     spark_type_to_clickhouse,
     summing_ddl,
@@ -85,7 +84,7 @@ def test_media_stats_prunes_payload(media_parquet):
 
 
 # ---------------------------------------------------------------------------
-# ClickHouse sink DDL (network writer is import-gated in this container)
+# ClickHouse sink DDL
 # ---------------------------------------------------------------------------
 
 def test_clickhouse_type_mapping():
@@ -112,15 +111,6 @@ def test_summing_ddl(spark):
     ddl = summing_ddl("blocked_domains", df, keys=["QH"])
     assert "ENGINE = SummingMergeTree" in ddl
     assert "ORDER BY (`QH`)" in ddl
-
-
-def test_writer_gated_without_library():
-    if HAVE_CLICKHOUSE:
-        pytest.skip("clickhouse_connect present")
-    from adguard2clickhouse_spark.sinks.clickhouse import ClickHouseWriter
-
-    with pytest.raises(ImportError):
-        ClickHouseWriter("localhost", "db", "u", "p")
 
 
 def test_resize_preserves_schema_and_payload(media_df):

@@ -438,23 +438,6 @@ def test_read_log2_merges_evolved_schema(tmp_path, spark):
     assert merged.filter("transport IS NULL").count() == 3
 
 
-def test_audit_observation_piggybacks_on_write(tmp_path, spark):
-    """audit_observation's metrics come from the SAME job as the
-    consuming write — row and null counts correct with no second scan
-    of the source."""
-    from adguard2clickhouse_spark.streaming.monitor import audit_observation
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "c"), (4, None), (5, "e")],
-        "id LONG, v STRING",
-    )
-    observed, obs = audit_observation(df, ["v", "id"])
-    observed.write.parquet(str(tmp_path / "out"))
-    got = obs.get
-    assert got == {"n_rows": 5, "nulls_v": 2, "nulls_id": 0}
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 5
-
-
 # ---------------------------------------------------------------------------
 # Crash recovery e2e (round-4 ask #3): the exactly-once story through a
 # REAL restart — checkpoint + sink dirs survive, the stream resumes,
@@ -815,16 +798,13 @@ def test_delta_step_overlaps_the_fact_append(tmp_path, spark, monkeypatch):
     appending, folding = threading.Event(), threading.Event()
     seen = {}
 
-    class WaitingLog2Sink(LedgeredFactSink):
-        def append(self, df, epoch_id=None, token=None):
+    real_append = LedgeredFactSink.append
+
+    def append(self, *a, **kw):
+        if os.path.basename(self.path) == "log2":
             appending.set()
             seen["fold_during_append"] = folding.wait(timeout=30)
-            return super().append(df, epoch_id=epoch_id, token=token)
-
-    def factory(path, **kw):
-        if os.path.basename(path) == "log2":
-            return WaitingLog2Sink(path, **kw)
-        return LedgeredFactSink(path, **kw)
+        return real_append(self, *a, **kw)
 
     real_deltas = pl.fused_arrow_deltas
 
@@ -840,13 +820,13 @@ def test_delta_step_overlaps_the_fact_append(tmp_path, spark, monkeypatch):
 
     monkeypatch.setattr(pl, "fused_arrow_deltas", deltas_after_append_began)
     monkeypatch.setattr(SummingParquetSink, "apply_delta", apply_delta)
+    monkeypatch.setattr(LedgeredFactSink, "append", append)
 
     batches = _corpus()
     src = tmp_path / "src"
     src.mkdir()
     (src / "a.jsonl").write_text("\n".join(batches[0]) + "\n")
-    pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"),
-                            fact_sink_factory=factory)
+    pipe = QuerylogPipeline(spark, str(src), str(tmp_path / "out"))
     pipe.run_available()
 
     assert seen == {"append_during_delta": True, "fold_during_append": True}
@@ -863,35 +843,16 @@ def test_delta_step_overlaps_the_fact_append(tmp_path, spark, monkeypatch):
         }, name
 
 
-def test_replay_works_on_adopted_legacy_dead_letters(tmp_path, spark):
+def test_pipeline_refuses_unledgered_dead_letters(tmp_path, spark):
     """A pre-r10 out_dir has a FLAT dead-letter parquet (no ledger).
-    Opening it with the r10 pipeline adopts the channel in place, and
-    replay recovers now-parseable lines exactly as with native slots."""
-    src, out = tmp_path / "src", tmp_path / "out"
-    src.mkdir()
-    lines = [_line(i, minute=i % 5, filtered=False,
-                   qh=f"g{i}.example.com", ip="10.4.0.1") for i in range(8)]
-    (src / "log.jsonl").write_text("\n".join(lines) + "\n")
-    pipe = QuerylogPipeline(spark, str(src), str(out))
-    pipe.run_available()
-
-    # simulate the pre-r10 writer: flat parquet at the dead path
-    import shutil
-    shutil.rmtree(str(out / "dead_letter"))
-    recoverable = [_line(i, minute=1, filtered=False,
-                         qh="fixed.example.com", ip="10.4.0.2")
-                   for i in range(100, 103)]
-    spark.createDataFrame(
-        [(l,) for l in recoverable + ["still broken"]], ["raw_line"]
-    ).write.parquet(str(out / "dead_letter"))
-
-    pipe2 = QuerylogPipeline(spark, str(src), str(out))  # adopts on open
-    assert pipe2.dead_sink.has_data()
-    stats = pipe2.replay_dead_letters()
-    assert stats == {"replayed": 3, "still_dead": 1}
-    assert pipe2.read_log2().count() == 11
-    # idempotent on the adopted channel too
-    assert pipe2.replay_dead_letters() == {"replayed": 0, "still_dead": 1}
+    The pipeline must refuse to open it, naming the channel's path,
+    rather than start over it with those lines out of replay's reach."""
+    out = tmp_path / "out"
+    spark.createDataFrame([("still broken",)], ["raw_line"]).write.parquet(
+        str(out / "dead_letter")
+    )
+    with pytest.raises(ValueError, match="dead_letter"):
+        QuerylogPipeline(spark, str(tmp_path / "src"), str(out))
 
 
 # ---------------------------------------------------------------------------

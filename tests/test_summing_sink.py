@@ -165,72 +165,10 @@ def test_null_keys_fold(tmp_path, spark):
     assert rows[None] == 13 and rows["x"] == 3
 
 
-def test_aggregating_folds_max_and_hll(tmp_path, spark):
-    """The AggregatingMergeTree analog: per-measure fold spec. max
-    keeps the slowest-query watermark exact across deltas; hll_union
-    merges DataSketches HLL binary sketches so streaming
-    count-distinct state equals a batch sketch of the union
-    (registers merge exactly)."""
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.sinks.summing import SummingParquetSink
-
-    sink = SummingParquetSink(
-        str(tmp_path / "t"), keys=["Upstream"],
-        measures=["n", "max_elapsed", "ip_sketch"],
-        folds={"max_elapsed": "max", "ip_sketch": "hll_union"},
-    )
-
-    def delta(rows):
-        df = spark.createDataFrame(rows, ["Upstream", "IP", "Elapsed"])
-        return df.groupBy("Upstream").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("Elapsed").alias("max_elapsed"),
-            F.hll_sketch_agg("IP").alias("ip_sketch"),
-        )
-
-    batch1 = [("up0", f"10.0.0.{i}", 100 + i) for i in range(20)]
-    batch2 = [("up0", f"10.0.0.{i}", 500 - i) for i in range(10, 40)] + [
-        ("up1", "10.9.9.9", 7)
-    ]
-    sink.apply_delta(delta(batch1), epoch_id=0)
-    sink.apply_delta(delta(batch2), epoch_id=1)
-
-    got = {
-        r.Upstream: r
-        for r in sink.read(spark)
-        .select(
-            "Upstream", "n", "max_elapsed",
-            F.hll_sketch_estimate("ip_sketch").cast("long").alias("uniq"),
-        )
-        .collect()
-    }
-    assert got["up0"].n == 50
-    assert got["up0"].max_elapsed == 490  # max across both deltas
-    # distinct IPs in the union: 10.0.0.0..39 -> 40
-    batch_est = (
-        spark.createDataFrame(batch1 + batch2[:-1], ["Upstream", "IP", "Elapsed"])
-        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("IP")).cast("long"))
-        .collect()[0][0]
-    )
-    assert got["up0"].uniq == batch_est  # merged state == batch sketch
-    assert got["up1"].n == 1 and got["up1"].uniq == 1
-    # epoch retry stays a no-op under non-sum folds
-    before = {tuple(r) for r in sink.read(spark).drop("ip_sketch").collect()}
-    sink.apply_delta(delta(batch2), epoch_id=1)
-    after = {tuple(r) for r in sink.read(spark).drop("ip_sketch").collect()}
-    assert before == after
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown fold"):
-        SummingParquetSink(str(tmp_path / "bad"), ["k"], ["m"], folds={"m": "avg"})
-
-
-def test_streaming_pipeline_with_hll_sink(tmp_path, spark):
-    """End to end: a custom 'unique clients per domain' aggregate with
-    HLL state rides the pipeline's fan-out; after two micro-batch
-    rounds the sink's estimates equal a one-shot batch sketch."""
+def test_streaming_pipeline_with_custom_sum_sink(tmp_path, spark):
+    """End to end: a custom 'elapsed per client and domain' aggregate
+    with a summed measure rides the pipeline's fan-out; after two
+    micro-batch rounds the sink equals a one-shot batch answer."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -245,20 +183,19 @@ def test_streaming_pipeline_with_hll_sink(tmp_path, spark):
             "T": f"2024-01-01T00:00:{i % 60:02d}+00:00",
             "QH": f"d{i % 3}.example.com", "QT": "A", "QC": "IN", "CP": "",
             "Upstream": "u", "IP": f"10.5.0.{i % 7}",
-            "Result": {}, "Elapsed": 1, "Cached": False,
+            "Result": {}, "Elapsed": i, "Cached": False,
             "Answer": build_answer_b64(a=["1.2.3.4"]),
         })
 
-    def domain_uniques(log2):
-        return log2.groupBy("QH").agg(F.hll_sketch_agg("IP").alias("ip_sketch"))
+    def client_elapsed(log2):
+        return log2.groupBy("QH", "IP").agg(F.sum("Elapsed").alias("elapsed"))
 
     src, out = tmp_path / "src", tmp_path / "out"
     src.mkdir()
     pipe = QuerylogPipeline(spark, str(src), str(out))
-    pipe.aggregates["domain_uniques"] = domain_uniques
-    pipe.sinks["domain_uniques"] = SummingParquetSink(
-        str(out / "domain_uniques"), keys=["QH"], measures=["ip_sketch"],
-        folds={"ip_sketch": "hll_union"},
+    pipe.aggregates["client_elapsed"] = client_elapsed
+    pipe.sinks["client_elapsed"] = SummingParquetSink(
+        str(out / "client_elapsed"), keys=["QH", "IP"], measures=["elapsed"],
     )
     batches = [[line(i) for i in range(25)], [line(i) for i in range(25, 60)]]
     for i, lines in enumerate(batches):
@@ -269,21 +206,12 @@ def test_streaming_pipeline_with_hll_sink(tmp_path, spark):
     assert [bt["delta_path"] for bt in pipe.batch_timings
             if "delta_path" in bt] == ["driver", "driver"]
 
-    got = {
-        r.QH: r.uniq
-        for r in pipe.read_aggregate("domain_uniques")
-        .select("QH", F.hll_sketch_estimate("ip_sketch").cast("long").alias("uniq"))
-        .collect()
-    }
+    got = {tuple(r) for r in pipe.read_aggregate("client_elapsed")
+           .select("QH", "IP", "elapsed").collect()}
     raw = spark.createDataFrame([(l,) for b in batches for l in b], ["value"])
     good, _ = parse_querylog(raw)
-    want = {
-        r.QH: r.uniq
-        for r in good.groupBy("QH")
-        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("IP")).cast("long").alias("uniq"))
-        .collect()
-    }
-    assert got == want
+    want = {tuple(r) for r in client_elapsed(good).collect()}
+    assert len(want) == 21 and got == want
 
 
 def test_hot_key_epoch_leaves_untouched_buckets_byte_identical(tmp_path, spark):
