@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import sys
 
 from adguard2clickhouse_spark.session import get_spark
 from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
@@ -103,12 +104,6 @@ def run(argv: list[str] | None = None) -> None:
         pipe.rebuild_aggregates()
         return
 
-    recorder = None
-    if args.report_progress:
-        from adguard2clickhouse_spark.streaming.monitor import ProgressRecorder
-
-        recorder = ProgressRecorder()
-        spark.streams.addListener(recorder)
     try:
         if args.once:
             pipe.run_available(dedupe_horizon=args.dedupe_horizon)
@@ -118,19 +113,12 @@ def run(argv: list[str] | None = None) -> None:
             )
             query.awaitTermination()  # pragma: no cover
     finally:
-        if recorder is not None:
-            import sys
-            import time
-
-            deadline = time.time() + 10  # progress events arrive async
-            while not recorder.n_batches and time.time() < deadline:
-                time.sleep(0.2)
+        if args.report_progress:
             print(
-                f"progress: {recorder.n_input_rows} rows in "
-                f"{recorder.n_batches} micro-batches",
+                f"progress: {pipe.n_lines} rows in "
+                f"{pipe.n_epochs} micro-batches",
                 file=sys.stderr,
             )
-            spark.streams.removeListener(recorder)
 
 
 if __name__ == "__main__":  # pragma: no cover

@@ -1,4 +1,4 @@
-"""ClickHouse map-aggregate analogs: ``sumMap`` / ``minMap`` / ``maxMap``.
+"""ClickHouse map-aggregate analog: ``sumMap``.
 
 ClickHouse's Map combinators are the workhorse of its MV rollups when a
 dimension is open-ended (per-key counters packed into paired arrays,
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_AGGS = {"sum": F.sum, "min": F.min, "max": F.max}
+_AGGS = {"sum": F.sum}
 
 
 def _map_agg(
@@ -77,22 +77,3 @@ def sum_map(
     be equal-length array columns."""
     return _map_agg(df, keys_col, vals_col, by or [], "sum")
 
-
-def min_map(
-    df: DataFrame,
-    keys_col: str = "keys",
-    vals_col: str = "vals",
-    by: list[str] | None = None,
-) -> DataFrame:
-    """``minMap`` — as :func:`sum_map` with an element-wise min fold."""
-    return _map_agg(df, keys_col, vals_col, by or [], "min")
-
-
-def max_map(
-    df: DataFrame,
-    keys_col: str = "keys",
-    vals_col: str = "vals",
-    by: list[str] | None = None,
-) -> DataFrame:
-    """``maxMap`` — as :func:`sum_map` with an element-wise max fold."""
-    return _map_agg(df, keys_col, vals_col, by or [], "max")

@@ -369,18 +369,6 @@ def incremental_dedup(
     ).drop("_fp")
 
 
-def duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Fingerprint groups with more than one member (audit view)."""
-    return (
-        df.select(fingerprint(text_col).alias("fingerprint"), F.col(id_col))
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("min_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # X2a — word-shingle helpers + exact n-gram Jaccard similarity join
 # ---------------------------------------------------------------------------

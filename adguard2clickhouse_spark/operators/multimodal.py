@@ -208,42 +208,6 @@ def extract_features(media: DataFrame, stub: bool = True) -> DataFrame:
     return media.mapInPandas(run, FEATURES_SCHEMA)
 
 
-def resize_media(media: DataFrame, width: int, height: int, stub: bool = True) -> DataFrame:
-    """Resize pass: same MEDIA_SCHEMA out, target dimensions in meta.
-
-    The Spark-side contract is the point (payload stays inside the
-    Arrow batch, schema preserved so passes compose). The stub passes
-    payload bytes through untouched and rewrites meta, which is enough
-    to test partitioning, batch shapes, and downstream feature
-    extraction end-to-end. ``stub=False`` performs a REAL
-    decode→resample→re-encode (PNG out) when Pillow is importable on
-    the executors, and raises otherwise — never fake pixels.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas, payloads = [], []
-            for payload, meta in zip(pdf["payload"], pdf["meta"]):
-                data = bytes(payload) if payload is not None else b""
-                if not stub:
-                    pixels = decode_media(data, meta["kind"], meta["format"])
-                    import io
-
-                    im = _PILImage.fromarray(pixels).resize((width, height))
-                    buf = io.BytesIO()
-                    im.save(buf, format="PNG")
-                    data = buf.getvalue()
-                    meta = {**meta, "format": "png"}
-                payloads.append(data)
-                metas.append({**meta, "width": width, "height": height})
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["meta"] = metas
-            yield out
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video → (media_id, frame_ts_ms) sampling plan, computed purely
     from metadata (no payload touch, no Python): the cheap pre-pass
@@ -324,15 +288,6 @@ def media_fixture_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
 
     return ids.select(id_col).mapInPandas(run, MEDIA_SCHEMA)
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only profile (never touches payload bytes — column
-    pruning keeps the binary column out of the scan)."""
-    return media.groupBy(F.col("meta.kind").alias("kind")).agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.coalesce(F.col("meta.duration_ms"), F.lit(0))).alias("total_duration_ms"),
-    )
 
 
 PNG_STATS_SCHEMA = T.StructType(

@@ -83,18 +83,6 @@ def pack_greedy(
     )
 
 
-def packing_efficiency(packed: DataFrame, max_tokens: int) -> DataFrame:
-    """Per-stratum packing report: bins used, mean fill permille vs the
-    token-budget optimum (sum(tokens)/max rounded up)."""
-    per_bin = packed.groupBy("lang", "bin").agg(F.max("fill").alias("_fill"))
-    return per_bin.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-        F.floor(F.sum("_fill") * 1000 / (F.count(F.lit(1)) * max_tokens)).alias(
-            "fill_permille"
-        ),
-    )
-
-
 def pack_oracle_sql(
     max_tokens: int,
     docs_sql: str,

@@ -15,7 +15,6 @@ phone number.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -146,30 +145,3 @@ def html_oracle_sql(source_expr: str, id_col: str = "doc_id") -> str:
     )
     return f"{id_col}, {cleaned} AS text_clean, {n_tags} AS n_tags"
 
-
-def normalize_unicode(
-    df: DataFrame,
-    text_col: str = "text",
-    form: str = "NFKC",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Unicode normalization for training corpora — REAL (stdlib
-    ``unicodedata``, no dependency), the standard first step before
-    dedup/tokenization: NFKC folds compatibility forms (ligatures,
-    full-width ASCII, superscripts) so visually-identical text hashes
-    identically downstream. Arrow-batched pandas_udf (pandas .str
-    normalization is vectorized C); nulls pass through.
-
-    No SQL oracle exists (DuckDB has nfc_normalize only, and only
-    NFC) → covered by pytest with known normalization pairs instead.
-    """
-    from pyspark.sql import types as T
-
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form {form!r}")
-
-    @F.pandas_udf(T.StringType())
-    def _norm(s: pd.Series) -> pd.Series:
-        return s.str.normalize(form)
-
-    return df.withColumn(out_col or text_col, _norm(F.col(text_col)))

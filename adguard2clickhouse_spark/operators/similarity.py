@@ -48,25 +48,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def normalize_embeddings(
-    df: DataFrame, vec_col: str = "embedding", out_col: str | None = None
-) -> DataFrame:
-    """L2-normalize an embedding column: v / ‖v‖ (double precision);
-    zero vectors pass through unchanged. Normalizing once at ingest
-    turns every downstream cosine into a plain dot product — at corpus
-    scale that halves the per-pair flops and lets the dot kernel skip
-    the per-row norm entirely."""
-    out = out_col or vec_col
-    c = F.col(vec_col)
-    n = norm(c)
-    return df.withColumn(
-        out,
-        F.when(n == 0, F.transform(c, lambda x: x.cast("double"))).otherwise(
-            F.transform(c, lambda x: x.cast("double") / n)
-        ),
-    )
-
-
 def quantize_embeddings_int8(
     df: DataFrame, vec_col: str = "embedding", q_col: str = "q_embedding"
 ) -> DataFrame:
@@ -771,61 +752,16 @@ def embedding_dup_pairs_lsh_portable(
     return out
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign every vector to its nearest centroid (highest cosine).
-
-    Centroids are plan literals (they are few — the coarse quantizer),
-    so assignment is a single codegen'd scan: build an array of
-    (−sim, cell) structs and take array_min (struct ordering is
-    field-by-field, so min by −sim ≡ argmax sim; cell breaks ties
-    deterministically). No join, no shuffle.
-
-    At 100 TB the assigned table is written
-    ``partitionBy("ivf_cell")`` so a probe with nprobe cells is a
-    partition-pruned read of nprobe/n_cells of the data.
-    """
-    choices = F.array(*[
-        F.struct(
-            (-cosine(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c])))
-            .alias("negsim"),
-            F.lit(i).alias("cell"),
-        )
-        for i, c in enumerate(centroids)
-    ])
-    return df.withColumn("ivf_cell", F.array_min(choices)["cell"])
-
-
-def _ivf_init_centroids(
-    df: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[float]]:
-    """Deterministic Lloyd INITIALIZATION: the n_cells vectors with the
-    lowest ids. Private on purpose (r5, VERDICT r4 #7) — the one
-    production coarse quantizer is :func:`ivf_centroids_kmeans`; this
-    seed pick exists only to make its refinement reproducible across
-    driver re-runs."""
-    rows = df.orderBy(F.asc(id_col)).select(vec_col).limit(n_cells).collect()
-    return [list(r[0]) for r in rows]
-
-
 def ivf_assign_arrow(
     df: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Arrow-kernel twin of :func:`ivf_assign`: nearest-centroid by
-    cosine via one numpy matmul per batch. Identical assignment
-    (ties break to the lowest cell), ~10x the literal-expression
-    form once the interpreted per-centroid HOF cosines dominate —
-    used by the Lloyd loop and ivfadc_build, where assignment runs
-    every iteration. The literal-expression ivf_assign remains the
-    materialize-path scan (one-shot, no UDF in the written layout).
+    """Assign every vector to its nearest centroid (highest cosine)
+    via one numpy matmul per batch; ties break to the lowest cell.
+    ~10x a literal-expression form (an n_cells × dim literal tree of
+    interpreted HOF cosines, which also costs seconds of janino codegen
+    per plan) — used by the IVF probe and ivfadc_build.
     """
     from pyspark.sql import types as T
 
@@ -917,65 +853,10 @@ def ivf_topk(
     ]
     probe = sorted(range(len(centroids)), key=lambda i: (-sims[i], i))[:nprobe]
 
-    # Inline probe assigns via the Arrow kernel: the literal-expression
-    # ivf_assign exists for the MATERIALIZED layout (no UDF in the
-    # written files); inline, its n_cells × dim literal tree costs
-    # seconds of codegen per plan (janino) for identical assignments.
     assigned = ivf_assign_arrow(df, centroids, vec_col)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         assigned.filter(F.col("ivf_cell").isin(probe))
-        .select(F.col(id_col), cosine(F.col(vec_col), q).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def ivf_materialize(
-    df: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> None:
-    """Write the cell-assigned corpus ``partitionBy("ivf_cell")`` — the
-    100 TB index layout. Each cell becomes a parquet partition
-    directory, so a probe of nprobe cells is a partition-PRUNED scan
-    (nprobe/n_cells of the bytes), verified by plan assertion in
-    tests/test_extensions.py. Build once, probe many."""
-    (
-        ivf_assign(df, centroids, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
-    )
-
-
-def ivf_topk_materialized(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe a materialized IVF layout (see ivf_materialize): rank
-    cells driver-side (centroids are tiny), read only those partition
-    directories via a partition-column filter, brute-force cosine
-    within. Same results as ivf_topk on the same centroids, but the
-    scan skips (n_cells - nprobe)/n_cells of the corpus on disk."""
-    qn = np.asarray(query_vec, dtype=np.float64)
-    qn = qn / np.linalg.norm(qn)
-    sims = [
-        float(np.dot(qn, np.asarray(c) / np.linalg.norm(c))) for c in centroids
-    ]
-    probe = sorted(range(len(centroids)), key=lambda i: (-sims[i], i))[:nprobe]
-
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("ivf_cell").isin(probe))
         .select(F.col(id_col), cosine(F.col(vec_col), q).alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
@@ -1043,9 +924,8 @@ def lsh_bucketed_topk(
     scanning ~29% of the synthetic fixture corpus — near-worst-case
     data for sign-LSH, whose gap over random shrinks as true-neighbor
     cosines drop; real near-dup corpora sit well above. Prefer the IVF
-    probe (0.9 recall@10 at 25% scan on the same fixture, and a
-    partition-pruned on-disk layout via ivf_materialize) when you can
-    maintain centroids; this path needs no training at all.
+    probe (0.9 recall@10 at 25% scan on the same fixture) when you
+    can maintain centroids; this path needs no training at all.
 
     At corpus scale the signature columns are precomputed/persisted and
     the probe is a pruned scan; here they're computed by the vectorized
@@ -1419,9 +1299,9 @@ def ivfadc_build(
     lookup from an ``element_at`` over centroid literals — still a
     single codegen'd scan, no join, no UDF.
 
-    At 100 TB: write index_df ``partitionBy("ivf_cell")`` (see
-    ivf_materialize) — a probe reads nprobe partition dirs of m-byte
-    codes; raw vectors are only touched by the final rerank.
+    At 100 TB: write index_df ``partitionBy("ivf_cell")`` — a probe
+    reads nprobe partition dirs of m-byte codes; raw vectors are only
+    touched by the final rerank.
     """
     centroids = ivf_centroids_kmeans(
         df, n_cells, iters=kmeans_iters, vec_col=vec_col, id_col=id_col

@@ -25,7 +25,7 @@ stats prune on both predicates.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -53,21 +53,3 @@ def zorder_key2(a: Column | str, b: Column | str, bits: int = 16) -> Column:
     """Two-column Morton key (the common case; see `zorder_key`)."""
     return zorder_key([a, b], bits)
 
-
-def zorder_layout(
-    df: DataFrame,
-    a: Column | str,
-    b: Column | str,
-    n_files: int,
-    bits: int = 16,
-    key_col: str = "zkey",
-) -> DataFrame:
-    """The write-side plan: z-key, range-partition into ``n_files``
-    compact z-intervals, sort within each. Write the result with
-    ``.write.parquet(...)`` — every file then covers a small rectangle
-    of the (a, b) domain and its min/max stats prune on both."""
-    return (
-        df.withColumn(key_col, zorder_key2(a, b, bits))
-        .repartitionByRange(n_files, key_col)
-        .sortWithinPartitions(key_col)
-    )

@@ -33,6 +33,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+# Seconds each blocking socket operation of an insert POST may wait
+# (urllib applies it per connect/send/recv, not to the whole upload): a
+# server that accepts and never answers fails the epoch instead of
+# stalling the collector forever, while a large body that is still
+# moving is never cut off.
+_POST_TIMEOUT_S = 60
+
 _TYPE_MAP = {
     T.TimestampType(): "DateTime",
     T.StringType(): "String",
@@ -61,9 +68,14 @@ def log2_ddl(table: str = "log2") -> str:
     cols = ",\n    ".join(
         f"`{f.name}` {spark_type_to_clickhouse(f.dataType)}" for f in LOG2_SCHEMA.fields
     )
+    # A non-replicated MergeTree honours insert_deduplication_token
+    # only inside a non-zero deduplication window; 1000 blocks matches
+    # the sinks' 1000-entry epoch ledgers. (Replicated* tables
+    # deduplicate by default and need no setting.)
     return (
         f"CREATE TABLE IF NOT EXISTS {table} (\n    {cols}\n)"
         "\nENGINE = MergeTree\nORDER BY date_time"
+        "\nSETTINGS non_replicated_deduplication_window = 1000"
     )
 
 
@@ -403,7 +415,7 @@ class ClickHouseHTTPWriter:
         query = f"INSERT INTO {table} ({cols}) FORMAT RowBinary"
         base_params = {"database": self.database, "query": query}
         user, password = self.username, self.password
-        host, port = self.host, self.port
+        host, port, timeout = self.host, self.port, _POST_TIMEOUT_S
 
         def write_partition(batches):
             import base64
@@ -422,7 +434,7 @@ class ClickHouseHTTPWriter:
                 token = base64.b64encode(f"{user}:{password}".encode()).decode()
                 req.add_header("Authorization", f"Basic {token}")
                 req.add_header("Content-Type", "application/octet-stream")
-                with urllib.request.urlopen(req) as resp:
+                with urllib.request.urlopen(req, timeout=timeout) as resp:
                     resp.read()
             yield pa.RecordBatch.from_pydict(
                 {"posts": [int(bool(payload))], "bytes": [len(payload)]}

@@ -2,7 +2,7 @@
 
 Plain ``spark.read.parquet`` — the vectorized reader plus Catalyst
 column pruning / predicate pushdown make this the 100 TB-ready scan.
-``register_views`` exposes them to spark.sql.
+``load_table`` caches one DataFrame per (session, directory, table).
 
 Row-group trap note (measured r5, kept as a warning to future
 editors): the driver's sf* files are single-row-group, so these scans
@@ -36,8 +36,6 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Session-scoped catalog cache: resolving a parquet table costs a
 # driver-side footer/schema round-trip (~200 ms measured) every call,
@@ -105,11 +103,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _CACHE[key] = df
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -23,28 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch joins against
-    the STATIC dim with an explicit broadcast hint — no state store,
-    no watermark, no shuffle of the stream side. This is the lookup
-    path for client→org, domain→category, upstream→provider tables.
-
-    The dim DataFrame is re-evaluated per micro-batch (Structured
-    Streaming semantics), so a dim backed by a parquet path picks up
-    rewritten files between batches — slowly-changing dims refresh by
-    atomic directory swap, no restart. At 100 TB of stream the dim
-    must stay broadcast-sized (the hint makes overflow an explicit
-    executor-memory error instead of a silent repartition of the
-    unbounded side).
-    """
-    return stream.join(F.broadcast(dim), on, how)
-
-
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,

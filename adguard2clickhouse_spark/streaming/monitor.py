@@ -1,84 +1,12 @@
-"""Streaming observability: record per-batch progress.
+"""Codegen class-cache health checks for repeated workloads.
 
-The reference daemon's only signal is its stdout tracebacks; a
-production stream needs rates and lag. Structured Streaming already
-emits a progress event per micro-batch — this module just captures it
-in-process so tests, ops scripts, and the collector can assert on
-throughput without scraping logs.
-
-At scale the same listener is where you export to a metrics backend:
-override `publish` instead of buffering.
+Per-epoch progress is not kept here: ``QuerylogPipeline.batch_timings``
+records each epoch's line, row and dead counts and stage walls, and the
+pipeline's ``n_epochs``/``n_lines`` totals feed the collector's
+``--report-progress`` line.
 """
 
 from __future__ import annotations
-
-from collections import deque
-from dataclasses import dataclass, field
-
-from pyspark.sql.streaming import StreamingQueryListener
-
-# Progress records kept in ``ProgressRecorder.records``: a collector on
-# a 1 s trigger publishes ~86k a day.
-_RECORDS_KEPT = 1024
-
-
-@dataclass
-class BatchProgress:
-    query_id: str
-    batch_id: int
-    num_input_rows: int
-    input_rows_per_second: float
-    processed_rows_per_second: float
-    duration_ms: int
-
-
-@dataclass
-class ProgressRecorder(StreamingQueryListener):
-    """Buffers the last ``_RECORDS_KEPT`` `BatchProgress` records and
-    keeps running totals over every micro-batch (``n_batches``,
-    ``n_input_rows``). Attach with ``spark.streams.addListener(rec)``;
-    detach with ``spark.streams.removeListener(rec)`` (always detach —
-    listeners outlive queries). Callbacks arrive asynchronously on a
-    JVM thread: after ``awaitTermination`` poll the totals briefly
-    rather than asserting immediately."""
-
-    records: deque[BatchProgress] = field(
-        default_factory=lambda: deque(maxlen=_RECORDS_KEPT)
-    )
-    n_batches: int = 0
-    n_input_rows: int = 0
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        self.publish(
-            BatchProgress(
-                query_id=str(p.id),
-                batch_id=p.batchId,
-                num_input_rows=p.numInputRows,
-                input_rows_per_second=p.inputRowsPerSecond or 0.0,
-                processed_rows_per_second=p.processedRowsPerSecond or 0.0,
-                duration_ms=sum(v for v in p.durationMs.values() if v),
-            )
-        )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    def publish(self, progress: BatchProgress) -> None:
-        """Count and buffer by default; override to ship to a metrics
-        backend."""
-        self.n_batches += 1
-        self.n_input_rows += progress.num_input_rows
-        self.records.append(progress)
-
-    def total_input_rows(self) -> int:
-        return self.n_input_rows
 
 
 # ---------------------------------------------------------------------------

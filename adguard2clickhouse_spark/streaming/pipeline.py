@@ -185,8 +185,12 @@ class QuerylogPipeline:
         self._stream_identity: str | None = None
         self._query: StreamingQuery | None = None
         # per-epoch stage walls appended by process_batch (see there),
-        # the most recent _TIMINGS_KEPT epochs
+        # the most recent _TIMINGS_KEPT epochs, and running totals over
+        # every epoch this pipeline has processed (the collector's
+        # --report-progress line)
         self.batch_timings: deque[dict] = deque(maxlen=_TIMINGS_KEPT)
+        self.n_epochs = 0
+        self.n_lines = 0
 
     def _resolve_stream_identity(self) -> str | None:
         if self._stream_identity is None:
@@ -502,6 +506,8 @@ class QuerylogPipeline:
             timings["n_dead"] = n_lines - n_good
             timings["parts"] = parts
             self.batch_timings.append(timings)
+            self.n_epochs += 1
+            self.n_lines += n_lines
         finally:
             if parsed is not None:
                 parsed.unpersist()

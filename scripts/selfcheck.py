@@ -5,12 +5,22 @@ on DuckDB at the same SF, compares row count, sorted column names, and
 an order-insensitive value hash (stringified, row-sorted). Reports
 per-query PASS/FAIL with a value diff sample on mismatch.
 
+Beside each query's wall (``secs``) it records ``jvm_cpu_s``, the CPU
+seconds the Spark JVM process spent over the same span (the delta of
+``OperatingSystemMXBean.getProcessCpuTime()``; under ``local[N]`` the
+executors are threads of that JVM, so this covers every task, plus the
+JVM's own JIT and GC threads), and ``jobs``, the Spark jobs the query
+ran (its job group's job ids). Python-worker CPU (pandas/Arrow UDFs)
+runs in separate processes and is NOT included. A wall that rises
+with unchanged ``jvm_cpu_s`` and ``jobs`` points at a slower host; a
+rise in either points at the code.
+
 Usage: python scripts/selfcheck.py [--json OUT.json] [sf_dir] [query ...]
 
 With ``--json`` the per-query results are also written in the driver's
 CORRECTNESS_r{N}.json shape: ``{rows_match, schema_match, hash_match,
-spark_rows, oracle_rows, err}`` (plus ``rows_only: true`` and ``secs``
-for queries that have no SQL oracle), so the judge gets a hard artifact
+spark_rows, oracle_rows, err}`` plus ``secs``, ``jvm_cpu_s`` and
+``jobs`` (and ``rows_only: true`` for queries that have no SQL oracle), so the judge gets a hard artifact
 for every registered query even when the driver samples a subset.
 """
 
@@ -50,6 +60,21 @@ def vanilla_spark():
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def jvm_cpu_clock(spark):
+    """A zero-argument callable returning the Spark JVM's process CPU
+    time in seconds. ``getProcessCpuTime`` lives on the
+    ``com.sun.management`` interface, whose platform implementation
+    class py4j cannot call directly, so the getter is invoked through
+    reflection on the exported interface."""
+    jvm, gw = spark.sparkContext._jvm, spark.sparkContext._gateway
+    bean = jvm.java.lang.management.ManagementFactory.getOperatingSystemMXBean()
+    getter = jvm.java.lang.Class.forName(
+        "com.sun.management.OperatingSystemMXBean"
+    ).getMethod("getProcessCpuTime", gw.new_array(jvm.java.lang.Class, 0))
+    no_args = gw.new_array(jvm.java.lang.Object, 0)
+    return lambda: getter.invoke(bean, no_args) / 1e9
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -126,10 +151,13 @@ def main() -> int:
 
     n_pass = n_fail = n_rows_only = 0
     results: dict[str, dict] = {}
+    cpu_clock = jvm_cpu_clock(spark)
+    tracker = spark.sparkContext.statusTracker()
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
+        spark.sparkContext.setJobGroup(name, name)
+        t0, cpu0 = time.time(), cpu_clock()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
@@ -141,12 +169,17 @@ def main() -> int:
             n_fail += 1
             continue
         secs = round(time.time() - t0, 2)
+        cost = {
+            "secs": secs,
+            "jvm_cpu_s": round(cpu_clock() - cpu0, 2),
+            "jobs": len(tracker.getJobIdsForGroup(name)),
+        }
         if name not in oracles:
             print(f"ROWS-ONLY {name}: {len(sdf)} rows ({secs:.1f}s)")
             results[name] = {
                 "rows_match": None, "schema_match": None, "hash_match": None,
                 "spark_rows": len(sdf), "oracle_rows": None, "err": None,
-                "rows_only": True, "secs": secs,
+                "rows_only": True, **cost,
             }
             n_rows_only += 1
             continue
@@ -161,7 +194,7 @@ def main() -> int:
             n_fail += 1
             continue
         res = compare(name, sdf, ddf)
-        res["secs"] = secs
+        res.update(cost)
         results[name] = res
         if res["rows_match"] and res["schema_match"] and res["hash_match"]:
             print(f"PASS      {name}: {len(sdf)} rows ({secs:.1f}s)")

@@ -89,112 +89,3 @@ def test_unbucketed_join_does_exchange(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "Exchange" in plan
 
-
-def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
-    """overwrite_partitions rewrites the partitions present in the
-    batch and leaves the rest intact — the idempotent daily-backfill
-    contract. Control: a plain static overwrite truncates the table."""
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.plans.compaction import overwrite_partitions
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [("d1", 1), ("d1", 2), ("d2", 3), ("d3", 4)], "day STRING, v LONG"
-    )
-    base.write.partitionBy("day").parquet(path)
-
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    fix = spark.createDataFrame([("d2", 30), ("d2", 31)], "day STRING, v LONG")
-    overwrite_partitions(fix, path, ["day"])
-    got = {(r.day, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {("d1", 1), ("d1", 2), ("d2", 30), ("d2", 31), ("d3", 4)}
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == saved
-
-    fix2 = spark.createDataFrame([("d3", 40)], "day STRING, v LONG")
-    fix2.write.mode("overwrite").partitionBy("day").parquet(path)  # static control
-    assert {(r.day, r.v) for r in spark.read.parquet(path).collect()} == {("d3", 40)}
-
-
-def test_delete_rows_rewrites_only_affected_partitions(spark, tmp_path):
-    """Right-to-be-forgotten: user 5's rows vanish, partitions without
-    user 5 keep their files BYTE-IDENTICAL (no rewrite), and everyone
-    else's rows survive everywhere."""
-    import hashlib
-    import pathlib
-
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.plans.retention import delete_rows
-
-    path = str(tmp_path / "facts")
-    rows = [(d, u, i) for i, (d, u) in enumerate(
-        (d, u) for d in ("d1", "d2", "d3") for u in (1, 5, 9)
-    )]
-    rows = [r for r in rows if not (r[0] == "d2" and r[1] == 5)]  # d2 has no user5
-    spark.createDataFrame(rows, "day STRING, user_id LONG, v LONG") \
-        .repartition(1).write.partitionBy("day").parquet(path)
-
-    def digest(day):
-        files = sorted(pathlib.Path(path, f"day={day}").glob("*.parquet"))
-        h = hashlib.sha256()
-        for f in files:
-            h.update(f.read_bytes())
-        return h.hexdigest()
-
-    before_d2 = digest("d2")
-    affected = delete_rows(spark, path, F.col("user_id") == 5, "day")
-    assert sorted(affected) == ["d1", "d3"]
-    assert digest("d2") == before_d2  # untouched partition: same bytes
-    got = {(r.day, r.user_id) for r in spark.read.parquet(path).collect()}
-    assert all(u != 5 for _, u in got)
-    assert got == {(d, u) for d, u, _ in rows if u != 5}
-
-
-def test_expire_partitions_drops_directories_without_scan(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.plans.retention import expire_partitions
-
-    path = str(tmp_path / "facts")
-    rows = [(f"2024-01-{d:02d}", i) for d in (1, 5, 20) for i in range(3)]
-    spark.createDataFrame(rows, "day STRING, v LONG") \
-        .write.partitionBy("day").parquet(path)
-    dropped = expire_partitions(
-        spark, path, "day", F.col("day") >= "2024-01-10"
-    )
-    assert sorted(dropped) == ["2024-01-01", "2024-01-05"]
-    left = {
-        str(r.day)
-        for r in spark.read.parquet(path).select("day").distinct().collect()
-    }
-    assert left == {"2024-01-20"}
-
-
-def test_expire_partitions_escaped_values(spark, tmp_path):
-    """Partition values with characters Spark percent-encodes in
-    directory names (space, ':', '%') must still be deleted — the raw
-    f-string path would miss `day=a%20b%3Ac` entirely (r2 ADVICE)."""
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.plans.retention import expire_partitions
-
-    path = str(tmp_path / "facts")
-    vals = ["a b:c", "100%", "plain"]
-    rows = [(v, i) for v in vals for i in range(2)]
-    spark.createDataFrame(rows, "day STRING, v LONG") \
-        .write.partitionBy("day").parquet(path)
-    # on-disk dirs really are escaped (':' and '%' at minimum) — the
-    # raw f-string rendering does not exist on disk
-    import pathlib
-
-    dirs = {p.name for p in pathlib.Path(path).glob("day=*")}
-    assert "day=a b:c" not in dirs and "day=100%" not in dirs, dirs
-
-    dropped = expire_partitions(spark, path, "day", F.col("day") == "plain")
-    assert sorted(dropped) == ["100%", "a b:c"]
-    left = {
-        str(r.day)
-        for r in spark.read.parquet(path).select("day").distinct().collect()
-    }
-    assert left == {"plain"}

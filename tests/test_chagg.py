@@ -1,11 +1,11 @@
-"""ClickHouse Map-combinator analogs (sumMap/minMap/maxMap): fold
-semantics, key sorting, NULL handling, grouping."""
+"""ClickHouse Map-combinator analog (sumMap): fold semantics, key
+sorting, NULL handling, grouping."""
 
 from __future__ import annotations
 
 import pytest
 
-from adguard2clickhouse_spark.operators.chagg import max_map, min_map, sum_map
+from adguard2clickhouse_spark.operators.chagg import sum_map
 
 
 def _df(spark):
@@ -31,17 +31,6 @@ def test_sum_map_grouped(spark):
         "a": (["x", "y", "z"], [1, 12, 20]),
         "b": (["x", "z"], [7, 5]),
     }, out
-
-
-def test_min_max_map_global(spark):
-    got_min = min_map(_df(spark)).collect()[0]
-    got_max = max_map(_df(spark)).collect()[0]
-    assert (list(got_min.keys), list(got_min.vals)) == (
-        ["x", "y", "z"], [1, 2, 5]
-    )
-    assert (list(got_max.keys), list(got_max.vals)) == (
-        ["x", "y", "z"], [7, 10, 20]
-    )
 
 
 def test_sum_map_rejects_unknown_agg(spark):

@@ -1,11 +1,15 @@
-"""ClickHouse-SQL compat layer (functions/chsql.py): the reference's
-own MV SQL, executed on Spark, must equal the native aggregates.
+"""ClickHouse-SQL compat layer (functions/chsql.py): ClickHouse MV SQL,
+executed on Spark, must equal the native aggregates.
 
-The drop-in parity claim, executed: the DDL text is read VERBATIM from
-/root/reference/README.md (lines 24-189) at test time — nothing is
-copied into this repo — parsed into (select body, summing keys,
-measures) per view, transpiled, and run against the same log2 frame
-as operators/aggregates.py.
+The drop-in parity claim, executed: MV DDL is parsed into (select
+body, summing keys, measures) per view, transpiled, and run against
+the same log2 frame as operators/aggregates.py. The DDL comes from
+tests/fixtures/clickhouse_mv.sql, a repo-authored file using the same
+dialect features (splitByChar, 1-based indexing, toStartOfInterval,
+isIPv4String/isIPv6String, SummingMergeTree ORDER BY keys), and, when
+the reference checkout is present, also VERBATIM from
+/root/reference/README.md (lines 24-189), read at test time — nothing
+of it is copied into this repo.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from adguard2clickhouse_spark.functions import chsql
 from adguard2clickhouse_spark.operators import aggregates as agg
 
 REF_README = pathlib.Path("/root/reference/README.md")
+FIXTURE_DDL = pathlib.Path(__file__).parent / "fixtures" / "clickhouse_mv.sql"
 
 
 def _reference_ddl() -> str:
@@ -26,6 +31,15 @@ def _reference_ddl() -> str:
         pytest.skip("reference README not available in this environment")
     text = REF_README.read_text()
     return "\n".join(re.findall(r"```sql\n(.*?)```", text, re.DOTALL))
+
+
+@pytest.fixture(params=["fixture", "reference"])
+def mv_ddl(request) -> str:
+    """The repo's MV DDL fixture always; the reference's verbatim DDL
+    as well when it is present."""
+    if request.param == "fixture":
+        return FIXTURE_DDL.read_text()
+    return _reference_ddl()
 
 
 @pytest.fixture(scope="module")
@@ -86,8 +100,8 @@ def test_sql_udfs_inline_into_codegen(spark):
 
 # -- the drop-in claim: reference MV SQL == native aggregates ----------------
 
-# MV name (as in the reference DDL) → our native aggregate.
-# upstream_stats is absent: the reference's upstream_stats MV
+# MV name (as in the reference DDL and the fixture) → our native
+# aggregate. upstream_stats is absent: the reference's upstream_stats MV
 # (README.md:159-168) is a verbatim copy-paste of the tld MV — the
 # parser surfaces that bug as a name collision (asserted below).
 _MV_TO_NATIVE = {
@@ -101,11 +115,10 @@ _MV_TO_NATIVE = {
 }
 
 
-def test_reference_mv_sql_matches_native_aggregates(spark, log2):
-    ddl = _reference_ddl()
-    mvs = chsql.parse_mv_ddl(ddl)
+def test_reference_mv_sql_matches_native_aggregates(spark, log2, mv_ddl):
+    mvs = chsql.parse_mv_ddl(mv_ddl)
     missing = set(_MV_TO_NATIVE) - set(mvs)
-    assert not missing, f"MVs not parsed from reference DDL: {missing}"
+    assert not missing, f"MVs not parsed from the DDL: {missing}"
     for mv_name, native_name in _MV_TO_NATIVE.items():
         got_df = chsql.mv_aggregate(spark, log2, mvs[mv_name])
         native_df = agg.ALL_AGGREGATES[native_name](log2)
@@ -126,10 +139,9 @@ def test_reference_upstream_mv_bug_surfaces_as_collision(spark):
     assert "upstream_stats" not in {m["target"] for m in mvs.values()}
 
 
-def test_pipeline_maintains_user_mv_ddl_streaming(spark, tmp_path):
+def test_pipeline_maintains_user_mv_ddl_streaming(spark, tmp_path, mv_ddl):
     """Bring-your-own-MV-DDL, end to end: the pipeline maintains
-    aggregates parsed from the reference's VERBATIM ClickHouse DDL as
-    streaming summing sinks, and after two micro-batch rounds each
+    aggregates parsed from ClickHouse MV DDL as streaming summing sinks, and after two micro-batch rounds each
     custom sink equals the one-shot batch answer. The fan-out runs the
     MV SQL from several threads at once — exercising mv_aggregate's
     no-temp-view thread safety."""
@@ -139,8 +151,7 @@ def test_pipeline_maintains_user_mv_ddl_streaming(spark, tmp_path):
     from adguard2clickhouse_spark.operators.parse import parse_querylog
     from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
 
-    ddl = _reference_ddl()
-    custom = chsql.aggregates_from_clickhouse_ddl(ddl)
+    custom = chsql.aggregates_from_clickhouse_ddl(mv_ddl)
     assert set(custom) >= {"blocked_domains", "clients_stats", "stats2", "tld_stats"}
 
     def line(i, f):

@@ -723,6 +723,56 @@ def test_insert_batch_refuses_unencodable_rows(spark, override, message):
     assert received == []
 
 
+def test_insert_batch_times_out_on_a_server_that_never_answers(spark, monkeypatch):
+    """A server that accepts the POST and never replies fails the insert
+    within the socket timeout instead of stalling the epoch forever."""
+    import socket
+    import threading
+
+    from adguard2clickhouse_spark.sinks import clickhouse
+
+    monkeypatch.setattr(clickhouse, "_POST_TIMEOUT_S", 2, raising=False)
+    listener = socket.create_server(("127.0.0.1", 0))
+    conns: list[socket.socket] = []
+
+    def accept_and_stay_silent():
+        while True:
+            try:
+                conn, _ = listener.accept()
+            except OSError:
+                return  # listener closed
+            conns.append(conn)
+            conn.recv(1 << 16)  # read the request, never answer
+
+    threading.Thread(target=accept_and_stay_silent, daemon=True).start()
+    writer = ClickHouseHTTPWriter(
+        host="127.0.0.1", port=listener.getsockname()[1],
+        database="dns", username="agh", password="",
+    )
+    df = spark.createDataFrame([_log2_row(0, 1)], LOG2_SCHEMA).coalesce(1)
+    outcome: list[BaseException | dict] = []
+
+    def call():
+        try:
+            outcome.append(writer.insert_batch(df, "log2", dedup_token="t"))
+        except BaseException as e:  # noqa: BLE001 (recorded for the assert)
+            outcome.append(e)
+
+    caller = threading.Thread(target=call, daemon=True)
+    caller.start()
+    try:
+        caller.join(timeout=90)
+        assert not caller.is_alive(), "insert_batch still blocked after 90 s"
+        assert conns, "the insert never reached the silent server"
+        (err,) = outcome
+        assert isinstance(err, Exception) and "timed out" in str(err), err
+    finally:
+        listener.close()  # a hung insert sees the peer close and returns
+        for c in conns:
+            c.close()
+        caller.join(timeout=30)
+
+
 def test_process_batch_records_clickhouse_posts_and_bytes(tmp_path, spark):
     import json
 

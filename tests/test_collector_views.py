@@ -57,6 +57,34 @@ def test_collector_once_builds_queryable_state(spark, tmp_path):
     assert spark.sql("SELECT count(*) AS n FROM log2").collect()[0].n == 40
 
 
+def test_collector_report_progress_counts_lines_and_epochs(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`--report-progress` prints the pipeline's own running totals:
+    every source line (good and dead) and every epoch it recorded."""
+    from adguard2clickhouse_spark import collector
+
+    src, out = tmp_path / "src", tmp_path / "out"
+    _write_querylog(src, n=30)
+    (src / "querylog-2.json").write_text("not json\n" + "{}\n" * 4)
+    pipes = []
+
+    class Recording(collector.QuerylogPipeline):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            pipes.append(self)
+
+    monkeypatch.setattr(collector, "QuerylogPipeline", Recording)
+    run(["--source", str(src), "--out", str(out), "--once",
+         "--report-progress", "--master", "local[4]"])
+    (pipe,) = pipes
+    epochs = [t for t in pipe.batch_timings if "epoch_id" in t]
+    assert sum(t["n_lines"] for t in epochs) == 35
+    assert f"progress: 35 rows in {len(epochs)} micro-batches" in (
+        capsys.readouterr().err
+    )
+
+
 def test_collector_parser_flags():
     args = build_parser().parse_args(
         ["--source", "/a", "--out", "/b", "--once", "--trigger", "2 seconds"]

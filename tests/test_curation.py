@@ -233,18 +233,6 @@ def test_pack_fill_invariant(spark):
         assert [r.pos for r in g] == list(range(len(g)))
 
 
-def test_packing_efficiency_report(spark):
-    from adguard2clickhouse_spark.operators.packing import (
-        pack_greedy,
-        packing_efficiency,
-    )
-
-    rows = [("en", i, 128) for i in range(10)]  # pairs fill bins exactly
-    df = spark.createDataFrame(rows, "lang STRING, doc_id LONG, n_tokens LONG")
-    rep = packing_efficiency(pack_greedy(df, 256), 256).head()
-    assert rep.n_bins == 5 and rep.fill_permille == 1000
-
-
 def test_clean_html_strips_decodes_once_and_counts_tags(spark):
     """Script/style payloads vanish wholesale, tags become spaces (no
     word joining), entities decode exactly once ('&amp;lt;' → '&lt;',
@@ -460,35 +448,6 @@ def test_hashed_embedding_composes_with_vector_ops(spark):
         ).collect()
     }
     assert pairs == {(1, 2)}
-
-
-def test_normalize_unicode_nfkc_known_pairs(spark):
-    """Real NFKC: ligatures, full-width ASCII, superscripts, and
-    composed/decomposed accents fold to canonical forms; NFC leaves
-    compatibility characters alone; nulls survive."""
-    from adguard2clickhouse_spark.operators.scrub import normalize_unicode
-
-    rows = [
-        (1, "ﬁle"),            # LATIN SMALL LIGATURE FI
-        (2, "Ｆｕｌｌｗｉｄｔｈ"),  # full-width letters
-        (3, "x²"),         # superscript two
-        (4, "étude"),     # decomposed accent
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, ["id", "text"])
-    got = {r.id: r.text for r in normalize_unicode(df).collect()}
-    assert got[1] == "file"
-    assert got[2] == "Fullwidth"
-    assert got[3] == "x2"
-    assert got[4] == "étude"     # composed é
-    assert got[5] is None
-    # NFC: canonical composition only — the ligature survives
-    nfc = {r.id: r.text for r in normalize_unicode(df, form="NFC").collect()}
-    assert nfc[1] == "ﬁle" and nfc[4] == "étude"
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        normalize_unicode(df, form="XXX")
 
 
 def test_containment_threshold_exact_at_0_3(spark):

@@ -75,15 +75,12 @@ def test_ivf_full_probe_equals_brute_force(emb_df):
 
 
 def test_ivf_assign_is_deterministic_partition_key(emb_df):
-    # the lowest-id seed pick (Lloyd init) gives the known centroids
-    # (v0, v1) this test's expectations are written against
-    cents = similarity._ivf_init_centroids(emb_df, n_cells=2)
-    assigned = similarity.ivf_assign(emb_df, cents)
+    # centroids v0 and v1: both along x, so every vector ties between
+    # them and the tie breaks to the lower cell; orthogonal v2 has
+    # cos(v2,c0)=cos(v2,c1)=0 → tie → cell 0.
+    cents = [[1.0, 0.0, 0.0, 0.0], [2.0, 0.0, 0.0, 0.0]]
+    assigned = similarity.ivf_assign_arrow(emb_df, cents)
     cells = {r.vec_id: r.ivf_cell for r in assigned.collect()}
-    # v0/v1/v3 align with centroid 0 (=v0); v2 with centroid 1 (=v1?\
-    # centroids are the two lowest ids: v0 and v1 — both along x, so
-    # ties break to the lower cell; orthogonal v2 picks cell 0 only if
-    # tied, but cos(v2,c0)=cos(v2,c1)=0 → tie → cell 0.
     assert cells[0] == 0 and cells[1] == 0 and cells[3] == 0
     assert cells[2] == 0  # tie on orthogonal → lowest cell wins
     assert set(cells.values()) <= {0, 1}
@@ -285,25 +282,6 @@ def test_quantized_topk_recall_vs_float_exact(fixture_emb):
     assert len(exact & approx) >= 8
 
 
-def test_normalize_embeddings_unit_norm_and_cosine_invariance(spark):
-    df = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, [-1.0, 2.0])],
-        "vec_id LONG, embedding ARRAY<DOUBLE>",
-    )
-    normed = similarity.normalize_embeddings(df, out_col="u")
-    rows = {r.vec_id: r for r in normed.collect()}
-    assert rows[1].u == pytest.approx([0.6, 0.8])
-    assert rows[2].u == [0.0, 0.0]  # zero vector passes through
-    # cosine(u, q) == dot(u, q/|q|): normalization removes the norm term
-    got = normed.filter(F.col("vec_id") != 2).select(
-        "vec_id",
-        similarity.dot(F.col("u"), F.array(F.lit(1.0), F.lit(0.0))).alias("d"),
-        similarity.cosine(F.col("embedding"), F.array(F.lit(1.0), F.lit(0.0))).alias("c"),
-    ).collect()
-    for r in got:
-        assert r.d == pytest.approx(r.c)
-
-
 def test_quantize_int8_bounds_and_roundtrip_error(spark):
     df = spark.createDataFrame(
         [(1, [0.5, -1.0, 0.25]), (2, [0.0, 0.0, 0.0])],
@@ -484,7 +462,8 @@ def test_ivf_kmeans_centroids_refine_and_probe(spark):
     # refined assignment is reasonably balanced: no cell swallows
     # the whole corpus
     sizes = (
-        similarity.ivf_assign(emb, cents).groupBy("ivf_cell").count().collect()
+        similarity.ivf_assign_arrow(emb, cents)
+        .groupBy("ivf_cell").count().collect()
     )
     assert max(r["count"] for r in sizes) < 500
 
@@ -731,34 +710,6 @@ def test_lsh_topk_recall_vs_brute_force(fixture_emb):
     recall = len(set(exact) & set(got)) / 10
     # 16 bits, Hamming ≤4, 8 tables; measured 0.7 on this corpus
     assert recall >= 0.5, recall
-
-
-def test_ivf_materialized_probe_prunes_partitions(fixture_emb, tmp_path_factory, spark):
-    """The 100 TB layout claim, executed: partitionBy(ivf_cell) on disk,
-    probe reads only nprobe partition directories (plan-asserted)."""
-    path = str(tmp_path_factory.mktemp("ivf") / "emb_by_cell")
-    cents = similarity.ivf_centroids_kmeans(fixture_emb, n_cells=16)
-    similarity.ivf_materialize(fixture_emb, path, cents)
-
-    q = [float(x) for x in fixture_emb.filter("vec_id=0").select("embedding").head()[0]]
-    probed = similarity.ivf_topk_materialized(
-        spark, path, q, cents, k=10, nprobe=4
-    )
-    # identical results to the inline probe on the same centroids
-    inline = [
-        r.vec_id
-        for r in similarity.ivf_topk(
-            fixture_emb, q, k=10, centroids=cents, nprobe=4
-        ).collect()
-    ]
-    assert [r.vec_id for r in probed.collect()] == inline
-
-    physical = probed._jdf.queryExecution().executedPlan().toString()
-    # partition pruning visible in the scan: the ivf_cell filter is a
-    # PartitionFilter, not a data Filter
-    assert "PartitionFilters" in physical
-    pf_line = next(l for l in physical.splitlines() if "PartitionFilters" in l)
-    assert "ivf_cell" in pf_line, pf_line
 
 
 def test_hash_split_deterministic_and_composable(spark):

@@ -173,47 +173,6 @@ def test_ngram_jaccard_no_size_shuffle(spark, qs):
     assert "Exchange" not in plan  # narrow: no shuffle to learn set sizes
 
 
-def test_zorder_layout_narrows_both_dimensions(spark, tmp_path_factory):
-    """Range-partitioning on the Morton key must give every output
-    file a compact rectangle in (a, b) space — per-file spans far
-    below the global span on BOTH dimensions. The control layout
-    (range on `a` alone) keeps `b` unconstrained per file, which is
-    exactly the multi-dim pruning failure z-order exists to fix."""
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.plans.zorder import zorder_layout
-
-    path = str(tmp_path_factory.mktemp("zorder") / "grid")
-    grid = spark.range(1024).select(
-        (F.col("id") % 32).alias("a"), F.floor(F.col("id") / 32).alias("b")
-    )
-    zorder_layout(grid, "a", "b", n_files=16, bits=5).write.parquet(path)
-
-    back = spark.read.parquet(path).select(
-        "a", "b", F.input_file_name().alias("f")
-    )
-    spans = back.groupBy("f").agg(
-        (F.max("a") - F.min("a")).alias("sa"),
-        (F.max("b") - F.min("b")).alias("sb"),
-    ).collect()
-    assert len(spans) > 4
-    # 16 files over a 32×32 grid ≈ 8×8 blocks; range boundaries are
-    # sampled so allow slack, but both spans must be well under 31.
-    assert max(r.sa for r in spans) <= 16
-    assert max(r.sb for r in spans) <= 16
-
-    ctrl_path = str(tmp_path_factory.mktemp("zorder") / "asort")
-    grid.repartitionByRange(16, "a").sortWithinPartitions("a").write.parquet(ctrl_path)
-    ctrl = (
-        spark.read.parquet(ctrl_path)
-        .select("a", "b", F.input_file_name().alias("f"))
-        .groupBy("f")
-        .agg((F.max("b") - F.min("b")).alias("sb"))
-        .collect()
-    )
-    assert max(r.sb for r in ctrl) == 31  # single-dim sort: b unconstrained
-
-
 def test_heavy_hitters_candidates_broadcast_and_map_only_sketch(spark):
     """Pass 1 must be map-only (MapInPandas, no preceding exchange on
     the raw values) and pass 2 must broadcast the tiny candidate set
@@ -271,41 +230,6 @@ def test_zorder_key_matches_reference_interleave(spark):
     rows = grid.select("a", "b", zorder_key2("a", "b", bits=5).alias("z")).collect()
     assert all(r.z == ref(r.a, r.b, 5) for r in rows)
     assert len({r.z for r in rows}) == 1024  # bijective on the grid
-
-
-def test_compaction_rewrites_small_files_and_preserves_rows(spark, tmp_path_factory):
-    """32 per-epoch micro-files compact into a handful of target-sized
-    files with identical content; sort_col re-establishes in-file
-    ordering for min/max pruning."""
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.plans.compaction import compact_parquet
-
-    base = tmp_path_factory.mktemp("compact")
-    src, out = str(base / "src"), str(base / "out")
-    df = spark.range(20_000).select(
-        F.col("id"), (F.col("id") % 97).alias("k")
-    )
-    df.repartition(32).write.parquet(src)  # the small-files problem
-
-    import glob
-
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 32
-    n = compact_parquet(spark, src, out, target_file_bytes=200_000, sort_col="id")
-    files = glob.glob(f"{out}/part-*.parquet")
-    assert len(files) == n < 8
-
-    back = spark.read.parquet(out)
-    assert back.count() == 20_000
-    assert back.agg(F.sum("id")).head()[0] == df.agg(F.sum("id")).head()[0]
-    # in-file ordering: each file's ids are a contiguous sorted range
-    spans = (
-        back.select("id", F.input_file_name().alias("f"))
-        .groupBy("f")
-        .agg(F.min("id").alias("lo"), F.max("id").alias("hi"), F.count("id").alias("c"))
-        .collect()
-    )
-    assert all(r.hi - r.lo + 1 == r.c for r in spans)
 
 
 def test_driver_contract_keys_align():

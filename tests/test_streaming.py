@@ -217,53 +217,6 @@ def test_windowed_state_store_matches_batch_for_final_windows(tmp_path, spark):
     assert all(ip != "10.0.0.9" for ip, *_ in got)
 
 
-def test_stream_static_enrichment_matches_batch_join(tmp_path, spark):
-    """enrich_stream: a file stream joined per-micro-batch against a
-    broadcast static dim equals the batch join on the same data, and
-    unmatched keys survive (left join) — the stateless lookup path."""
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.streaming.joins import enrich_stream
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    rows = [{"event_id": i, "client": f"c{i % 7}", "v": i} for i in range(60)]
-    # two files → at least two micro-batches with maxFilesPerTrigger=1
-    (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:30]))
-    (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[30:]))
-    dim = spark.createDataFrame(
-        [(f"c{i}", f"org{i % 3}") for i in range(5)],  # c5, c6 unmatched
-        "client STRING, org STRING",
-    )
-
-    stream = (
-        spark.readStream.schema("event_id BIGINT, client STRING, v BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        enrich_stream(stream, dim, "client")
-        .writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(str(out))
-    batch = spark.read.json(str(src)).join(dim, "client", "left")
-    assert got.count() == 60
-    assert (
-        sorted((r.event_id, r.org) for r in got.collect())
-        == sorted((r.event_id, r.org) for r in batch.collect())
-    )
-    n_unmatched = got.filter(F.col("org").isNull()).count()
-    assert n_unmatched == batch.filter(F.col("org").isNull()).count()
-    assert n_unmatched > 0
-
-
 def test_stream_dedupe_drops_redelivered_events(tmp_path, spark):
     """dropDuplicatesWithinWatermark keeps one row per event_id among
     in-horizon re-deliveries — the ingest guard that makes
@@ -345,64 +298,6 @@ def test_rebuild_aggregates_recovers_corrupted_sink(run_dirs, spark):
         (r.QT, r["count"]) for r in pipe.read_aggregate("qt_stats").collect()
     )
     assert after == expect
-
-
-def test_progress_recorder_captures_batch_rates(tmp_path, spark):
-    """The listener must see every micro-batch's input row count —
-    the observability hook a production stream exports from."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from adguard2clickhouse_spark.streaming.monitor import ProgressRecorder
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    src.mkdir()
-    rows = [{"v": i} for i in range(500)]
-    (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
-
-    rec = ProgressRecorder()
-    spark.streams.addListener(rec)
-    try:
-        q = (
-            spark.readStream.schema("v BIGINT")
-            .json(str(src))
-            .withColumn("v2", F.col("v") * 2)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        deadline = time.time() + 30
-        while rec.total_input_rows() < 500 and time.time() < deadline:
-            time.sleep(0.2)
-    finally:
-        spark.streams.removeListener(rec)
-    assert rec.total_input_rows() == 500
-    assert all(r.duration_ms >= 0 for r in rec.records)
-
-
-def test_progress_recorder_is_bounded_and_keeps_totals():
-    """An always-on collector publishes one record per epoch for weeks:
-    the buffer keeps only the newest records, while the batch and row
-    totals still count every one."""
-    from adguard2clickhouse_spark.streaming.monitor import (
-        _RECORDS_KEPT,
-        BatchProgress,
-        ProgressRecorder,
-    )
-
-    rec = ProgressRecorder()
-    n = _RECORDS_KEPT + 500
-    for i in range(n):
-        rec.publish(BatchProgress("q", i, 3, 0.0, 0.0, 1))
-    assert len(rec.records) == _RECORDS_KEPT
-    assert rec.records[0].batch_id == n - _RECORDS_KEPT
-    assert rec.records[-1].batch_id == n - 1
-    assert rec.n_batches == n
-    assert rec.n_input_rows == rec.total_input_rows() == 3 * n
 
 
 def test_read_log2_merges_evolved_schema(tmp_path, spark):
