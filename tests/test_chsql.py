@@ -7,9 +7,9 @@ the same log2 frame as operators/aggregates.py. The DDL comes from
 tests/fixtures/clickhouse_mv.sql, a repo-authored file using the same
 dialect features (splitByChar, 1-based indexing, toStartOfInterval,
 isIPv4String/isIPv6String, SummingMergeTree ORDER BY keys), and, when
-the reference checkout is present, also VERBATIM from
-/root/reference/README.md (lines 24-189), read at test time — nothing
-of it is copied into this repo.
+the reference checkout is present, also VERBATIM from its README
+(``REF_README``, lines 24-189), read at test time — nothing of it is
+copied into this repo.
 """
 
 from __future__ import annotations
@@ -141,10 +141,11 @@ def test_reference_upstream_mv_bug_surfaces_as_collision(spark):
 
 def test_pipeline_maintains_user_mv_ddl_streaming(spark, tmp_path, mv_ddl):
     """Bring-your-own-MV-DDL, end to end: the pipeline maintains
-    aggregates parsed from ClickHouse MV DDL as streaming summing sinks, and after two micro-batch rounds each
-    custom sink equals the one-shot batch answer. The fan-out runs the
-    MV SQL from several threads at once — exercising mv_aggregate's
-    no-temp-view thread safety."""
+    aggregates parsed from ClickHouse MV DDL as streaming summing
+    sinks, and after two micro-batch rounds each custom sink equals the
+    one-shot batch answer. The fan-out runs the MV SQL from several
+    threads at once — exercising mv_aggregate's no-temp-view thread
+    safety."""
     import json as _json
 
     from adguard2clickhouse_spark.operators.dnswire import build_answer_b64
