@@ -69,7 +69,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--rebuild", action="store_true",
         help="backfill all aggregate tables from the log2 fact table, "
-        "then exit (recovery / late-added aggregates)",
+        "then exit (recovery / late-added aggregates); stop the "
+        "collector daemon on this out_dir first, or epochs it commits "
+        "during the rebuild go missing from the aggregates",
     )
     p.add_argument(
         "--report-progress", action="store_true",

@@ -6,8 +6,11 @@ transaction log, so a crashed epoch retried by Structured Streaming
 could land the same block twice in ``log2`` while the additive
 aggregate sinks (epoch-id folds) and the ClickHouse insert (server
 dedup tokens) stayed effectively-once. This sink closes that gap with
-the stage-and-swap discipline the design doc named, mirroring
-``SummingParquetSink``'s ledger exactly:
+the stage-and-swap discipline the design doc named, committing
+through the same ``Ledger`` as ``SummingParquetSink``
+(``sinks/ledger.py``, which states the ledger semantics: epoch and
+token windows, stream-identity scope, lock, durable swap, orphan GC
+and retirement):
 
 1. **Stage**: the epoch's rows are written to a private
    ``.stage.<uuid>`` directory (partitioned + sorted like the final
@@ -21,14 +24,11 @@ the stage-and-swap discipline the design doc named, mirroring
    keeps pruning exactly as on a flat layout. Multiple independent
    partitioned roots would otherwise be rejected
    (CONFLICTING_DIRECTORY_STRUCTURES) or cost one scan node per epoch.
-3. **Commit**: a pointer file (``_FACTS.json``, atomic ``os.replace``)
-   records the new directory together with the epoch id / token — the
-   single visibility point. A crash between publish and commit leaves
-   an uncommitted ``cseq=<seq>`` that the next append garbage-collects
-   and overwrites; a retry of a COMMITTED epoch is a no-op (epoch
-   high-water mark + recent-epoch window, the same contract as
-   ``SummingParquetSink.applied`` — foreachBatch epochs are monotonic,
-   Spark replays at most the last epoch after a failure).
+3. **Commit**: the ledger pointer (``_FACTS.json``) records the new
+   directory together with the epoch id / token — the single
+   visibility point. A crash between publish and commit leaves an
+   uncommitted ``cseq=<seq>`` that the next append garbage-collects
+   and overwrites; a retry of a COMMITTED epoch is a no-op.
 
 ``read`` lists only committed directories, so readers never observe a
 torn epoch. Each committed directory carries the stream's
@@ -36,28 +36,13 @@ torn epoch. Each committed directory carries the stream's
 exactly as it did on the flat layout — Spark discovers the partition
 column per root when handed the list of committed roots.
 
-Ledger semantics (each is load-bearing for exactly-once delivery):
+Beyond the ledger's semantics, this sink adds two of its own:
 
-- **Epochs and tokens.** ``append`` records its epoch id or token in
-  the SAME pointer write that makes its rows visible, and returns
-  False (a no-op) for one already recorded. Epoch ids are monotonic
-  per stream identity: the ledger keeps a high-water mark plus the
-  last ``_MAX_EPOCHS_TRACKED`` ids, and anything at or below the mark
-  counts as applied. Tokens are opaque out-of-band keys (dead-letter
-  replay) with no order, so only the last ``_MAX_EPOCHS_TRACKED`` are
-  remembered. An empty frame still records its epoch id.
-- **replace** swaps the whole content atomically while both ledgers
-  SURVIVE, so a retried epoch is still recognized after a rewrite.
 - **generation** changes only with ``replace(bump_generation=True)``,
   never with an append or a compaction; the dead-letter replay salts
   its token with it.
 - **compact** changes layout only: never content, ledgers or
   generation.
-- **Stream identity** (``stream_id``, assignable) scopes the epoch
-  ledger: a CHANGED identity voids it (a recreated checkpoint restarts
-  epoch ids at 0, and matching them against the old high-water mark
-  would silently drop every new epoch); ``None`` leaves it unscoped;
-  an unrecorded→recorded transition keeps the existing epochs.
 
 Cost per epoch is one rename plus one small JSON write (the reference
 has no fact-retry story at all, its insert is fire-and-forget — its
@@ -67,29 +52,23 @@ small-file count) becomes the bottleneck — bounded maintenance, not a
 per-read cost (the pipeline schedules it between epochs —
 ``QuerylogPipeline.process_batch``).
 
-Writer discipline (r11): single-writer is ENFORCED, not documented —
-every pointer read-modify-write runs under an advisory ``flock`` on
-``_FACTS.lock``, and construction rejects non-local URIs outright (the
-rename/flock substrate does not exist on object stores) and refuses a
-directory holding data but no ledger, which it could only hide.
+Construction rejects non-local URIs outright (the rename/flock
+substrate does not exist on object stores) and refuses a directory
+holding data but no ledger, which it could only hide.
 """
 
 from __future__ import annotations
 
-import contextlib
-import fcntl
-import json
 import os
 import re
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from adguard2clickhouse_spark.sinks.ledger import Ledger
+
 _POINTER = "_FACTS.json"
-_LOCKFILE = "_FACTS.lock"
-_MAX_EPOCHS_TRACKED = 1000
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
 
@@ -138,18 +117,12 @@ class LedgeredFactSink:
         self.path = path
         self.partition_by = list(partition_by or [])
         self.sort_within = list(sort_within or [])
-        # Streaming-query identity that SCOPES the epoch ledger (ADVICE
-        # r10): epoch ids are only monotonic within one checkpoint; if
-        # the checkpoint is deleted/relocated the ids restart at 0, and
-        # matching them against the old high-water mark would silently
-        # drop every new epoch. When set (the pipeline passes the query
-        # id from the checkpoint metadata), an identity CHANGE voids the
-        # epoch ledger — the new stream's epochs append normally. A
-        # pointer written before identities were recorded is
-        # grandfathered without voiding (same checkpoint continuing must
-        # keep its replay protection); it becomes scoped from the first
-        # identified append onward. Assignable after construction.
+        # Scopes the epoch ledger (see ledger.py); the pipeline assigns
+        # the query id from the checkpoint metadata.
         self.stream_id = stream_id
+        self.ledger = Ledger(
+            path, _POINTER, seq=0, dirs=[], dir_bytes={}, generation=0
+        )
         # Stage directories currently being written by THIS process
         # (a background maintenance fold stages outside the lock, so a
         # concurrent append's orphan GC must not delete them mid-write).
@@ -157,16 +130,6 @@ class LedgeredFactSink:
         # deployment discipline applies, and a crashed process's
         # leftover stages are exactly the orphans GC exists to remove.
         self._live_stages: set[str] = set()
-        # Retired-slot retention (r12): compaction folds COMMIT the new
-        # slot atomically but must not delete the superseded slots
-        # immediately — a reader that listed the old pointer may still
-        # be mid-scan (the exact race Delta/Iceberg split commit from
-        # VACUUM for; observed as FileNotFoundException the moment
-        # folds moved off the writer thread). Folded slots are instead
-        # recorded in the pointer's trash list and physically removed
-        # by later commits once older than this many seconds — size it
-        # above the longest reader job, like a VACUUM retention.
-        self.trash_retention_s: float = 60.0
         os.makedirs(path, exist_ok=True)
         if not os.path.exists(os.path.join(path, _POINTER)):
             # Without a ledger, cseq=/stage entries are leftovers of a
@@ -185,108 +148,8 @@ class LedgeredFactSink:
                     "first."
                 )
 
-    @contextlib.contextmanager
-    def _locked(self):
-        """Advisory exclusive lock enforcing the single-writer
-        discipline (VERDICT r10 #2): every pointer read-modify-write
-        (append / replace / compact) runs under it, so a
-        maintenance compaction racing a live stream — or a second
-        process on the same out_dir — serializes instead of silently
-        dropping committed dirs from the ledger (a lost update here
-        orphans data that _gc_orphans then deletes). flock, not a lock
-        FILE's existence: the lock dies with the holder, so a crashed
-        writer never wedges the table. NOT reentrant — public methods
-        lock once and call unlocked internals."""
-        fd = os.open(
-            os.path.join(self.path, _LOCKFILE),
-            os.O_CREAT | os.O_RDWR,
-            0o644,
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
-    # -- pointer management (same shape as SummingParquetSink) --------------
-    def _pointer(self) -> dict:
-        p = os.path.join(self.path, _POINTER)
-        if not os.path.exists(p):
-            return {
-                "seq": 0,
-                "dirs": [],
-                "epochs": [],
-                "epoch_hwm": None,
-                "tokens": [],
-                "stream_id": None,
-                "dir_bytes": {},
-                "generation": 0,
-                "trash": [],
-            }
-        with open(p) as f:
-            meta = json.load(f)
-        meta.setdefault("dirs", [])
-        meta.setdefault("epochs", [])
-        meta.setdefault("epoch_hwm", None)
-        meta.setdefault("tokens", [])
-        meta.setdefault("stream_id", None)
-        meta.setdefault("dir_bytes", {})
-        meta.setdefault("generation", 0)
-        meta.setdefault("trash", [])
-        return meta
-
-    def _fsync_dir(self) -> None:
-        dfd = os.open(self.path, os.O_DIRECTORY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-
-    def _write_pointer(self, meta: dict) -> None:
-        tmp = os.path.join(self.path, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.path, _POINTER))  # atomic commit
-        # fsync the DIRECTORY too: the rename itself lives in the page
-        # cache until the dirent is flushed, and Structured Streaming's
-        # offset commit racing ahead of an unflushed ledger on power
-        # loss would orphan a committed epoch (the offsets say "done",
-        # the reverted ledger says "never happened", and GC would
-        # delete the slot). One cheap O_DIRECTORY fsync per epoch
-        # closes our side of that window; the parquet data files
-        # themselves follow the filesystem's ordinary durability, as
-        # everywhere else in Spark's local-fs writes.
-        self._fsync_dir()
-
-    def _scope_epochs(self, meta: dict) -> dict:
-        """Apply the stream-identity scope (see ``__init__``) to a
-        pointer in memory: a DIFFERENT recorded identity voids the
-        epoch ledger (epoch ids restarted — matching them against the
-        old hwm would silently drop data); an unrecorded identity is
-        grandfathered (the ledger predates identity tracking and may
-        belong to this very checkpoint — voiding it would double the
-        one epoch Spark replays on upgrade+crash)."""
-        if self.stream_id is None:
-            return meta
-        prev = meta["stream_id"]
-        if prev is None:
-            return {**meta, "stream_id": self.stream_id}
-        if prev != self.stream_id:
-            return {
-                **meta,
-                "stream_id": self.stream_id,
-                "epochs": [],
-                "epoch_hwm": None,
-            }
-        return meta
-
     def applied(self, epoch_id: int) -> bool:
-        meta = self._scope_epochs(self._pointer())
-        hwm = meta["epoch_hwm"]
-        return epoch_id in meta["epochs"] or (hwm is not None and epoch_id <= hwm)
+        return self.ledger.recorded(self.ledger.read(self.stream_id), epoch_id)
 
     def _stage_and_publish(
         self, df: DataFrame, seq: int
@@ -296,8 +159,8 @@ class LedgeredFactSink:
         Returns ``(slot_basename, slot_bytes)``, or ``(None, 0)`` when
         the frame produced no rows (the stage is dropped — publishing
         data-less directories would grow the committed listing
-        forever). The slot is NOT yet visible: callers commit it via
-        ``_write_pointer`` (recording the bytes in ``dir_bytes`` so
+        forever). The slot is NOT yet visible: callers commit it through
+        the ledger (recording the bytes in ``dir_bytes`` so
         compaction tiering never re-stats committed slots). Callers
         hold the writer lock."""
         stage, nbytes = self._stage(df)
@@ -341,11 +204,11 @@ class LedgeredFactSink:
 
     def _publish(self, stage: str, seq: int) -> str:
         """Rename a staged directory into committed slot ``cseq=<seq>``
-        (one local-fs move). The slot is NOT yet visible: callers
-        commit it via ``_write_pointer``. Callers hold the writer
-        lock (seq allocation races otherwise)."""
+        (one local-fs move). The slot is NOT yet visible until callers
+        commit it. Callers hold the writer lock (seq allocation races
+        otherwise)."""
         dst = os.path.join(self.path, f"cseq={seq:08d}")
-        if os.path.exists(dst):  # unreachable after _gc_orphans; belt
+        if os.path.exists(dst):  # unreachable after the ledger's gc; belt
             shutil.rmtree(dst)
         os.replace(stage, dst)
         self._live_stages.discard(os.path.basename(stage))
@@ -367,52 +230,9 @@ class LedgeredFactSink:
         return total
 
     def applied_token(self, token: str) -> bool:
-        """Out-of-band append idempotency (dead-letter replay): opaque
-        tokens in a 1000-entry window, separate from the monotonic
-        epoch ledger — same two-ledger contract (and the same window
-        caveat) as ``SummingParquetSink.applied_token``."""
-        return token in self._pointer()["tokens"]
-
-    def _gc_orphans(self, meta: dict) -> None:
-        """Remove leftovers of crashed appends: stage dirs (crash
-        mid-write) and committed-slot dirs missing from the ledger
-        (crash between publish and commit). Single-writer discipline —
-        foreachBatch serializes epochs, replay runs with the stream
-        stopped — makes this safe: nothing outside the ledger is ever
-        read. Exemptions: stages this process is actively writing
-        (``_live_stages``) and retired slots inside their trash
-        retention (a reader holding the pre-fold pointer may still be
-        scanning them — see ``trash_retention_s``)."""
-        committed = set(meta["dirs"]) | {t["dir"] for t in meta["trash"]}
-        for name in os.listdir(self.path):
-            full = os.path.join(self.path, name)
-            if not os.path.isdir(full):
-                # crashed pointer write: tmp pointers are junk forever
-                if name.startswith(f".{_POINTER}.") and name.endswith(".tmp"):
-                    try:
-                        os.remove(full)
-                    except OSError:
-                        pass
-                continue
-            if (
-                name.startswith(".stage.") and name not in self._live_stages
-            ) or (name.startswith("cseq=") and name not in committed):
-                shutil.rmtree(full, ignore_errors=True)
-
-    def _swept_trash(self, meta: dict) -> tuple[list[dict], list[str]]:
-        """Split the pointer's retired-slot list into (still retained,
-        expired dir names). Callers write the retained list back in the
-        SAME pointer commit and physically delete the expired dirs
-        AFTER that commit — a crash in between leaves them as plain
-        orphans for the next GC (no longer in dirs OR trash)."""
-        now = time.time()
-        kept, expired = [], []
-        for t in meta["trash"]:
-            if now - t["t"] >= self.trash_retention_s:
-                expired.append(t["dir"])
-            else:
-                kept.append(t)
-        return kept, expired
+        """Out-of-band append idempotency (dead-letter replay): the
+        ledger's token window, separate from the monotonic epochs."""
+        return self.ledger.recorded(self.ledger.read(), token=token)
 
     # -- public API ----------------------------------------------------------
     def append(
@@ -426,7 +246,7 @@ class LedgeredFactSink:
         already-committed epoch/token. With neither epoch_id nor token
         the append is unconditional (maintenance writes). Serialized
         against every other writer on this path by the pointer lock."""
-        with self._locked():
+        with self.ledger.locked():
             return self._append(df, epoch_id, token)
 
     def _append(
@@ -435,15 +255,16 @@ class LedgeredFactSink:
         epoch_id: int | None = None,
         token: str | None = None,
     ) -> bool:
-        meta = self._scope_epochs(self._pointer())
-        hwm = meta["epoch_hwm"]
-        if epoch_id is not None and (
-            epoch_id in meta["epochs"] or (hwm is not None and epoch_id <= hwm)
-        ):
+        meta = self.ledger.read(self.stream_id)
+        if self.ledger.recorded(meta, epoch_id, token):
             return False
-        if token is not None and token in meta["tokens"]:
-            return False
-        self._gc_orphans(meta)
+        # A cseq= slot neither committed nor retired was published by an
+        # append that crashed before its commit.
+        committed = set(meta["dirs"]) | {t["dir"] for t in meta["trash"]}
+        self.ledger.gc(
+            self._live_stages,
+            lambda n: n.startswith("cseq=") and n not in committed,
+        )
 
         # Empty epoch: commit the epoch id for idempotency without
         # publishing a data-less directory (an empty frame can still
@@ -456,33 +277,15 @@ class LedgeredFactSink:
         if slot is not None:
             dirs.append(slot)
             dir_bytes[slot] = nbytes
-
-        epochs, hwm = meta["epochs"], meta["epoch_hwm"]
-        if epoch_id is not None:
-            epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
-            hwm = epoch_id if hwm is None else max(hwm, epoch_id)
-        tokens = meta["tokens"]
-        if token is not None:
-            tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
-        trash, expired = self._swept_trash(meta)
-        self._write_pointer(
-            {
-                **meta,
-                "seq": seq,
-                "dirs": dirs,
-                "epochs": epochs,
-                "epoch_hwm": hwm,
-                "tokens": tokens,
-                "dir_bytes": dir_bytes,
-                "trash": trash,
-            }
+        self.ledger.commit(
+            {**meta, "seq": seq, "dirs": dirs, "dir_bytes": dir_bytes},
+            epoch_id,
+            token,
         )
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         return True
 
     def has_data(self) -> bool:
-        return bool(self._pointer()["dirs"])
+        return bool(self.ledger.read()["dirs"])
 
     def read(
         self, spark: SparkSession, merge_schema: bool = False
@@ -491,7 +294,7 @@ class LedgeredFactSink:
         first commit. Partition columns (``date=...``) are discovered
         per committed root, so partition pruning on the fill axis is
         identical to the flat layout's."""
-        meta = self._pointer()
+        meta = self.ledger.read()
         if not meta["dirs"]:
             return None
         paths = [os.path.join(self.path, d) for d in meta["dirs"]]
@@ -511,7 +314,7 @@ class LedgeredFactSink:
         deterministic noisy line recurring after a parser regression) —
         the uniqueness the pre-r12 file-level digest got implicitly
         from slot names embedding the monotonic seq."""
-        return self._pointer()["generation"]
+        return self.ledger.read()["generation"]
 
     def replace(self, df: DataFrame, bump_generation: bool = False) -> None:
         """Wholesale swap (dead-letter rewrite after replay, compaction
@@ -523,17 +326,16 @@ class LedgeredFactSink:
         would otherwise lose whichever pointer write landed first).
         ``bump_generation`` advances the content generation atomically
         with the swap (see ``generation``)."""
-        with self._locked():
+        with self.ledger.locked():
             self._replace(df, bump_generation)
 
     def _replace(self, df: DataFrame, bump_generation: bool = False) -> None:
-        meta = self._pointer()
+        meta = self.ledger.read()
         seq = meta["seq"] + 1
-        old_dirs = list(meta["dirs"])
         slot, nbytes = self._stage_and_publish(df, seq)
         # epoch/token history survives the swap: a concurrent stream's
         # retried epoch must still be recognized as committed.
-        self._write_pointer(
+        self.ledger.commit(
             {
                 **meta,
                 "seq": seq,
@@ -542,7 +344,7 @@ class LedgeredFactSink:
                 "generation": meta["generation"] + (1 if bump_generation else 0),
             }
         )
-        for d in old_dirs:
+        for d in meta["dirs"]:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def compact(
@@ -591,8 +393,8 @@ class LedgeredFactSink:
         if max_fold_slots is not None and max_fold_slots < 2:
             raise ValueError("max_fold_slots must be >= 2")
         if small_bytes is None and max_fold_slots is None:
-            with self._locked():
-                meta = self._pointer()
+            with self.ledger.locked():
+                meta = self.ledger.read()
                 if len(meta["dirs"]) <= 1:
                     return 0
                 n = len(meta["dirs"])
@@ -601,7 +403,7 @@ class LedgeredFactSink:
                 # footer would silently destroy later columns for good.
                 self._replace(self.read(spark, merge_schema=True))
                 return n
-        meta = self._pointer()  # lock-free snapshot; re-verified below
+        meta = self.ledger.read()  # lock-free snapshot; re-verified below
         small = self._select_fold(meta, small_bytes, max_fold_slots)
         if len(small) <= 1:
             return 0
@@ -623,8 +425,8 @@ class LedgeredFactSink:
         merged = reader.parquet(*paths).drop("cseq").coalesce(n_out)
         stage, nbytes = self._stage(merged)
 
-        with self._locked():
-            now = self._pointer()
+        with self.ledger.locked():
+            now = self.ledger.read()
             if any(d not in now["dirs"] for d in small):
                 # a replace()/competing compactor removed a source slot
                 # while we staged — the staged output is stale; drop it.
@@ -641,24 +443,10 @@ class LedgeredFactSink:
                 slot = self._publish(stage, seq)
                 dirs.append(slot)
                 dir_bytes[slot] = nbytes
-            # retire the folded slots instead of deleting them: a
-            # reader holding the pre-fold pointer may still be
-            # scanning (see trash_retention_s); the same commit sweeps
-            # previously-retired slots whose retention expired.
-            t_retired = time.time()
-            trash, expired = self._swept_trash(now)
-            trash += [{"dir": d, "t": t_retired} for d in small]
-            self._write_pointer(
-                {
-                    **now,
-                    "seq": seq,
-                    "dirs": dirs,
-                    "dir_bytes": dir_bytes,
-                    "trash": trash,
-                }
+            self.ledger.commit(
+                {**now, "seq": seq, "dirs": dirs, "dir_bytes": dir_bytes},
+                retire=small,
             )
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         return len(small)
 
     def _select_fold(

@@ -24,15 +24,13 @@ count is fixed at table creation (like a Kafka partition count or
 ClickHouse's bucket-by-key sharding): re-bucketing = ``replace()``
 with a new sink.
 
-**Exactly-once.** The table directory keeps a pointer file (atomic
-``os.replace``) naming the current version of every bucket, the
-recently-applied epoch ids, and an epoch **high-water mark**. A
-foreachBatch retry with a seen epoch is a no-op; epochs older than
-the tracked window are caught by the high-water mark (foreachBatch
-epochs are monotonically increasing — Spark replays at most the last
-epoch after a failure, never reorders), so idempotency survives
-arbitrarily long streams. Visibility is all-or-nothing: merged bucket
-versions become live only at the single pointer swap.
+**Exactly-once.** The table commits through the same ``Ledger`` as
+``LedgeredFactSink`` (``sinks/ledger.py`` states its semantics): the
+pointer ``CURRENT.json`` names the current version of every bucket
+beside the epoch and token ledgers, a retried epoch or token is a
+no-op, and merged bucket versions become live only at the single
+pointer swap. Superseded bucket versions are retired, not deleted, so
+a read planned before a fold still finds its files.
 
 **Touched buckets.** A fold learns its touched buckets in one of three
 ways: a pyarrow Table delta carries its bucket ids; a producer that
@@ -58,7 +56,6 @@ SummingMergeTree where the fold is native (sinks/clickhouse.py).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -69,8 +66,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_POINTER = "CURRENT.json"
-_MAX_EPOCHS_TRACKED = 1000
+from adguard2clickhouse_spark.sinks.ledger import Ledger
+
 BUCKET_COL = "_sps_bucket"
 # On-disk bytes of the touched buckets above which an Arrow delta folds
 # in Spark rather than on the driver: the scan layer's file-size target
@@ -98,49 +95,18 @@ class SummingParquetSink:
         self.keys = keys
         self.measures = measures
         self.n_buckets = n_buckets
+        # Scopes the epoch ledger (see ledger.py); the pipeline assigns
+        # the query id from the checkpoint metadata.
+        self.stream_id: str | None = None
+        self.ledger = Ledger(path, "CURRENT.json", version=0, buckets={})
         os.makedirs(path, exist_ok=True)
 
-    # -- pointer management -------------------------------------------------
-    def _pointer(self) -> dict:
-        p = os.path.join(self.path, _POINTER)
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "buckets": {},
-                "epochs": [],
-                "epoch_hwm": None,
-                "replay_tokens": [],
-            }
-        with open(p) as f:
-            meta = json.load(f)
-        meta.setdefault("buckets", {})
-        meta.setdefault("epochs", [])
-        meta.setdefault("epoch_hwm", None)
-        meta.setdefault("replay_tokens", [])
-        return meta
-
-    def _write_pointer(self, meta: dict) -> None:
-        tmp = os.path.join(self.path, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.path, _POINTER))  # atomic
+    def _bucket_dir(self, bucket: int, version: int) -> str:
+        return os.path.join(self.path, self._slot(bucket, version))
 
     @staticmethod
-    def _ledger(meta: dict, epoch_id: int | None, token: str | None) -> dict:
-        """``meta``'s epoch and token ledgers with this fold recorded."""
-        epochs, hwm = meta["epochs"], meta["epoch_hwm"]
-        if epoch_id is not None:
-            epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
-            hwm = epoch_id if hwm is None else max(hwm, epoch_id)
-        tokens = meta["replay_tokens"]
-        if token is not None:
-            tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
-        return {"epochs": epochs, "epoch_hwm": hwm, "replay_tokens": tokens}
-
-    def _bucket_dir(self, bucket: int, version: int) -> str:
-        return os.path.join(self.path, f"b{bucket:04d}", f"v{version:08d}")
+    def _slot(bucket: int, version: int) -> str:
+        return os.path.join(f"b{bucket:04d}", f"v{version:08d}")
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -150,7 +116,7 @@ class SummingParquetSink:
 
     # -- public API ----------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame | None:
-        meta = self._pointer()
+        meta = self.ledger.read()
         if not meta["buckets"]:
             return None
         paths = [
@@ -159,31 +125,13 @@ class SummingParquetSink:
         return spark.read.parquet(*paths)
 
     def applied(self, epoch_id: int) -> bool:
-        meta = self._pointer()
-        hwm = meta["epoch_hwm"]
-        return epoch_id in meta["epochs"] or (hwm is not None and epoch_id <= hwm)
+        return self.ledger.recorded(self.ledger.read(self.stream_id), epoch_id)
 
     def applied_token(self, token: str) -> bool:
-        """Out-of-band (non-stream) delta idempotency: replay and other
-        maintenance folds identify by an opaque token instead of an
-        epoch id — stream epoch ids are MONOTONIC and ``applied`` treats
-        everything ≤ hwm as folded, so an out-of-band fold must never
-        touch epochs/epoch_hwm (a low id would read as already-applied,
-        a high one would make the sink drop every future stream epoch).
-
-        Ledger window: unlike epochs, tokens have no monotonic order, so
-        there is no hwm-style fallback — the ledger keeps only the most
-        recent ``_MAX_EPOCHS_TRACKED`` (1000) tokens. A replay retried
-        after ≥1000 SUBSEQUENT out-of-band folds would no longer be
-        recognized and would double-fold. That window is an operational
-        contract, not a latent bug: replays run while the stream is
-        stopped and retries happen immediately after a crash, so a
-        thousand interleaved maintenance folds before the retry is not
-        a real schedule. If it ever becomes one, raise
-        ``_MAX_EPOCHS_TRACKED`` — the ledger is a pointer-file list,
-        cost is bytes, not IO.
-        """
-        return token in self._pointer()["replay_tokens"]
+        """Out-of-band (non-stream) fold idempotency: replay and other
+        maintenance folds identify by an opaque token in the ledger's
+        token window, never by an epoch id."""
+        return self.ledger.recorded(self.ledger.read(), token=token)
 
     def _stage_dir(self, meta: dict) -> str:
         return os.path.join(
@@ -217,11 +165,11 @@ class SummingParquetSink:
         token: str | None,
     ) -> None:
         """Move each staged ``_sps_bucket=K`` directory into bucket K's
-        next version slot, then make them live with ONE atomic pointer
-        swap (shared by the Spark and the driver-side folds)."""
+        next version slot, then make them live with ONE ledger commit
+        (shared by the Spark and the driver-side folds)."""
         new_version = meta["version"] + 1
         buckets = dict(meta["buckets"])
-        old_dirs = []
+        retired = []
         for b in touched:
             src = os.path.join(stage, f"{BUCKET_COL}={b}")
             dst = self._bucket_dir(b, new_version)
@@ -230,7 +178,7 @@ class SummingParquetSink:
                 # delta folded to an empty bucket (possible only via
                 # replace() shrinking state): drop the bucket entirely.
                 if str(b) in buckets:
-                    old_dirs.append(self._bucket_dir(b, buckets.pop(str(b))))
+                    retired.append(self._slot(b, buckets.pop(str(b))))
                 continue
             # A slot above the pointer's version was left by a fold that
             # crashed before its swap: no reader can see it, and rename
@@ -239,19 +187,15 @@ class SummingParquetSink:
             os.replace(src, dst)
             prev = buckets.get(str(b))
             if prev is not None:
-                old_dirs.append(self._bucket_dir(b, prev))
+                retired.append(self._slot(b, prev))
             buckets[str(b)] = new_version
 
-        self._write_pointer(
-            {
-                "version": new_version,
-                "buckets": buckets,
-                **self._ledger(meta, epoch_id, token),
-            }
+        self.ledger.commit(
+            {**meta, "version": new_version, "buckets": buckets},
+            epoch_id,
+            token,
+            retire=retired,
         )
-        # post-swap cleanup: superseded bucket versions + stage leftovers
-        for d in old_dirs:
-            shutil.rmtree(d, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)
 
     def replace(self, full: DataFrame) -> None:
@@ -259,9 +203,12 @@ class SummingParquetSink:
         every bucket as the next version and point at it atomically. The
         applied-epoch history is preserved so a concurrent stream's
         retried epoch is still recognized as folded-in."""
-        meta = self._pointer()
-        tagged = self._with_bucket(full)
-        self._install(tagged, list(range(self.n_buckets)), meta, epoch_id=None)
+        with self.ledger.locked():
+            self.ledger.gc()
+            tagged = self._with_bucket(full)
+            self._install(
+                tagged, list(range(self.n_buckets)), self.ledger.read(), None
+            )
 
     def apply_delta(
         self,
@@ -269,12 +216,13 @@ class SummingParquetSink:
         epoch_id: int | None = None,
         token: str | None = None,
         touched: list[int] | None = None,
-    ) -> None:
+    ) -> bool:
         """Fold a delta into the table (idempotent per epoch_id for
         stream epochs, per ``token`` for out-of-band folds like
-        dead-letter replay — see ``applied_token`` for why those two
+        dead-letter replay — see ``sinks/ledger.py`` for why those two
         must be separate ledgers), rewriting only the hash buckets the
-        delta touches.
+        delta touches. Returns False for the no-op retry of a recorded
+        epoch/token.
 
         ``delta`` is a Spark DataFrame, or a pyarrow Table whose rows
         carry their ``BUCKET_COL`` id (computed in Spark with
@@ -288,32 +236,33 @@ class SummingParquetSink:
         materializes its deltas); the fold then skips the discovery
         job. Without it, one discovery job (a ≤ n_buckets-row collect)
         finds the touched buckets before the fold."""
-        meta = self._pointer()
-        if epoch_id is not None and self.applied(epoch_id):
-            return  # retry of an applied epoch — exactly-once no-op
-        if token is not None and token in meta["replay_tokens"]:
-            return  # retry of an applied out-of-band fold — no-op
-
-        if isinstance(delta, pa.Table):
-            self._fold_arrow(delta, meta, epoch_id, token)
-        elif touched is not None:
-            self._fold_spark(delta, sorted(touched), meta, epoch_id, token)
-        else:
-            tagged = self._with_bucket(delta).persist()
-            try:
-                touched = sorted(
-                    r[0] for r in tagged.select(BUCKET_COL).distinct().collect()
-                )
-                self._fold_spark(tagged, touched, meta, epoch_id, token)
-            finally:
-                tagged.unpersist()
+        with self.ledger.locked():
+            meta = self.ledger.read(self.stream_id)
+            if self.ledger.recorded(meta, epoch_id, token):
+                return False
+            self.ledger.gc()
+            if isinstance(delta, pa.Table):
+                self._fold_arrow(delta, meta, epoch_id, token)
+            elif touched is not None:
+                self._fold_spark(delta, sorted(touched), meta, epoch_id, token)
+            else:
+                tagged = self._with_bucket(delta).persist()
+                try:
+                    touched = sorted(
+                        r[0]
+                        for r in tagged.select(BUCKET_COL).distinct().collect()
+                    )
+                    self._fold_spark(tagged, touched, meta, epoch_id, token)
+                finally:
+                    tagged.unpersist()
+        return True
 
     def _record_empty(
         self, meta: dict, epoch_id: int | None, token: str | None
     ) -> None:
         """An empty delta still records its epoch/token for idempotency."""
         if epoch_id is not None or token is not None:
-            self._write_pointer({**meta, **self._ledger(meta, epoch_id, token)})
+            self.ledger.commit(meta, epoch_id, token)
 
     def _fold_spark(
         self,

@@ -176,8 +176,8 @@ class QuerylogPipeline:
             max_workers=1, thread_name_prefix="ledger-maint"
         )
         self._maint_future = None
-        # Streaming-query identity for the fact/dead-letter epoch
-        # ledgers (ADVICE r10): resolved lazily from the checkpoint's
+        # Streaming-query identity for every sink's epoch ledger
+        # (ADVICE r10): resolved lazily from the checkpoint's
         # metadata file (Spark writes it at query init, before the
         # first batch) and handed to the sinks, so a deleted/relocated
         # checkpoint — epoch ids restarting at 0 — voids the stale
@@ -242,8 +242,8 @@ class QuerylogPipeline:
 
     def _require_stream_stopped(self, op: str) -> None:
         """Maintenance that swaps ledgers out from under the stream
-        (compaction from a second thread, dead-letter replay) must not
-        race the per-epoch appends. The sinks' flock already prevents
+        (compaction from a second thread, dead-letter replay, aggregate
+        rebuild) must not race the per-epoch appends. The sinks' flock already prevents
         CORRUPTION (writers serialize), but interleaving would still
         produce surprising orders — e.g. a replay reading a dead-letter
         set mid-swap. Enforced, not documented (VERDICT r10 #2).
@@ -357,12 +357,12 @@ class QuerylogPipeline:
 
             return run
 
-        # Scope the fact/dead-letter epoch ledgers to this streaming
-        # query's identity (see __init__) before any append this epoch.
+        # Scope every sink's epoch ledger to this streaming query's
+        # identity (see __init__) before any commit this epoch.
         sid = self._resolve_stream_identity()
         if sid is not None:
-            self.log2_sink.stream_id = sid
-            self.dead_sink.stream_id = sid
+            for sink in (self.log2_sink, self.dead_sink, *self.sinks.values()):
+                sink.stream_id = sid
 
         # Right-size the epoch before the parse. Every Python task pays a
         # fixed ~0.24 CPU-s before it reads a row (most of it in
@@ -665,8 +665,14 @@ class QuerylogPipeline:
         all require manual INSERT SELECT surgery there; README.md:24-189
         defines them insert-time-only). Here the fact table is the
         source of truth: recompute any aggregate wholesale and swap it
-        in atomically via the sink's versioned pointer. Streaming can
-        keep appending — the next epoch folds onto the rebuilt base."""
+        in atomically via the sink's versioned pointer.
+
+        RAISES while this pipeline's stream is active: an epoch that
+        committed to log2 after the rebuild's read and folded before
+        its swap would be recorded as applied yet missing from the
+        rebuilt base. Another process streaming into the same out_dir
+        must be stopped too."""
+        self._require_stream_stopped("rebuild_aggregates")
         log2 = self.read_log2().persist()
         try:
             for name in names or list(self.aggregates):
@@ -702,10 +708,8 @@ class QuerylogPipeline:
 
         Sum/xor over full-range 64-bit hashes: the sums go through
         decimal(38,0) — ANSI mode makes long sums RAISE on overflow.
-        The token is checked against ``SummingParquetSink``'s
-        ``replay_tokens`` ledger (most recent 1000 entries, see
-        ``applied_token``) and the fact sink's token ledger for the
-        log2 append."""
+        The token is checked against every sink's token ledger (most
+        recent 1000 entries, see ``sinks/ledger.py``)."""
         import hashlib
 
         dead = self.dead_sink.read(self.spark)
@@ -742,7 +746,7 @@ class QuerylogPipeline:
         (``applied_token``), sinks that didn't fold now; untouched
         buckets' files are never rewritten (byte-identical — asserted
         in tests/test_streaming.py). The token ledger is separate from
-        stream epochs on purpose — see ``SummingParquetSink.applied_token``.
+        stream epochs on purpose — see ``sinks/ledger.py``.
 
         ``mode="rebuild"``: full recompute from the fact table via
         ``rebuild_aggregates`` — the right tool when the aggregate

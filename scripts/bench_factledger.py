@@ -144,7 +144,7 @@ def main() -> None:
                 compacts.append(res)
         if future is None:
             future = pool.submit(fold_step, e)
-        n_slots = len(sink._pointer()["dirs"])
+        n_slots = len(sink.ledger.read()["dirs"])
         epoch_walls.append(time.time() - t_epoch)
         slot_counts.append(n_slots)
         if (e + 1) % 25 == 0:

@@ -232,7 +232,7 @@ def main() -> None:
     # installs (bucket-set rewrites); buckets == live bucket dirs.
     sinks = {}
     for name, sink in pipe.sinks.items():
-        meta = sink._pointer()
+        meta = sink.ledger.read()
         sinks[name] = {
             "installs": meta["version"],
             "live_buckets": len(meta["buckets"]),

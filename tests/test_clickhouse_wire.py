@@ -833,7 +833,7 @@ def test_small_epoch_runs_as_one_task(tmp_path, spark):
     assert sorted(t for t, _ in received) == ["log2_epoch_0_p0", "log2_epoch_1_p0"]
     epochs = [t for t in pipe.batch_timings if "parts" in t]
     assert [(t["parts"], t["n_lines"]) for t in epochs] == [(1, 30), (1, 30)]
-    slots = pipe.log2_sink._pointer()["dirs"]
+    slots = pipe.log2_sink.ledger.read()["dirs"]
     assert len(slots) == 2
     for slot in slots:
         dates = sorted(glob.glob(str(out / "log2" / slot / "date=*")))

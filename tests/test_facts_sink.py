@@ -52,9 +52,9 @@ def test_epoch_hwm_covers_evicted_window(sink, spark):
     high-water mark (foreachBatch epochs are monotonic)."""
     df = _df(spark, [("2024-01-01", 1, "a.com")])
     sink.append(df, epoch_id=7)
-    meta = sink._pointer()
+    meta = sink.ledger.read()
     meta["epochs"] = []  # simulate window eviction
-    sink._write_pointer(meta)
+    sink.ledger.write(meta)
     assert sink.applied(7) and sink.applied(3)
     assert sink.append(df, epoch_id=5) is False
 
@@ -90,7 +90,7 @@ def test_empty_epoch_commits_idempotency_without_directory(sink, spark):
     empty = df.filter("date_time < 0")
     assert sink.append(empty, epoch_id=0) is True
     assert sink.applied(0)
-    assert sink._pointer()["dirs"] == []
+    assert sink.ledger.read()["dirs"] == []
     assert sink.read(spark) is None
 
 
@@ -102,7 +102,7 @@ def test_token_ledger_is_separate_from_epochs(sink, spark):
     sink.append(df, epoch_id=10)
     assert sink.append(df, token="replay-1") is True
     assert sink.append(df, token="replay-1") is False
-    assert sink._pointer()["epoch_hwm"] == 10  # untouched by the token
+    assert sink.ledger.read()["epoch_hwm"] == 10  # untouched by the token
     assert sink.append(df, epoch_id=11) is True
     assert sink.read(spark).count() == 3
 
@@ -129,9 +129,9 @@ def test_partition_pruning_survives_the_ledgered_layout(sink, spark):
 def test_compact_folds_epoch_dirs_and_preserves_ledgers(sink, spark):
     for e in range(5):
         sink.append(_df(spark, [("2024-01-01", e, f"q{e}.com")]), epoch_id=e)
-    assert len(sink._pointer()["dirs"]) == 5
+    assert len(sink.ledger.read()["dirs"]) == 5
     assert sink.compact(spark) == 5
-    assert len(sink._pointer()["dirs"]) == 1
+    assert len(sink.ledger.read()["dirs"]) == 1
     assert sink.read(spark).count() == 5
     assert sink.applied(4)  # epoch history survives compaction
     assert sink.append(
@@ -166,7 +166,7 @@ def test_bounded_compaction_merges_only_small_dirs(sink, spark):
     # one "large" slot (many rows) + a trickle of small epochs
     big = _df(spark, [("2024-01-01", i, f"b{i}.com") for i in range(500)])
     sink.append(big, epoch_id=0)
-    big_dir = sink._pointer()["dirs"][0]
+    big_dir = sink.ledger.read()["dirs"][0]
     for e in range(1, 5):
         sink.append(_df(spark, [("2024-01-01", e, f"s{e}.com")]), epoch_id=e)
 
@@ -190,7 +190,7 @@ def test_bounded_compaction_merges_only_small_dirs(sink, spark):
     # threshold below the big slot, above each single-row epoch
     folded = sink.compact(spark, small_bytes=big_bytes)
     assert folded == 4
-    meta = sink._pointer()
+    meta = sink.ledger.read()
     assert big_dir in meta["dirs"] and len(meta["dirs"]) == 2
     assert _hashes(big_dir) == before, "large slot must not be rewritten"
     assert sink.read(spark).count() == 504
@@ -228,7 +228,7 @@ def test_pipeline_compact_facts_keeps_reads_identical(spark, tmp_path):
     q = pipe.start(available_now=True, max_files_per_trigger=1)
     q.awaitTermination()
     before = sorted(map(repr, pipe.read_log2().collect()))
-    assert len(pipe.log2_sink._pointer()["dirs"]) >= 2  # one per epoch
+    assert len(pipe.log2_sink.ledger.read()["dirs"]) >= 2  # one per epoch
     folded = pipe.compact_facts()  # default threshold: everything is small
     assert folded >= 2
     assert sorted(map(repr, pipe.read_log2().collect())) == before
@@ -337,7 +337,7 @@ def test_model_based_random_ops_agree_with_reference(sink, spark, tmp_path):
             next_epoch = 0
         elif op == "crash_orphan":
             # publish-without-commit leftover
-            seq = sink._pointer()["seq"] + 1 + rng.randint(0, 3)
+            seq = sink.ledger.read()["seq"] + 1 + rng.randint(0, 3)
             d = os.path.join(sink.path, f"cseq={seq:08d}")
             if not os.path.exists(d):
                 _df(spark, rows_for("orph", 2)).write.partitionBy(
@@ -357,7 +357,7 @@ def test_model_based_random_ops_agree_with_reference(sink, spark, tmp_path):
             assert sink.append(_df(spark, rows), token=f"tok-{step}")
             model.extend(rows)
         elif op == "token_retry":
-            tokens = sink._pointer()["tokens"]
+            tokens = sink.ledger.read()["tokens"]
             if tokens:
                 assert sink.append(
                     _df(spark, rows_for("ghost", 1)),
@@ -470,7 +470,7 @@ def test_stream_identity_grandfathers_unscoped_pointer(spark, tmp_path):
     assert new.applied(5)
     assert new.append(df, epoch_id=5) is False  # grandfathered, not voided
     assert new.append(df, epoch_id=6) is True
-    assert new._pointer()["stream_id"] == "q-one"  # scoped from here on
+    assert new.ledger.read()["stream_id"] == "q-one"  # scoped from here on
 
 
 def test_incremental_tiered_compaction_folds_k_oldest(sink, spark):
@@ -481,11 +481,11 @@ def test_incremental_tiered_compaction_folds_k_oldest(sink, spark):
     df = _df(spark, [("2024-01-01", i, f"d{i}.com") for i in range(5)])
     for e in range(10):
         assert sink.append(df, epoch_id=e) is True
-    assert len(sink._pointer()["dirs"]) == 10
+    assert len(sink.ledger.read()["dirs"]) == 10
 
     folded = sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4)
     assert folded == 4
-    meta = sink._pointer()
+    meta = sink.ledger.read()
     assert len(meta["dirs"]) == 7  # 10 - 4 + 1 merged
     # identical epochs => identical sizes => one tier: the OLDEST fold
     for old in ("cseq=00000001", "cseq=00000004"):
@@ -500,7 +500,7 @@ def test_incremental_tiered_compaction_folds_k_oldest(sink, spark):
         if sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 0:
             break
     assert sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 0
-    assert len(sink._pointer()["dirs"]) < 7
+    assert len(sink.ledger.read()["dirs"]) < 7
     assert sink.read(spark).count() == 50
     # epoch idempotency survives maintenance
     assert sink.applied(9)
@@ -513,10 +513,10 @@ def test_tiered_compaction_respects_small_bytes_cap(sink, spark):
     df = _df(spark, [("2024-01-01", i, f"d{i}.com") for i in range(5)])
     for e in range(4):
         sink.append(df, epoch_id=e)
-    meta = sink._pointer()
+    meta = sink.ledger.read()
     # every slot is "large" under a 1-byte threshold: nothing to fold
     assert sink.compact(spark, small_bytes=1, max_fold_slots=2) == 0
-    assert sink._pointer()["dirs"] == meta["dirs"]
+    assert sink.ledger.read()["dirs"] == meta["dirs"]
     with pytest.raises(ValueError, match="max_fold_slots"):
         sink.compact(spark, small_bytes=1 << 30, max_fold_slots=1)
 
@@ -538,13 +538,15 @@ def test_replace_generation_bumps_only_when_asked(sink, spark):
     assert sink.generation() == 1
 
 
-def test_reader_holding_prefold_snapshot_survives_fold(sink, spark):
+def test_reader_holding_prefold_snapshot_survives_fold(sink, spark, monkeypatch):
     """r12 trash retention: a fold COMMITS atomically but must not
     delete the superseded slots while a reader that listed the old
     pointer is still scanning — the exact FileNotFoundException race
     observed the moment folds moved off the writer thread. The folded
-    slots stay on disk for trash_retention_s and later commits sweep
+    slots stay on disk for ledger.RETENTION_S and later commits sweep
     them."""
+    from adguard2clickhouse_spark.sinks import ledger
+
     df = _df(spark, [("2024-01-01", i, f"d{i}.com") for i in range(5)])
     for e in range(4):
         sink.append(df, epoch_id=e)
@@ -552,16 +554,16 @@ def test_reader_holding_prefold_snapshot_survives_fold(sink, spark):
     assert sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 4
     # the old listing still resolves: retired slots are in trash
     assert reader.count() == 20
-    meta = sink._pointer()
+    meta = sink.ledger.read()
     assert len(meta["trash"]) == 4
     assert len(meta["dirs"]) == 1
     # retired slots are protected from orphan GC while retained
     sink.append(df, epoch_id=99)
     assert reader.count() == 20
     # expiry: later commits physically sweep them
-    sink.trash_retention_s = 0.0
+    monkeypatch.setattr(ledger, "RETENTION_S", 0.0)
     sink.append(df, epoch_id=100)
-    meta = sink._pointer()
+    meta = sink.ledger.read()
     assert meta["trash"] == []
     leftover = [d for d in os.listdir(sink.path) if d.startswith("cseq=")]
     assert sorted(leftover) == sorted(meta["dirs"])

@@ -236,14 +236,17 @@ def test_latest_selfcheck_queries_stay_cold_fast():
     finally samples them they must pass COLD. The selfcheck records
     each query's cold wall (vanilla session, first execution); hold
     every one under 8 s so operator growth can't silently push the
-    tail past the driver's patience. (r9 slowest: 4.85 s.)"""
+    tail past the driver's patience. (r9 slowest: 4.85 s.) Each slow
+    row is reported with its JVM CPU-s and job count: a stall shows as
+    a long wall on the usual CPU and jobs, slower code as more of
+    either."""
     import json
 
     repo = Path(__file__).resolve().parent.parent
     for latest in _latest_selfcheck_stamps(repo):
         rows = json.loads(latest.read_text())
         slow = {
-            k: v["secs"]
+            k: {f: v.get(f) for f in ("secs", "jvm_cpu_s", "jobs")}
             for k, v in rows.items()
             if not k.startswith("_") and v.get("secs", 0) >= 8
         }

@@ -94,7 +94,7 @@ def test_epoch_retry_is_noop(run_dirs, spark):
     good, _ = parse_querylog(raw)
     delta = agg.qt_stats(good)
 
-    applied_epoch = sink._pointer()["epochs"][0]
+    applied_epoch = sink.ledger.read()["epochs"][0]
     sink.apply_delta(delta, epoch_id=applied_epoch)  # retry → no-op
     after = {tuple(r) for r in sink.read(spark).collect()}
     assert after == before
@@ -551,8 +551,7 @@ def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark, monkeypatch):
     good, _ = parse_querylog(
         spark.createDataFrame([(l,) for l in recoverable], ["raw_line"]), "raw_line"
     )
-    token = [t for s in [pipe.sinks["visited_domains"]._pointer()]
-             for t in s["replay_tokens"]][-1]
+    token = pipe.sinks["visited_domains"].ledger.read()["tokens"][-1]
     pipe.sinks["visited_domains"].apply_delta(
         agg.ALL_AGGREGATES["visited_domains"](good), None, token
     )
@@ -781,7 +780,7 @@ def test_auto_compaction_bounds_committed_slots(tmp_path, spark, monkeypatch):
     final = pipe.join_maintenance()  # drain the in-flight background fold
     if final:
         pipe.batch_timings.append(final)
-    dirs = pipe.log2_sink._pointer()["dirs"]
+    dirs = pipe.log2_sink.ledger.read()["dirs"]
     # unbounded = one slot per epoch (12); tiered maintenance keeps it
     # logarithmic (fanout 2 over 12 epochs: a handful)
     assert len(dirs) <= 4, dirs
@@ -826,7 +825,7 @@ def test_large_slots_never_fold_on_the_batch_thread(tmp_path, spark, monkeypatch
     for _ in range(n_large):
         pipe.log2_sink.append(seed)
     seed.unpersist()
-    meta = pipe.log2_sink._pointer()
+    meta = pipe.log2_sink.ledger.read()
     assert len(meta["dirs"]) == n_large
     # every seeded slot sits at or above the threshold: no fold shrinks it
     threshold = min(meta["dir_bytes"].values())
@@ -852,7 +851,7 @@ def test_large_slots_never_fold_on_the_batch_thread(tmp_path, spark, monkeypatch
 
     assert calls, "the background step must have run"
     assert all(name.startswith("ledger-maint") for name in calls), calls
-    meta = pipe.log2_sink._pointer()
+    meta = pipe.log2_sink.ledger.read()
     epoch_slots = [d for d in meta["dirs"] if meta["dir_bytes"][d] < threshold]
     assert epoch_slots, "the one-line epochs must leave small slots"
     assert pipe.read_log2().count() == n_large * n_seed + n_epochs
@@ -875,6 +874,8 @@ def test_maintenance_raises_while_stream_active(tmp_path, spark):
             pipe.compact_facts()
         with pytest.raises(RuntimeError, match="stream is stopped"):
             pipe.replay_dead_letters()
+        with pytest.raises(RuntimeError, match="stream is stopped"):
+            pipe.rebuild_aggregates()
     finally:
         q.stop()
         q.awaitTermination()
@@ -885,8 +886,10 @@ def test_maintenance_raises_while_stream_active(tmp_path, spark):
 def test_checkpoint_recreation_does_not_drop_epochs(tmp_path, spark):
     """ADVICE r10 low: epoch ids restart at 0 when the checkpoint is
     deleted while out_dir is kept. Pre-r11 every new epoch up to the
-    old high-water mark silently vanished from log2; the epoch ledger
-    is now scoped to the streaming-query identity."""
+    old high-water mark silently vanished from log2, and until every
+    sink committed through the shared ledger it still vanished from
+    the aggregates; each sink's epoch ledger is now scoped to the
+    streaming-query identity."""
     import shutil as _shutil
 
     src = tmp_path / "src"
@@ -901,25 +904,32 @@ def test_checkpoint_recreation_does_not_drop_epochs(tmp_path, spark):
     q = pipe.start(available_now=True, max_files_per_trigger=1)
     q.awaitTermination()
     assert pipe.read_log2().count() == 3
-    assert pipe.log2_sink._pointer()["stream_id"] is not None
+    assert pipe.log2_sink.ledger.read()["stream_id"] is not None
 
-    # operator error: checkpoint wiped, data dir kept
+    # operator error: checkpoint wiped, data dir kept; the old files
+    # were rotated away and two new ones arrived
     _shutil.rmtree(pipe.checkpoint_dir)
+    for i in range(3):
+        (src / f"f{i}.jsonl").unlink()
     for i in range(3, 5):
         (src / f"f{i}.jsonl").write_text(
             _line(i, minute=i, filtered=False, qh=f"a{i}.example.com",
                   ip="10.0.0.1") + "\n"
         )
     pipe2 = QuerylogPipeline(spark, str(src), out)
-    q2 = pipe2.start(available_now=True, max_files_per_trigger=1)
-    q2.awaitTermination()
-    # the new query re-reads ALL 5 files (offsets were deleted) under
-    # restarted epoch ids 0..4; the voided ledger lets them append.
-    # Note this is the at-least-once cost of deleting offsets — the
-    # original 3 rows duplicate (source re-delivery, which ingest-side
-    # dedupe_horizon exists for), but the NEW files must never vanish.
-    qhs = {r.QH for r in pipe2.read_log2().select("QH").distinct().collect()}
+    pipe2.run_available()
+    # the new query reads both new files as its epoch 0, at or below
+    # the old high-water mark; the voided ledgers let every sink
+    # commit it.
+    log2 = pipe2.read_log2()
+    qhs = {r.QH for r in log2.select("QH").distinct().collect()}
     assert {"a3.example.com", "a4.example.com"} <= qhs
+    assert log2.count() == 5
+    for name, fn in agg.ALL_AGGREGATES.items():
+        want = fn(log2)
+        got = pipe2.read_aggregate(name)  # None: no rows ever folded
+        got = [] if got is None else got.select(*want.columns).collect()
+        assert {tuple(r) for r in got} == {tuple(r) for r in want.collect()}, name
 
 
 def test_noisy_source_dead_channel_stays_bounded(tmp_path, spark, monkeypatch):
@@ -947,7 +957,7 @@ def test_noisy_source_dead_channel_stays_bounded(tmp_path, spark, monkeypatch):
     final = pipe.join_maintenance()  # drain the in-flight background fold
     if final:
         pipe.batch_timings.append(final)
-    dead_dirs = pipe.dead_sink._pointer()["dirs"]
+    dead_dirs = pipe.dead_sink.ledger.read()["dirs"]
     # unbounded = one slot per epoch (12); tiered maintenance keeps it
     # logarithmic (fanout 2 over 12 epochs: a handful)
     assert len(dead_dirs) <= 5, dead_dirs
@@ -1017,7 +1027,7 @@ def test_crashed_replay_retry_noops_after_dead_compaction(tmp_path, spark):
         [(l,) for l in rec[:2] + ["{ not json"]], ["raw_line"]))
     pipe.dead_sink.append(spark.createDataFrame(
         [(l,) for l in rec[2:]], ["raw_line"]))
-    assert len(pipe.dead_sink._pointer()["dirs"]) == 2
+    assert len(pipe.dead_sink.ledger.read()["dirs"]) == 2
 
     # crash the replay AFTER the log2 append: first aggregate fold dies
     orig = pipe.sinks["visited_domains"].apply_delta

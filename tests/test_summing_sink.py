@@ -18,10 +18,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from adguard2clickhouse_spark.sinks.summing import (
-    _MAX_EPOCHS_TRACKED,
-    SummingParquetSink,
-)
+from adguard2clickhouse_spark.sinks.ledger import _MAX_EPOCHS_TRACKED
+from adguard2clickhouse_spark.sinks.summing import SummingParquetSink
 
 
 def _data_file_digests(root: str) -> dict[str, str]:
@@ -50,7 +48,7 @@ def test_single_bucket_delta_leaves_other_buckets_byte_identical(tmp_path, spark
     # seed with enough distinct keys that several buckets exist
     seed = [(f"key{i}", 1) for i in range(64)]
     sink = _mk_sink(tmp_path, spark, seed)
-    meta0 = sink._pointer()
+    meta0 = sink.ledger.read()
     assert len(meta0["buckets"]) > 1, "need multi-bucket state for this test"
 
     before = _data_file_digests(sink.path)
@@ -63,7 +61,7 @@ def test_single_bucket_delta_leaves_other_buckets_byte_identical(tmp_path, spark
     sink.apply_delta(delta, epoch_id=1)
 
     after = _data_file_digests(sink.path)
-    meta1 = sink._pointer()
+    meta1 = sink.ledger.read()
 
     touched_dir = f"b{bucket_of_key0:04d}"
     for rel, digest in before.items():
@@ -112,12 +110,12 @@ def test_epoch_high_water_mark_survives_window_eviction(tmp_path, spark):
     sink = _mk_sink(tmp_path, spark, [("a", 1)])
     # simulate a long-running stream: the tracked-epoch window has
     # rolled far past epoch 0
-    meta = sink._pointer()
+    meta = sink.ledger.read()
     meta["epochs"] = list(
         range(10_000, 10_000 + _MAX_EPOCHS_TRACKED)
     )  # window full, epoch 0 long gone
     meta["epoch_hwm"] = meta["epochs"][-1]
-    sink._write_pointer(meta)
+    sink.ledger.write(meta)
 
     before = dict(sink.read(spark).collect())
     # a retry of ANY epoch <= hwm must be a no-op even though it's not
@@ -344,10 +342,10 @@ def test_driver_fold_retry_is_noop(tmp_path, spark):
     delta = _arrow_delta(spark, sink, [("k1", 5), ("new", 2)])
     sink.apply_delta(delta, 1)
     before = _data_file_digests(sink.path)
-    pointer = sink._pointer()
+    pointer = sink.ledger.read()
     sink.apply_delta(delta, 1)  # retry of the applied epoch
     assert _data_file_digests(sink.path) == before
-    assert sink._pointer() == pointer
+    assert sink.ledger.read() == pointer
     got = dict(sink.read(spark).collect())
     assert got["k1"] == 6 and got["new"] == 2 and got["k2"] == 1
 
@@ -357,7 +355,8 @@ def test_driver_fold_crash_before_swap_keeps_previous_version(
 ):
     """A driver-side fold that dies after staging and moving its bucket
     versions but before the pointer swap leaves the previous version
-    readable; the retried epoch then folds exactly once."""
+    readable; the retried epoch then folds exactly once, and its
+    commit garbage-collects the crashed fold's stage directory."""
     sink = SummingParquetSink(str(tmp_path / "t"), keys=["k"], measures=["cnt"])
     sink.apply_delta(_arrow_delta(spark, sink, [(f"k{i}", 1) for i in range(40)]), 0)
     before = sorted(sink.read(spark).collect())
@@ -366,7 +365,7 @@ def test_driver_fold_crash_before_swap_keeps_previous_version(
     def crash(meta):
         raise RuntimeError("injected crash before the pointer swap")
 
-    monkeypatch.setattr(sink, "_write_pointer", crash)
+    monkeypatch.setattr(sink.ledger, "write", crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         sink.apply_delta(delta, 1)
     monkeypatch.undo()
@@ -376,6 +375,30 @@ def test_driver_fold_crash_before_swap_keeps_previous_version(
     sink.apply_delta(delta, 1)  # the retry
     got = dict(sink.read(spark).collect())
     assert got == {f"k{i}": 11 if i % 3 == 0 else 1 for i in range(40)}
+    assert not [n for n in os.listdir(sink.path) if n.startswith(".stage.")]
+
+
+def test_read_planned_before_a_fold_survives_it(tmp_path, spark, monkeypatch):
+    """A read planned before a fold still collects after it (the
+    ``pipe.sql()`` dashboard read against a running stream): the fold
+    retires the bucket versions it supersedes instead of deleting them,
+    and a commit after the retention window deletes them."""
+    sink = SummingParquetSink(str(tmp_path / "t"), keys=["k"], measures=["cnt"])
+    seed = [(f"k{i}", 1) for i in range(40)]
+    sink.apply_delta(_arrow_delta(spark, sink, seed), 0)
+    reader = sink.read(spark)  # lists the files of the current versions
+    sink.apply_delta(_arrow_delta(spark, sink, seed), 1)
+    assert sorted(reader.collect()) == sorted(seed)
+
+    from adguard2clickhouse_spark.sinks import ledger
+
+    retired = [t["dir"] for t in sink.ledger.read()["trash"]]
+    assert retired
+    assert all(os.path.isdir(os.path.join(sink.path, d)) for d in retired)
+    monkeypatch.setattr(ledger, "RETENTION_S", 0.0)
+    sink.apply_delta(_arrow_delta(spark, sink, [("k0", 1)]), 2)
+    assert not any(os.path.exists(os.path.join(sink.path, d)) for d in retired)
+    assert dict(sink.read(spark).collect())["k0"] == 3
 
 
 def test_driver_fold_above_byte_bound_folds_in_spark(tmp_path, spark, monkeypatch):
