@@ -331,8 +331,8 @@ def fused_aggregate_deltas(
 
     With ``n_buckets``, every fused row also carries its summing-sink
     bucket (``BUCKET_COL``) and the extractors keep it, so each delta
-    folds into a sink of that many buckets without re-hashing; see
-    ``touched_buckets`` for the buckets each delta touches.
+    folds into a sink of that many buckets without re-hashing
+    (``fused_arrow_deltas``).
     """
     proj = log2.select(
         "QH",
@@ -370,22 +370,6 @@ def fused_aggregate_deltas(
         for name, spec in _FUSED_SPECS.items()
     }
     return fused, extractors
-
-
-def touched_buckets(fused: DataFrame) -> dict[str, list[int]]:
-    """Each aggregate's exact touched buckets in a bucket-tagged fused
-    frame (``fused_aggregate_deltas(..., n_buckets=...)``): the buckets
-    of the rows its extractor keeps. blocked/visited_domains share the
-    QH grouping but keep different rows, and tld_stats drops its NULL
-    key, so the sets are taken per aggregate. One Spark job; on a
-    persisted frame it is also the job that materializes the cache."""
-    row = fused.agg(
-        *[
-            F.collect_set(F.when(_kept(spec), F.col(BUCKET_COL))).alias(name)
-            for name, spec in _FUSED_SPECS.items()
-        ]
-    ).collect()[0]
-    return {name: sorted(row[name]) for name in _FUSED_SPECS}
 
 
 def fused_arrow_deltas(

@@ -317,35 +317,34 @@ class LedgeredFactSink:
         return self.ledger.read()["generation"]
 
     def replace(self, df: DataFrame, bump_generation: bool = False) -> None:
-        """Wholesale swap (dead-letter rewrite after replay, compaction
-        target): stage the new content — while any reader of the OLD
-        committed dirs, including ``df`` itself when it derives from
-        this sink, can still finish — then commit a ledger pointing
+        """Wholesale swap (the dead-letter rewrite after a replay):
+        stage the new content — while any reader of the OLD committed
+        dirs, including ``df`` itself when it derives from this sink,
+        can still finish — then commit a ledger pointing
         only at the new directory and delete the superseded ones.
         Serialized by the pointer lock (a swap racing a live append
         would otherwise lose whichever pointer write landed first).
         ``bump_generation`` advances the content generation atomically
         with the swap (see ``generation``)."""
         with self.ledger.locked():
-            self._replace(df, bump_generation)
-
-    def _replace(self, df: DataFrame, bump_generation: bool = False) -> None:
-        meta = self.ledger.read()
-        seq = meta["seq"] + 1
-        slot, nbytes = self._stage_and_publish(df, seq)
-        # epoch/token history survives the swap: a concurrent stream's
-        # retried epoch must still be recognized as committed.
-        self.ledger.commit(
-            {
-                **meta,
-                "seq": seq,
-                "dirs": [slot] if slot else [],
-                "dir_bytes": {slot: nbytes} if slot else {},
-                "generation": meta["generation"] + (1 if bump_generation else 0),
-            }
-        )
-        for d in meta["dirs"]:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+            meta = self.ledger.read()
+            seq = meta["seq"] + 1
+            slot, nbytes = self._stage_and_publish(df, seq)
+            # epoch/token history survives the swap: a concurrent
+            # stream's retried epoch must still be recognized as
+            # committed.
+            self.ledger.commit(
+                {
+                    **meta,
+                    "seq": seq,
+                    "dirs": [slot] if slot else [],
+                    "dir_bytes": {slot: nbytes} if slot else {},
+                    "generation": meta["generation"]
+                    + (1 if bump_generation else 0),
+                }
+            )
+            for d in meta["dirs"]:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def compact(
         self,
@@ -358,7 +357,8 @@ class LedgeredFactSink:
         directories folded away.
 
         ``small_bytes=None`` folds EVERYTHING into one directory —
-        fine for tables that fit a rewrite. At warehouse scale a full
+        fine for tables that fit a rewrite; it takes the same staged,
+        retiring path as the bounded folds below. At warehouse scale a full
         rewrite is exactly the cost this sink exists to avoid, so pass
         ``small_bytes``: only directories smaller than that threshold
         are merged (the steady trickle of micro-batch epochs), while
@@ -392,23 +392,14 @@ class LedgeredFactSink:
         the epoch/token ledgers are preserved."""
         if max_fold_slots is not None and max_fold_slots < 2:
             raise ValueError("max_fold_slots must be >= 2")
-        if small_bytes is None and max_fold_slots is None:
-            with self.ledger.locked():
-                meta = self.ledger.read()
-                if len(meta["dirs"]) <= 1:
-                    return 0
-                n = len(meta["dirs"])
-                # mergeSchema: compaction rewrites history, so it must
-                # carry the UNION schema — sampling one pre-evolution
-                # footer would silently destroy later columns for good.
-                self._replace(self.read(spark, merge_schema=True))
-                return n
         meta = self.ledger.read()  # lock-free snapshot; re-verified below
         small = self._select_fold(meta, small_bytes, max_fold_slots)
         if len(small) <= 1:
             return 0
         paths = [os.path.join(self.path, d) for d in small]
-        # mergeSchema for the same reason as the full fold above
+        # mergeSchema: compaction rewrites history, so it must carry the
+        # UNION schema — sampling one pre-evolution footer would
+        # silently destroy later columns for good.
         reader = spark.read.option("basePath", self.path).option(
             "mergeSchema", "true"
         )

@@ -32,26 +32,31 @@ no-op, and merged bucket versions become live only at the single
 pointer swap. Superseded bucket versions are retired, not deleted, so
 a read planned before a fold still finds its files.
 
-**Touched buckets.** A fold learns its touched buckets in one of three
-ways: a pyarrow Table delta carries its bucket ids; a producer that
-tagged a DataFrame delta in Spark passes its exact bucket set
-(``touched=``, the pipeline's fused path above the driver ceiling);
-any other DataFrame delta pays one discovery job.
+**One fold kernel.** Every bucket file is written by ``_fold_bucket``:
+read the bucket's current files with pyarrow, concatenate its delta
+rows, ``group_by(keys).sum``, cast to the sink's schema and write one
+``part-00000.parquet`` through a tmp file and a rename (a retried task
+overwrites cleanly). Staging, the pointer swap and the exactly-once
+ledger are the same for both of the kernel's runners:
 
-**Driver-side folds.** ``apply_delta`` also accepts a pyarrow Table
-whose rows already carry their bucket id (the pipeline's driver path
-collects all eight deltas, bucket-tagged, in one Spark job; see
-``operators.aggregates.fused_arrow_deltas``). Such a delta folds on
-the driver: per touched bucket, read the current files with pyarrow,
-concatenate the delta, ``group_by(keys).aggregate(...)`` and stage one
-file — no Spark job at all. Staging, the pointer swap and the
-exactly-once ledger are the same code as the Spark fold. A fold whose
-touched buckets hold more than ``_DRIVER_FOLD_MAX_BYTES`` on disk hands
-the delta to Spark instead, so driver memory stays bounded while state
-grows.
-
-At 100 TB the same interface backs Delta MERGE or a real ClickHouse
-SummingMergeTree where the fold is native (sinks/clickhouse.py).
+- **Driver.** ``apply_delta`` also accepts a pyarrow Table whose rows
+  already carry their bucket id (the pipeline's driver path collects
+  all eight deltas, bucket-tagged, in one Spark job; see
+  ``operators.aggregates.fused_arrow_deltas``). Its touched buckets are
+  the ids it carries, and the kernel runs in-process per touched
+  bucket — no Spark job at all — while their files hold at most
+  ``_DRIVER_FOLD_MAX_BYTES`` on disk.
+- **Executors.** A DataFrame delta (an epoch above the driver ceiling,
+  a custom aggregate, ``replace()``) and an Arrow delta whose touched
+  state exceeds that bound are tagged with their bucket and folded by
+  ``groupBy(BUCKET_COL).applyInArrow``: one group per touched bucket,
+  each reading only its own bucket's current files (their paths ship
+  in the closure from the pointer). The collected group ids are the
+  touched set, so no fold needs it in advance. Memory bound: one group
+  holds one bucket's state plus its delta in one Python worker, where
+  a Spark aggregate could spill. Every epoch that touches a bucket
+  already rewrites all of it, so this bound is no larger than the
+  per-bucket rewrite each fold does anyway; more buckets lower it.
 """
 
 from __future__ import annotations
@@ -70,17 +75,53 @@ from adguard2clickhouse_spark.sinks.ledger import Ledger
 
 BUCKET_COL = "_sps_bucket"
 # On-disk bytes of the touched buckets above which an Arrow delta folds
-# in Spark rather than on the driver: the scan layer's file-size target
-# (spark.sql.files.maxPartitionBytes, the pipeline's _COMPACT_SMALL_BYTES).
+# on executors rather than on the driver: the scan layer's file-size
+# target (spark.sql.files.maxPartitionBytes, the pipeline's
+# _COMPACT_SMALL_BYTES).
 _DRIVER_FOLD_MAX_BYTES = 128 << 20
 
 
 def bucket_id(cols: list[Column], n_buckets: int) -> Column:
     """A key's bucket: ``pmod(xxhash64(keys), n)``. xxhash64 treats NULL
     keys deterministically; pmod keeps the id in [0, n). Every path that
-    tags rows (this sink's Spark folds and the fused driver-side deltas)
-    uses this one expression, so a key always lands in the same bucket."""
+    tags rows (this sink's executor folds and the fused driver-side
+    deltas) uses this one expression, so a key always lands in the same
+    bucket."""
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets))
+
+
+def _fold_bucket(
+    files: list[str],
+    delta: pa.Table,
+    keys: list[str],
+    measures: list[str],
+    out_dir: str,
+) -> None:
+    """The fold kernel: (a bucket's current ``files`` ∪ its ``delta``
+    rows) ⊕ keys, written as ``out_dir/part-00000.parquet``. Files are
+    written keys-then-measures in the delta's Arrow types; the tmp file
+    and rename let a retried task overwrite a half-written attempt."""
+    schema = pa.schema([delta.schema.field(c) for c in keys + measures])
+    parts = [
+        # Bucket files written by Spark store timestamps as INT96; read
+        # them as microseconds, the unit Spark hands Arrow.
+        pq.read_table(f, coerce_int96_timestamp_unit="us")
+        .select(schema.names)
+        .cast(schema)
+        for f in files
+    ]
+    parts.append(delta.select(schema.names))
+    folded = pa.concat_tables(parts).group_by(keys).aggregate(
+        [(m, "sum") for m in measures]
+    )
+    out = pa.Table.from_arrays(
+        [folded[k] for k in keys] + [folded[f"{m}_sum"] for m in measures],
+        names=schema.names,
+    ).cast(schema)
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = os.path.join(out_dir, f".part-{uuid.uuid4().hex}.tmp")
+    pq.write_table(out, tmp)
+    os.replace(tmp, os.path.join(out_dir, "part-00000.parquet"))
 
 
 class SummingParquetSink:
@@ -108,12 +149,6 @@ class SummingParquetSink:
     def _slot(bucket: int, version: int) -> str:
         return os.path.join(f"b{bucket:04d}", f"v{version:08d}")
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            BUCKET_COL,
-            bucket_id([F.col(k) for k in self.keys], self.n_buckets),
-        )
-
     # -- public API ----------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame | None:
         meta = self.ledger.read()
@@ -138,24 +173,6 @@ class SummingParquetSink:
             self.path, f".stage.v{meta['version'] + 1:08d}.{uuid.uuid4().hex}"
         )
 
-    def _install(
-        self,
-        frame: DataFrame,
-        touched: list[int],
-        meta: dict,
-        epoch_id: int | None,
-        token: str | None = None,
-    ) -> None:
-        """Write ``frame`` (already bucket-tagged, already folded) as the
-        next version of the ``touched`` buckets and swap the pointer."""
-        stage = self._stage_dir(meta)
-        # One Spark job for all touched buckets: partitionBy splits the
-        # staged write into _sps_bucket=K directories (the column itself
-        # is not stored in the files), then _publish renames each into
-        # its bucket's version slot — a local fs move, no second job.
-        frame.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
-        self._publish(stage, touched, meta, epoch_id, token)
-
     def _publish(
         self,
         stage: str,
@@ -166,7 +183,7 @@ class SummingParquetSink:
     ) -> None:
         """Move each staged ``_sps_bucket=K`` directory into bucket K's
         next version slot, then make them live with ONE ledger commit
-        (shared by the Spark and the driver-side folds)."""
+        (shared by both runners of the fold kernel)."""
         new_version = meta["version"] + 1
         buckets = dict(meta["buckets"])
         retired = []
@@ -175,8 +192,7 @@ class SummingParquetSink:
             dst = self._bucket_dir(b, new_version)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             if not os.path.exists(src):
-                # delta folded to an empty bucket (possible only via
-                # replace() shrinking state): drop the bucket entirely.
+                # replace() staged no rows for this bucket: drop it.
                 if str(b) in buckets:
                     retired.append(self._slot(b, buckets.pop(str(b))))
                 continue
@@ -199,23 +215,24 @@ class SummingParquetSink:
         shutil.rmtree(stage, ignore_errors=True)
 
     def replace(self, full: DataFrame) -> None:
-        """Swap in a wholesale recomputation (backfill/repair): rewrite
-        every bucket as the next version and point at it atomically. The
-        applied-epoch history is preserved so a concurrent stream's
-        retried epoch is still recognized as folded-in."""
+        """Swap in a wholesale recomputation (backfill/repair): fold
+        ``full`` over an empty base on executors, publish every bucket
+        as the next version (a bucket ``full`` does not reach is
+        dropped) and point at it atomically. The applied-epoch history
+        is preserved so a concurrent stream's retried epoch is still
+        recognized as folded-in."""
         with self.ledger.locked():
             self.ledger.gc()
-            tagged = self._with_bucket(full)
-            self._install(
-                tagged, list(range(self.n_buckets)), self.ledger.read(), None
-            )
+            meta = self.ledger.read()
+            stage = self._stage_dir(meta)
+            self._fold_on_executors(full, {}, stage)
+            self._publish(stage, list(range(self.n_buckets)), meta, None, None)
 
     def apply_delta(
         self,
         delta: DataFrame | pa.Table,
         epoch_id: int | None = None,
         token: str | None = None,
-        touched: list[int] | None = None,
     ) -> bool:
         """Fold a delta into the table (idempotent per epoch_id for
         stream epochs, per ``token`` for out-of-band folds like
@@ -226,123 +243,71 @@ class SummingParquetSink:
 
         ``delta`` is a Spark DataFrame, or a pyarrow Table whose rows
         carry their ``BUCKET_COL`` id (computed in Spark with
-        ``bucket_id`` over this sink's keys and ``n_buckets``). A Table
-        folds on the driver (see the module docstring); its touched set
-        comes with the delta.
-
-        ``touched`` is given by a producer that already knows the exact
-        buckets of a DataFrame delta whose rows carry ``BUCKET_COL``
-        (the pipeline's fused path collects them in the job that
-        materializes its deltas); the fold then skips the discovery
-        job. Without it, one discovery job (a ≤ n_buckets-row collect)
-        finds the touched buckets before the fold."""
+        ``bucket_id`` over this sink's keys and ``n_buckets``). The
+        module docstring says which runner of the fold kernel takes
+        each."""
         with self.ledger.locked():
             meta = self.ledger.read(self.stream_id)
             if self.ledger.recorded(meta, epoch_id, token):
                 return False
             self.ledger.gc()
+            files = {
+                int(b): self._parquet_files(self._bucket_dir(int(b), v))
+                for b, v in meta["buckets"].items()
+            }
+            stage = self._stage_dir(meta)
             if isinstance(delta, pa.Table):
-                self._fold_arrow(delta, meta, epoch_id, token)
-            elif touched is not None:
-                self._fold_spark(delta, sorted(touched), meta, epoch_id, token)
-            else:
-                tagged = self._with_bucket(delta).persist()
-                try:
-                    touched = sorted(
-                        r[0]
-                        for r in tagged.select(BUCKET_COL).distinct().collect()
+                ids = delta[BUCKET_COL]
+                touched = sorted(pc.unique(ids).to_pylist())
+                state_bytes = sum(
+                    os.path.getsize(f) for b in touched for f in files.get(b, [])
+                )
+                if state_bytes > _DRIVER_FOLD_MAX_BYTES:
+                    delta = SparkSession.active().createDataFrame(delta)
+            if isinstance(delta, pa.Table):
+                for b in touched:
+                    _fold_bucket(
+                        files.get(b, []),
+                        delta.filter(pc.equal(ids, b)),
+                        self.keys,
+                        self.measures,
+                        os.path.join(stage, f"{BUCKET_COL}={b}"),
                     )
-                    self._fold_spark(tagged, touched, meta, epoch_id, token)
-                finally:
-                    tagged.unpersist()
+            else:
+                touched = self._fold_on_executors(delta, files, stage)
+            if touched:
+                self._publish(stage, touched, meta, epoch_id, token)
+            elif epoch_id is not None or token is not None:
+                # An empty delta still records its epoch/token.
+                self.ledger.commit(meta, epoch_id, token)
         return True
 
-    def _record_empty(
-        self, meta: dict, epoch_id: int | None, token: str | None
-    ) -> None:
-        """An empty delta still records its epoch/token for idempotency."""
-        if epoch_id is not None or token is not None:
-            self.ledger.commit(meta, epoch_id, token)
+    def _fold_on_executors(
+        self, delta: DataFrame, files: dict[int, list[str]], stage: str
+    ) -> list[int]:
+        """The executor runner: tag ``delta`` with its buckets and run
+        ``_fold_bucket`` once per bucket group over that bucket's
+        ``files``, staging under ``stage``. One Spark action; returns the
+        touched buckets (the group ids)."""
+        keys, measures = self.keys, self.measures
 
-    def _fold_spark(
-        self,
-        tagged: DataFrame,
-        touched: list[int],
-        meta: dict,
-        epoch_id: int | None,
-        token: str | None,
-    ) -> None:
-        """(state of the touched buckets ∪ bucket-tagged delta) ⊕ keys,
-        in one Spark job, installed as the touched buckets' next
-        version."""
-        if not touched:
-            self._record_empty(meta, epoch_id, token)
-            return
-        current_paths = [
-            self._bucket_dir(b, meta["buckets"][str(b)])
-            for b in touched
-            if str(b) in meta["buckets"]
-        ]
-        if current_paths:
-            spark = tagged.sparkSession
-            current = self._with_bucket(spark.read.parquet(*current_paths))
-            tagged = current.unionByName(tagged)
-        merged = tagged.groupBy(BUCKET_COL, *self.keys).agg(
-            *(F.sum(m).alias(m) for m in self.measures)
-        )
-        self._install(merged, touched, meta, epoch_id, token=token)
-
-    def _fold_arrow(
-        self,
-        delta: pa.Table,
-        meta: dict,
-        epoch_id: int | None,
-        token: str | None,
-    ) -> None:
-        """The driver-side fold of a bucket-tagged Arrow delta: per
-        touched bucket, (current files ∪ delta rows) ⊕ keys with pyarrow,
-        staged as one file per bucket, then the shared ``_publish``."""
-        ids = delta[BUCKET_COL]
-        touched = sorted(pc.unique(ids).to_pylist())
-        if not touched:
-            self._record_empty(meta, epoch_id, token)
-            return
-        files = {
-            b: self._parquet_files(self._bucket_dir(b, meta["buckets"][str(b)]))
-            for b in touched
-            if str(b) in meta["buckets"]
-        }
-        state_bytes = sum(os.path.getsize(f) for fs in files.values() for f in fs)
-        if state_bytes > _DRIVER_FOLD_MAX_BYTES:
-            tagged = SparkSession.active().createDataFrame(delta)
-            self._fold_spark(tagged, touched, meta, epoch_id, token)
-            return
-
-        # Files are written keys-then-measures, the Spark fold's layout.
-        schema = pa.schema([delta.schema.field(c) for c in self.keys + self.measures])
-        stage = self._stage_dir(meta)
-        for b in touched:
-            parts = [
-                # Spark writes timestamps as INT96; read them as
-                # microseconds, the unit Spark collects to Arrow with.
-                pq.read_table(f, coerce_int96_timestamp_unit="us")
-                .select(schema.names)
-                .cast(schema)
-                for f in files.get(b, [])
-            ]
-            parts.append(delta.filter(pc.equal(ids, b)).select(schema.names))
-            folded = pa.concat_tables(parts).group_by(self.keys).aggregate(
-                [(m, "sum") for m in self.measures]
+        def fold(key: tuple, table: pa.Table) -> pa.Table:
+            b = key[0].as_py()
+            _fold_bucket(
+                files.get(b, []), table, keys, measures,
+                os.path.join(stage, f"{BUCKET_COL}={b}"),
             )
-            out = pa.Table.from_arrays(
-                [folded[k] for k in self.keys]
-                + [folded[f"{m}_sum"] for m in self.measures],
-                names=schema.names,
-            ).cast(schema)
-            bucket_dir = os.path.join(stage, f"{BUCKET_COL}={b}")
-            os.makedirs(bucket_dir)
-            pq.write_table(out, os.path.join(bucket_dir, "part-00000.parquet"))
-        self._publish(stage, touched, meta, epoch_id, token)
+            return pa.table({BUCKET_COL: pa.array([b], pa.int64())})
+
+        tagged = delta.withColumn(
+            BUCKET_COL, bucket_id([F.col(k) for k in keys], self.n_buckets)
+        )
+        done = (
+            tagged.groupBy(BUCKET_COL)
+            .applyInArrow(fold, f"{BUCKET_COL} long")
+            .collect()
+        )
+        return sorted(r[0] for r in done)
 
     @staticmethod
     def _parquet_files(d: str) -> list[str]:

@@ -48,7 +48,6 @@ from adguard2clickhouse_spark.operators.aggregates import (
     ALL_AGGREGATES,
     fused_aggregate_deltas,
     fused_arrow_deltas,
-    touched_buckets,
 )
 from adguard2clickhouse_spark.operators.parse import (
     parse_querylog_lines,
@@ -271,22 +270,20 @@ class QuerylogPipeline:
         (a stream epoch) or ``token`` (an out-of-band fold such as
         dead-letter replay). The one delta-and-fold path of both.
 
-        A sink's route follows from its inputs alone:
+        A sink's delta follows from its inputs alone:
 
         - a stock aggregate takes the grouping-sets delta
           (``fused_aggregate_deltas``), one pass for all of them. Up to
           ``driver_fold_max_rows`` good rows the pass is collected to
           the driver with each row's bucket id and every sink folds its
-          share with pyarrow (``delta_path`` "driver"). Above it the
-          bucket-tagged pass is persisted, and the job that
-          materializes it also collects each sink's exact touched
-          buckets, so every Spark fold rewrites only those buckets with
-          no discovery job ("fused");
-        - a custom aggregate computes ``fn(good)`` and takes the
-          sink's Spark fold, whose discovery job finds its buckets.
+          share there (``delta_path`` "driver"). Above it the pass is
+          persisted and materialized by one job, and each sink folds
+          its extract of it on executors ("fused");
+        - a custom aggregate computes ``fn(good)`` and folds it on
+          executors.
 
-        The grouping-sets pass serves sinks sharing one bucket count
-        (one bucket column serves them all). Returns the step's
+        Which runner of the sink's one fold kernel takes a delta is the
+        sink's choice (``sinks/summing.py``). Returns the step's
         timings: ``delta_path``, ``fused_delta_s`` and, on the driver
         path, the collected delta's ``delta_rows``/``delta_bytes``."""
         timings: dict = {}
@@ -294,29 +291,25 @@ class QuerylogPipeline:
             name for name, fn in self.aggregates.items()
             if ALL_AGGREGATES.get(name) is fn
         ]
-        n_buckets = {self.sinks[name].n_buckets for name in stock}
-        if len(n_buckets) != 1:
-            stock = []
         deltas: dict = {}
-        touched: dict = {}
         fused = None
         try:
             if stock:
-                (n,) = n_buckets
                 t0 = _time.time()
                 if n_good <= self.driver_fold_max_rows:
                     timings["delta_path"] = "driver"
-                    table, arrow = fused_arrow_deltas(good, n)
+                    table, arrow = fused_arrow_deltas(
+                        good, self.sinks[stock[0]].n_buckets
+                    )
                     timings["delta_rows"] = table.num_rows
                     timings["delta_bytes"] = table.nbytes
                     del table  # the per-sink splits are copies
                     deltas = {name: arrow[name] for name in stock}
                 else:
                     timings["delta_path"] = "fused"
-                    fused, extract = fused_aggregate_deltas(good, n_buckets=n)
-                    fused.persist()
-                    buckets = touched_buckets(fused)
-                    touched = {name: buckets[name] for name in stock}
+                    fused, extract = fused_aggregate_deltas(good)
+                    # one job fills the cache the eight folds then read
+                    fused.persist().count()
                     deltas = {name: extract[name](fused) for name in stock}
                 timings["fused_delta_s"] = round(_time.time() - t0, 3)
             for name, fn in self.aggregates.items():
@@ -326,7 +319,7 @@ class QuerylogPipeline:
                 fs = [
                     pool.submit(
                         self.sinks[name].apply_delta, deltas[name], epoch_id,
-                        token=token, touched=touched.get(name),
+                        token=token,
                     )
                     for name in self.aggregates
                 ]
@@ -339,8 +332,6 @@ class QuerylogPipeline:
 
     # -- the per-micro-batch body (the reference's "insert block") ----------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
         timings: dict[str, float] = {"epoch_id": epoch_id}
 
         def _mark(stage: str, t0: float) -> float:
@@ -728,7 +719,7 @@ class QuerylogPipeline:
         blob = repr((gen,) + ident).encode()
         return f"replay-{hashlib.sha256(blob).hexdigest()[:16]}"
 
-    def replay_dead_letters(self, mode: str = "delta") -> dict:
+    def replay_dead_letters(self) -> dict:
         """Re-parse the dead-letter channel — the operational recovery
         the reference cannot do (its failed lines go to stdout and are
         gone, src/collector.py:76-78). Lines that NOW parse (after a
@@ -736,11 +727,10 @@ class QuerylogPipeline:
         into every aggregate; lines that still fail replace the
         dead-letter channel.
 
-        ``mode="delta"`` (default): the recovered lines flow through
-        the SAME additive fan-out as a streaming micro-batch, under a
-        replay token derived from the dead-letter directory digest —
-        only the hash buckets the delta touches are rewritten, so at
-        100 TB a replay of 100 lines costs 100 lines, not a rescan of
+        The recovered lines flow through the SAME additive fan-out as
+        a streaming micro-batch, under a replay token derived from the
+        dead-letter content digest — only the hash buckets the delta
+        touches are rewritten, so at 100 TB a replay of 100 lines costs 100 lines, not a rescan of
         the entire fact history (VERDICT r4 #3). A crashed replay can
         be re-run: sinks that already folded this token no-op
         (``applied_token``), sinks that didn't fold now; untouched
@@ -748,9 +738,8 @@ class QuerylogPipeline:
         in tests/test_streaming.py). The token ledger is separate from
         stream epochs on purpose — see ``sinks/ledger.py``.
 
-        ``mode="rebuild"``: full recompute from the fact table via
-        ``rebuild_aggregates`` — the right tool when the aggregate
-        FORMULA changed (a delta cannot express that fix).
+        A changed aggregate FORMULA is not a delta: run
+        ``rebuild_aggregates()`` after the replay.
 
         Runs only while the stream is stopped — enforced, it RAISES
         against an active query (r11; the dead-letter channel is
@@ -762,8 +751,6 @@ class QuerylogPipeline:
         missing steps and no-ops the done ones. Returns {"replayed",
         "still_dead"}.
         """
-        if mode not in ("delta", "rebuild"):
-            raise ValueError(f"unknown replay mode: {mode!r}")
         self._require_stream_stopped("replay_dead_letters")
         from adguard2clickhouse_spark.operators.parse import parse_querylog
 
@@ -782,20 +769,7 @@ class QuerylogPipeline:
                 )
                 if self.clickhouse is not None:
                     self.clickhouse.insert_batch(good, "log2", dedup_token=token)
-                if mode == "delta":
-                    self._fold_aggregates(good, n_good, token=token)
-            if n_good and mode == "rebuild":
-                # Rebuild BEFORE the dead-channel swap: log2 already
-                # holds the recovered rows, and a crash after the swap
-                # but before a trailing rebuild would leave aggregates
-                # permanently missing them (the retry would see an
-                # empty recovered set and never rebuild). Rebuilding
-                # here keeps the whole replay re-runnable: a crash
-                # anywhere above leaves the committed dead content —
-                # and hence the digest token — unchanged, so the retry
-                # no-ops the done steps and redoes the rebuild (a full
-                # recompute, idempotent by construction).
-                self.rebuild_aggregates()
+                self._fold_aggregates(good, n_good, token=token)
             # Swap the dead channel LAST. replace() stages the
             # survivors while the old committed dirs still back the
             # frame, then commits the swap atomically — bumping the

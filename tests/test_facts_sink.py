@@ -538,20 +538,28 @@ def test_replace_generation_bumps_only_when_asked(sink, spark):
     assert sink.generation() == 1
 
 
-def test_reader_holding_prefold_snapshot_survives_fold(sink, spark, monkeypatch):
+@pytest.mark.parametrize(
+    "bounds",
+    [{"small_bytes": 1 << 30, "max_fold_slots": 4}, {}],
+    ids=["tiered", "full"],
+)
+def test_reader_holding_prefold_snapshot_survives_fold(
+    sink, spark, monkeypatch, bounds
+):
     """r12 trash retention: a fold COMMITS atomically but must not
     delete the superseded slots while a reader that listed the old
     pointer is still scanning — the exact FileNotFoundException race
     observed the moment folds moved off the writer thread. The folded
     slots stay on disk for ledger.RETENTION_S and later commits sweep
-    them."""
+    them. Holds for the tiered step and for the full fold (no
+    bounds)."""
     from adguard2clickhouse_spark.sinks import ledger
 
     df = _df(spark, [("2024-01-01", i, f"d{i}.com") for i in range(5)])
     for e in range(4):
         sink.append(df, epoch_id=e)
     reader = sink.read(spark)  # plan holds the PRE-fold file listing
-    assert sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 4
+    assert sink.compact(spark, **bounds) == 4
     # the old listing still resolves: retired slots are in trash
     assert reader.count() == 20
     meta = sink.ledger.read()

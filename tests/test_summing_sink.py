@@ -199,8 +199,8 @@ def test_streaming_pipeline_with_custom_sum_sink(tmp_path, spark):
     for i, lines in enumerate(batches):
         (src / f"log-{i}.jsonl").write_text("\n".join(lines) + "\n")
         pipe.run_available()
-    # the custom sink takes its own Spark fold; the stock eight stay on
-    # the driver path
+    # the custom sink folds on executors; the stock eight stay on the
+    # driver path
     assert [bt["delta_path"] for bt in pipe.batch_timings
             if "delta_path" in bt] == ["driver", "driver"]
 
@@ -270,26 +270,43 @@ def _sink_state(sink, spark, cols):
     )
 
 
+def _assert_state_is_aggregate(spark, sinks, seen, label):
+    """Every sink equals ``ALL_AGGREGATES`` over all rows so far, with
+    the same Spark types (stats2.date_time a UTC timestamp, measures
+    bigint)."""
+    from adguard2clickhouse_spark.operators.aggregates import ALL_AGGREGATES
+    from adguard2clickhouse_spark.schemas import LOG2_SCHEMA
+
+    everything = spark.createDataFrame(seen, LOG2_SCHEMA)
+    for name, sink in sinks.items():
+        want = ALL_AGGREGATES[name](everything)
+        got = sink.read(spark).select(*want.columns)
+        assert [f.dataType for f in got.schema] == [
+            f.dataType for f in want.schema
+        ], name
+        assert _sink_state(sink, spark, want.columns) == sorted(
+            (tuple(r) for r in want.collect()), key=repr
+        ), f"{name} diverged after {label}"
+
+
 def test_driver_and_spark_folds_alternate_on_one_sink(tmp_path, spark):
-    """Driver-side (pyarrow) and Spark folds alternate on the same eight
-    sinks: each fold reads bucket files the other path wrote, and the
-    state always equals the aggregate over every row so far, with the
-    same Spark types (stats2.date_time a UTC timestamp, measures
-    bigint). NULL keys land in one bucket on both paths."""
+    """The fold kernel's two runners alternate on the same eight sinks:
+    the driver runner (a bucket-tagged Arrow delta) and the executor
+    runner (a DataFrame delta: the stock aggregate, or an extract of
+    the untagged fused frame) each read bucket files the other wrote,
+    and the state always equals the aggregate over every row so far.
+    NULL keys land in one bucket on both runners."""
     from adguard2clickhouse_spark.operators.aggregates import (
         ALL_AGGREGATES,
         fused_aggregate_deltas,
         fused_arrow_deltas,
-        touched_buckets,
     )
     from adguard2clickhouse_spark.schemas import LOG2_SCHEMA
     from adguard2clickhouse_spark.streaming.pipeline import aggregate_sinks
 
     sinks = aggregate_sinks(str(tmp_path / "out"))
-    # arrow, Spark with discovery, arrow, Spark over the bucket-tagged
-    # fused deltas and their collected touched sets, then a 1-row arrow
-    # fold that rewrites one bucket and leaves Spark-written ones
-    # beside it
+    # arrow, executors, arrow, executors over the fused extracts, then a
+    # 1-row arrow fold that rewrites one bucket
     epochs = [("arrow", 0, 40), ("spark", 40, 30), ("arrow", 70, 25),
               ("fused", 95, 35), ("arrow", 131, 1)]
     seen = []
@@ -298,32 +315,79 @@ def test_driver_and_spark_folds_alternate_on_one_sink(tmp_path, spark):
         seen += rows
         log2 = spark.createDataFrame(rows, LOG2_SCHEMA)
         arrow = fused_arrow_deltas(log2, 8)[1] if how == "arrow" else None
-        fused, extract = fused_aggregate_deltas(log2, n_buckets=8)
-        touched = touched_buckets(fused) if how == "fused" else {}
+        fused, extract = fused_aggregate_deltas(log2)
         for name, sink in sinks.items():
             if arrow is not None:
                 sink.apply_delta(arrow[name], epoch_id)
             elif how == "fused":
-                sink.apply_delta(extract[name](fused), epoch_id,
-                                 touched=touched[name])
+                sink.apply_delta(extract[name](fused), epoch_id)
             else:
                 sink.apply_delta(ALL_AGGREGATES[name](log2), epoch_id)
-        everything = spark.createDataFrame(seen, LOG2_SCHEMA)
-        for name, sink in sinks.items():
-            want = ALL_AGGREGATES[name](everything)
-            got = sink.read(spark).select(*want.columns)
-            assert [f.dataType for f in got.schema] == [
-                f.dataType for f in want.schema
-            ], name
-            assert _sink_state(sink, spark, want.columns) == sorted(
-                (tuple(r) for r in want.collect()), key=repr
-            ), f"{name} diverged after {how} epoch {epoch_id}"
+        _assert_state_is_aggregate(spark, sinks, seen, f"{how} epoch {epoch_id}")
 
-    writers = {
-        "driver" if p.name == "part-00000.parquet" else "spark"
-        for p in Path(sinks["stats2"].path).rglob("*.parquet")
-    }
-    assert writers == {"driver", "spark"}, writers
+    # one writer: every bucket version holds the kernel's one file
+    for sink in sinks.values():
+        for d in Path(sink.path).glob("b*/v*"):
+            assert [p.name for p in d.glob("*.parquet")] == [
+                "part-00000.parquet"
+            ], d
+
+
+def _seed_spark_written(spark, sink, frame, epoch_id):
+    """Commit ``frame`` into ``sink`` as bucket files laid out by a
+    Spark ``partitionBy`` write (the sink's layout before the fold
+    kernel): several ``part-*`` files per bucket and INT96 timestamps."""
+    from adguard2clickhouse_spark.sinks.summing import BUCKET_COL, bucket_id
+
+    meta = sink.ledger.read()
+    stage = sink._stage_dir(meta)
+    tagged = frame.withColumn(
+        BUCKET_COL, bucket_id([F.col(k) for k in sink.keys], sink.n_buckets)
+    )
+    touched = sorted(r[0] for r in tagged.select(BUCKET_COL).distinct().collect())
+    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        tagged.repartition(3).write.partitionBy(BUCKET_COL).parquet(stage)
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    sink._publish(stage, touched, meta, epoch_id, None)
+
+
+@pytest.mark.parametrize("runner", ["driver", "executors"])
+def test_fold_upgrades_spark_written_buckets(tmp_path, spark, runner):
+    """Sinks whose bucket files were written by a Spark ``partitionBy``
+    write (several ``part-*`` files per bucket, INT96
+    ``stats2.date_time``) take a fold through either runner of the
+    kernel, and read back as the aggregate over all rows with the same
+    Spark types."""
+    import pyarrow.parquet as pq
+
+    from adguard2clickhouse_spark.operators.aggregates import (
+        ALL_AGGREGATES,
+        fused_arrow_deltas,
+    )
+    from adguard2clickhouse_spark.schemas import LOG2_SCHEMA
+    from adguard2clickhouse_spark.streaming.pipeline import aggregate_sinks
+
+    sinks = aggregate_sinks(str(tmp_path / "out"))
+    seed = _log2_rows(0, 60)
+    log2 = spark.createDataFrame(seed, LOG2_SCHEMA)
+    for name, sink in sinks.items():
+        _seed_spark_written(spark, sink, ALL_AGGREGATES[name](log2), 0)
+    stats2 = [p for p in Path(sinks["stats2"].path).rglob("part-*.parquet")]
+    assert len(stats2) > len(sinks["stats2"].ledger.read()["buckets"])
+    footer = pq.ParquetFile(stats2[0]).schema
+    assert footer.column(footer.names.index("date_time")).physical_type == "INT96"
+
+    rows = _log2_rows(60, 30)
+    delta = spark.createDataFrame(rows, LOG2_SCHEMA)
+    arrow = fused_arrow_deltas(delta, 8)[1] if runner == "driver" else None
+    for name, sink in sinks.items():
+        sink.apply_delta(
+            arrow[name] if arrow is not None else ALL_AGGREGATES[name](delta), 1
+        )
+    _assert_state_is_aggregate(spark, sinks, seed + rows, runner)
 
 
 def _arrow_delta(spark, sink, rows):
@@ -403,23 +467,24 @@ def test_read_planned_before_a_fold_survives_it(tmp_path, spark, monkeypatch):
 
 def test_driver_fold_above_byte_bound_folds_in_spark(tmp_path, spark, monkeypatch):
     """Touched state above _DRIVER_FOLD_MAX_BYTES is not read onto the
-    driver: the Arrow delta becomes a DataFrame and takes the Spark
-    fold, still only over the buckets the delta touches."""
+    driver: the Arrow delta becomes a DataFrame and takes the executor
+    runner, still only over the buckets the delta touches."""
     from adguard2clickhouse_spark.sinks import summing
 
     sink = SummingParquetSink(str(tmp_path / "t"), keys=["k"], measures=["cnt"])
     sink.apply_delta(_arrow_delta(spark, sink, [(f"k{i}", 1) for i in range(40)]), 0)
     monkeypatch.setattr(summing, "_DRIVER_FOLD_MAX_BYTES", 1)
-    spark_folds = []
-    real = sink._fold_spark
+    executor_folds = []
+    real = sink._fold_on_executors
     monkeypatch.setattr(
-        sink, "_fold_spark", lambda *a: spark_folds.append(a[1]) or real(*a)
+        sink, "_fold_on_executors",
+        lambda *a: executor_folds.append(real(*a)) or executor_folds[-1],
     )
     before = _data_file_digests(sink.path)
     delta = _arrow_delta(spark, sink, [("k1", 5)])
     sink.apply_delta(delta, 1)
     touched = sorted(set(delta[summing.BUCKET_COL].to_pylist()))
-    assert spark_folds == [touched]
+    assert executor_folds == [touched]
     after = _data_file_digests(sink.path)
     untouched = {
         rel: h for rel, h in before.items()
