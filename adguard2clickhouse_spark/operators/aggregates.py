@@ -378,9 +378,8 @@ def fused_arrow_deltas(
     """The eight deltas of ``fused_aggregate_deltas``, collected to the
     driver with ONE ``toArrow()`` and split there, each row already
     tagged with its summing-sink bucket (``BUCKET_COL``). Every sink
-    fed from this must have ``n_buckets`` buckets. This replaces the
-    Spark fold fan (~5 jobs per sink) with driver-side pyarrow folds
-    (``SummingParquetSink.apply_delta``).
+    fed from this must have ``n_buckets`` buckets, whose folds then run
+    on the driver with no Spark job (``SummingParquetSink.apply_delta``).
 
     Returns ``(collected, deltas)``: the collected table (its size is
     the driver memory the path costs) and the per-aggregate splits."""

@@ -358,9 +358,9 @@ class LedgeredFactSink:
 
         ``small_bytes=None`` folds EVERYTHING into one directory —
         fine for tables that fit a rewrite; it takes the same staged,
-        retiring path as the bounded folds below. At warehouse scale a full
-        rewrite is exactly the cost this sink exists to avoid, so pass
-        ``small_bytes``: only directories smaller than that threshold
+        retiring path as the bounded folds below. At warehouse scale a
+        full rewrite is exactly the cost this sink exists to avoid, so
+        pass ``small_bytes``: only directories smaller than that threshold
         are merged (the steady trickle of micro-batch epochs), while
         already-compacted large slots are left untouched — each
         maintenance run costs O(recent small epochs), not O(table),

@@ -147,13 +147,14 @@ class QuerylogPipeline:
         # Delta path (see _fold_aggregates): up to driver_fold_max_rows
         # good rows the stock deltas come from one grouping-sets pass
         # collected to the driver as one Arrow table, and each sink
-        # folds its share with pyarrow (no Spark job per sink); above it
-        # the same pass stays in Spark. The ceiling is a driver-memory
-        # bound, not a speed crossover: the collected delta must stay
-        # within the sinks' own driver budget (_DRIVER_FOLD_MAX_BYTES)
-        # at the widest measured delta (_DELTA_BYTES_PER_ROW), and the
-        # driver path was measured ahead of the Spark fold fan at every
-        # size up to it (50k-1M rows/epoch).
+        # folds its share on the driver (no Spark job per sink); above
+        # it the same pass stays in Spark and the sinks fold on
+        # executors. The ceiling is a driver-memory bound, not a speed
+        # crossover: the collected delta must stay within the sinks' own
+        # driver budget (_DRIVER_FOLD_MAX_BYTES) at the widest measured
+        # delta (_DELTA_BYTES_PER_ROW), and the driver path was measured
+        # ahead of a Spark fold per sink at every size up to it (50k-1M
+        # rows/epoch).
         self.driver_fold_max_rows = _DRIVER_FOLD_MAX_BYTES // _DELTA_BYTES_PER_ROW
         # Automatic fact-ledger maintenance: reads degrade with the
         # committed-slot count (BENCH_factledger_r10.json: 17 s at 200
@@ -534,9 +535,8 @@ class QuerylogPipeline:
         which naturally forms large epochs. Up to
         ``driver_fold_max_rows`` good rows (~1.1M, the driver-memory
         ceiling) the eight sinks fold on the driver from one collected
-        Arrow delta, so an epoch runs a handful of Spark jobs rather
-        than one fold fan per sink whatever its size; only larger
-        epochs pay the Spark fan. A LATENCY target wants a short
+        Arrow delta, so an epoch runs a handful of Spark jobs; only
+        larger epochs pay a Spark fold per sink. A LATENCY target wants a short
         ``processing_time`` — the default 5 s trigger is the
         latency-leaning compromise, matching the reference's
         async-insert buffering horizon (collector.py:52)."""
