@@ -268,9 +268,9 @@ def _kept(spec: _FusedSpec) -> F.Column:
     return cond
 
 
-def _extract(fused: DataFrame, spec: _FusedSpec, extra=()) -> DataFrame:
+def _extract(fused: DataFrame, spec: _FusedSpec) -> DataFrame:
     return fused.filter(_kept(spec)).select(
-        *[F.col(src).alias(out) for src, out in spec.columns], *extra
+        *[F.col(src).alias(out) for src, out in spec.columns]
     )
 
 
@@ -299,7 +299,7 @@ def _bucket_tag(n_buckets: int) -> F.Column:
 
 
 def fused_aggregate_deltas(
-    log2: DataFrame, bucket: str = "10 minutes", n_buckets: int | None = None
+    log2: DataFrame, bucket: str = "10 minutes"
 ) -> tuple[DataFrame, dict[str, "callable"]]:
     """All eight reference-MV deltas in ONE shuffle (VERDICT r6 #4).
 
@@ -328,11 +328,6 @@ def fused_aggregate_deltas(
     once, then each ``extractors[name](fused)`` is a filter+projection
     (a cache read, no shuffle) that is row- and type-identical to
     ``ALL_AGGREGATES[name](log2)``. Equality is pytest-gated per sink.
-
-    With ``n_buckets``, every fused row also carries its summing-sink
-    bucket (``BUCKET_COL``) and the extractors keep it, so each delta
-    folds into a sink of that many buckets without re-hashing
-    (``fused_arrow_deltas``).
     """
     proj = log2.select(
         "QH",
@@ -361,12 +356,8 @@ def fused_aggregate_deltas(
             F.grouping_id().alias("_gid"),
         )
     )
-    extra = ()
-    if n_buckets is not None:
-        fused = fused.withColumn(BUCKET_COL, _bucket_tag(n_buckets))
-        extra = (BUCKET_COL,)
     extractors = {
-        name: functools.partial(_extract, spec=spec, extra=extra)
+        name: functools.partial(_extract, spec=spec)
         for name, spec in _FUSED_SPECS.items()
     }
     return fused, extractors
@@ -383,8 +374,8 @@ def fused_arrow_deltas(
 
     Returns ``(collected, deltas)``: the collected table (its size is
     the driver memory the path costs) and the per-aggregate splits."""
-    fused, _ = fused_aggregate_deltas(log2, bucket, n_buckets)
-    table = fused.toArrow()
+    fused, _ = fused_aggregate_deltas(log2, bucket)
+    table = fused.withColumn(BUCKET_COL, _bucket_tag(n_buckets)).toArrow()
     return table, {
         name: _extract_arrow(table, spec) for name, spec in _FUSED_SPECS.items()
     }

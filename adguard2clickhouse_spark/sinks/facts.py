@@ -321,7 +321,7 @@ class LedgeredFactSink:
         stage the new content — while any reader of the OLD committed
         dirs, including ``df`` itself when it derives from this sink,
         can still finish — then commit a ledger pointing
-        only at the new directory and delete the superseded ones.
+        only at the new directory and retiring the superseded ones.
         Serialized by the pointer lock (a swap racing a live append
         would otherwise lose whichever pointer write landed first).
         ``bump_generation`` advances the content generation atomically
@@ -341,10 +341,9 @@ class LedgeredFactSink:
                     "dir_bytes": {slot: nbytes} if slot else {},
                     "generation": meta["generation"]
                     + (1 if bump_generation else 0),
-                }
+                },
+                retire=meta["dirs"],
             )
-            for d in meta["dirs"]:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def compact(
         self,

@@ -51,9 +51,7 @@ Ledger semantics (each is load-bearing for exactly-once delivery):
   puts them on the pointer's ``trash`` list and later commits delete
   them once older than ``RETENTION_S``; size it above the longest
   reader job. The cost is disk: a sink keeps up to ``RETENTION_S`` of
-  superseded output beside its live state. (``LedgeredFactSink.replace``
-  deletes its superseded slots at once: it runs only as maintenance
-  with the stream stopped.)
+  superseded output beside its live state.
 
 The substrate is POSIX rename and flock on a local filesystem.
 """

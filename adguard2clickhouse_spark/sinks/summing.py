@@ -46,12 +46,13 @@ ledger are the same for both of the kernel's runners:
   the ids it carries, and the kernel runs in-process per touched
   bucket — no Spark job at all — while their files hold at most
   ``_DRIVER_FOLD_MAX_BYTES`` on disk.
-- **Executors.** A DataFrame delta (an epoch above the driver ceiling,
-  a custom aggregate, ``replace()``) and an Arrow delta whose touched
-  state exceeds that bound are tagged with their bucket and folded by
-  ``groupBy(BUCKET_COL).applyInArrow``: one group per touched bucket,
-  each reading only its own bucket's current files (their paths ship
-  in the closure from the pointer). The collected group ids are the
+- **Executors.** A DataFrame delta (the pipeline's ``fn(good)`` for
+  every aggregate of an epoch above the driver ceiling and for a custom
+  aggregate at any size, and ``replace()``) and an Arrow delta whose
+  touched state exceeds that bound are tagged with their bucket and
+  folded by ``groupBy(BUCKET_COL).applyInArrow``: one group per touched
+  bucket, each reading only its own bucket's current files (their paths
+  ship in the closure from the pointer). The collected group ids are the
   touched set, so no fold needs it in advance. Memory bound: one group
   holds one bucket's state plus its delta in one Python worker, where
   a Spark aggregate could spill. Every epoch that touches a bucket
@@ -111,8 +112,12 @@ def _fold_bucket(
         for f in files
     ]
     parts.append(delta.select(schema.names))
-    folded = pa.concat_tables(parts).group_by(keys).aggregate(
-        [(m, "sum") for m in measures]
+    # Without threads pyarrow documents a stable output order, so the
+    # same fold writes the same bytes.
+    folded = (
+        pa.concat_tables(parts)
+        .group_by(keys, use_threads=False)
+        .aggregate([(m, "sum") for m in measures])
     )
     out = pa.Table.from_arrays(
         [folded[k] for k in keys] + [folded[f"{m}_sum"] for m in measures],

@@ -46,7 +46,6 @@ from pyspark.sql.streaming import StreamingQuery
 from adguard2clickhouse_spark.operators.aggregates import (
     AGGREGATE_KEYS,
     ALL_AGGREGATES,
-    fused_aggregate_deltas,
     fused_arrow_deltas,
 )
 from adguard2clickhouse_spark.operators.parse import (
@@ -78,6 +77,18 @@ _COMPACT_SMALL_BYTES = 128 << 20
 # for 203,968 rows. Low-cardinality traffic collapses to far fewer
 # delta rows per input row, so this is the wide case.
 _DELTA_BYTES_PER_ROW = 121
+
+
+def _parse_cached(lines: DataFrame, value_col: str = "value") -> tuple[DataFrame, int]:
+    """``parse_querylog_lines(lines, value_col)`` persisted, and its
+    good-row count from the one JVM job that fills the cache. The
+    consumers split the cache (``split_dead_letter``) and submit jobs
+    from several threads at once; an unfilled cache would let each of
+    them race to compute the UDF-bearing parse. The caller unpersists
+    it."""
+    parsed = parse_querylog_lines(lines, value_col).persist()
+    n_good = parsed.filter("_valid")._jdf.queryExecution().toRdd().count()
+    return parsed, n_good
 
 
 def aggregate_sinks(out_dir: str) -> dict[str, SummingParquetSink]:
@@ -148,12 +159,12 @@ class QuerylogPipeline:
         # good rows the stock deltas come from one grouping-sets pass
         # collected to the driver as one Arrow table, and each sink
         # folds its share on the driver (no Spark job per sink); above
-        # it the same pass stays in Spark and the sinks fold on
-        # executors. The ceiling is a driver-memory bound, not a speed
-        # crossover: the collected delta must stay within the sinks' own
-        # driver budget (_DRIVER_FOLD_MAX_BYTES) at the widest measured
-        # delta (_DELTA_BYTES_PER_ROW), and the driver path was measured
-        # ahead of a Spark fold per sink at every size up to it (50k-1M
+        # it each sink folds fn(good) on executors. The ceiling is a
+        # driver-memory bound, not a speed crossover: the collected
+        # delta must stay within the sinks' own driver budget
+        # (_DRIVER_FOLD_MAX_BYTES) at the widest measured delta
+        # (_DELTA_BYTES_PER_ROW), and the driver path was measured ahead
+        # of a Spark fold per sink at every size up to it (50k-1M
         # rows/epoch).
         self.driver_fold_max_rows = _DRIVER_FOLD_MAX_BYTES // _DELTA_BYTES_PER_ROW
         # Automatic fact-ledger maintenance: reads degrade with the
@@ -266,25 +277,18 @@ class QuerylogPipeline:
         epoch_id: int | None = None,
         token: str | None = None,
     ) -> dict:
-        """Compute every aggregate's delta over ``good`` (persisted,
+        """Compute every aggregate's delta over ``good`` (cached,
         ``n_good`` rows) and fold it into its sink under ``epoch_id``
-        (a stream epoch) or ``token`` (an out-of-band fold such as
-        dead-letter replay). The one delta-and-fold path of both.
+        (a stream epoch) or ``token`` (dead-letter replay).
 
-        A sink's delta follows from its inputs alone:
-
-        - a stock aggregate takes the grouping-sets delta
-          (``fused_aggregate_deltas``), one pass for all of them. Up to
-          ``driver_fold_max_rows`` good rows the pass is collected to
-          the driver with each row's bucket id and every sink folds its
-          share there (``delta_path`` "driver"). Above it the pass is
-          persisted and materialized by one job, and each sink folds
-          its extract of it on executors ("fused");
-        - a custom aggregate computes ``fn(good)`` and folds it on
-          executors.
-
-        Which runner of the sink's one fold kernel takes a delta is the
-        sink's choice (``sinks/summing.py``). Returns the step's
+        Up to ``driver_fold_max_rows`` good rows the stock aggregates'
+        deltas come from one grouping-sets pass collected to the driver
+        with each row's bucket id (``fused_arrow_deltas``), and every
+        sink folds its share there (``delta_path`` "driver"). Otherwise
+        each sink's delta is ``fn(good)``, which its fold computes on
+        executors ("executors"); a custom aggregate always takes that
+        route. Which runner of the sink's fold kernel takes a delta is
+        the sink's choice (``sinks/summing.py``). Returns the step's
         timings: ``delta_path``, ``fused_delta_s`` and, on the driver
         path, the collected delta's ``delta_rows``/``delta_bytes``."""
         timings: dict = {}
@@ -293,61 +297,103 @@ class QuerylogPipeline:
             if ALL_AGGREGATES.get(name) is fn
         ]
         deltas: dict = {}
-        fused = None
-        try:
-            if stock:
-                t0 = _time.time()
-                if n_good <= self.driver_fold_max_rows:
-                    timings["delta_path"] = "driver"
-                    table, arrow = fused_arrow_deltas(
-                        good, self.sinks[stock[0]].n_buckets
-                    )
-                    timings["delta_rows"] = table.num_rows
-                    timings["delta_bytes"] = table.nbytes
-                    del table  # the per-sink splits are copies
-                    deltas = {name: arrow[name] for name in stock}
-                else:
-                    timings["delta_path"] = "fused"
-                    fused, extract = fused_aggregate_deltas(good)
-                    # one job fills the cache the eight folds then read
-                    fused.persist().count()
-                    deltas = {name: extract[name](fused) for name in stock}
-                timings["fused_delta_s"] = round(_time.time() - t0, 3)
-            for name, fn in self.aggregates.items():
-                if name not in deltas:
-                    deltas[name] = fn(good)
-            with ThreadPoolExecutor(max_workers=len(self.aggregates)) as pool:
-                fs = [
-                    pool.submit(
-                        self.sinks[name].apply_delta, deltas[name], epoch_id,
-                        token=token,
-                    )
-                    for name in self.aggregates
-                ]
-                for f in fs:
-                    f.result()
-        finally:
-            if fused is not None:
-                fused.unpersist()
+        if stock:
+            t0 = _time.time()
+            if n_good <= self.driver_fold_max_rows:
+                timings["delta_path"] = "driver"
+                table, arrow = fused_arrow_deltas(
+                    good, self.sinks[stock[0]].n_buckets
+                )
+                timings["delta_rows"] = table.num_rows
+                timings["delta_bytes"] = table.nbytes
+                del table  # the per-sink splits are copies
+                deltas = {name: arrow[name] for name in stock}
+            else:
+                timings["delta_path"] = "executors"
+            timings["fused_delta_s"] = round(_time.time() - t0, 3)
+        for name, fn in self.aggregates.items():
+            if name not in deltas:
+                deltas[name] = fn(good)
+        with ThreadPoolExecutor(max_workers=len(self.aggregates)) as pool:
+            fs = [
+                pool.submit(
+                    self.sinks[name].apply_delta, deltas[name], epoch_id,
+                    token=token,
+                )
+                for name in self.aggregates
+            ]
+            for f in fs:
+                f.result()
         return timings
+
+    def _deliver(
+        self,
+        good: DataFrame,
+        n_good: int,
+        timings: dict,
+        epoch_id: int | None = None,
+        token: str | None = None,
+        dead: DataFrame | None = None,
+    ) -> None:
+        """Hand one parsed block to every consumer under ``epoch_id``
+        (a stream epoch) or ``token`` (dead-letter replay): the fact
+        append, the dead-letter append (stream epochs pass ``dead``),
+        the ClickHouse insert and the aggregate fan (delta step plus
+        sink folds). Each consumer is idempotent under its epoch or
+        token: the sinks record it in their ledgers, and the ClickHouse
+        insert sends it as the server-side dedup token. So a failed
+        block re-runs every consumer as a no-op or a completion. The
+        consumers read only the cached parse, so they run concurrently:
+        the block's wall is max(consumer), not their sum. Any failure
+        fails the block once every consumer has stopped. Each consumer's
+        wall lands in ``timings``."""
+
+        def _fact_append():
+            self.log2_sink.append(
+                good.withColumn("date", F.to_date("date_time")),
+                epoch_id=epoch_id,
+                token=token,
+            )
+
+        def _clickhouse():
+            # one RowBinary POST per partition (collector.py:73-75 sends
+            # one row per round-trip)
+            sent = self.clickhouse.insert_batch(
+                good, "log2", dedup_token=token or f"log2_epoch_{epoch_id}"
+            )
+            timings["clickhouse_posts"] = sent["posts"]
+            timings["clickhouse_bytes"] = sent["bytes"]
+
+        def _fan():
+            timings.update(self._fold_aggregates(good, n_good, epoch_id, token))
+
+        consumers = {"fact_append_s": _fact_append}
+        if dead is not None:
+            # The dead-letter channel (K3, collector.py:76-78) is ledgered
+            # too: a line doubled by a retry would become a doubled fact
+            # row once fixed and replayed.
+            consumers["dead_letter_s"] = lambda: self.dead_sink.append(
+                dead, epoch_id=epoch_id
+            )
+        if self.clickhouse is not None:
+            consumers["clickhouse_insert_s"] = _clickhouse
+        consumers["aggregate_fan_s"] = _fan
+
+        def timed(stage: str) -> None:
+            t0 = _time.time()
+            consumers[stage]()
+            timings[stage] = round(_time.time() - t0, 3)
+
+        with ThreadPoolExecutor(max_workers=len(consumers)) as pool:
+            for f in [pool.submit(timed, stage) for stage in consumers]:
+                f.result()
 
     # -- the per-micro-batch body (the reference's "insert block") ----------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """One epoch: size it by its line count, parse it into one cache
+        and ``_deliver`` it. Records the epoch's stage walls in
+        ``batch_timings`` (the consumer walls overlap; see there)."""
         timings: dict[str, float] = {"epoch_id": epoch_id}
-
-        def _mark(stage: str, t0: float) -> float:
-            now = _time.time()
-            timings[stage] = round(now - t0, 3)
-            return now
-
-        def _timed(stage: str, fn):
-            def run():
-                t0 = _time.time()
-                out = fn()
-                timings[stage] = round(_time.time() - t0, 3)
-                return out
-
-            return run
 
         # Scope every sink's epoch ledger to this streaming query's
         # identity (see __init__) before any commit this epoch.
@@ -371,100 +417,25 @@ class QuerylogPipeline:
         # `parts` depends only on the epoch's checkpointed input, and a
         # one-group coalesce puts every line under token `_p0`, so a
         # replayed epoch re-sends the same ClickHouse (token, rows)
-        # pairs; every consumer below inherits `parts`.
+        # pairs; every consumer inherits `parts`.
         batch_df.persist()
         parsed = None
         try:
-            t = _time.time()
+            t0 = _time.time()
             n_lines = batch_df._jdf.queryExecution().toRdd().count()
             if n_lines <= _LINES_PER_TASK:
                 lines, parts = batch_df.coalesce(1), 1
             else:
                 lines, parts = batch_df, batch_df.rdd.getNumPartitions()
-            t = _mark("line_count_s", t)
-            parsed = parse_querylog_lines(lines).persist()
+            t1 = _time.time()
+            timings["line_count_s"] = round(t1 - t0, 3)
+            parsed, n_good = _parse_cached(lines)
+            batch_df.unpersist()  # the parse cache now backs every consumer
+            t0 = _time.time()
+            timings["parse_materialize_s"] = round(t0 - t1, 3)
             good, dead = split_dead_letter(parsed)
-            # Materialize the caches eagerly: the fan-out below submits
-            # jobs from several threads at once, and each would
-            # otherwise race to compute the (UDF-bearing) parse lineage.
-            n_good = good.persist().count()
-            batch_df.unpersist()  # the parsed cache now backs both splits
-            t = _mark("parse_materialize_s", t)
-
-            def _fact_append():
-                # Exactly-once fact append (r10): the epoch's rows are
-                # staged, published and committed through the ledgered
-                # sink — a retried epoch is a no-op, so log2 can no
-                # longer double on crash-replay. Layout (date
-                # partitions + in-file date_time order) unchanged.
-                self.log2_sink.append(
-                    good.withColumn("date", F.to_date("date_time")),
-                    epoch_id=epoch_id,
-                )
-
-            def _dead_letter():
-                # dead-letter channel (K3, collector.py:76-78) — also
-                # ledgered: a doubled dead line on epoch retry would
-                # otherwise become a doubled fact row when the line is
-                # later fixed and replayed (replay cannot tell a
-                # retry-duplicate from a genuine duplicate source line).
-                self.dead_sink.append(dead, epoch_id=epoch_id)
-
-            def _clickhouse():
-                # the reference's per-block insert, batched: one POST of
-                # RowBinary per executor partition instead of one HTTP
-                # round-trip per row (collector.py:73-75)
-                sent = self.clickhouse.insert_batch(
-                    good, "log2", dedup_token=f"log2_epoch_{epoch_id}"
-                )
-                timings["clickhouse_posts"] = sent["posts"]
-                timings["clickhouse_bytes"] = sent["bytes"]
-
-            # Delivery contract (r10, closing VERDICT r9 ask #1): every
-            # consumer of this epoch is now idempotent — the summing
-            # sinks fold by epoch_id, the fact and dead-letter appends
-            # commit through staged epoch ledgers (sinks/facts.py), and
-            # the ClickHouse insert passes a deterministic
-            # insert_deduplication_token per (epoch, partition) so the
-            # SERVER drops retried blocks. A crashed epoch replayed by
-            # Structured Streaming therefore re-runs every consumer as
-            # a no-op-or-completion, never a duplicate: exactly-once
-            # end to end. The ingest-side dedupe_horizon guard remains
-            # available for RE-DELIVERED SOURCE LINES (re-spooled
-            # files), which epoch idempotence cannot see. Running the
-            # consumers concurrently does not change this contract:
-            # failure of ANY of them fails the batch before the offset
-            # commit, exactly as sequential failure between stages did.
-
-            def _fan():
-                # The delta step is part of this consumer: it reads only
-                # the materialized `good` cache, so it runs alongside
-                # the fact, dead-letter and ClickHouse writes instead of
-                # ahead of them.
-                timings.update(self._fold_aggregates(good, n_good, epoch_id))
-
-            # ONE overlapped section: fact append, dead-letter append,
-            # ClickHouse POSTs and the aggregate fan (delta step plus
-            # the 8 additive sink folds) are independent consumers of
-            # the materialized caches, so they run concurrently (r7,
-            # VERDICT r6 #4): the epoch wall becomes parse +
-            # max(consumer) instead of parse + Σ(consumers). Each
-            # consumer is still timed individually;
-            # `overlap_section_s` records the section's real elapsed
-            # wall (the critical path).
-            consumers = [
-                _timed("fact_append_s", _fact_append),
-                _timed("dead_letter_s", _dead_letter),
-            ]
-            if self.clickhouse is not None:
-                consumers.append(_timed("clickhouse_insert_s", _clickhouse))
-            consumers.append(_timed("aggregate_fan_s", _fan))
-            with ThreadPoolExecutor(max_workers=len(consumers)) as pool:
-                futures = [pool.submit(c) for c in consumers]
-                for f in futures:
-                    f.result()  # propagate first failure, fail the batch
-            timings["overlap_section_s"] = round(_time.time() - t, 3)
-            good.unpersist()
+            self._deliver(good, n_good, timings, epoch_id=epoch_id, dead=dead)
+            timings["overlap_section_s"] = round(_time.time() - t0, 3)
             # Automatic fact-ledger maintenance (see __init__), OFF the
             # writer thread: the next epoch's appends overlap the fold's
             # Spark work and block only on its brief pointer swap. Calls
@@ -482,16 +453,16 @@ class QuerylogPipeline:
                 self._maint_future = self._maint_pool.submit(
                     self._maintenance_step
                 )
-            # Per-epoch stage wall attribution (driver-side). The
-            # consumer stages OVERLAP: their individual walls sum to
-            # more than the section wall; `overlap_section_s` is the
-            # real elapsed time of the fan-out. `fused_delta_s` (the
-            # delta step) runs inside `aggregate_fan_s`, hence inside
-            # `overlap_section_s`; driver epochs also record the
-            # collected delta's `delta_rows` and `delta_bytes`, to read
-            # against the driver_fold_max_rows ceiling. Bounded to the
-            # last _TIMINGS_KEPT epochs; bench harnesses read and reset
-            # it. `n_lines` = `n_rows` (good) + `n_dead`; `parts` is the
+            # Per-epoch stage walls (driver-side). The consumer walls
+            # OVERLAP: they sum to more than `overlap_section_s`, the
+            # real elapsed time of the delivery. `fused_delta_s` (the
+            # delta step) runs inside `aggregate_fan_s`; on the driver
+            # path it is the grouping-sets collect, whose `delta_rows`
+            # and `delta_bytes` read against the driver_fold_max_rows
+            # ceiling. On the executor path it is ~0: each sink's fold
+            # computes its own delta. Bounded to the last
+            # _TIMINGS_KEPT epochs; bench harnesses read and reset it.
+            # `n_lines` = `n_rows` (good) + `n_dead`; `parts` is the
             # task count of the parse and of every consumer.
             timings["n_lines"] = n_lines
             timings["n_rows"] = n_good
@@ -727,49 +698,37 @@ class QuerylogPipeline:
         into every aggregate; lines that still fail replace the
         dead-letter channel.
 
-        The recovered lines flow through the SAME additive fan-out as
-        a streaming micro-batch, under a replay token derived from the
-        dead-letter content digest — only the hash buckets the delta
-        touches are rewritten, so at 100 TB a replay of 100 lines costs 100 lines, not a rescan of
-        the entire fact history (VERDICT r4 #3). A crashed replay can
-        be re-run: sinks that already folded this token no-op
-        (``applied_token``), sinks that didn't fold now; untouched
-        buckets' files are never rewritten (byte-identical — asserted
-        in tests/test_streaming.py). The token ledger is separate from
-        stream epochs on purpose — see ``sinks/ledger.py``.
+        A replay is one more epoch: the dead lines are parsed into one
+        cache and the recovered rows go through ``_deliver``, the step
+        every stream epoch runs, under a token derived from the
+        dead-letter content digest instead of an epoch id. Only the
+        hash buckets the delta touches are rewritten, so at 100 TB a
+        replay of 100 lines costs 100 lines, not a rescan of the fact
+        history, and untouched buckets' files stay byte-identical
+        (asserted in tests/test_streaming.py). A crashed replay can be
+        re-run: every consumer that already committed this token
+        no-ops (the fact and summing sinks' token ledgers, the
+        ClickHouse server-side dedup token), the others complete. The
+        token ledger is separate from stream epochs on purpose — see
+        ``sinks/ledger.py``. The still-dead lines are read from the same
+        cache, so the DNS UDF runs once per dead line.
 
         A changed aggregate FORMULA is not a delta: run
         ``rebuild_aggregates()`` after the replay.
 
         Runs only while the stream is stopped — enforced, it RAISES
-        against an active query (r11; the dead-letter channel is
-        swapped at the end). Every step is idempotent under the digest
-        token (r10): the log2 append goes through the fact sink's
-        token ledger, the ClickHouse insert carries the token as its
-        server-side dedup token, and the aggregate folds check it in
-        their replay ledger — a crashed replay re-run completes the
-        missing steps and no-ops the done ones. Returns {"replayed",
-        "still_dead"}.
+        against an active query (the dead-letter channel is swapped at
+        the end). Returns {"replayed", "still_dead"}.
         """
         self._require_stream_stopped("replay_dead_letters")
-        from adguard2clickhouse_spark.operators.parse import parse_querylog
-
         dead = self.dead_sink.read(self.spark)
         if dead is None:
             return {"replayed": 0, "still_dead": 0}
-        good, still_dead = parse_querylog(dead, "raw_line")
-        good.persist()
+        parsed, n_good = _parse_cached(dead, "raw_line")
         try:
-            n_good = good.count()
-            token = self._dead_letter_digest()
+            good, still_dead = split_dead_letter(parsed)
             if n_good:
-                self.log2_sink.append(
-                    good.withColumn("date", F.to_date("date_time")),
-                    token=token,
-                )
-                if self.clickhouse is not None:
-                    self.clickhouse.insert_batch(good, "log2", dedup_token=token)
-                self._fold_aggregates(good, n_good, token=token)
+                self._deliver(good, n_good, {}, token=self._dead_letter_digest())
             # Swap the dead channel LAST. replace() stages the
             # survivors while the old committed dirs still back the
             # frame, then commits the swap atomically — bumping the
@@ -780,7 +739,7 @@ class QuerylogPipeline:
             after = self.dead_sink.read(self.spark)
             n_dead = after.count() if after is not None else 0
         finally:
-            # a failed append/insert/fold must not leave the parsed frame
-            # pinned in executor memory for the rest of the session
-            good.unpersist()
+            # a failed consumer must not leave the parse pinned in
+            # executor memory for the rest of the session
+            parsed.unpersist()
         return {"replayed": n_good, "still_dead": n_dead}

@@ -35,6 +35,7 @@ import sys
 import tempfile
 import threading
 import time
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -195,8 +196,10 @@ def main() -> None:
     # walls legitimately sum past the epoch wall; the section's elapsed
     # time is overlap_section_s. Shares are reported against the wall
     # for the serial stages and the section, with the per-consumer walls
-    # kept as within-section attribution. The delta step
-    # (fused_delta_s) runs inside the aggregate fan.
+    # kept as within-section attribution. fused_delta_s runs inside the
+    # aggregate fan: on "driver" epochs it is the grouping-sets collect,
+    # on "executors" epochs only the deltas' plans (each sink's fold
+    # computes its delta), so read it against delta_paths.
     serial_keys = ["line_count_s", "parse_materialize_s", "overlap_section_s"]
     consumer_keys = [
         "fact_append_s", "dead_letter_s", "clickhouse_insert_s",
@@ -256,6 +259,9 @@ def main() -> None:
         "stage_breakdown": stage_totals,
         "per_epoch_stages": list(pipe.batch_timings),
         "driver_rss_mb": rss_mb,
+        "delta_paths": dict(Counter(
+            bt["delta_path"] for bt in pipe.batch_timings if "delta_path" in bt
+        )),
         "delta_bytes_max": max(
             (bt.get("delta_bytes", 0) for bt in pipe.batch_timings), default=0
         ),

@@ -540,26 +540,30 @@ def test_replace_generation_bumps_only_when_asked(sink, spark):
 
 @pytest.mark.parametrize(
     "bounds",
-    [{"small_bytes": 1 << 30, "max_fold_slots": 4}, {}],
-    ids=["tiered", "full"],
+    [{"small_bytes": 1 << 30, "max_fold_slots": 4}, {}, None],
+    ids=["tiered", "full", "replace"],
 )
 def test_reader_holding_prefold_snapshot_survives_fold(
     sink, spark, monkeypatch, bounds
 ):
-    """r12 trash retention: a fold COMMITS atomically but must not
+    """Trash retention: a fold COMMITS atomically but must not
     delete the superseded slots while a reader that listed the old
     pointer is still scanning — the exact FileNotFoundException race
     observed the moment folds moved off the writer thread. The folded
     slots stay on disk for ledger.RETENTION_S and later commits sweep
-    them. Holds for the tiered step and for the full fold (no
-    bounds)."""
+    them. Holds for the tiered step, for the full fold (no bounds) and
+    for a wholesale ``replace`` (``bounds=None``) of the same rows."""
     from adguard2clickhouse_spark.sinks import ledger
 
-    df = _df(spark, [("2024-01-01", i, f"d{i}.com") for i in range(5)])
+    rows = [("2024-01-01", i, f"d{i}.com") for i in range(5)]
+    df = _df(spark, rows)
     for e in range(4):
         sink.append(df, epoch_id=e)
     reader = sink.read(spark)  # plan holds the PRE-fold file listing
-    assert sink.compact(spark, **bounds) == 4
+    if bounds is None:
+        sink.replace(_df(spark, rows * 4))
+    else:
+        assert sink.compact(spark, **bounds) == 4
     # the old listing still resolves: retired slots are in trash
     assert reader.count() == 20
     meta = sink.ledger.read()

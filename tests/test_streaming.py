@@ -520,7 +520,7 @@ def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark, monkeypatch):
     assert stats == {"replayed": 5, "still_dead": 2}
     assert len(delta_passes) == 1
     assert pipe.read_log2().count() == 15
-    dead_after = spark.read.parquet(str(out / "dead_letter"))
+    dead_after = pipe.dead_sink.read(spark)
     assert dead_after.count() == 2
 
     after = _files(vd_dir)
@@ -559,7 +559,53 @@ def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark, monkeypatch):
     assert got == expected["visited_domains"], "token retry double-counted"
 
 
-@pytest.mark.parametrize("ceiling", [None, 0], ids=["driver", "fused"])
+def _plan_node_names(plan) -> list[str]:
+    """Node names of a physical plan tree, walked through ``children()``
+    (a cached relation is a leaf: its plan is not a child)."""
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_replay_stages_still_dead_lines_from_the_parse_cache(
+    tmp_path, spark, monkeypatch
+):
+    """A replay parses the dead channel once: the still-dead frame it
+    hands to ``dead_sink.replace`` reads the replay's parse cache and
+    runs no DNS UDF (no ``ArrowEvalPython`` node in its executed plan)."""
+    src, out = tmp_path / "src", tmp_path / "out"
+    src.mkdir()
+    (src / "log.jsonl").write_text(
+        _line(0, minute=1, filtered=False, qh="a.example.com", ip="10.4.0.1")
+        + "\n"
+    )
+    pipe = QuerylogPipeline(spark, str(src), str(out))
+    pipe.run_available()
+    recoverable = _line(1, minute=2, filtered=True, qh="b.example.com",
+                        ip="10.4.0.2")
+    pipe.dead_sink.replace(spark.createDataFrame(
+        [(recoverable,), ("{ not json",)], ["raw_line"]
+    ))
+
+    plans = []
+    real_replace = pipe.dead_sink.replace
+
+    def replace(df, **kw):
+        plans.append(_plan_node_names(df._jdf.queryExecution().executedPlan()))
+        return real_replace(df, **kw)
+
+    monkeypatch.setattr(pipe.dead_sink, "replace", replace)
+    assert pipe.replay_dead_letters() == {"replayed": 1, "still_dead": 1}
+    assert len(plans) == 1
+    assert "ArrowEvalPython" not in plans[0], plans[0]
+    assert "InMemoryTableScan" in plans[0], plans[0]
+
+
+@pytest.mark.parametrize("ceiling", [None, 0], ids=["driver", "executors"])
 def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
     spark, tmp_path, ceiling
 ):
@@ -621,7 +667,7 @@ def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
     assert changed_only_touched == len(pipe.sinks)
     # no tiny line is filtered: blocked_domains' delta is empty
     assert _bucket_files(str(out / "blocked_domains")) == before["blocked_domains"]
-    want = "driver" if ceiling is None else "fused"
+    want = "driver" if ceiling is None else "executors"
     assert {bt["delta_path"] for bt in pipe.batch_timings
             if "delta_path" in bt} == {want}
 
@@ -630,11 +676,9 @@ def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
     """The delta path is picked per epoch from the batch row count:
     epochs up to driver_fold_max_rows (the driver-memory ceiling)
     collect the grouping-sets deltas to the driver once and fold them
-    there with pyarrow ("driver"); larger epochs keep the bucket-tagged
-    deltas in Spark and fold each sink over its collected touched
-    buckets ("fused"). Both paths must produce identical sink state —
-    the fused plan is an exact twin, separately driver-gated via
-    a16_fused_mv_union."""
+    there with pyarrow ("driver"); in larger epochs each sink folds its
+    stock aggregate over the epoch on executors ("executors"). Both
+    paths must produce identical sink state."""
     lines = [
         _line(i, minute=i % 50, filtered=i % 3 == 0,
               qh=f"d{i % 9}.example.com", ip=f"10.0.0.{i % 5}")
@@ -666,7 +710,7 @@ def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
 
     # the ceiling lowered below the epoch: the deltas stay in Spark
     fused = run("auto_fused", ceiling=len(lines) // 2)
-    assert {bt["delta_path"] for bt in epochs(fused)} == {"fused"}
+    assert {bt["delta_path"] for bt in epochs(fused)} == {"executors"}
     assert all("fused_delta_s" in bt and "delta_rows" not in bt
                for bt in epochs(fused))
 

@@ -414,6 +414,34 @@ def test_driver_fold_retry_is_noop(tmp_path, spark):
     assert got["k1"] == 6 and got["new"] == 2 and got["k2"] == 1
 
 
+def test_driver_folds_of_the_same_deltas_write_the_same_bytes(tmp_path, spark):
+    """Six epochs of bucket-tagged Arrow deltas (500, 300, 50, 1, 800
+    and 7 log2 rows), folded into two fresh sets of the eight sinks,
+    leave byte-identical bucket files: the fold kernel's ``group_by``
+    runs without threads, where pyarrow's output order is stable, so a
+    bucket file's bytes fingerprint its content."""
+    from adguard2clickhouse_spark.operators.aggregates import fused_arrow_deltas
+    from adguard2clickhouse_spark.schemas import LOG2_SCHEMA
+    from adguard2clickhouse_spark.streaming.pipeline import aggregate_sinks
+
+    deltas, start = [], 0
+    for n in (500, 300, 50, 1, 800, 7):
+        log2 = spark.createDataFrame(_log2_rows(start, n), LOG2_SCHEMA)
+        deltas.append(fused_arrow_deltas(log2, 8)[1])
+        start += n
+    digests = []
+    for run in ("a", "b"):
+        sinks = aggregate_sinks(str(tmp_path / run))
+        for epoch_id, arrow in enumerate(deltas):
+            for name, sink in sinks.items():
+                sink.apply_delta(arrow[name], epoch_id)
+        digests.append(
+            {name: _data_file_digests(sink.path) for name, sink in sinks.items()}
+        )
+    assert all(digests[0].values())
+    assert digests[0] == digests[1]
+
+
 def test_driver_fold_crash_before_swap_keeps_previous_version(
     tmp_path, spark, monkeypatch
 ):
